@@ -91,9 +91,9 @@ def main() -> None:
     e = emb200k.select("vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
     spark.sparkContext.setJobDescription("extra: ivf combined probe+centroid pass")
     out["ivf_probe_centroid_pass"] = timed(
-        lambda: _probes_and_label_partials(e, "vec_id % 400 = 0", need_cents=True)
+        lambda: _probes_and_label_partials(e, "vec_id % 400 = 0")
     )
-    ppdf, partials = _probes_and_label_partials(e, "vec_id % 400 = 0", need_cents=True)
+    ppdf, partials = _probes_and_label_partials(e, "vec_id % 400 = 0")
     dim = len(ppdf["v"].iloc[0])
     cent_rows = _combine_label_partials(partials, dim)
     pmap = _rank_probes_local(cent_rows, ppdf, 3)

@@ -159,7 +159,7 @@ def main() -> None:
     sections.append(
         (
             "ANN: IVF list scan + exact re-rank (label quantizer)",
-            "Verify (r7 closure-default shape): (1) ONE corpus scan "
+            "Verify (closure shape): (1) ONE corpus scan "
             "feeding ONE fused MapInPandas (assign + per-list score + "
             "quantum-safe top-k prune; the per-list probe matrices and "
             "the centroid matrix ride the task closure — no "
@@ -168,12 +168,10 @@ def main() -> None:
             "shuffle Exchange is the final per-probe top-k window, "
             "over the pruned candidate superset; (3) the probe rows "
             "and the label-centroid partials were collected in one "
-            "prior bounded pass (not visible in this lazy plan); "
-            "(4) probe_transport='join'/'broadcast' keep the r6 "
-            "shapes — the three-way tradeoff and measured crossover "
-            "live in operators/ann.py and "
-            "scripts/bench_ivf_transport.py (closure 6.9 s vs join "
-            "19.0 s at 200k vectors, interleaved).",
+            "prior pass (not visible in this lazy plan); (4) there is "
+            "no other plan: when the probe matrices exceed "
+            "_CLOSURE_MAX_PROBE_BYTES (64 MB; about 8 KB here) the call "
+            "raises ValueError instead of building one.",
             plan_of(ann_ivf_topk(emb)),
         )
     )

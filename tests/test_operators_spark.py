@@ -230,45 +230,139 @@ class TestAnnIvf:
             assert len(sims) <= 3
             assert sims == sorted(sims, reverse=True)
 
+    @staticmethod
+    def _rows(df):
+        """Sorted (probe_id, neighbor_id, list_id, cos_sim) rows; NaN
+        cosines compare equal as the string "nan"."""
+        import math
+
+        return sorted(
+            (
+                r["probe_id"],
+                r["neighbor_id"],
+                r["list_id"],
+                "nan" if r["cos_sim"] is not None and math.isnan(r["cos_sim"]) else r["cos_sim"],
+            )
+            for r in df.collect()
+        )
+
+    @staticmethod
+    def _label_cents(emb, probe_filter="vec_id % 100 = 0"):
+        """The label-mean quantizer ann_ivf_topk builds by default."""
+        from util_gis_spark.operators import ann
+
+        e = emb.select("vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
+        ppdf, partials = ann._probes_and_label_partials(e, probe_filter)
+        return ann._combine_label_partials(partials, len(ppdf["v"].iloc[0]))
+
+    @classmethod
+    def _jvm_ivf(cls, emb, cents, probe_filter="vec_id % 100 = 0", k=3, nprobe=3):
+        """Pair-at-a-time JVM reference of ann_ivf_topk over `cents`:
+        a window over the (vector x centroid) dots picks each vector's
+        list and each probe's top `nprobe` lists (dot desc, list_id
+        asc, NaN first), and a higher-order-function cosine scores every
+        probe/list-member pair. Same ascending-d folds as the closure
+        kernel, so the doubles must match bit for bit. A NaN cosine
+        (0/0 for a zero-norm vector) is NULL here, as the kernel's NaN
+        becomes NULL on its way through Arrow; the reference guards the
+        division because ANSI mode would raise on it."""
+        from pyspark.sql import Window
+
+        spark = emb.sparkSession
+        e = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ).filter(F.col("v").isNotNull())
+        c = spark.createDataFrame(cents, "list_id long, c array<double>")
+        fold = lambda arr: F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)  # noqa: E731
+        dot = lambda a, b: fold(F.zip_with(a, b, lambda x, y: x * y))  # noqa: E731
+        norm = lambda a: F.sqrt(fold(F.transform(a, lambda x: x * x)))  # noqa: E731
+        den = norm("pv") * norm("v")
+        cos = F.nanvl(F.when(den != 0, dot("pv", "v") / den), F.lit(None).cast("double"))
+        w = Window.partitionBy("vec_id").orderBy(F.col("_dot").desc(), F.col("list_id"))
+        ranked = (
+            e.crossJoin(F.broadcast(c))
+            .withColumn("_dot", dot("v", "c"))
+            .withColumn("_rk", F.row_number().over(w))
+        )
+        assigned = ranked.filter("_rk = 1").select("vec_id", "v", "list_id")
+        probes = ranked.filter(f"_rk <= {nprobe}").filter(probe_filter).select(
+            F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), "list_id"
+        )
+        scored = (
+            probes.join(assigned, "list_id")
+            .filter("probe_id <> vec_id")
+            .select(
+                "probe_id",
+                F.col("vec_id").alias("neighbor_id"),
+                F.round(cos, 5).alias("cos_sim"),
+                "list_id",
+            )
+        )
+        w2 = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+        return cls._rows(scored.withColumn("_rk", F.row_number().over(w2)).filter(f"_rk <= {k}"))
+
     def test_probe_transports_identical(self, spark, sf_dir):
-        """The closure (r7 default: fused assign+score kernel, numpy
-        probe ranking, matrices in the task closure), join and
-        broadcast probe transports must produce identical rows — same
-        matrices, same ordered folds, only the shipping (and the
-        closure form's quantum-safe in-kernel top-k prune, a provable
-        superset cut) differs."""
-        from util_gis_spark import datasets as D
+        """The closure path (numpy probe ranking, fused assign+score
+        kernel with the matrices in the task closure, quantum-safe
+        in-kernel top-k prune) must give exactly the rows of the
+        pair-at-a-time JVM reference on the label quantizer."""
         from util_gis_spark.operators.ann import ann_ivf_topk
 
         emb = D.load(spark, sf_dir, "embeddings")
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["list_id"], r["cos_sim"])
-        jn = sorted(key(r) for r in ann_ivf_topk(emb, probe_transport="join").collect())
-        cl = sorted(key(r) for r in ann_ivf_topk(emb, probe_transport="closure").collect())
-        assert jn == cl and jn
-        # closure + expr assignment: the non-fused closure branch
-        ce = sorted(
-            key(r)
-            for r in ann_ivf_topk(
-                emb, probe_transport="closure", assign_transport="expr"
-            ).collect()
-        )
-        assert jn == ce
-        bcast_df = ann_ivf_topk(emb, probe_transport="broadcast")
-        bc = sorted(key(r) for r in bcast_df.collect())
-        bcast_df.probes_bc.destroy()
-        assert jn == bc
+        got = self._rows(ann_ivf_topk(emb))
+        assert got == self._jvm_ivf(emb, self._label_cents(emb)) and got
+
+    def test_many_list_quantizer_matches_jvm_reference(self, spark, sf_dir):
+        """A 76-list random quantizer (far more lists than labels, many
+        near-tie argmaxes) through the explicit-centroids path must
+        match the JVM reference row for row."""
+        import numpy as np
+
+        from util_gis_spark.operators.ann import ann_ivf_topk
+
+        emb = D.load(spark, sf_dir, "embeddings")
+        dim = len(emb.select("embedding").first()["embedding"])
+        rng = np.random.default_rng(11)
+        cents = []
+        for j in range(76):
+            c = rng.standard_normal(dim)
+            cents.append((j, (c / np.linalg.norm(c)).tolist()))
+        got = self._rows(ann_ivf_topk(emb, centroids=cents))
+        assert got == self._jvm_ivf(emb, cents) and got
+
+    @pytest.mark.parametrize("quantizer", ["label", "kmeans"])
+    def test_closure_cap_boundary(self, spark, sf_dir, monkeypatch, quantizer):
+        """Probe matrices of exactly _CLOSURE_MAX_PROBE_BYTES run and
+        give the uncapped rows; one byte over raises ValueError. The
+        kmeans case goes through the limit(cap_rows + 1) bound of the
+        explicit-centroids collect."""
+        from util_gis_spark.operators import ann
+
+        emb = D.load(spark, sf_dir, "embeddings")
+        dim = len(emb.select("embedding").first()["embedding"])
+        n_probes = emb.filter("vec_id % 100 = 0 AND embedding IS NOT NULL").count()
+        if quantizer == "label":
+            kw = {}
+            n_lists = emb.select("label").distinct().count()
+        else:
+            kw = {"centroids": ann.kmeans_centroids(emb, k=6)}
+            n_lists = len(kw["centroids"])
+        size = n_probes * min(3, n_lists) * (dim + 1) * 8
+        want = self._rows(ann.ann_ivf_topk(emb, **kw))
+        with monkeypatch.context() as m:
+            m.setattr(ann, "_CLOSURE_MAX_PROBE_BYTES", size)
+            assert self._rows(ann.ann_ivf_topk(emb, **kw)) == want and want
+            m.setattr(ann, "_CLOSURE_MAX_PROBE_BYTES", size - 1)
+            with pytest.raises(ValueError, match="narrow probe_filter"):
+                ann.ann_ivf_topk(emb, **kw)
 
     def test_transports_agree_on_degenerate_rows(self, spark, sf_dir):
-        """r7 review guards: a NULL embedding row must be SKIPPED (not
-        crash np.vstack) by every kernel, and a zero-norm vector's NaN
-        cosine must survive the closure path's top-k prune exactly as
-        the unfused kernels emit it (Spark ranks NaN first under desc,
-        so silently dropping it would diverge the transports)."""
-        import math
-
-        from pyspark.sql import functions as F
-
-        from util_gis_spark import datasets as D
+        """Degenerate rows: a NULL embedding row must be SKIPPED (not
+        crash np.vstack), and a zero-norm vector's NaN cosines (corpus
+        vector 11, probe 100) must survive the closure path's top-k
+        prune: they come out as NULL cos_sim rows, ranked last, exactly
+        as the JVM reference emits them. Pruning them would leave probe
+        100 with no rows at all."""
         from util_gis_spark.operators.ann import ann_ivf_topk
 
         emb = D.load(spark, sf_dir, "embeddings")
@@ -277,106 +371,48 @@ class TestAnnIvf:
             "embedding",
             F.when(F.col("vec_id") == 7, F.lit(None))
             .when(
-                F.col("vec_id") == 11,
+                F.col("vec_id").isin(11, 100),
                 F.array(*[F.lit(0.0) for _ in range(dim)]),
             )
             .otherwise(F.col("embedding").cast("array<double>")),
         )
-        key = lambda r: (
-            r["probe_id"],
-            r["neighbor_id"],
-            r["list_id"],
-            "nan" if (r["cos_sim"] is not None and math.isnan(r["cos_sim"])) else r["cos_sim"],
+        got = self._rows(ann_ivf_topk(dirty))
+        assert got == self._jvm_ivf(dirty, self._label_cents(dirty)) and got
+        assert [r[3] for r in got if r[0] == 100] == [None] * 3
+
+    @pytest.mark.parametrize("vec_id", [7, 13])
+    def test_nan_component_list_ranking_matches_jvm_reference(self, spark, sf_dir, vec_id):
+        """One NaN component in one corpus vector makes its label's
+        centroid NaN, so every probe's dot with that list is NaN.
+        Spark's descending window ranks NaN first; the closure path's
+        numpy ranking must too (it ranked NaN last and returned 1 and 0
+        rows where the JVM reference returns 15)."""
+        from util_gis_spark.operators.ann import ann_ivf_topk
+
+        emb = D.load(spark, sf_dir, "embeddings")
+        dirty = emb.withColumn(
+            "embedding",
+            F.when(
+                F.col("vec_id") == vec_id,
+                F.expr(
+                    "transform(CAST(embedding AS array<double>), "
+                    "(x, i) -> IF(i = 0, double('NaN'), x))"
+                ),
+            ).otherwise(F.col("embedding").cast("array<double>")),
         )
-        jn = sorted(key(r) for r in ann_ivf_topk(dirty, probe_transport="join").collect())
-        cl = sorted(key(r) for r in ann_ivf_topk(dirty, probe_transport="closure").collect())
-        assert jn == cl and jn
+        got = self._rows(ann_ivf_topk(dirty))
+        assert got == self._jvm_ivf(dirty, self._label_cents(dirty)) and got
 
     def test_probe_transport_validated(self, spark, sf_dir):
-        import pytest
-
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import ann_ivf_topk
-
-        with pytest.raises(ValueError, match="probe_transport"):
-            ann_ivf_topk(D.load(spark, sf_dir, "embeddings"), probe_transport="carrier-pigeon")
-        with pytest.raises(ValueError, match="assign_transport"):
-            ann_ivf_topk(D.load(spark, sf_dir, "embeddings"), assign_transport="osmosis")
-
-    def test_assign_transports_identical(self, spark, sf_dir):
-        """The Arrow argmax assignment kernel must be BIT-IDENTICAL to
-        the literal greatest() expression form end-to-end: same
-        ascending-d fold, same first-max == smaller-list_id tie-break,
-        so every (probe, neighbor, cos, list) row matches exactly."""
-        from util_gis_spark import datasets as D
+        """The removed transport options are gone from the signature:
+        passing one is a TypeError, not a silently ignored keyword."""
         from util_gis_spark.operators.ann import ann_ivf_topk
 
         emb = D.load(spark, sf_dir, "embeddings")
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
-        ex = sorted(key(r) for r in ann_ivf_topk(emb, assign_transport="expr").collect())
-        kr = sorted(key(r) for r in ann_ivf_topk(emb, assign_transport="kernel").collect())
-        assert ex == kr and ex
-
-    def test_assign_auto_switches_to_kernel_beyond_expr_cap(self, spark, sf_dir):
-        """Past _ASSIGN_EXPR_MAX_TERMS (lists x dim) 'auto' must route
-        to the kernel (the expression form's Janino compile is the
-        thing being avoided — it OOMs a 48 GiB driver at 300 lists x
-        64 dims — so the test never builds it at this size) and the
-        assignment must match an independent numpy replica of the
-        ordered-fold argmax."""
-        import numpy as np
-
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import (
-            _ASSIGN_EXPR_MAX_TERMS,
-            _assign_kernel,
-            ann_ivf_topk,
-        )
-
-        emb = D.load(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()["embedding"])
-        n_lists = _ASSIGN_EXPR_MAX_TERMS // dim + 44
-        rng = np.random.default_rng(11)
-        cents = []
-        for j in range(n_lists):
-            c = rng.standard_normal(dim)
-            cents.append((j, (c / np.linalg.norm(c)).tolist()))
-
-        e = emb.selectExpr("vec_id", "CAST(embedding AS array<double>) AS v")
-        got = {
-            (r["vec_id"], r["list_id"]) for r in _assign_kernel(e, cents).collect()
-        }
-        pdf = e.orderBy("vec_id").toPandas()
-        C = np.array([c for _j, c in cents])
-        want = set()
-        for vid, v in zip(pdf["vec_id"], pdf["v"]):
-            V = np.asarray(v, dtype=np.float64)
-            dot = np.zeros(n_lists)
-            for d in range(dim):  # same ordered fold as expr/kernel
-                dot = dot + V[d] * C[:, d]
-            want.add((int(vid), int(np.argmax(dot))))
-        assert got == want and len(got) > 0
-
-        # auto == explicit kernel end-to-end at this list count
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
-        auto = sorted(
-            key(r)
-            for r in ann_ivf_topk(emb, centroids=cents, nprobe=5).collect()
-        )
-        kern = sorted(
-            key(r)
-            for r in ann_ivf_topk(
-                emb, centroids=cents, nprobe=5, assign_transport="kernel"
-            ).collect()
-        )
-        assert auto == kern and auto
-
-        # explicit expr past the cap must REFUSE (the compile is a
-        # measured OOM cliff), not attempt the build
-        import pytest
-
-        with pytest.raises(ValueError, match="unrolled terms"):
-            ann_ivf_topk(emb, centroids=cents, assign_transport="expr")
+        with pytest.raises(TypeError, match="probe_transport"):
+            ann_ivf_topk(emb, probe_transport="join")
+        with pytest.raises(TypeError, match="assign_transport"):
+            ann_ivf_topk(emb, assign_transport="kernel")
 
 
 class TestResPlanner:
@@ -483,14 +519,25 @@ class TestResPlanner:
         flavors = {
             "broadcast": joins.pip_join_broadcast(pts, polys, carry_cols=["image_key"]),
             "hybrid_jvm": joins.pip_join_hybrid(pts, polys, res=8, carry_cols=["image_key"]),
-            "hybrid_arrow": joins.pip_join_hybrid(
-                pts, polys, res=8, carry_cols=["image_key"], refine="arrow"
-            ),
             "cells": joins.pip_join_cells(pts, polys, res=8, carry_cols=["image_key"]),
         }
         for name, df in flavors.items():
             got = {(r["image_key"], r["polygon_id"]) for r in df.collect()}
             assert got == want, f"{name}: {got}"
+
+    def test_refine_option_removed(self, spark):
+        """The hybrid join's Arrow refine is gone: refine= is a
+        TypeError on pip_join_hybrid and on the pip_join planner."""
+        from util_gis_spark.operators import joins
+
+        polys = spark.createDataFrame(
+            [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], "polygon_id long, wkt string"
+        )
+        pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
+        with pytest.raises(TypeError, match="refine"):
+            joins.pip_join_hybrid(pts, polys, res=8, refine="arrow")
+        with pytest.raises(TypeError, match="refine"):
+            joins.pip_join(pts, polys, res=8, refine="arrow")
 
     def test_pick_res_distributed_matches_driver_side(self, spark):
         from util_gis_spark.operators.joins import pick_res, pick_res_distributed

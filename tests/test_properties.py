@@ -4,7 +4,7 @@ properties, WKT roundtrip, mu rounding, PIP vs winding."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from util_gis_spark.geo import cells, gauss
@@ -230,6 +230,9 @@ class TestGridNearestAntimeridianAndNaN:
 
     @settings(max_examples=40, deadline=None)
     @given(seed=st.integers(min_value=0, max_value=10_000))
+    # probe at lon 168.5 in the seam gap of a [-179.0, 166.4] frame: the
+    # old 360 - span wrap bound overstated the gap across the seam
+    @example(seed=8407)
     def test_world_spanning_cloud_equals_brute_force(self, seed):
         rng = np.random.default_rng(seed)
         n_cand = int(rng.integers(2, 200))

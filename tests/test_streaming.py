@@ -254,6 +254,10 @@ def test_minhash_incremental_soak_three_batches(spark, sf_dir):
     dedup against the GROWING stage (stage extended with mode='append'
     after each), per-batch signature caches released via .sig_cache;
     union of within-shard + cross-shard pairs == the full recompute."""
+    import os
+    import shutil
+    from urllib.parse import urlparse
+
     from pyspark.sql import functions as F
 
     from util_gis_spark.operators.dedup import (
@@ -264,6 +268,13 @@ def test_minhash_incremental_soak_three_batches(spark, sf_dir):
 
     docs = D.load(spark, sf_dir, "documents")
     shards = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
+    # a crashed earlier run leaves table directories the in-memory
+    # catalog no longer knows, and saveAsTable then fails with
+    # LOCATION_ALREADY_EXISTS
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for t in ("t_soak_inc_bands", "t_soak_inc_hashes"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
     try:
         write_minhash_stage(shards[0], "t_soak_inc", n_buckets=8)
         got = set()

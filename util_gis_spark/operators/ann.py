@@ -10,9 +10,9 @@
   bucket: O(P x N / 2^bits) — recall traded via `bits`.
 - IVF variant (ann_ivf_topk): a coarse quantizer assigns every
   vector to its nearest-centroid inverted list; probes scan only their
-  top-`nprobe` lists, exact cosine re-ranks. All JVM: the centroid
-  table is a broadcast, the list scan is an equi-join on list id (the
-  shuffle key at scale; salt hot lists like any skewed join). Two
+  top-`nprobe` lists, exact cosine re-ranks. The ranked probe matrices
+  ship in the task closure of one fused Arrow pass over the corpus;
+  probe sets over a byte cap fall back to a lazy join on list id. Two
   quantizers: per-label means (SQL-expressible -> the driver oracle
   stays a real DuckDB twin) and kmeans_centroids (deterministic
   sampled k-means trained on a bounded driver sample — the real
@@ -246,22 +246,6 @@ def ann_lsh_topk(
     return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
 
 
-def _label_partial_rows(pdf):
-    """Per-batch (labels, counts, sums) partial rows for the label-mean
-    centroid computation — shared by _label_centroids and the combined
-    probe+centroid pass so the summation semantics cannot drift.
-    Expects v-notna rows."""
-    import numpy as np
-
-    labs, ns, sums = [], [], []
-    for lab, idx in pdf.groupby("label", sort=True).indices.items():
-        sub = np.vstack(pdf["v"].iloc[idx].to_numpy()).astype(np.float64)
-        labs.append(int(lab))
-        ns.append(len(sub))
-        sums.append(sub.sum(axis=0).tolist())
-    return labs, ns, sums
-
-
 def _combine_label_partials(rows, dim: int) -> list[tuple[int, list[float]]]:
     """Deterministic in-order driver combine of (part, label, n, s)
     partial rows -> sorted (label, mean) list."""
@@ -274,15 +258,20 @@ def _combine_label_partials(rows, dim: int) -> list[tuple[int, list[float]]]:
     return sorted((lab, (s / n).tolist()) for lab, (n, s) in acc.items())
 
 
-def _probes_and_label_partials(e: DataFrame, probe_filter: str, need_cents: bool):
-    """ONE corpus pass serving both eager questions of the closure
-    transport: the probe rows (probe_filter true, v not null) AND —
-    when the label-mean quantizer is in play — the per-batch centroid
-    partials. The probe predicate is evaluated JVM-side (F.expr, so
-    arbitrary SQL over vec_id/label/v keeps working) and rides the
-    batch as a boolean column; the kernel splits each batch into
-    partial rows (kind=0) and probe rows (kind=1). Returns
-    (probe pandas DataFrame[vec_id, v], partial row list)."""
+def _probes_and_label_partials(e: DataFrame, probe_filter: str):
+    """ONE corpus pass serving both eager questions of the label-mean
+    quantizer: the probe rows (probe_filter true, v not null) AND the
+    per-batch centroid partials (label, count, sums), ~25 x 520 B per
+    batch — the map-side-aggregation shape, combined on the driver by
+    _combine_label_partials in ascending (partition, label) order. A
+    64-column `avg(v[i])` gives the same means but costs ~2.5 s of
+    Catalyst + Janino driver time per call. NULL embeddings are
+    skipped, as avg() skips them. The probe predicate is evaluated
+    JVM-side (F.expr, so arbitrary SQL over vec_id/label/v keeps
+    working) and rides the batch as a boolean column; the kernel
+    splits each batch into partial rows (kind=0) and probe rows
+    (kind=1). Returns (probe pandas DataFrame[vec_id, v], partial row
+    list)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -308,8 +297,13 @@ def _probes_and_label_partials(e: DataFrame, probe_filter: str, need_cents: bool
             if len(pdf) == 0:
                 continue
             frames = []
-            if need_cents:
-                labs, ns, sums = _label_partial_rows(pdf)
+            labs, ns, sums = [], [], []
+            for lab, idx in pdf.groupby("label", sort=True).indices.items():
+                sub = np.vstack(pdf["v"].iloc[idx].to_numpy()).astype(np.float64)
+                labs.append(int(lab))
+                ns.append(len(sub))
+                sums.append(sub.sum(axis=0).tolist())
+            if labs:
                 frames.append(
                     pd.DataFrame(
                         {
@@ -356,72 +350,18 @@ def _probes_and_label_partials(e: DataFrame, probe_filter: str, need_cents: bool
     return ppdf, partials
 
 
-def _label_centroids(e: DataFrame, dim: int) -> list[tuple[int, list[float]]]:
-    """Per-label elementwise means as sorted (label, centroid) rows —
-    ONE Arrow pass emitting per-batch partial (label, count, sums)
-    rows (~25 x 520 B per batch), combined on the driver in ascending
-    (partition, label) order. This replaces the 64-column
-    `avg(v[i])` aggregation, which referenced the embedding array 64
-    times: against a parquet scan that is harmless, but against the
-    generated bench corpus Catalyst inlined the (large) array
-    expression into every avg argument and the OPTIMIZATION + Janino
-    compile of the exploded tree cost ~2.5 s per call with a ~6 s
-    first-call cliff — pure driver time, independent of data size
-    (measured at 20k == 200k rows). The kernel's partials are the
-    guide's map-side-aggregation shape: what crosses the boundary is
-    lists x dim sums, never rows.
-
-    Semantics: rows with a NULL embedding are skipped (avg() skipped
-    them per element); summation is per-batch numpy followed by a
-    deterministic in-order driver combine — the same
-    equal-multiset-modulo-ulp contract the Spark avg (whose merge
-    order is fetch-order nondeterministic) already provided. Centroid
-    ulps only steer integer decisions (list assignment, probe-list
-    ranking); the oracle gate and the assignment-equality test pin
-    that those decisions are unchanged."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("part", T.LongType()),
-            T.StructField("label", T.LongType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def run(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf[pdf["v"].notna()]
-            if len(pdf) == 0:
-                continue
-            labs, ns, sums = _label_partial_rows(pdf)
-            yield pd.DataFrame({"part": np.full(len(labs), pid), "label": labs, "n": ns, "s": sums})
-
-    rows = e.select("label", "v").mapInPandas(run, schema=schema).collect()
-    return _combine_label_partials(rows, dim)
-
-
 def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: int) -> dict:
-    """Driver-side numpy replica of the probe-side list ranking — the
-    closure-transport twin of the crossJoin+window form, bit-identical
-    by construction: the dot accumulates in ascending-d order (== the
-    sequential `aggregate` fold of _dot_expr), and ties order by
-    (dot desc, list_id asc) exactly like the window's orderBy with
-    row_number (cent_rows arrive sorted by list_id, and np.lexsort is
-    given list_id as the secondary key). Returns the per-list probe
-    matrices {list_id: (pids int64[], P float64[n, dim])} that
-    _list_score_kernel / _assign_score_kernel consume."""
+    """Driver-side ranking of each probe's top `nprobe` lists, with the
+    decisions of a Spark window over the probe x centroid dots: the dot
+    accumulates in ascending-d order (== a sequential `aggregate`
+    fold), and lists order by (dot desc, list_id asc) like orderBy with
+    row_number (cent_rows arrive sorted by list_id). A NaN dot ranks
+    FIRST, as Spark's descending order puts NaN above every number. Returns the per-list probe matrices
+    {list_id: (pids int64[], P float64[n, dim])} that
+    _assign_score_kernel consumes."""
     import numpy as np
 
-    if len(ppdf) == 0:
+    if len(ppdf) == 0 or not cent_rows:
         return {}
     lids = np.array([lid for lid, _ in cent_rows], dtype=np.int64)
     C = np.array([c for _, c in cent_rows], dtype=np.float64)  # k x dim
@@ -430,10 +370,13 @@ def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: i
     dot = np.zeros((len(P), len(lids)))
     for d in range(C.shape[1]):  # ascending-d fold == aggregate()
         dot = dot + P[:, d, None] * C[None, :, d]
-    take = min(nprobe, len(lids))
+    nan = np.isnan(dot)
+    neg = np.where(nan, 0.0, -dot)
+    take = max(min(nprobe, len(lids)), 0)
     by_list: dict[int, tuple[list, list]] = {}
     for i in range(len(P)):
-        order = np.lexsort((lids, -dot[i]))[:take]
+        # last key is primary: NaN first, then dot desc, then list_id
+        order = np.lexsort((lids, neg[i], ~nan[i]))[:take]
         for j in order:
             slot = by_list.setdefault(int(lids[j]), ([], []))
             slot[0].append(pids[i])
@@ -448,18 +391,16 @@ def _assign_score_kernel(
     e: DataFrame, cent_rows: list[tuple[int, list[float]]], pmap: dict, k: int
 ) -> DataFrame:
     """(probe_id, neighbor_id, list_id, cos_raw): the FUSED corpus pass
-    of the closure probe transport — ONE Arrow trip does what
-    _assign_kernel + _list_score_kernel did in two (the corpus arrays
-    no longer bounce Python -> JVM -> Python between assignment and
-    scoring), and the per-list probe matrices ride the task closure
-    like _assign_kernel's centroid matrix (serialized once per stage
-    into the torrent-broadcast task binary — none of the per-call
-    sc.broadcast cold cost, none of the join transport's per-candidate
-    matrix duplication).
+    of ann_ivf_topk — ONE Arrow trip assigns each corpus vector to its
+    list and scores it against that list's probes. The centroid matrix
+    and the per-list probe matrices ride the task closure (serialized
+    once per stage into the torrent-broadcast task binary, so they cost
+    per executor, not per task or per candidate row).
 
-    Bit-identical doubles to the unfused forms (parity-tested): the
-    assignment argmax and both scoring folds accumulate in ascending-d
-    order, first-max tie-break == smaller list_id.
+    Bit-identical doubles to the pair-at-a-time JVM form (_cos_expr
+    after a dot-desc, list_id-asc window assignment; parity-tested):
+    the assignment argmax and both scoring folds accumulate in
+    ascending-d order, first-max tie-break == smaller list_id.
 
     Emits a PRUNED superset of the final rows: per (probe, list,
     batch), only candidates whose raw cosine is within 1e-5 (one
@@ -468,8 +409,8 @@ def _assign_score_kernel(
     by k STRICTLY larger ROUNDED values (|round5(x)-x| <= 0.5e-5), so
     it can never enter the global rounded top-k regardless of the
     neighbor_id tie-break — same cut as embed_topk_blocked. The JVM
-    F.round + window downstream are unchanged, so the surviving rows
-    are byte-for-byte the unfused output."""
+    F.round + window downstream then keep exactly the rows an unpruned
+    pass would."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -520,11 +461,10 @@ def _assign_score_kernel(
                 cos = dot2 / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
                 keep = pids[:, None] != sub_ids[None, :]
                 # per-probe quantum-safe top-k cut (see docstring).
-                # NaN cosines (zero-norm vectors: 0/0) are KEPT — the
-                # unfused kernels emit them and Spark's descending
-                # order ranks NaN first, so dropping them here would
-                # break transport parity on degenerate corpora
-                # (r7 review; parity test covers a zero vector).
+                # NaN cosines (zero-norm vectors: 0/0) are KEPT: Arrow
+                # hands them to the JVM as NULL, which ranks last, and
+                # a probe with fewer than k finite cosines must still
+                # get them (the parity test covers a zero probe).
                 masked = np.where(keep, cos, -np.inf)
                 kk = min(k, nb)
                 kth = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
@@ -547,95 +487,6 @@ def _assign_score_kernel(
                 )
 
     return e.select("vec_id", "v").mapInPandas(run, schema=schema)
-
-
-def _list_score_kernel(cand: DataFrame, probes_bc=None, probes_map: dict | None = None) -> DataFrame:
-    """(probe_id, neighbor_id, list_id, cos_raw) from candidate rows:
-    per (batch, list) the list's probe matrix scores every candidate
-    with the same ascending-d ordered fold as _cos_expr, so each
-    double is bit-identical to the pair-at-a-time HOF form. Self-pairs
-    (probe_id == vec_id) are excluded like the join filter was.
-
-    Two probe transports (see ann_ivf_topk for the measured tradeoff):
-
-    - ``probes_bc=None`` (join form): `cand` carries the list's probe
-      matrix as a nested `_probes array<struct<probe_id, pv>>` column
-      attached by a broadcast join. The matrix is duplicated onto
-      every candidate row through the Arrow boundary — shipped bytes
-      scale as candidates x probes-per-list x dim (ADVICE r5 #3) —
-      but the plan stays fully lazy and needs no Python-broadcast
-      distribution.
-    - ``probes_bc`` set (broadcast form): `cand` stays NARROW
-      (vec_id, v, list_id); the matrices (dict list_id ->
-      (pids int64[], P float64[n_probes, dim])) ship once per
-      executor via sc.broadcast and are read inside the kernel;
-      candidates in lists no probe ranked are dropped here.
-    - ``probes_map`` set (closure form): same narrow candidate rows as
-      the broadcast form, but the matrices ride the TASK CLOSURE (the
-      _assign_kernel centroid-shipping mechanism) instead of a fresh
-      per-call sc.broadcast."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("list_id", T.LongType()),
-            T.StructField("cos_raw", T.DoubleType()),
-        ]
-    )
-
-    def run(batches):
-        pmap = probes_bc.value if probes_bc is not None else probes_map
-        for pdf in batches:
-            pdf = pdf[pdf["v"].notna()]  # NULL rows: skip, don't crash
-            if len(pdf) == 0:
-                continue
-            out_p, out_n, out_l, out_c = [], [], [], []
-            for lid, idx in pdf.groupby("list_id", sort=False).indices.items():
-                sub = pdf.iloc[idx]
-                if pmap is not None:
-                    got = pmap.get(int(lid))
-                    if got is None:
-                        continue
-                    pids, P = got
-                else:
-                    prows = sub["_probes"].iloc[0]
-                    pids = np.array([int(r["probe_id"]) for r in prows], dtype=np.int64)
-                    P = np.vstack([np.asarray(r["pv"], dtype=np.float64) for r in prows])
-                B = np.vstack(sub["v"].to_numpy()).astype(np.float64)
-                cids = sub["vec_id"].to_numpy(np.int64)
-                npb, dim = P.shape
-                nb = len(cids)
-                dot = np.zeros((npb, nb))
-                pn = np.zeros(npb)
-                bn = np.zeros(nb)
-                for d in range(dim):  # ascending-d fold == aggregate()
-                    dot = dot + P[:, d, None] * B[None, :, d]
-                    pn = pn + P[:, d] * P[:, d]
-                    bn = bn + B[:, d] * B[:, d]
-                cos = dot / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
-                keep = pids[:, None] != cids[None, :]
-                pi, bi = np.nonzero(keep)
-                out_p.append(pids[pi])
-                out_n.append(cids[bi])
-                out_l.append(np.full(len(pi), int(lid), dtype=np.int64))
-                out_c.append(cos[pi, bi])
-            if out_p:
-                yield pd.DataFrame(
-                    {
-                        "probe_id": np.concatenate(out_p),
-                        "neighbor_id": np.concatenate(out_n),
-                        "list_id": np.concatenate(out_l),
-                        "cos_raw": np.concatenate(out_c),
-                    }
-                )
-
-    narrow = probes_bc is not None or probes_map is not None
-    cols = ["vec_id", "v", "list_id"] + ([] if narrow else ["_probes"])
-    return cand.select(*cols).mapInPandas(run, schema=schema)
 
 
 def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
@@ -678,12 +529,6 @@ def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
             yield pd.DataFrame(out)
 
     return pairs.mapInPandas(run, schema=schema)
-
-
-def _dot_expr(a: str, b: str):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def kmeans_centroids(
@@ -746,113 +591,17 @@ def kmeans_centroids(
     return [(j, C[j].tolist()) for j in range(k)]
 
 
-# Above this many unrolled multiply-add TERMS (lists x dim) the literal
-# greatest() assignment expression stops being viable — measured on
-# this box (Spark 4.1, 48 GiB driver): 25 lists x 64 dims (1,600
-# terms) compiles in ~9 s and is the proven driver-row/bench shape;
-# 64 x 64 (4,096 terms) runs minutes-to-failure; 300 x 64 (19,200
-# terms) OOMs the 48 GiB JVM during Janino compilation even on a
-# 1,000-vector corpus. `assign_transport="auto"` switches to the Arrow
-# argmax kernel above the cap.
-_ASSIGN_EXPR_MAX_TERMS = 2048
+# Byte cap on the per-list probe matrices ann_ivf_topk ships in a task
+# closure: every probe sits in min(nprobe, lists) matrices as an int64
+# id plus dim float64s (500 probes x nprobe 3 x 520 B ~ 0.8 MB at 64
+# dims). Same 64 MB convention as pip_join's edges_broadcast_bytes.
+# Over it, ann_ivf_topk refuses, as embed_topk_blocked does.
+_CLOSURE_MAX_PROBE_BYTES = 64 << 20
 
 
-def _assign_kernel(e: DataFrame, cent_rows: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, v, list_id): nearest-centroid corpus assignment for
-    LARGE quantizers — the documented switch-over from the literal
-    greatest() expression form, which unrolls lists x dim
-    multiply-adds into one codegen'd expression and fails hard past a
-    few thousand terms (see _ASSIGN_EXPR_MAX_TERMS for the measured
-    cliff — at 300 lists x 64 dims the Janino compile OOMs a 48 GiB
-    driver). Still map-only: zero Exchange, one Arrow pass over the
-    corpus.
-
-    Bit-identical to the expression form (parity-tested): the dot
-    accumulates in ascending-d order (== the expression's
-    left-to-right `v[0]*c0 + v[1]*c1 + ...` chain), and ties pick the
-    smaller list_id (np.argmax keeps the FIRST max over centroid rows
-    sorted ascending by list_id == greatest() over (dot, -list_id)
-    structs).
-
-    The centroid matrix ships in the task closure: it is serialized
-    once per stage into the task binary, which Spark
-    torrent-broadcasts to executors — so a 10^4-list x 64-dim float64
-    quantizer costs ~5 MB per executor, not per task, with none of
-    the ~30-45 s cold per-call cost a fresh Python `sc.broadcast` pays
-    on local mode (see probe_transport's measured tradeoff)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    lids = np.array([lid for lid, _ in cent_rows], dtype=np.int64)
-    C = np.array([c for _, c in cent_rows], dtype=np.float64)  # k x dim
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-            T.StructField("list_id", T.LongType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["v"].notna()]  # NULL rows: skip, don't crash
-            if len(pdf) == 0:
-                continue
-            V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x dim
-            dot = np.zeros((len(V), C.shape[0]))
-            for d in range(C.shape[1]):  # ascending-d fold == the expr chain
-                dot = dot + V[:, d, None] * C[None, :, d]
-            best = np.argmax(dot, axis=1)  # first max -> smallest list_id
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "v": pdf["v"],
-                    "list_id": lids[best],
-                }
-            )
-
-    return e.select("vec_id", "v").mapInPandas(run, schema=schema)
-
-
-def _assign_expr_df(e: DataFrame, cent_rows: list[tuple[int, list[float]]], dim: int) -> DataFrame:
-    """(vec_id, v, list_id) via the literal greatest() codegen
-    expression — the all-JVM zero-Python assignment form, shared by
-    every probe transport (one definition so the compile-cap check and
-    the (dot, -list_id) struct encoding cannot drift between
-    branches). Refuses above _ASSIGN_EXPR_MAX_TERMS, the measured
-    Janino OOM cliff."""
-    if len(cent_rows) * dim > _ASSIGN_EXPR_MAX_TERMS:
-        raise ValueError(
-            f"assign_transport='expr' with {len(cent_rows)} lists x {dim} dims = "
-            f"{len(cent_rows) * dim} unrolled terms > {_ASSIGN_EXPR_MAX_TERMS}: "
-            "the literal expression's Janino compile fails hard past this "
-            "(300x64 OOMs a 48 GiB driver); use 'kernel' (bit-identical)"
-        )
-    structs = ", ".join(
-        "named_struct('d', "
-        + " + ".join(f"v[{i}] * {c[i]!r}" for i in range(dim))
-        + f", 'n', {-lid})"
-        for lid, c in cent_rows
-    )
-    assign_expr = f"greatest({structs})" if len(cent_rows) > 1 else f"({structs})"
-    return e.select(
-        "vec_id", "v", (-F.expr(assign_expr).getField("n")).cast("long").alias("list_id")
-    )
-
-
-def _ivf_topk_rows(raw: DataFrame, k: int) -> DataFrame:
-    """Shared tail of every IVF transport: JVM 5-dp round (oracle
-    HALF_UP semantics) + per-probe (cos desc, neighbor_id) top-k."""
-    scored = raw.select(
-        "probe_id",
-        "neighbor_id",
-        F.round("cos_raw", 5).alias("cos_sim"),
-        "list_id",
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+def _probe_matrix_bytes(n_probes: int, dim: int, nprobe: int, n_lists: int) -> int:
+    """Size of what _rank_probes_local builds for n_probes probes."""
+    return n_probes * max(min(nprobe, n_lists), 0) * (dim + 1) * 8
 
 
 def ann_ivf_topk(
@@ -861,8 +610,6 @@ def ann_ivf_topk(
     k: int = 3,
     nprobe: int = 3,
     centroids: list[tuple[int, list[float]]] | None = None,
-    probe_transport: str = "closure",
-    assign_transport: str = "auto",
 ) -> DataFrame:
     """IVF top-k: coarse-quantize every vector to its max-dot centroid
     list, probe the top `nprobe` lists per query vector, exact-cosine
@@ -872,241 +619,60 @@ def ann_ivf_topk(
     `centroids=None` uses per-label elementwise means — deterministic
     and SQL-expressible, which is what keeps the driver oracle a real
     DuckDB twin. Pass kmeans_centroids(...) output for the production
-    quantizer (sampled k-means, ~sqrt(N) lists at scale); the list
-    scan and re-rank are identical either way — the centroid table is
-    a broadcast, the list id is the shuffle key.
+    quantizer (sampled k-means, ~sqrt(N) lists at scale).
 
-    `probe_transport` picks how the per-list probe matrices reach the
-    scoring kernel; all three produce bit-identical rows:
+    The call is eager and makes two corpus passes. (1) One collects
+    the probe rows (probe_filter true, embedding not NULL); on the
+    label path it also yields the centroid partials. numpy then
+    ranks each probe's top `nprobe` lists (_rank_probes_local). (2) The
+    per-list probe matrices ship in the task closure of ONE fused
+    corpus pass (_assign_score_kernel: assign + score + quantum-safe
+    top-k prune), and a JVM round + window keeps the top `k`.
 
-    - ``"closure"`` (default since r7): the probe set is collected
-      eagerly (one small Arrow job), ranked against the centroids in
-      numpy (same ascending-d fold and (dot desc, list_id asc)
-      tie-break as the window form — see _rank_probes_local), and the
-      per-list matrices ship inside the scoring kernel's TASK CLOSURE
-      — serialized once per stage into the torrent-broadcast task
-      binary, exactly how _assign_kernel ships the centroid matrix.
-      With the default kernel assignment the corpus makes ONE fused
-      Arrow pass (_assign_score_kernel: assign + score + quantum-safe
-      top-k prune), vs the join transport's two passes plus
-      per-candidate matrix duplication (measured r7: 24.8 s -> ~3 s on
-      the 200k-vector bench shape) and the broadcast transport's
-      ~30-45 s cold per-call sc.broadcast. This is the right local
-      default AND the right cluster default at bench-like probe
-      counts; revisit only when the probe matrix itself outgrows the
-      task-binary budget (~tens of MB) — then "broadcast" on a
-      long-lived cluster.
-    - ``"join"``: attach each list's matrix as a nested
-      `_probes` column via a broadcast join. The matrix is duplicated
-      per candidate row through Arrow — shipped bytes scale as
-      candidates x probes-per-list x (dim x 8 + 8) B, which is NOT
-      small: ~625 MB at 500 probes / nprobe 3 / 25 lists / 20k
-      vectors / 64 dims (60 probes per list x 520 B x 20k rows) —
-      but the plan stays lazy and avoids Python-broadcast
-      distribution entirely. Measured decisively faster anyway at
-      that scale on local[32] (~12 s warm, full op): a fresh
-      sc.broadcast costs ~30-45 s of cold per-worker distribution
-      (cold 44.7 s vs warm 3.1 s, same pmap, same job), and every
-      call creates a fresh broadcast id, so it never warms across
-      calls. The crossover favors "broadcast" as probes-per-list or
-      candidate count grow the duplication faster than the flat
-      distribution cost (scripts/bench_ivf_transport.py re-measures
-      the pair).
-    - ``"broadcast"``: candidate rows stay narrow (id + vector +
-      list id); matrices ship once per executor via sc.broadcast and
-      are read inside the kernel. This is the high-probe-density
-      scale shape — per-row duplication grows with probes-per-list
-      while the broadcast cost is flat and amortizes over many tasks
-      per executor on a long-lived cluster — but it runs probe
-      ranking EAGERLY (toPandas) at call time, and the returned
-      DataFrame carries the broadcast as `.probes_bc` for callers to
-      `.destroy()` after consuming.
-
-    `assign_transport` picks how the corpus reaches its list — both
-    bit-identical (parity-tested):
-
-    - ``"kernel"``: `_assign_kernel`'s Arrow argmax with the centroid
-      matrix in the task closure. This is what "auto" (the default)
-      picks at every size: interleaved A/B on the bench shapes
-      measured it FASTER than the expression everywhere tested —
-      20k vectors / 8 lists: 10.5 vs 12.7 s; 200k / 8 lists: 55.7 vs
-      115.9 s (2.1x) — the per-row evaluation of the unrolled
-      multiply-add chain loses to one vectorized matmul pass even
-      though the kernel pays an Arrow round-trip of the corpus.
-    - ``"expr"``: the literal greatest() codegen expression (below) —
-      all-JVM, zero Python in the plan (the property a caller would
-      choose it for); refused above `_ASSIGN_EXPR_MAX_TERMS` lists x
-      dim terms, where its Janino compile is a measured OOM cliff
-      (see the constant's comment)."""
-    # pure parameter check — validate BEFORE the eager corpus jobs
-    # below (dim probe, centroid aggregation), so a typo costs nothing
-    if probe_transport not in ("closure", "join", "broadcast"):
-        raise ValueError(
-            f"probe_transport must be 'closure', 'join' or 'broadcast', got {probe_transport!r}"
-        )
-    if assign_transport not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"assign_transport must be 'auto', 'expr' or 'kernel', got {assign_transport!r}"
-        )
+    When those matrices, probes x min(nprobe, lists) x (dim + 1) x 8 B,
+    would exceed _CLOSURE_MAX_PROBE_BYTES, the call raises ValueError;
+    narrow probe_filter or use ann_lsh_topk. With explicit centroids
+    the probe collect is bounded by limit(cap_rows + 1), so an over-cap
+    probe set never reaches the driver; on the label path it shares a
+    job with the centroid partials and is not bounded."""
     e = embeddings_df.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
-    if probe_transport == "closure":
-        # the closure path runs TWO jobs total (r7: job-launch
-        # overhead, not compute, dominated the bench shape): (1) the
-        # probe collect — on the label path, one combined corpus pass
-        # yields probe rows AND centroid partials; with explicit
-        # centroids, a plain JVM filter transfers only the probe rows
-        # (no Arrow pass over the corpus just to tag probes — r7
-        # review). Either way it answers the dim question and the
-        # empty-input early exit, replacing the separate first()
-        # probe; (2) the fused assign+score pass + top-k. NULL-
-        # embedding probes are skipped like the old dim probe — the
-        # lazy transports would crash on them at np.vstack time.
-        if centroids is None:
-            ppdf, partials = _probes_and_label_partials(e, probe_filter, need_cents=True)
-        else:
-            ppdf = (
-                e.filter(probe_filter)
-                .filter(F.col("v").isNotNull())
-                .select("vec_id", "v")
-                .toPandas()
-            )
-        spark = embeddings_df.sparkSession
-        empty = "probe_id long, neighbor_id long, cos_sim double, list_id long"
-        if len(ppdf) == 0:  # empty corpus or nothing matched the filter
-            return spark.createDataFrame([], empty)
-        dim = len(ppdf["v"].iloc[0])
-        if centroids is not None:
-            cent_rows = sorted((int(i), [float(x) for x in c]) for i, c in centroids)
-        else:
-            cent_rows = _combine_label_partials(partials, dim)
-        pmap = _rank_probes_local(cent_rows, ppdf, nprobe)
-        if not pmap:
-            return spark.createDataFrame([], empty)
-        if assign_transport in ("auto", "kernel"):
-            # fused single-pass form: assign + score + quantum-safe
-            # top-k prune in ONE corpus Arrow trip
-            raw = _assign_score_kernel(e, cent_rows, pmap, k)
-        else:  # "expr": all-JVM assignment, closure-matrix scoring
-            assigned = _assign_expr_df(e, cent_rows, dim)
-            if len(pmap) < len(cent_rows):
-                assigned = assigned.filter(F.col("list_id").isin([int(k_) for k_ in pmap]))
-            raw = _list_score_kernel(assigned, probes_map=pmap)
-        return _ivf_topk_rows(raw, k)
-    # dim probe skips NULL embeddings: size(NULL) is NULL, and the row
-    # the scan happens to return first need not be clean (review r6)
-    first = e.filter(F.col("v").isNotNull()).select(F.size("v").alias("d")).first()
-    if first is None:  # empty input: empty result, not a crash
-        spark = embeddings_df.sparkSession
-        return spark.createDataFrame(
+    if centroids is None:
+        ppdf, partials = _probes_and_label_partials(e, probe_filter)
+        dim = len(ppdf["v"].iloc[0]) if len(ppdf) else 0
+        cent_rows = _combine_label_partials(partials, dim) if dim else []
+    else:
+        cent_rows = sorted((int(i), [float(x) for x in c]) for i, c in centroids)
+        dim = len(cent_rows[0][1]) if cent_rows else 0
+        per_probe = _probe_matrix_bytes(1, dim, nprobe, len(cent_rows))
+        cap_rows = _CLOSURE_MAX_PROBE_BYTES // max(per_probe, 1)
+        ppdf = (
+            e.filter(probe_filter)
+            .filter(F.col("v").isNotNull())
+            .select("vec_id", "v")
+            .limit(cap_rows + 1)
+            .toPandas()
+        )
+    size = _probe_matrix_bytes(len(ppdf), dim, nprobe, len(cent_rows))
+    if size > _CLOSURE_MAX_PROBE_BYTES:
+        raise ValueError(
+            f"ann_ivf_topk: per-list probe matrices exceed {_CLOSURE_MAX_PROBE_BYTES} "
+            f"bytes (at least {size}); narrow probe_filter or use ann_lsh_topk"
+        )
+    pmap = _rank_probes_local(cent_rows, ppdf, nprobe)
+    if not pmap:  # empty corpus, nothing matched the filter, or no lists
+        return embeddings_df.sparkSession.createDataFrame(
             [], "probe_id long, neighbor_id long, cos_sim double, list_id long"
         )
-    dim = first["d"]
-    # corpus-side assignment is MAP-ONLY (r4): the old plan crossJoined
-    # every vector with the k-row centroid table and ran a row_number
-    # window over vec_id — an N x k explode plus a FULL SHUFFLE of the
-    # corpus just to take an argmax. The quantizer is tiny and known at
-    # plan time (IVF is inherently two-phase: train, then assign), so
-    # the argmax inlines as one JVM expression: greatest() over
-    # (dot, -list_id) structs, literal centroid components unrolled
-    # into multiply-adds inside whole-stage codegen. Same doubles,
-    # same (dot desc, list_id asc) tie-break, zero Exchange. The
-    # centroid values are materialized here (one bounded job on the
-    # label path; the kmeans path already holds them). Since r6 the
-    # DEFAULT map-only form is _assign_kernel's Arrow argmax — the
-    # interleaved A/B measured it faster than this expression at every
-    # size (2.1x at 200k rows), and the expression's Janino compile
-    # fails hard past a few thousand terms; the expr stays as the
-    # explicit zero-Python-plan option below the cap.
-    spark = embeddings_df.sparkSession
-    if centroids is not None:
-        cent_rows = sorted((int(i), [float(x) for x in c]) for i, c in centroids)
-    else:
-        # ONE kernel pass computes the per-label means (r7, see
-        # _label_centroids); probe ranking and corpus assignment both
-        # reuse the SAME collected values, so there is no per-ulp
-        # drift between the two consumers
-        cent_rows = _label_centroids(e, dim)
-    cents = spark.createDataFrame(cent_rows, "list_id long, c array<double>")
-    if assign_transport == "auto":
-        # measured, not guessed: the kernel won the interleaved A/B at
-        # every corpus/quantizer size tested (see docstring) AND is the
-        # only form that exists past the expr's compile cliff
-        assign_transport = "kernel"
-    if assign_transport == "expr":
-        assigned = _assign_expr_df(e, cent_rows, dim)
-    else:
-        assigned = _assign_kernel(e, cent_rows)
-    # probe-side ranking keeps the window — probes are the filtered
-    # small side, and it needs the full top-nprobe order, not argmax
-    scored_lists = (
-        e.filter(probe_filter)
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "list_id", _dot_expr("v", "c").alias("_dot"))
+    scored = _assign_score_kernel(e, cent_rows, pmap, k).select(
+        "probe_id",
+        "neighbor_id",
+        F.round("cos_raw", 5).alias("cos_sim"),  # oracle HALF_UP semantics
+        "list_id",
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("_dot").desc(), F.col("list_id"))
-    ranked = scored_lists.withColumn("_rk", F.row_number().over(w_assign))
-    probes = ranked.filter(F.col("_rk") <= nprobe).select(
-        F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), "list_id"
-    )
-    # list scan: the per-list probe matrices reach the ordered-fold
-    # kernel (bit-identical doubles to the _cos_expr HOF,
-    # parity-tested) via the transport chosen above; rounding stays
-    # JVM F.round either way. Both transports avoid materializing
-    # (pair x both arrays) rows — the pre-r5 pair form pushed ~3 GB
-    # through Arrow at 500 probes x 50k vectors.
-    if probe_transport == "join":
-        # lazy: inner broadcast join drops candidates in unprobed
-        # lists; each candidate row carries its list's full matrix
-        # through Arrow (the honest cost of this form — see docstring)
-        plist = probes.groupBy("list_id").agg(
-            F.collect_list(F.struct("probe_id", "pv")).alias("_probes")
-        )
-        cand = assigned.join(F.broadcast(plist), "list_id")
-        probes_bc = None
-    else:  # "broadcast" — validated at entry
-        import numpy as np
-
-        ppdf = probes.toPandas()
-        if len(ppdf) == 0:
-            spark = embeddings_df.sparkSession
-            out = spark.createDataFrame(
-                [], "probe_id long, neighbor_id long, cos_sim double, list_id long"
-            )
-            # honor the .probes_bc contract on the empty path too — a
-            # caller looping over probe sets calls .destroy() on every
-            # returned frame, including ones that matched nothing
-            out.probes_bc = spark.sparkContext.broadcast({})
-            return out
-        pmap = {}
-        for lid, idx in ppdf.groupby("list_id", sort=False).indices.items():
-            sub = ppdf.iloc[idx]
-            pmap[int(lid)] = (
-                sub["probe_id"].to_numpy(np.int64),
-                np.vstack(sub["pv"].to_numpy()).astype(np.float64),
-            )
-        spark = embeddings_df.sparkSession
-        probes_bc = spark.sparkContext.broadcast(pmap)
-        # same semantics as the join form's inner join: candidates in
-        # lists no probe ranked are dropped before the kernel. When
-        # every list is probed (common at moderate list counts) the
-        # filter would keep every row while still paying one extra
-        # evaluation of the giant assignment expression per row, so it
-        # is skipped; the kernel drops unknown lists either way.
-        if len(pmap) < len(cent_rows):
-            cand = assigned.filter(F.col("list_id").isin([int(k_) for k_ in pmap]))
-        else:
-            cand = assigned
-    out = _ivf_topk_rows(_list_score_kernel(cand, probes_bc), k)
-    if probes_bc is not None:
-        # the broadcast lives until the caller destroys it — carried as
-        # `.probes_bc` (the `.sig_cache` convention) so sessions
-        # looping over many probe sets can `.probes_bc.destroy()`
-        # after consuming; a leaked one is a few hundred KB pickled on
-        # the driver.
-        out.probes_bc = probes_bc
-    return out
+    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
 
 
 def ann_ivf_topk_sql(probe_filter: str = "vec_id % 100 = 0", k: int = 3, nprobe: int = 3) -> str:

@@ -265,7 +265,6 @@ def pip_join_hybrid(
     lat_col: str = "lat",
     carry_cols: list[str] | None = None,
     broadcast_cellmap: bool = True,
-    refine: str = "jvm",
 ) -> DataFrame:
     """Filter-refine PIP join with interior-cell fast accept (the
     engine's flagship physical strategy) — ONE scan of the fact table.
@@ -286,9 +285,7 @@ def pip_join_hybrid(
     interior-cell accept eliminates the exact test for interior hits,
     and the boundary refine is the same O(edges) JVM cost as JTS
     contains. Set `broadcast_cellmap=False` to shuffle-join the cell
-    map instead (large polygon side); `refine="arrow"` keeps a
-    pass-through Arrow kernel variant (numpy ray cast; used by the
-    equivalence tests and as a fallback for exotic geometry)."""
+    map instead (large polygon side)."""
     if carry_cols is not None:
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
@@ -302,7 +299,6 @@ def pip_join_hybrid(
     pid_parts: list[np.ndarray] = []
     inside_parts: list[np.ndarray] = []
     edge_rows = []
-    refine_wkts: dict[int, object] = {}
     for pid, parsed, _env in polys:
         inside, boundary = classify_polygon_cells(parsed, res)
         n_in, n_bd = len(inside), len(boundary)
@@ -312,7 +308,6 @@ def pip_join_hybrid(
             inside_parts.append(
                 np.concatenate([np.ones(n_in, dtype=bool), np.zeros(n_bd, dtype=bool)])
             )
-        refine_wkts[int(pid)] = parsed
         if n_bd:
             edge_rows.append((int(pid), _edge_parts_from_parsed(parsed)))
     # the cell map ships driver -> JVM as ONE Arrow table built from
@@ -344,45 +339,17 @@ def pip_join_hybrid(
     pts = points_df.withColumn("cell", cells.cell_expr(F.col(lon_col), F.col(lat_col), res))
     cand = pts.join(cellmap, on="cell", how="inner")
     out_cols = [c for c in points_df.columns] + ["polygon_id"]
-
-    if refine == "jvm":
-        edges_df = spark.createDataFrame(
-            edge_rows,
-            T.StructType(
-                [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
-            ),
-        )
-        j = cand.join(F.broadcast(edges_df), on="polygon_id", how="left")
-        keep = F.when(F.col("_inside"), F.lit(True)).otherwise(
-            raycast_inside_expr(F.col(lon_col), F.col(lat_col), F.col("_edges"))
-        )
-        return j.filter(keep).select(*out_cols)
-
-    # Arrow fallback: single pass-through kernel (interior rows skip the
-    # numpy ray cast but still cross the Arrow boundary once)
-    schema = T.StructType(points_df.schema.fields + [T.StructField("polygon_id", T.LongType())])
-    narrowed = cand.select(*out_cols, "_inside")
-
-    def refine_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = pdf["_inside"].to_numpy(bool).copy()
-            band = np.flatnonzero(~keep)
-            if len(band):
-                px = pdf[lon_col].to_numpy(np.float64)
-                py = pdf[lat_col].to_numpy(np.float64)
-                sub = pdf.iloc[band]
-                for pid, grp_idx in sub.groupby("polygon_id", sort=False).indices.items():
-                    parsed = refine_wkts.get(int(pid))
-                    if parsed is None:
-                        continue
-                    rows_ix = band[grp_idx]
-                    keep[rows_ix] = points_in_geom(px[rows_ix], py[rows_ix], parsed)
-            if keep.any():
-                yield pdf.loc[keep, out_cols]
-
-    return narrowed.mapInPandas(refine_fn, schema=schema)
+    edges_df = spark.createDataFrame(
+        edge_rows,
+        T.StructType(
+            [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
+        ),
+    )
+    j = cand.join(F.broadcast(edges_df), on="polygon_id", how="left")
+    keep = F.when(F.col("_inside"), F.lit(True)).otherwise(
+        raycast_inside_expr(F.col(lon_col), F.col(lat_col), F.col("_edges"))
+    )
+    return j.filter(keep).select(*out_cols)
 
 
 def polygon_cover_cells(polygons_wkt_df: DataFrame, res: int) -> DataFrame:
@@ -726,18 +693,12 @@ def pip_join(
        built AND joined distributed — the r2 planner shuffled the join
        but still classified in a driver loop, which was its 100x
        bottleneck."""
-    unknown = set(kw) - {"refine", "salt_buckets", "edges_broadcast_bytes"}
+    unknown = set(kw) - {"salt_buckets", "edges_broadcast_bytes"}
     if unknown:
         raise TypeError(f"pip_join: unknown option(s) {sorted(unknown)}")
     edges_cap = kw.get("edges_broadcast_bytes", 64 << 20)
 
     def _cells(res_: int, attach: str) -> DataFrame:
-        if kw.get("refine", "jvm") != "jvm":
-            raise ValueError(
-                "pip_join: refine='arrow' is only available on the hybrid "
-                "(collectable polygon side) path; the distributed cells path "
-                "refines with the JVM ray cast"
-            )
         return pip_join_cells(
             points_df,
             polygons_wkt_df,
@@ -790,7 +751,6 @@ def pip_join(
         lat_col=lat_col,
         carry_cols=carry_cols,
         broadcast_cellmap=True,
-        **{k: v for k, v in kw.items() if k == "refine"},
     )
 
 
@@ -950,10 +910,15 @@ def _grid_nearest_batch(plon, plat, idx, level: int):
     top = idx["y0"] + (gy + 2) * h
     dx_deg = np.minimum(plon_f - left, right - plon_f)
     # wrap bound: when the frame spans most of the circle, a candidate
-    # across the seam sits at angular gap >= 360 - span even though it
-    # is far outside the ring in frame coordinates; fold that into the
-    # lower bound (inactive for spans < ~180: the term is then huge)
-    dx_deg = np.minimum(dx_deg, 360.0 - idx.get("span_x", 0.0))
+    # across the seam can be close even though it is far outside the
+    # ring in frame coordinates. Every candidate lies in [x0, x0 +
+    # span], so its gap the other way round the globe is at least 360
+    # minus the probe's farthest distance to a frame edge (not 360 -
+    # span: a probe in the seam gap outside the frame is nearer). The
+    # term is huge, hence inactive, for spans under ~180.
+    span_x = idx.get("span_x", 0.0)
+    far_edge = np.maximum(np.abs(plon_f - idx["x0"]), np.abs(plon_f - idx["x0"] - span_x))
+    dx_deg = np.minimum(dx_deg, 360.0 - far_edge)
     dy_deg = np.minimum(plat - bot, top - plat)
     worst_lat = np.minimum(np.abs(plat) + np.abs(top - bot), 90.0)
     guard = 0.999 * np.minimum(

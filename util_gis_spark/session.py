@@ -18,6 +18,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM (MemTotal), in MB. In local mode the driver
+    heap also hosts every executor; a fixed 48g default let it outgrow
+    a 15 GB machine until the kernel OOM-killed the JVM."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(total // 2 >> 20, 1024)}m"
+
+
 def get_spark(
     app_name: str = "util_gis_spark",
     master: str | None = None,
@@ -45,7 +53,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     if extra_conf:
