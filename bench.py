@@ -22,7 +22,8 @@ labeled overhead-inclusive.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local cores (default 32)
+  SPARK_GRAFT_CPUS     local cores (default: the CPUs this process
+                       may run on)
   BENCH_IMAGE_FACTOR   images replication factor (default 100 ->
                        500k images at sf0.1)
 """
@@ -40,12 +41,12 @@ from pyspark.sql import functions as F
 
 from util_gis_spark import datasets as D
 from util_gis_spark.operators import filters, joins, trajectory
-from util_gis_spark.session import get_spark
+from util_gis_spark.session import default_parallelism, get_spark
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     factor = int(os.environ.get("BENCH_IMAGE_FACTOR", "400"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -10,7 +10,7 @@ Prints one JSON line: per-phase min-of-reps seconds for
    driver-side cellmap build),
  - the IVF closure-path phases (combined probe+centroid pass, fused
    assign+score pass, full operator),
- - the minhash signature-kernel reuse (plain vs auto-persist default).
+ - the full minhash operator at 50k docs.
 Interleave-with-a-worktree protocol and the decision-record A/Bs live
 in scripts/bench_*.py; this file is the phase breakdown."""
 
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from util_gis_spark import datasets as D
 from util_gis_spark.operators import joins
-from util_gis_spark.session import get_spark
+from util_gis_spark.session import default_parallelism, get_spark
 
 
 def timed(fn, reps=3):
@@ -41,7 +41,7 @@ def timed(fn, reps=3):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     out: dict = {"loadavg_start": round(os.getloadavg()[0], 2)}
 
@@ -104,22 +104,12 @@ def main() -> None:
         lambda: ann_ivf_topk(emb200k, probe_filter="vec_id % 400 = 0").count()
     )
 
-    # --- minhash signature reuse (plain vs auto-persist default)
+    # --- minhash operator (signatures cached for the result's lifetime)
     from util_gis_spark.operators.dedup import minhash_near_dup_pairs
 
     docs50k = D.documents_range(spark, 50_000, cpus * 2)
-    spark.sparkContext.setJobDescription("extra: minhash 50k persist=False")
-
-    def run_minhash(persist):
-        o = minhash_near_dup_pairs(docs50k, persist=persist)
-        n = o.count()
-        if o.sig_cache is not None:
-            o.sig_cache.unpersist()
-        return n
-
-    out["minhash_50k_nopersist"] = timed(lambda: run_minhash(False))
-    spark.sparkContext.setJobDescription("extra: minhash 50k auto-persist")
-    out["minhash_50k_autopersist"] = timed(lambda: run_minhash(None))
+    spark.sparkContext.setJobDescription("extra: minhash 50k")
+    out["minhash_50k"] = timed(lambda: minhash_near_dup_pairs(docs50k).count())
 
     spark.sparkContext.setJobDescription(None)
     out["loadavg_end"] = round(os.getloadavg()[0], 2)

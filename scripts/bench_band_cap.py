@@ -19,13 +19,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from util_gis_spark import datasets as D  # noqa: E402
 from util_gis_spark.operators.dedup import minhash_near_dup_pairs  # noqa: E402
-from util_gis_spark.session import get_spark  # noqa: E402
+from util_gis_spark.session import default_parallelism, get_spark  # noqa: E402
 
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("band-cap", master=f"local[{cpus}]", shuffle_partitions=cpus)
     docs = D.documents_range(spark, n_docs, cpus * 2)
 

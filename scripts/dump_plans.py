@@ -183,11 +183,12 @@ def main() -> None:
     sections.append(
         (
             "Dedup: MinHash-LSH band join (single explode)",
-            "Verify: (1) the signature kernel (MapInPandas) is ONE "
-            "persisted InMemoryRelation node referenced by all four "
-            "consumers (both band-join sides + both verify joins) — "
-            "r7 auto-persist; before it, the kernel subplan was "
-            "evaluated four times per query. Bands still come from "
+            "Verify: (1) all four consumers of the signature kernel "
+            "(both band-join sides + both verify joins) are Scan "
+            "ExistingRDD nodes naming the SAME localCheckpoint RDD, "
+            "which holds the kernel's output for the result's "
+            "lifetime; uncached, the kernel subplan was evaluated "
+            "four times per query. Bands still come from "
             "ONE explode of the 4-entry band array; (2) the band "
             "self-join shuffles only the NARROW (doc_id, band, bh) "
             "projection; (3) the Jaccard verify re-attaches the wide "

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import band_self_join
+
 N_PLANES = 6    # bits per table
 N_TABLES = 16   # OR-ed hash tables
 MULTIPROBE = 1  # 0 = exact bucket only; 1 = also probe all 1-bit flips
@@ -724,30 +726,27 @@ def embed_cosine_dups(embeddings_df: DataFrame, threshold: float = 0.3) -> DataF
     Same shuffle discipline as ann_lsh_topk (r6 review — this operator
     had kept the pre-r5 wide shape): signatures come from the
     vectorized Arrow kernel (the interpreted-HOF Column form costs
-    ~6k boxed lambda calls per row), the band join carries ONLY
-    (t, bucket, id), and the embedding arrays re-attach by id after
-    the pair dedup — a clustered bucket duplicates each pair up to
-    n_tables times, and shipping both arrays through that duplication
-    is the measured ~16 GB exchange the narrow form replaced. Doubles
+    ~6k boxed lambda calls per row), the band self-join carries ONLY
+    (band = table, bh = bucket, id), and the embedding arrays
+    re-attach by id after the pair dedup — a clustered bucket
+    duplicates each pair up to n_tables times, and shipping both
+    arrays through that duplication is the measured ~16 GB exchange
+    the narrow form replaced. Doubles
     are bit-identical either way (kernel==Column parity is tested;
     rounding stays JVM F.round)."""
     base = embeddings_df.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     e_nar = lsh_signatures_kernel(base).select(
-        "vec_id", F.posexplode("buckets").alias("t", "bucket")
+        "vec_id", F.posexplode("buckets").alias("band", "bh")
     )
-    cand = (
-        e_nar.select(F.col("vec_id").alias("vec_a"), "t", "bucket")
-        .join(e_nar.select(F.col("vec_id").alias("vec_b"), "t", "bucket"), ["t", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .dropDuplicates(["vec_a", "vec_b"])
+    joined = (
+        band_self_join(e_nar, "vec_id")
+        .join(base.select(F.col("vec_id").alias("a"), F.col("v").alias("pv")), "a")
+        .join(base.select(F.col("vec_id").alias("b"), "v"), "b")
     )
-    joined = cand.join(
-        base.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("pv")), "vec_a"
-    ).join(base.select(F.col("vec_id").alias("vec_b"), "v"), "vec_b")
     scored = _cos_kernel(
-        joined.select(F.col("vec_a").alias("probe_id"), F.col("vec_b").alias("neighbor_id"), "pv", "v")
+        joined.select(F.col("a").alias("probe_id"), F.col("b").alias("neighbor_id"), "pv", "v")
     ).select(
         F.col("probe_id").alias("vec_a"),
         F.col("neighbor_id").alias("vec_b"),

@@ -177,47 +177,29 @@ def band_table_expr() -> str:
     return f"array({entries})"
 
 
-# auto-persist bookkeeping (r7): the signature table feeds FOUR
-# consumers (both band-join sides + both verify re-attach joins), so
-# an unpersisted plan evaluates the per-doc kernel 4x per query —
-# measured 2x whole-query cost at every bench size (5k docs: 2.75 vs
-# 1.25 s; 50k: 3.65 vs 1.89 s, interleaved min-of-3). persist=None
-# ("auto", the default) persists the CURRENT call's signatures and
-# releases the PREVIOUS auto-call's cache, bounding live cache to one
-# signature table; an unpersisted-but-unconsumed earlier result just
-# recomputes (correctness unaffected). This is per-invocation work on
-# the operator's own intermediate — nothing survives or is keyed
-# across invocations.
-#
-# Composition caveat (r7 review): eviction happens at CONSTRUCTION
-# time, so building several dedup results lazily and consuming them
-# later leaves only the last-constructed one cached (earlier ones
-# recompute — correct, just unaccelerated). Construct-then-consume
-# each result, or pass persist=True and manage .sig_cache yourself,
-# when composing multiple dedup operators in one plan.
-_AUTO_SIG_CACHES: list = []
-
-
-def _auto_persist_sig(base: DataFrame, fresh: bool = True) -> DataFrame:
+def _local_cache(df: DataFrame) -> DataFrame:
+    """`df` as a lazily computed, locally checkpointed relation: the
+    first action that reads it fills MEMORY_AND_DISK blocks, and every
+    later consumer reads those. The dedup intermediates feed several
+    consumers each; uncached, each re-runs the signature kernel
+    (measured 2x whole-query cost: 5k docs 2.75 vs 1.25 s, 50k 3.65 vs
+    1.89 s). The blocks belong to the returned plan and every DataFrame
+    derived from it, and Spark's ContextCleaner frees them once the
+    last reference is gone; nothing is kept here, so results built on
+    any thread, consumed in any order, never evict each other.
+    Trade-off: local-checkpoint blocks are not recomputed after an
+    executor is lost, so a job that needs a lost block fails. An
+    Exchange below `df` (the capped-bands window, a shuffling input)
+    runs its shuffle stage when this is called."""
     from pyspark import StorageLevel
 
-    if fresh:
-        while _AUTO_SIG_CACHES:
-            old = _AUTO_SIG_CACHES.pop()
-            try:
-                old.unpersist(False)
-            except Exception:
-                pass  # its session may already be stopped
-    cache = base.persist(StorageLevel.MEMORY_AND_DISK)
-    _AUTO_SIG_CACHES.append(cache)
-    return cache
+    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def minhash_near_dup_pairs(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
     shingler: str = "word_pair",
-    persist: bool | None = None,
     max_band_bucket: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs colliding in >= 1 LSH band and
@@ -238,25 +220,14 @@ def minhash_near_dup_pairs(
     join sides + both verify re-attach joins). The r2 plan recomputed
     the kernel 6x via a 4-way band union, which (not the md5 loop) was
     why minhash_dedup was the one flat bench query; the single explode
-    fixed that (3.6 s -> 0.7 s measured). Since r7 the signature table
-    is additionally persisted by default (`persist=None` = auto:
-    cache this call's signatures, release the previous auto-call's —
-    see _auto_persist_sig for the measured 2x and the bounded-liveness
-    argument). `persist=True` keeps the old manual contract (cache
-    retained until the caller releases `.sig_cache`); `persist=False`
-    disables caching entirely. Either way the returned DataFrame
-    carries the cache handle as `.sig_cache` (None when disabled);
-    for repeated or large runs the right tool is the bucketed stage
-    (write_minhash_stage / minhash_pairs_from_stage), which also skips
-    the band-join shuffle."""
-    base = _sig_kernel(docs, shingler=shingler)
-    cache = None
-    if persist is None:
-        base = cache = _auto_persist_sig(base)
-    elif persist:
-        from pyspark import StorageLevel
-
-        base = cache = base.persist(StorageLevel.MEMORY_AND_DISK)
+    fixed that (3.6 s -> 0.7 s measured). The signatures (and, with
+    `max_band_bucket`, the capped bands) are cached for exactly the
+    lifetime of the returned DataFrame (`_local_cache`, which also
+    states the executor-loss trade-off). For repeated or large runs
+    the right tool is the bucketed stage (write_minhash_stage /
+    minhash_pairs_from_stage), which also skips the band-join
+    shuffle."""
+    base = _local_cache(_sig_kernel(docs, shingler=shingler))
     # band join carries ONLY (doc_id, band, hash) — the wide shingle
     # arrays are re-attached by key afterwards, so the x4-band shuffle
     # stays narrow (at 10^12 docs the shingles would be TBs x4)
@@ -274,36 +245,48 @@ def minhash_near_dup_pairs(
         # exactly where near-dup signal is weakest. Off by default
         # (exact semantics = oracle parity). Window count, NOT a
         # groupBy+self-join: the join form re-evaluated the signature
-        # kernel subplan a second time for the sizes side.
+        # kernel subplan a second time for the sizes side. The capped
+        # bands are cached because they feed both self-join sides, and
+        # the count window (shuffle + sort over every band row) would
+        # otherwise run once per side.
         from pyspark.sql import Window as _W
 
-        bands = (
+        bands = _local_cache(
             bands.withColumn("_bn", F.count("*").over(_W.partitionBy("band", "bh")))
             .filter(F.col("_bn") <= max_band_bucket)
             .drop("_bn")
         )
-        if cache is not None:
-            # the window-capped bands feed BOTH self-join sides; with
-            # only the signature table cached below, the count window
-            # (shuffle + sort over every band row) re-ran once per
-            # side — cache the capped bands too whenever signature
-            # caching is on (auto OR manual persist=True; registered
-            # alongside this call's sig cache, released by the next
-            # auto call)
-            bands = _auto_persist_sig(bands, fresh=False)
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "bh")
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
+    cand = band_self_join(bands, "doc_id").select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )
-    out = _jaccard_verify(cand, base.select("doc_id", "_hashes"), jaccard_threshold)
-    # release handle: the result is lazy, so the cache cannot be freed
-    # here; long-session callers drop it after consuming the result.
-    out.sig_cache = cache
-    return out
+    return _jaccard_verify(cand, base.select("doc_id", "_hashes"), jaccard_threshold)
+
+
+def band_self_join(bands: DataFrame, id_col: str, carry=()) -> DataFrame:
+    """The LSH band-collision self-join every banded dedup operator
+    shares (MinHash, both SimHash widths, image pHash, embedding
+    cosine): from rows of (id_col, band, bh, *carry), the DISTINCT
+    pairs (a, b) with a < b that share at least one (band, bh), with
+    each carry column c from both sides as c_a and c_b. Every operator
+    keeps its own band construction and verify step; only this join
+    shape is common, so a plan-shape fix lands in all of them.
+
+    Carry columns ride the band shuffle, so carry only narrow ones
+    (fingerprints); wide payloads (shingle arrays, embeddings) are
+    re-attached by id after the pair dedup. A pair colliding in several
+    bands keeps one row, so carry values must be a function of the id."""
+    def side(s):
+        return bands.select(
+            F.col(id_col).alias(s), *[F.col(c).alias(f"{c}_{s}") for c in carry], "band", "bh"
+        )
+
+    return (
+        side("a")
+        .join(side("b"), ["band", "bh"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b", *[f"{c}_{s}" for s in "ab" for c in carry])
+        .dropDuplicates(["a", "b"])
+    )
 
 
 def _jaccard_verify(
@@ -415,16 +398,12 @@ def minhash_dedup_incremental(
     id, jaccard). Assumes disjoint id spaces (rows with doc_a == doc_b
     are dropped as self-matches of re-ingested docs).
 
-    The new batch's signatures are persisted across the two consumers
-    (bands + verify); the cache rides the returned DataFrame as
-    `.sig_cache` — a long-lived ingest loop should
-    `out.sig_cache.unpersist()` after consuming each batch's pairs, or
-    better, extend the stage with write_minhash_stage and use the
-    stage-vs-stage join."""
-    from pyspark import StorageLevel
-
+    The new batch's signatures feed two consumers (bands + verify) and
+    are cached for the lifetime of the returned DataFrame
+    (`_local_cache`), so a long-lived ingest loop releases each batch
+    by dropping its result."""
     spark = new_docs.sparkSession
-    base = _sig_kernel(new_docs, shingler=shingler).persist(StorageLevel.MEMORY_AND_DISK)
+    base = _local_cache(_sig_kernel(new_docs, shingler=shingler))
     new_bands = base.select(
         "doc_id", F.explode(F.expr(band_table_expr())).alias("_b")
     ).select(
@@ -440,17 +419,12 @@ def minhash_dedup_incremental(
         .select("doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    out = _jaccard_verify(
+    return _jaccard_verify(
         cand,
         base.select("doc_id", "_hashes"),
         jaccard_threshold,
         hashes_b=spark.table(f"{prefix}_hashes"),
     )
-    # the batch signature cache cannot be unpersisted here (the result
-    # is lazy); expose it so a long-lived ingest loop can release each
-    # batch after consuming its pairs: out.sig_cache.unpersist()
-    out.sig_cache = base
-    return out
 
 
 def minhash_near_dup_pairs_sql(
@@ -598,33 +572,12 @@ def simhash_docs(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
-def simhash_docs_hof(docs: DataFrame) -> DataFrame:
-    """The all-JVM HOF formulation simhash_docs replaced — kept as the
-    parity twin (tests assert kernel == HOF row-for-row) and as the
-    fallback if a deployment bans Python workers entirely."""
-    return (
-        docs.select("doc_id", "text")
-        .withColumn("_toks", _toks())
-        .withColumn("_shingles", F.array_distinct("_toks"))
-        .withColumn("_hashes", simhash_token_hash_expr())
-        .filter(F.size("_hashes") > 0)
-        .select("doc_id", F.expr(simhash_expr()).cast("long").alias("simhash"))
-    )
-
-
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
     """SimHash near-dup pairs: two 16-bit half-bands as the LSH over
     the 32-bit fingerprint (any pair within hamming<=1 is guaranteed
     to share a half — pigeonhole; hamming 2 is caught unless the flips
     straddle both halves; each half carries a full 16 effective bits,
-    see simhash_token_hash_expr), then exact popcount verify. All JVM.
-
-    MAINTENANCE NOTE (r6 review): this band-explode -> self-join ->
-    popcount-verify shape exists THREE times — here, the 64-bit
-    `simhash_near_dup_pairs_wide` below, and images.phash_hamming_dups
-    — deliberately NOT collapsed into one helper because each Spark
-    form textually mirrors its own DuckDB *_sql twin; a plan-shape fix
-    (like the r5 one-explode change) must be applied to all three."""
+    see simhash_token_hash_expr), then exact popcount verify."""
     s = simhash_docs(docs)
     # ONE explode, not a 2-way union: the union form re-ran the whole
     # signature subplan once per branch AND per join side (the same
@@ -638,18 +591,11 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
             (F.col("simhash") / 65536).cast("long") % 65536
         ),
     )
-    left = bands.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"), "band", "bh")
-    right = bands.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"), "band", "bh")
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ha", "hb")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
     return (
-        cand.withColumn("hamming", F.expr("cast(bit_count(ha ^ hb) as int)"))
+        band_self_join(bands, "doc_id", carry=["simhash"])
+        .withColumn("hamming", F.expr("cast(bit_count(simhash_a ^ simhash_b) as int)"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
     )
 
 
@@ -750,17 +696,16 @@ def simhash_near_dup_pairs_wide(docs: DataFrame, max_hamming: int = 2) -> DataFr
     as the 32-bit operator; the wider fingerprint pushes the random-
     collision floor from ~2^-32 to ~2^-64 per pair.
 
-    r7: the fingerprint table auto-persists like the minhash
-    signatures (_auto_persist_sig — this call's cache live, previous
-    auto-call's released): the band self-join evaluates the kernel
-    subplan once per side, and the WIDE kernel (two md5 families, two
-    bit matrices per doc) is expensive enough that caching wins —
+    The fingerprint table is cached for the lifetime of the result
+    (`_local_cache`): the band self-join evaluates the kernel subplan
+    once per side, and the WIDE kernel (two md5 families, two bit
+    matrices per doc) is expensive enough that caching wins —
     interleaved min-of-3 at 100k docs: 4.33 s plain vs 2.85 s
     persisted, identical 138 pairs. The 32-bit operator measured a
     WASH under the same protocol (1.60 vs 1.60 — its kernel is ~0.5 s
     per pass across 32 workers and the cache round-trip eats the
-    saving), so it deliberately stays unpersisted."""
-    s = _auto_persist_sig(simhash_docs_wide(docs))
+    saving), so it deliberately stays uncached."""
+    s = _local_cache(simhash_docs_wide(docs))
     band_arr = F.array(
         *[
             F.struct(
@@ -786,33 +731,12 @@ def simhash_near_dup_pairs_wide(docs: DataFrame, max_hamming: int = 2) -> DataFr
             (F.col("_b.bh") % 65536).alias("bh"),
         )
     )
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sim_hi").alias("ha_hi"),
-        F.col("sim_lo").alias("ha_lo"),
-        "band",
-        "bh",
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sim_hi").alias("hb_hi"),
-        F.col("sim_lo").alias("hb_lo"),
-        "band",
-        "bh",
-    )
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ha_hi", "ha_lo", "hb_hi", "hb_lo")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    hamming = "bit_count(sim_hi_a ^ sim_hi_b) + bit_count(sim_lo_a ^ sim_lo_b)"
     return (
-        cand.withColumn(
-            "hamming",
-            F.expr("cast(bit_count(ha_hi ^ hb_hi) + bit_count(ha_lo ^ hb_lo) as int)"),
-        )
+        band_self_join(bands, "doc_id", carry=["sim_hi", "sim_lo"])
+        .withColumn("hamming", F.expr(f"cast({hamming} as int)"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
     )
 
 

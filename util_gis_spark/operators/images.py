@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import band_self_join
+
 
 def _decode_stub(data: bytes, w: int, h: int) -> np.ndarray:
     """Deterministic fake decode: pixels seeded by the byte content.
@@ -266,18 +268,11 @@ def phash_hamming_dups(images_df: DataFrame, max_hamming: int = 4) -> DataFrame:
         ]
     )
     bands = images_df.select(
-        F.col("image_key").alias("k"), "phash", F.explode(band_arr).alias("_b")
-    ).select("k", "phash", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
-    left = bands.select(F.col("k").alias("a"), F.col("phash").alias("pa"), "band", "bh")
-    right = bands.select(F.col("k").alias("b"), F.col("phash").alias("pb"), "band", "bh")
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "pa", "pb")
-        .dropDuplicates(["a", "b"])
-    )
+        "image_key", "phash", F.explode(band_arr).alias("_b")
+    ).select("image_key", "phash", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
     return (
-        cand.withColumn("hamming", F.expr("cast(bit_count(pa ^ pb) as int)"))
+        band_self_join(bands, "image_key", carry=["phash"])
+        .withColumn("hamming", F.expr("cast(bit_count(phash_a ^ phash_b) as int)"))
         .filter(F.col("hamming") <= max_hamming)
         .select(F.col("a").alias("key_a"), F.col("b").alias("key_b"), "hamming")
     )

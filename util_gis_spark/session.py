@@ -15,7 +15,9 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local cores: SPARK_GRAFT_CPUS, else the CPUs this process may
+    run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _default_driver_memory() -> str:
