@@ -17,8 +17,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from util_gis_spark import datasets as D
 from util_gis_spark.geo.cells import cell_expr
 from util_gis_spark.operators.joins import polygon_cover_cells
@@ -42,7 +40,7 @@ def main() -> None:
     )
 
     images = D.images_range(spark, 1_000_000, 16).withColumn(
-        "cell", cell_expr(F.col("lon"), F.col("lat"), 14)
+        "cell", cell_expr("lon", "lat", 14)
     )
     cellmap = polygon_cover_cells(D.polygons_wkt(spark, sf_dir), 14).select(
         "cell", "polygon_id"

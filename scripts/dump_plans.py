@@ -130,7 +130,7 @@ def main() -> None:
         (
             "Planner: 4,200-polygon layer auto-dispatched to the distributed cells path",
             "Verify: (1) pip_join detected > collect_threshold_polys via a "
-            "bounded limit-count probe and returned pip_join_cells — NO "
+            "bounded limit-collect probe and returned pip_join_cells — NO "
             "driver-side classification loop; (2) the polygon layer's only "
             "operators are its scan -> MapInPandas (executor-side cell "
             "classification) -> Exchange on the cell key; (3) the fact side "

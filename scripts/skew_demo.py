@@ -70,7 +70,7 @@ def main() -> None:
 
         from util_gis_spark.geo import cells as C
 
-        pts = images.withColumn("cell", C.cell_expr(F.col("lon"), F.col("lat"), 14))
+        pts = images.withColumn("cell", C.cell_expr("lon", "lat", 14))
         pol = joins.polygon_cover_cells(polys, 14)
         if salt:
             pts = pts.withColumn("salt", F.pmod(F.xxhash64("lon", "lat"), F.lit(salt)))

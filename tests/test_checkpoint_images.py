@@ -35,6 +35,43 @@ class TestCheckpoint:
         assert pipe2.results["src"].resumed
         assert df2.count() == n1
 
+    def test_fingerprint_version_gates_resume(self, spark, sf_dir, tmp_path, monkeypatch):
+        """A manifest written under an older FINGERPRINT_VERSION, or with
+        none (written before the constant existed), is rebuilt, not
+        resumed; a current one still resumes."""
+        from util_gis_spark.io import checkpoint
+
+        root = str(tmp_path / "ckpt_v")
+        meta_path = os.path.join(root, "src", "_SUCCESS_META.json")
+
+        def build():
+            return D.images(spark, sf_dir).select("image_key", "lon", "lat")
+
+        def run():
+            pipe = CheckpointedPipeline(spark, root)
+            pipe.stage("src", build)
+            return pipe.results["src"].resumed, json.load(open(meta_path))
+
+        current = checkpoint.FINGERPRINT_VERSION
+        with monkeypatch.context() as m:
+            m.setattr(checkpoint, "FINGERPRINT_VERSION", current - 1)
+            assert not run()[0]
+            resumed, old_meta = run()  # the old version resumes its own manifest
+            assert resumed and old_meta["fingerprint_version"] == current - 1
+
+        resumed, meta = run()
+        assert not resumed and meta["fingerprint_version"] == current
+        assert meta["write_id"] != old_meta["write_id"]
+        resumed, again = run()
+        assert resumed and again["write_id"] == meta["write_id"]
+
+        del again["fingerprint_version"]
+        with open(meta_path, "w") as f:
+            json.dump(again, f)
+        resumed, meta = run()
+        assert not resumed and meta["fingerprint_version"] == current
+        assert meta["write_id"] != again["write_id"]
+
     def test_dependent_stage_and_lineage(self, spark, sf_dir, tmp_path):
         root = str(tmp_path / "ckpt2")
         pipe = CheckpointedPipeline(spark, root)

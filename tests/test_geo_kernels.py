@@ -403,7 +403,7 @@ class TestR5NumericCoreHardening:
         df = spark.createDataFrame(
             [(1, 116.0, 39.5), (2, None, 39.5), (3, float("nan"), 39.5)],
             "id long, lon double, lat double",
-        ).select("id", cells.cell_expr(F.col("lon"), F.col("lat"), 14))
+        ).select("id", cells.cell_expr("lon", "lat", 14))
         rows = {r["id"]: r["cell"] for r in df.collect()}
         assert rows[1] is not None and rows[2] is None and rows[3] is None
 
@@ -419,8 +419,8 @@ class TestR5NumericCoreHardening:
             "id long, lon double, lat double",
         ).select(
             "id",
-            cells.lon_ix_expr(F.col("lon"), 14).alias("ix"),
-            cells.lat_iy_expr(F.col("lat"), 14).alias("iy"),
+            cells.lon_ix_expr("lon", 14).alias("ix"),
+            cells.lat_iy_expr("lat", 14).alias("iy"),
         )
         rows = {r["id"]: (r["ix"], r["iy"]) for r in df.collect()}
         assert rows[1][0] is not None and rows[1][1] is not None
@@ -452,9 +452,9 @@ class TestR5NumericCoreHardening:
             "id long, lon double, lat double",
         ).select(
             "id",
-            cells.cell_expr(F.col("lon"), F.col("lat"), 14),
-            cells.lon_ix_expr(F.col("lon"), 14).alias("ix"),
-            cells.lat_iy_expr(F.col("lat"), 14).alias("iy"),
+            cells.cell_expr("lon", "lat", 14),
+            cells.lon_ix_expr("lon", 14).alias("ix"),
+            cells.lat_iy_expr("lat", 14).alias("iy"),
         )
         rows = {r["id"]: (r["cell"], r["ix"], r["iy"]) for r in df.collect()}
         assert all(v is not None for v in rows[1])

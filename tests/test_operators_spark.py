@@ -634,6 +634,146 @@ class TestResPlanner:
         assert len(got) == len(range(0, 4200, 9))
 
 
+def _square_wkt(x0, y0, size):
+    x1, y1 = x0 + size, y0 + size
+    return f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
+
+
+class TestPipJoinPlanBuild:
+    """pip_join reads its polygon layer once: one bounded collect is
+    both the size probe and the ingestion."""
+
+    def test_hybrid_plan_build_runs_at_most_one_job(self, spark, sf_dir, tmp_path):
+        layer_path = str(tmp_path / "layer")
+        D.polygons_wkt(spark, sf_dir).select("polygon_id", "wkt").coalesce(1).write.parquet(
+            layer_path
+        )
+        layer = spark.read.parquet(layer_path)
+        imgs = D.images(spark, sf_dir)
+        sc = spark.sparkContext
+        group = "pip_join_plan_build"
+        sc.setJobGroup(group, "pip_join plan build")
+        try:
+            joined = joins.pip_join(imgs, layer, res=16, carry_cols=["image_key"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+        # the hybrid flavor: no executor-side classification
+        assert "MapInPandas" not in joined._jdf.queryExecution().executedPlan().toString()
+        want = {
+            (r["image_key"], r["polygon_id"])
+            for r in joins.pip_join_broadcast(imgs, layer, carry_cols=["image_key"]).collect()
+        }
+        got = {(r["image_key"], r["polygon_id"]) for r in joined.collect()}
+        assert got == want and len(got) > 0
+
+    @pytest.mark.parametrize("n_polys", [9, 32])
+    def test_over_threshold_goes_to_cells_bounded(self, spark, monkeypatch, n_polys):
+        """A layer of k+1 rows (and a larger one) dispatches to
+        pip_join_cells, and no collect returns more than k+1 rows."""
+        k = 8
+        polys = spark.createDataFrame(
+            [(i, _square_wkt(i * 1.0, 0.0, 0.5)) for i in range(n_polys)],
+            "polygon_id long, wkt string",
+        )
+        pts = spark.createDataFrame(
+            [(i, i * 1.0 + 0.25, 0.25) for i in range(n_polys)]
+            + [(100 + i, i * 1.0 + 0.75, 0.25) for i in range(n_polys)],
+            "image_key long, lon double, lat double",
+        )
+        collected, dispatched = [], []
+        frame_cls = type(polys)
+        real_collect, real_cells = frame_cls.collect, joins.pip_join_cells
+
+        def spy_collect(self):
+            rows = real_collect(self)
+            collected.append(len(rows))
+            return rows
+
+        def spy_cells(*a, **kw):
+            dispatched.append(kw.get("attach_edges"))
+            return real_cells(*a, **kw)
+
+        monkeypatch.setattr(frame_cls, "collect", spy_collect)
+        monkeypatch.setattr(joins, "pip_join_cells", spy_cells)
+        out = joins.pip_join(
+            pts, polys, res=8, carry_cols=["image_key"], collect_threshold_polys=k
+        )
+        assert dispatched and max(collected) == k + 1
+        monkeypatch.undo()
+        got = {(r["image_key"], r["polygon_id"]) for r in out.collect()}
+        assert got == {(i, i) for i in range(n_polys)}
+
+
+class TestSqlTextQuoting:
+    """The cell, tile and ray-cast expressions are Spark SQL text, so a
+    coordinate column whose name needs quoting, or a carried column
+    named like one of the ray cast's lambda variables (in any case:
+    Spark resolves lambda variables case-insensitively), must not change
+    any result. pip_join takes the coordinate names; tile_assignment and
+    knn_join_cells read fixed `lon`/`lat` and only carry the extras."""
+
+    VARIANTS = {
+        "quoted": ("gps lon", "gps lat", []),
+        "shadow": ("lon", "lat", ["_e", "_p", "_n"]),
+        "lambda_named_coords": ("_e", "_p", ["_n"]),
+        "lambda_named_coords_upper": ("_E", "_P", ["_N"]),
+    }
+
+    @staticmethod
+    def _images(spark, sf_dir, extra):
+        df = D.images(spark, sf_dir).select("image_key", "lon", "lat", "w", "h")
+        for c in extra:
+            df = df.withColumn(c, F.lit(1.5))
+        return df
+
+    def _results(self, spark, sf_dir, lon, lat, extra):
+        imgs = self._images(spark, sf_dir, extra)
+        renamed = imgs.withColumnRenamed("lon", lon).withColumnRenamed("lat", lat)
+        polys = D.polygons_wkt(spark, sf_dir)
+        kw = dict(res=16, carry_cols=["image_key"] + extra, lon_col=lon, lat_col=lat)
+        hybrid = joins.pip_join(renamed, polys, **kw)
+        cells_path = joins.pip_join(renamed, polys, broadcast_threshold_cells=1, **kw)
+        out = {
+            "hybrid": {(r["image_key"], r["polygon_id"]) for r in hybrid.collect()},
+            "cells": {(r["image_key"], r["polygon_id"]) for r in cells_path.collect()},
+        }
+        if extra or lon == "lon":
+            tiles = joins.tile_assignment(imgs, res=16)
+            cands = filters.filter_wgs84_points(D.gps_points(spark, sf_dir)).select(
+                F.col("point_id").alias("cand_id"),
+                "lon",
+                "lat",
+                *[F.lit(2.5).alias(c) for c in extra],
+            )
+            knn = joins.knn_join_cells(imgs.withColumnRenamed("image_key", "probe_id"), cands)
+            out["tiles"] = {(r["image_key"], r["tile"]) for r in tiles.collect()}
+            out["knn"] = {
+                (r["probe_id"], r["nearest_id"], round(r["dist_m"], 6)) for r in knn.collect()
+            }
+        return out
+
+    @pytest.fixture(scope="class")
+    def plain(self, spark, sf_dir):
+        return self._results(spark, sf_dir, "lon", "lat", [])
+
+    @pytest.mark.parametrize("variant", sorted(VARIANTS))
+    def test_same_rows_as_plain_names(self, spark, sf_dir, plain, variant):
+        lon, lat, extra = self.VARIANTS[variant]
+        got = self._results(spark, sf_dir, lon, lat, extra)
+        assert set(got) <= set(plain)
+        for op, rows in got.items():
+            assert plain[op], op
+            assert rows == plain[op], f"{variant}: {op}"
+
+    def test_quote_ident_doubles_backticks(self, spark):
+        from util_gis_spark.geo import cells
+
+        df = spark.createDataFrame([(1.0,)], ["a`b c"])
+        assert df.select(F.expr(cells.quote_ident("a`b c")) + 1).first()[0] == 2.0
+
+
 class TestBucketedSink:
     def test_colocated_join_is_exchange_free(self, spark, sf_dir, tmp_path):
         from pyspark.sql import functions as F
@@ -646,10 +786,10 @@ class TestBucketedSink:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             imgs = D.images(spark, sf_dir).select(
-                "image_key", cell_expr(F.col("lon"), F.col("lat"), 14).alias("cell")
+                "image_key", cell_expr("lon", "lat", 14).alias("cell")
             )
             pts = D.gps_points(spark, sf_dir).select(
-                "point_id", cell_expr(F.col("lon"), F.col("lat"), 14).alias("cell")
+                "point_id", cell_expr("lon", "lat", 14).alias("cell")
             )
             plain = imgs.join(pts, "cell")
             n_plain = plain.count()

@@ -73,7 +73,7 @@ def test_streaming_tile_counts_match_batch(spark, sf_dir, stream_results):
     # spot-check one cell against batch
     batch = (
         D.gps_points(spark, sf_dir)
-        .withColumn("cell", cell_expr(F.col("lon"), F.col("lat"), 14))
+        .withColumn("cell", cell_expr("lon", "lat", 14))
         .groupBy("cell")
         .count()
     )

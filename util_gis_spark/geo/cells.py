@@ -9,13 +9,24 @@ plain equirectangular quadtree — at resolution r the world splits into
     id = res * 2^54 + ix * 2^27 + iy          (res <= 20 => ix, iy < 2^27)
 
 Chosen over Morton interleaving deliberately: encode/decode is pure
-floor arithmetic, so the SAME formula is expressible as a Spark Column
-expression (JVM-side, codegen), as ANSI SQL for the DuckDB oracle, and
-as numpy — the three implementations are kept in this one module so
-they cannot drift. Hierarchy: parent = (res-1, ix>>1, iy>>1); a
-bbox cover is the ix/iy rectangle of cells. At 10^12-row scale the
-table is range/hash-partitioned on this id; resolution picks the
-join fan-out (docs in SURVEY.md §4).
+floor arithmetic, so the SAME formula has three forms, kept in this
+one module so they cannot drift:
+
+- Spark SQL text (`_lon_ix_text`, `_lat_iy_text`, `_pack_text`),
+  which `lon_ix_expr`, `lat_iy_expr`, `pack_expr` and `cell_expr` wrap
+  in ONE `F.expr` each. Catalyst parses the text into the same
+  expression tree the Column API would build, in one JVM call instead
+  of one per literal and operator. The builders take SQL text: a
+  column name (`"lon"`, or `quote_ident(name)` for an arbitrary name)
+  or an expression string. Float literals carry the `D` suffix,
+  because an unsuffixed `180.0` parses as DECIMAL;
+- DuckDB SQL (`cell_sql`), the frozen oracle twin;
+- numpy (`np_cell`, `np_decode`, ...), used driver-side.
+
+Hierarchy: parent = (res-1, ix>>1, iy>>1); a bbox cover is the ix/iy
+rectangle of cells. At 10^12-row scale the table is range/hash-
+partitioned on this id; resolution picks the join fan-out (docs in
+SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -36,56 +47,76 @@ def _nx(res: int) -> int:
     return 1 << res
 
 
-def lon_ix_expr(lon: Column, res: int) -> Column:
-    """Clamped east-west cell index as a Column — the ONE definition of
-    the clamp; the kNN ladder and tile cover must use this, not a
-    hand-copied variant (r5 review: four inline copies had grown in
-    joins.py against this module's anti-drift contract). NULL/NaN
-    input yields a NULL index (r6, ADVICE r5 #2): least/greatest are
-    null-SKIPPING in both engines, so without the guard a dirty
-    coordinate collapsed onto the max index — every caller of the
-    clamp gets the same joins-nothing degradation cell_expr has, not
-    just cell_expr itself."""
+def quote_ident(name: str) -> str:
+    """A column name as Spark SQL text: backtick-quoted, embedded
+    backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dbl(x: float) -> str:
+    """A Spark SQL DOUBLE literal (unsuffixed, `180.0` is a DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def _index_text(x: str, offset: float, span: float, res: int) -> str:
+    """Clamped cell index of coordinate text `x` on an axis starting
+    at -offset and `span` degrees long — the ONE definition of the
+    clamp; the kNN ladder and tile cover must use it, not a hand-copied
+    variant (four inline copies once grew in joins.py against this
+    module's anti-drift contract). NULL, NaN and ±Inf input yield a
+    NULL index: least/greatest are null-SKIPPING in both engines, so
+    without the guard a dirty coordinate collapsed onto the max index;
+    and floor(inf) is inf, which sailed through least/greatest onto a
+    corner index while the numpy twin (isfinite) yielded -1."""
     n = float(_nx(res))
-    ix = F.least(F.floor((lon + 180.0) / 360.0 * n), F.lit(n - 1)).cast("long")
-    ix = F.greatest(ix, F.lit(0).cast("long"))
-    # abs(x)=inf catches what isnan misses: floor(inf) is inf, so an
-    # infinite coordinate sailed through least/greatest onto a corner
-    # index while the numpy twin (isfinite) yielded -1 — the r6 review
-    # of this module caught the three-forms drift the NaN guard left
-    return F.when(
-        lon.isNull() | F.isnan(lon) | (F.abs(lon) == F.lit(float("inf"))),
-        F.lit(None).cast("long"),
-    ).otherwise(ix)
+    clamp = (
+        f"greatest(CAST(least(floor((({x}) + {_dbl(offset)}) / {_dbl(span)} * {_dbl(n)}),"
+        f" {_dbl(n - 1)}) AS BIGINT), CAST(0 AS BIGINT))"
+    )
+    return (
+        f"CASE WHEN ({x}) IS NULL OR isnan({x}) OR abs({x}) = CAST('Infinity' AS DOUBLE)"
+        f" THEN CAST(NULL AS BIGINT) ELSE {clamp} END"
+    )
 
 
-def lat_iy_expr(lat: Column, res: int) -> Column:
-    """Clamped north-south cell index as a Column (same NULL/NaN
-    guard as lon_ix_expr)."""
-    n = float(_nx(res))
-    iy = F.least(F.floor((lat + 90.0) / 180.0 * n), F.lit(n - 1)).cast("long")
-    iy = F.greatest(iy, F.lit(0).cast("long"))
-    return F.when(
-        lat.isNull() | F.isnan(lat) | (F.abs(lat) == F.lit(float("inf"))),
-        F.lit(None).cast("long"),
-    ).otherwise(iy)
+def _lon_ix_text(lon: str, res: int) -> str:
+    return _index_text(lon, 180.0, 360.0, res)
 
 
-def pack_expr(res: int, ix: Column, iy: Column) -> Column:
-    """Pack (res, ix, iy) into the int64 cell/tile id (Column form)."""
-    return F.lit(res).cast("long") * F.lit(RES_SHIFT) + ix * F.lit(IX_SHIFT) + iy
+def _lat_iy_text(lat: str, res: int) -> str:
+    return _index_text(lat, 90.0, 180.0, res)
 
 
-def cell_expr(lon: Column, lat: Column, res: int) -> Column:
-    """Cell id as a pure Column expression (no UDF). NULL/NaN
-    coordinates yield a NULL cell (joins nothing): the guard lives in
-    lon_ix_expr/lat_iy_expr (r6, ADVICE r5 #2 — one definition for
-    every caller), and a NULL index propagates NULL through the pack
-    arithmetic — least/greatest alone are null-SKIPPING in both
-    engines, which is why the unguarded clamp collapsed dirty rows
-    onto the valid corner cell (r5 review: spurious join candidates +
-    skew on one corner cell)."""
-    return pack_expr(res, lon_ix_expr(lon, res), lat_iy_expr(lat, res)).alias("cell")
+def _pack_text(res: int, ix: str, iy: str) -> str:
+    return f"CAST({res} AS BIGINT) * {RES_SHIFT} + ({ix}) * {IX_SHIFT} + ({iy})"
+
+
+def lon_ix_expr(lon: str, res: int) -> Column:
+    """Clamped east-west cell index of SQL text `lon` (see
+    `_index_text` for the clamp and its NULL/NaN/Inf guard)."""
+    return F.expr(_lon_ix_text(lon, res))
+
+
+def lat_iy_expr(lat: str, res: int) -> Column:
+    """Clamped north-south cell index of SQL text `lat`."""
+    return F.expr(_lat_iy_text(lat, res))
+
+
+def pack_expr(res: int, ix: str, iy: str) -> Column:
+    """Pack (res, ix, iy) into the int64 cell/tile id; `ix`/`iy` are
+    SQL text."""
+    return F.expr(_pack_text(res, ix, iy))
+
+
+def cell_expr(lon: str, lat: str, res: int) -> Column:
+    """Cell id of SQL texts `lon`/`lat`, named `cell` (no UDF).
+    NULL/NaN/Inf coordinates yield a NULL cell (joins nothing): the
+    guard lives in the shared index clamp, and a NULL index propagates
+    NULL through the pack arithmetic — least/greatest alone are
+    null-SKIPPING in both engines, which is why the unguarded clamp
+    collapsed dirty rows onto the valid corner cell (spurious join
+    candidates + skew on one corner cell)."""
+    return F.expr(f"{_pack_text(res, _lon_ix_text(lon, res), _lat_iy_text(lat, res))} AS cell")
 
 
 def cell_sql(lon: str, lat: str, res: int) -> str:

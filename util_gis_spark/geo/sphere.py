@@ -12,7 +12,8 @@ Semantics match the reference ``sunyu.util.GisUtil`` (G):
 Each kernel exists twice: as a pyspark Column expression (JVM-side,
 whole-stage-codegen — the hot path) and as a numpy function (used
 inside Arrow UDFs and in tests). The Column forms contain no Python
-UDFs at all.
+UDFs at all. calcMu has no Column form: `calc_mu` (numpy) and
+`mu_sql` (the DuckDB oracle text) are its two.
 """
 
 from __future__ import annotations
@@ -141,14 +142,6 @@ def calc_mu(area_m2) -> float:
     x = np.asarray(area_m2, dtype=np.float64) * MU_PER_M2
     out = np.floor(x * 1e4 + 0.5) / 1e4
     return float(out) if out.ndim == 0 else out
-
-
-def mu_expr(area_m2: Column) -> Column:
-    """Column form of calc_mu — the SAME two-step rounding
-    ((area*MU_PER_M2)*1e4, not area*15.0 folded once): the folded
-    constant changes the float at rounding-tie areas, diverging from
-    calc_mu by 1e-4 (r5 review, reproduced at area=0.36666666666666664)."""
-    return F.floor((area_m2 * F.lit(MU_PER_M2)) * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
 
 
 def mu_sql(area_m2: str) -> str:

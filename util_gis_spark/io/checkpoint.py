@@ -29,6 +29,16 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+# Version of the stage manifests. Bump it when an engine change alters
+# operator plans or the fingerprint recipe, so every persisted stage
+# rebuilds once with the reason stated here instead of through a silent
+# plan diff. A manifest whose `fingerprint_version` differs (or is
+# missing) is rebuilt, never resumed.
+#   1 (implicit, unversioned manifests): Column-API expression builders
+#   2: cell, tile and ray-cast expressions are parsed from Spark SQL
+#      text; pip_join's ray-cast lambda variables are renamed
+FINGERPRINT_VERSION = 2
+
 
 @dataclass
 class StageResult:
@@ -147,7 +157,7 @@ class CheckpointedPipeline:
         if not force and os.path.exists(meta_path):
             with open(meta_path) as f:
                 meta = json.load(f)
-            if meta.get("fingerprint") == fp:
+            if meta.get("fingerprint_version") == FINGERPRINT_VERSION and meta.get("fingerprint") == fp:
                 self.results[name] = StageResult(
                     name, data_path, meta["rows"], meta["bytes"], meta["partitions"], True
                 )
@@ -172,6 +182,7 @@ class CheckpointedPipeline:
                 total_bytes += size
         meta = {
             "stage": name,
+            "fingerprint_version": FINGERPRINT_VERSION,
             "fingerprint": fp,
             # fresh per write: dependents hash it, so ANY rebuild of
             # this stage (force or plan change) invalidates them too

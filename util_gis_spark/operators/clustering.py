@@ -88,17 +88,6 @@ class _GridIndex:
         return np.concatenate(srcs), np.concatenate(nbs)
 
 
-def grid_neighbor_pairs(
-    x: np.ndarray, y: np.ndarray, radius: float
-) -> tuple[np.ndarray, np.ndarray]:
-    """All (i, j) pairs with dist(i, j) <= radius (src indexes are
-    point indices; self-pairs included)."""
-    n = len(x)
-    if n == 0:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    return _GridIndex(x, y, radius).query(np.arange(n, dtype=np.int64))
-
-
 def np_dbscan(xy: np.ndarray, eps: float, min_pts: int) -> np.ndarray:
     """Cluster labels per point: -1 = noise, else 0..k-1 in order of
     cluster discovery (points scanned in input = time order).

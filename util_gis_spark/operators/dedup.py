@@ -55,14 +55,6 @@ def _toks_sql(col: str = "text") -> str:
     return f"list_filter(string_split_regex({col}, '[ \\t\\n\\r\\f\\v]+'), x -> length(x) > 0)"
 
 
-def bigrams_expr():
-    """Distinct word 2-gram shingles as an array column (Spark)."""
-    return F.expr(
-        "array_distinct(CASE WHEN size(_toks) < 2 THEN array() ELSE "
-        "transform(sequence(0, size(_toks)-2), i -> concat(_toks[i], ' ', _toks[i+1])) END)"
-    )
-
-
 def bigrams_sql() -> str:
     return (
         "list_distinct(CASE WHEN len(_toks) < 2 THEN [] ELSE "
@@ -79,27 +71,11 @@ def char3grams_sql() -> str:
     )
 
 
-def shingle_hash_expr():
-    """Per-shingle 30-bit hash from md5 (identical in both engines)."""
-    return F.expr(
-        f"transform(_shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MOD30})"
-    )
-
-
 def shingle_hash_sql() -> str:
     return (
         "list_transform(_shingles, s -> "
         f"cast(concat('0x', substring(md5(s), 1, 15)) as bigint) % {MOD30})"
     )
-
-
-def minhash_sig_expr() -> str:
-    """SQL-text expression (used via F.expr) computing the 16-value
-    signature array from _hashes; shared shape with the oracle."""
-    parts = ", ".join(
-        f"array_min(transform(_hashes, h -> ({a} * h + {b}) % {_P}))" for a, b in zip(_A, _B)
-    )
-    return f"array({parts})"
 
 
 def minhash_sig_sql() -> str:

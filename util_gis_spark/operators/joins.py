@@ -47,7 +47,12 @@ def _collect_polygons(polygons_wkt_df: DataFrame) -> list[tuple]:
     """Materialize the SMALL polygon side for broadcast: (id, parsed,
     envelope). The collect here is the moral equivalent of Spark's own
     broadcast-exchange build side — only ever the dimension table."""
-    rows = polygons_wkt_df.select("polygon_id", "wkt").collect()
+    return _parse_polygons(polygons_wkt_df.select("polygon_id", "wkt").collect())
+
+
+def _parse_polygons(rows) -> list[tuple]:
+    """(id, parsed, envelope) per collected (polygon_id, wkt) row;
+    EMPTY or garbage WKT (no envelope) is dropped."""
     out = []
     for r in rows:
         parsed = parse_wkt(r["wkt"])
@@ -182,43 +187,63 @@ EDGES_TYPE = T.ArrayType(  # array of parts, each an edge array
 )
 
 
-def raycast_inside_expr(px, py, parts):
-    """Strict-interior point-in-geometry as a pure Column expression
-    over an `EDGES_TYPE` (array-of-parts) payload: the point is inside
-    iff SOME polygonal part contains it strictly — per part, even-odd
-    crossing parity AND not on any of that part's edges. This is the
-    exact JVM twin of geo.geometry.points_in_geom (points_in_polygon
-    OR-ed across parts), evaluated by Catalyst's higher-order
-    functions. No Python worker, no Arrow; this is what lets the PIP
-    joins refine boundary candidates in the SAME stage that accepted
-    interior candidates (single scan of the fact table).
+def _unused_name(base: str, text: str) -> str:
+    """`base`, suffixed with `_` until `text` does not mention it in
+    any case: Spark resolves lambda variables case-insensitively."""
+    while base.lower() in text.lower():
+        base += "_"
+    return base
+
+
+def raycast_inside_expr(px: str, py: str, parts: str) -> str:
+    """Strict-interior point-in-geometry as the text of ONE Spark SQL
+    expression over an `EDGES_TYPE` (array-of-parts) payload; `px`,
+    `py` and `parts` are SQL text (a column name such as `"lon"`,
+    `cells.quote_ident(name)`, or an expression string). The point is
+    inside iff SOME polygonal part contains it strictly — per part,
+    even-odd crossing parity (an `aggregate` over its edges) AND not on
+    any of that part's edges (an `exists`). This is the exact JVM twin
+    of geo.geometry.points_in_geom (points_in_polygon OR-ed across
+    parts), evaluated by Catalyst's higher-order functions. No Python
+    worker, no Arrow; this is what lets the PIP joins refine boundary
+    candidates in the SAME stage that accepted interior candidates
+    (single scan of the fact table).
 
     Matches the numpy kernel exactly: a horizontal edge makes the
     parity condition false before the (NULL) intercept comparison is
     reached, the on-edge test is exact-zero cross product within the
     segment bbox (the polygon layers keep vertices off the point
     lattice, see datasets._EDGE_OFF), and overlapping collection parts
-    get union semantics via the per-part OR."""
-    def _crossing(acc, e):
-        xint = e["x1"] + (py - e["y1"]) * (e["x2"] - e["x1"]) / (e["y2"] - e["y1"])
-        c = ((e["y1"] > py) != (e["y2"] > py)) & (px < xint)
-        return acc + F.when(c, 1).otherwise(0)
+    get union semantics via the per-part OR. The lambda variables are
+    `_p`, `_n` and `_e`, lengthened with `_` when px or py mentions
+    them in any case: inside a lambda body a lambda variable shadows
+    the column of the same name."""
+    p, n, e = (_unused_name(b, px + py) for b in ("_p", "_n", "_e"))
+    x1, y1, x2, y2 = (f"{e}.{f}" for f in ("x1", "y1", "x2", "y2"))
+    xint = f"{x1} + ({py} - {y1}) * ({x2} - {x1}) / ({y2} - {y1})"
+    crossing = (
+        f"CASE WHEN (({y1} > {py}) != ({y2} > {py})) AND ({px} < {xint}) THEN 1 ELSE 0 END"
+    )
+    on_edge = f"(({x2} - {x1}) * ({py} - {y1}) - ({y2} - {y1}) * ({px} - {x1}) = 0.0D)"
+    for term in (
+        f"{px} >= least({x1}, {x2})",
+        f"{px} <= greatest({x1}, {x2})",
+        f"{py} >= least({y1}, {y2})",
+        f"{py} <= greatest({y1}, {y2})",
+    ):
+        # nested left to right: the parser balances a bare AND chain
+        on_edge = f"({on_edge} AND ({term}))"
+    return (
+        f"exists({parts}, {p} -> (aggregate({p}, 0, ({n}, {e}) -> {n} + {crossing}) % 2 = 1)"
+        f" AND NOT exists({p}, {e} -> {on_edge}))"
+    )
 
-    def _on_edge(e):
-        cross = (e["x2"] - e["x1"]) * (py - e["y1"]) - (e["y2"] - e["y1"]) * (px - e["x1"])
-        return (
-            (cross == 0.0)
-            & (px >= F.least(e["x1"], e["x2"]))
-            & (px <= F.greatest(e["x1"], e["x2"]))
-            & (py >= F.least(e["y1"], e["y2"]))
-            & (py <= F.greatest(e["y1"], e["y2"]))
-        )
 
-    def _part_inside(edges):
-        crossings = F.aggregate(edges, F.lit(0), _crossing)
-        return (crossings % 2 == 1) & ~F.exists(edges, _on_edge)
-
-    return F.exists(parts, _part_inside)
+def _refine_keep(lon_col: str, lat_col: str):
+    """The PIP joins' filter: interior-cell candidates pass outright,
+    boundary candidates take the ray cast over `_edges`."""
+    ray = raycast_inside_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), "_edges")
+    return F.expr(f"CASE WHEN _inside THEN true ELSE {ray} END")
 
 
 def classify_polygon_cells(parsed, res: int) -> tuple[np.ndarray, np.ndarray]:
@@ -286,6 +311,22 @@ def pip_join_hybrid(
     and the boundary refine is the same O(edges) JVM cost as JTS
     contains. Set `broadcast_cellmap=False` to shuffle-join the cell
     map instead (large polygon side)."""
+    polys = _collect_polygons(polygons_wkt_df)
+    return _pip_join_hybrid(points_df, polys, res, lon_col, lat_col, carry_cols, broadcast_cellmap)
+
+
+def _pip_join_hybrid(
+    points_df: DataFrame,
+    polys: list[tuple],
+    res: int,
+    lon_col: str,
+    lat_col: str,
+    carry_cols: list[str] | None,
+    broadcast_cellmap: bool,
+) -> DataFrame:
+    """pip_join_hybrid over already collected and parsed polygons
+    (`_parse_polygons` rows), so the pip_join planner reads its layer
+    once."""
     if carry_cols is not None:
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
@@ -293,7 +334,6 @@ def pip_join_hybrid(
         points_df, ("cell", "_inside", "_edges", "polygon_id"), "pip_join_hybrid"
     )
     spark = points_df.sparkSession
-    polys = _collect_polygons(polygons_wkt_df)
 
     cell_parts: list[np.ndarray] = []
     pid_parts: list[np.ndarray] = []
@@ -336,7 +376,9 @@ def pip_join_hybrid(
     if broadcast_cellmap:
         cellmap = F.broadcast(cellmap)
 
-    pts = points_df.withColumn("cell", cells.cell_expr(F.col(lon_col), F.col(lat_col), res))
+    pts = points_df.withColumn(
+        "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
+    )
     cand = pts.join(cellmap, on="cell", how="inner")
     out_cols = [c for c in points_df.columns] + ["polygon_id"]
     edges_df = spark.createDataFrame(
@@ -346,10 +388,7 @@ def pip_join_hybrid(
         ),
     )
     j = cand.join(F.broadcast(edges_df), on="polygon_id", how="left")
-    keep = F.when(F.col("_inside"), F.lit(True)).otherwise(
-        raycast_inside_expr(F.col(lon_col), F.col(lat_col), F.col("_edges"))
-    )
-    return j.filter(keep).select(*out_cols)
+    return j.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 
 
 def polygon_cover_cells(polygons_wkt_df: DataFrame, res: int) -> DataFrame:
@@ -490,7 +529,9 @@ def pip_join_cells(
         sz = polygons_wkt_df.agg(F.sum(F.length("wkt"))).first()[0] or 0
         attach_edges = "broadcast" if int(sz) <= edges_broadcast_bytes else "inline"
 
-    pts = points_df.withColumn("cell", cells.cell_expr(F.col(lon_col), F.col(lat_col), res))
+    pts = points_df.withColumn(
+        "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
+    )
     pol = polygon_cells_classified(
         polygons_wkt_df, res, with_edges=(attach_edges == "inline")
     )
@@ -506,11 +547,8 @@ def pip_join_cells(
         cand = cand.join(
             F.broadcast(polygon_edges_table(polygons_wkt_df)), on="polygon_id", how="left"
         )
-    keep = F.when(F.col("_inside"), F.lit(True)).otherwise(
-        raycast_inside_expr(F.col(lon_col), F.col(lat_col), F.col("_edges"))
-    )
     out_cols = [f.name for f in points_df.schema.fields] + ["polygon_id"]
-    return cand.filter(keep).select(*out_cols)
+    return cand.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 
 
 def knn_join_broadcast(
@@ -677,15 +715,27 @@ def pip_join(
     Dispatch ladder (mirrors the reference's threshold-based dispatch,
     G:12284-12295, at distributed scale):
 
-    1. Probe the polygon side with `limit(k+1).count()` — a bounded
-       scan, never a full count of a huge layer. If it exceeds
-       `collect_threshold_polys`, the polygon side NEVER touches the
-       driver: resolution comes from a distributed median-envelope
-       aggregation (`pick_res_distributed`) and the join runs as
+    1. Collect at most k+1 rows of (polygon_id, wkt), with
+       k = `collect_threshold_polys`: ONE bounded read that is both
+       the size probe and, for a small layer, the ingestion (the
+       layer is never read twice, and never counted in full). Spark
+       runs a bounded collect as rounds of partition scans, one job
+       per round, growing each round until k+1 rows are in: a
+       one-partition layer takes one job, a many-partition layer a
+       few. The price on a large layer: k+1 WKTs reach the driver and
+       are dropped, where an id-only count moved none — the same
+       driver memory a k-row layer takes on the hybrid path, in
+       exchange for no separate count and no re-collect on every
+       small layer. If the probe returns more
+       than k rows, the polygon side NEVER reaches the driver beyond
+       those rows: the resolution and the edge-attachment mode come
+       from one distributed aggregation (`_layer_stats`: median
+       envelope area and WKT bytes) and the join runs as
        `pip_join_cells` — classification happens executor-side in
        `polygon_cells_classified`, the join shuffles on the cell key.
-    2. Small polygon side: collect it (the moral broadcast build side),
-       pick the resolution driver-side, and estimate the cell-map size
+    2. Small polygon side: the probe rows ARE the layer (the moral
+       broadcast build side). Parse them, pick the resolution
+       driver-side, and estimate the cell-map size
        (envelope area / cell area). Under `broadcast_threshold_cells`
        (~16 bytes/cell => ~32 MB) the hybrid broadcast flavor wins; a
        small-count-but-huge-area layer (continent polygons at fine res)
@@ -711,15 +761,15 @@ def pip_join(
             edges_broadcast_bytes=edges_cap,
         )
 
-    n_polys = polygons_wkt_df.limit(collect_threshold_polys + 1).count()
-    if n_polys > collect_threshold_polys:
+    rows = polygons_wkt_df.select("polygon_id", "wkt").limit(collect_threshold_polys + 1).collect()
+    if len(rows) > collect_threshold_polys:
         # ONE aggregation gives both the resolution and the edge-
         # attachment mode — no extra eager probe inside pip_join_cells
         med, wkt_bytes = _layer_stats(polygons_wkt_df)
         if res is None:
             res = 14 if med is None else _res_from_median_area(med)
         return _cells(res, "broadcast" if wkt_bytes <= edges_cap else "inline")
-    polys = _collect_polygons(polygons_wkt_df)
+    polys = _parse_polygons(rows)
     if res is None:
         res = pick_res([env for _pid, _parsed, env in polys])
     n = float(1 << res)
@@ -743,14 +793,8 @@ def pip_join(
             "shuffle to salt), so it is ignored here",
             stacklevel=2,
         )
-    return pip_join_hybrid(
-        points_df,
-        polygons_wkt_df,
-        res=res,
-        lon_col=lon_col,
-        lat_col=lat_col,
-        carry_cols=carry_cols,
-        broadcast_cellmap=True,
+    return _pip_join_hybrid(
+        points_df, polys, res, lon_col, lat_col, carry_cols, broadcast_cellmap=True
     )
 
 
@@ -1169,7 +1213,6 @@ def knn_join_cells(
     escalate to a 4x coarser resolution (ring expansion). Expects
     probes (probe_id, lon, lat) and candidates (cand_id, lon, lat).
     Returns (probe_id, nearest_id, dist_m)."""
-    spark = probes_df.sparkSession
     out = None
     remaining = probes_df.select(
         F.col(probe_id_col).alias("probe_id"), F.col("lon").alias("plon"), F.col("lat").alias("plat")
@@ -1184,19 +1227,17 @@ def knn_join_cells(
         n = float(1 << r)
         last = level == levels - 1
         p = (
-            remaining.withColumn("_ix", cells.lon_ix_expr(F.col("plon"), r))
-            .withColumn("_iy", cells.lat_iy_expr(F.col("plat"), r))
+            remaining.withColumn("_ix", cells.lon_ix_expr("plon", r))
+            .withColumn("_iy", cells.lat_iy_expr("plat", r))
             .withColumn("_dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
             .withColumn("_dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
             .withColumn("_jy", F.col("_iy") + F.col("_dy"))
             .filter((F.col("_jy") >= 0) & (F.col("_jy") < F.lit(int(n))))
             .withColumn("_jx", F.pmod(F.col("_ix") + F.col("_dx"), F.lit(int(n))))
-            .withColumn("cell", cells.pack_expr(r, F.col("_jx"), F.col("_jy")))
+            .withColumn("cell", cells.pack_expr(r, "_jx", "_jy"))
             .select("probe_id", "plon", "plat", "cell")
         )
-        c = cand_base.withColumn(
-            "cell", cells.cell_expr(F.col("clon"), F.col("clat"), r)
-        )
+        c = cand_base.withColumn("cell", cells.cell_expr("clon", "clat", r))
         joined = p.join(c, "cell").withColumn(
             "dist_m", haversine_m(F.col("plon"), F.col("plat"), F.col("clon"), F.col("clat"))
         )
@@ -1243,17 +1284,22 @@ def knn_join_cells(
     return out
 
 
-def tile_cover_exprs(lon: str, lat: str, half_w_deg: str, half_h_deg: str, res: int):
-    """Column expressions for the ix/iy ranges of a bbox cover — shared
-    by tile_assignment and its SQL oracle twin; the clamp is
-    cells.lon_ix_expr/lat_iy_expr, the one definition."""
-    lo, la = F.col(lon), F.col(lat)
-    hw, hh = F.expr(half_w_deg), F.expr(half_h_deg)
+def tile_cover_exprs(
+    lon: str, lat: str, half_w_deg: str, half_h_deg: str, res: int
+) -> tuple[str, str, str, str]:
+    """Spark SQL text (ix0, ix1, iy0, iy1) of the cell-index ranges
+    covering the bbox lon ± half_w_deg, lat ± half_h_deg. All four
+    arguments are SQL text: a column name (`"lon"`,
+    `cells.quote_ident(name)`) or an expression (`"w * 1e-6"`). The
+    clamp is the cells module's index text, the one definition, so a
+    NULL/NaN/Inf corner yields a NULL bound and `sequence` then covers
+    nothing."""
+    lo, la, hw, hh = (f"({t})" for t in (lon, lat, half_w_deg, half_h_deg))
     return (
-        cells.lon_ix_expr(lo - hw, res),
-        cells.lon_ix_expr(lo + hw, res),
-        cells.lat_iy_expr(la - hh, res),
-        cells.lat_iy_expr(la + hh, res),
+        cells._lon_ix_text(f"{lo} - {hw}", res),
+        cells._lon_ix_text(f"{lo} + {hw}", res),
+        cells._lat_iy_text(f"{la} - {hh}", res),
+        cells._lat_iy_text(f"{la} + {hh}", res),
     )
 
 
@@ -1265,13 +1311,13 @@ def tile_assignment(
     """Raster<->vector tiling: each image's ground footprint (a bbox of
     w*1e-6 x h*1e-6 degrees around its lon/lat — deterministic
     pixel->ground rule) maps to its covering tile set at `res`.
-    Pure Column arithmetic: sequence + explode, no UDF, no shuffle."""
+    Pure SQL expressions: sequence + explode, no UDF, no shuffle."""
     _check_reserved_cols(images_df, ("_ix", "_iy", "tile"), "tile_assignment")
     ix0, ix1, iy0, iy1 = tile_cover_exprs("lon", "lat", "w * 1e-6", "h * 1e-6", res)
     return (
-        images_df.withColumn("_ix", F.explode(F.sequence(ix0, ix1)))
-        .withColumn("_iy", F.explode(F.sequence(iy0, iy1)))
-        .withColumn("tile", cells.pack_expr(res, F.col("_ix"), F.col("_iy")))
+        images_df.withColumn("_ix", F.expr(f"explode(sequence({ix0}, {ix1}))"))
+        .withColumn("_iy", F.expr(f"explode(sequence({iy0}, {iy1}))"))
+        .withColumn("tile", cells.pack_expr(res, "_ix", "_iy"))
         .drop("_ix", "_iy")
     )
 

@@ -84,7 +84,7 @@ def tile_count_stream(points_stream: DataFrame, res: int = 14, watermark: str = 
 
     return (
         points_stream.withWatermark("ts", watermark)
-        .withColumn("cell", cell_expr(F.col("lon"), F.col("lat"), res))
+        .withColumn("cell", cell_expr("lon", "lat", res))
         .groupBy(F.window("ts", "5 minutes").alias("w"), "cell")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "cell", "n")
