@@ -255,6 +255,29 @@ class TestImages:
         pairs = {(r["key_a"], r["key_b"]): r["hamming"] for r in out}
         assert pairs == {(1, 2): 1}
 
+    @pytest.mark.parametrize("col", ["bytes", "w", "h"])
+    @pytest.mark.parametrize(
+        "kernel",
+        ["decode_stats", "reencode_roundtrip_check", "resize_images", "sample_video_frames"],
+    )
+    def test_null_decode_input_row_skipped(self, spark, sf_dir, kernel, col):
+        """A row NULL in bytes, w or h has no pixels: every decode
+        kernel skips it instead of failing the job, and the other
+        rows come out exactly as without it."""
+        src = D.images_with_bytes(spark, sf_dir).limit(12)
+        imgs = spark.createDataFrame(src.collect(), src.schema)
+        victim = imgs.first()["image_id"]
+        is_victim = F.col("image_id") == victim
+        dirty = imgs.withColumn(col, F.when(is_victim, F.lit(None)).otherwise(F.col(col)))
+        fn = getattr(I, kernel)
+
+        def rows(df):
+            return sorted(tuple(r) for r in fn(df).collect())
+
+        got = rows(dirty)
+        assert got == rows(imgs.filter(~is_victim))
+        assert got and all(victim not in r for r in got)
+
 
 class TestResizeAndFrames:
     def test_resize_shape_and_determinism(self, spark, sf_dir):

@@ -960,6 +960,79 @@ class TestBlockedTopK:
             )
 
 
+class TestMapApply:
+    """The map-side Arrow-kernel contract (grouped.map_apply) every
+    mapInPandas kernel in the engine runs through."""
+
+    def test_empty_list_frame_yields_no_rows(self, spark):
+        """A kernel that finds nothing builds its frame from empty
+        Python lists; pandas types those columns float64/object, which
+        the Arrow cast rejects for array<long>. The helper never
+        yields such a frame."""
+        import pandas as pd
+
+        from util_gis_spark.operators.grouped import map_apply
+
+        schema = "id long, ids array<long>"
+
+        def fn(pdf):
+            return pd.DataFrame({"id": [], "ids": []})
+
+        def hand_rolled(batches):
+            for pdf in batches:
+                yield fn(pdf)
+
+        df = spark.range(0, 8, numPartitions=2)
+        assert map_apply(df, fn, schema).count() == 0
+        with pytest.raises(Exception, match="NumPyConverter"):
+            df.mapInPandas(hand_rolled, schema=schema).collect()
+
+    def test_skip_null_rows_never_reach_fn(self, spark):
+        from util_gis_spark.operators.grouped import map_apply
+
+        rows = [(1, 1.5, "a"), (2, None, "b"), (3, 3.5, None), (4, 4.5, "d")]
+        df = spark.createDataFrame(rows, "id long, x double, s string")
+
+        def fn(pdf):
+            assert pdf["x"].notna().all() and pdf["s"].notna().all()
+            return pdf
+
+        out = map_apply(df, fn, df.schema, skip_null=("x", "s")).collect()
+        assert sorted(tuple(r) for r in out) == [(1, 1.5, "a"), (4, 4.5, "d")]
+        # columns outside skip_null keep their NULLs
+        kept = map_apply(df, lambda pdf: pdf, df.schema, skip_null=("x",)).collect()
+        assert sorted(r["id"] for r in kept) == [1, 3, 4]
+
+    def test_empty_partitions_never_call_fn(self, spark):
+        from util_gis_spark.operators.grouped import map_apply
+
+        def fn(pdf):
+            raise AssertionError(f"fn called on {len(pdf)} rows")
+
+        empty = spark.range(0, 16, numPartitions=4).filter("id < 0")
+        assert map_apply(empty, fn, "id long").count() == 0
+        all_null = spark.range(0, 16, numPartitions=4).selectExpr("CAST(NULL AS long) AS id")
+        assert map_apply(all_null, fn, "id long", skip_null=("id",)).count() == 0
+
+    def test_mapinpandas_only_inside_helper(self):
+        """Every map-side kernel goes through map_apply: the next one
+        cannot hand-roll its own batch loop, NULL rule or empty-frame
+        rule."""
+        import inspect
+        import pathlib
+
+        import util_gis_spark
+        from util_gis_spark.operators import grouped
+
+        root = pathlib.Path(util_gis_spark.__file__).parent
+        hits = {
+            p.relative_to(root).as_posix(): p.read_text().count("mapInPandas(")
+            for p in root.rglob("*.py")
+        }
+        assert {k: v for k, v in hits.items() if v} == {"operators/grouped.py": 1}
+        assert "mapInPandas(" in inspect.getsource(grouped.map_apply)
+
+
 class TestEdgeAttachment:
     def test_broadcast_and_inline_edges_equal(self, spark, sf_dir):
         """pip_join_cells attach_edges flavors (narrow cell map +
@@ -975,7 +1048,6 @@ class TestEdgeAttachment:
         }
         for kw in (
             {"attach_edges": "broadcast"},
-            {"attach_edges": "auto"},
             {"attach_edges": "broadcast", "salt_buckets": 4},
         ):
             got = {
@@ -984,6 +1056,14 @@ class TestEdgeAttachment:
             }
             assert got == want, kw
         assert len(want) > 0
+
+    def test_unknown_attach_edges_refused(self, spark, sf_dir):
+        """Only the two flavors exist; any other mode (the removed
+        "auto" included) must not fall through to one of them."""
+        with pytest.raises(ValueError, match="attach_edges"):
+            joins.pip_join_cells(
+                D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir), attach_edges="auto"
+            )
 
 
 class TestMinhashBandCap:

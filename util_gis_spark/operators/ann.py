@@ -1,7 +1,8 @@
 """Approximate nearest neighbor over embeddings (array<float>).
 
-- Brute-force cosine top-k (queries.q_embed_topk) is the exact
-  baseline: JVM higher-order functions, O(P x N).
+- Exact cosine top-k (embed_topk_blocked; queries.q_embed_topk is
+  its k=5 call): blocks of probes broadcast, one Arrow matmul kernel
+  over the candidates, O(P x N).
 - LSH variant: deterministic random-hyperplane signatures — bit
   j of the bucket is sign(dot(v, h_j)) with h_j[d] derived from an
   integer hash, so the SAME plane values are expressible in Spark
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import band_self_join
+from .grouped import map_apply
 
 N_PLANES = 6    # bits per table
 N_TABLES = 16   # OR-ed hash tables
@@ -130,37 +132,35 @@ def lsh_signatures_kernel(
         ]
     )
 
-    def run(batches):
-        planes = None
-        for pdf in batches:
-            # NULL embeddings: skip — the Column form's posexplode of
-            # a NULL bucket array yields zero rows for them anyway
-            pdf = pdf[pdf["v"].notna()]
-            if len(pdf) == 0:
-                continue
-            m = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            n, dim = m.shape
-            if planes is None or planes.shape[2] != dim:
-                # plane(t, j, d) exactly as _plane_term: int64 products
-                # stay < 2^63 (max base ~1.9e6 * 2654435761 ~ 5.1e15)
-                t_i = np.arange(n_tables, dtype=np.int64)[:, None, None]
-                j_i = np.arange(n_planes, dtype=np.int64)[None, :, None]
-                d_i = np.arange(dim, dtype=np.int64)[None, None, :]
-                planes = (
-                    (((t_i * 977 + j_i) * 131 + d_i) * 2654435761) % 2000
-                ) / 1000.0 - 1.0
-            buckets = np.zeros((n, n_tables), dtype=np.int64)
-            for t in range(n_tables):
-                for j in range(n_planes):
-                    acc = np.zeros(n)
-                    for d in range(dim):  # ascending-d fold == aggregate()
-                        acc = acc + m[:, d] * planes[t, j, d]
-                    buckets[:, t] += np.where(acc > 0, 1 << j, 0)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(np.int64), "buckets": list(buckets)}
-            )
+    planes = {}  # per worker: plane tensor by embedding dim
 
-    return base.select("vec_id", "v").mapInPandas(run, schema=schema)
+    def run(pdf):
+        m = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        n, dim = m.shape
+        if dim not in planes:
+            # plane(t, j, d) exactly as _plane_term: int64 products
+            # stay < 2^63 (max base ~1.9e6 * 2654435761 ~ 5.1e15)
+            t_i = np.arange(n_tables, dtype=np.int64)[:, None, None]
+            j_i = np.arange(n_planes, dtype=np.int64)[None, :, None]
+            d_i = np.arange(dim, dtype=np.int64)[None, None, :]
+            planes[dim] = (
+                (((t_i * 977 + j_i) * 131 + d_i) * 2654435761) % 2000
+            ) / 1000.0 - 1.0
+        pl = planes[dim]
+        buckets = np.zeros((n, n_tables), dtype=np.int64)
+        for t in range(n_tables):
+            for j in range(n_planes):
+                acc = np.zeros(n)
+                for d in range(dim):  # ascending-d fold == aggregate()
+                    acc = acc + m[:, d] * pl[t, j, d]
+                buckets[:, t] += np.where(acc > 0, 1 << j, 0)
+        return pd.DataFrame(
+            {"vec_id": pdf["vec_id"].to_numpy(np.int64), "buckets": list(buckets)}
+        )
+
+    # NULL embeddings are skipped: the Column form's posexplode of a
+    # NULL bucket array yields zero rows for them anyway
+    return map_apply(base.select("vec_id", "v"), run, schema, skip_null=("v",))
 
 
 def ann_lsh_topk(
@@ -290,57 +290,52 @@ def _probes_and_label_partials(e: DataFrame, probe_filter: str):
         ]
     )
 
-    def run(batches):
+    def run(pdf):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            pdf = pdf[pdf["v"].notna()]
-            if len(pdf) == 0:
-                continue
-            frames = []
-            labs, ns, sums = [], [], []
-            for lab, idx in pdf.groupby("label", sort=True).indices.items():
-                sub = np.vstack(pdf["v"].iloc[idx].to_numpy()).astype(np.float64)
-                labs.append(int(lab))
-                ns.append(len(sub))
-                sums.append(sub.sum(axis=0).tolist())
-            if labs:
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "kind": np.zeros(len(labs), dtype=np.int32),
-                            "part": np.full(len(labs), pid),
-                            "label": labs,
-                            "n": ns,
-                            "s": sums,
-                            "vec_id": np.zeros(len(labs), dtype=np.int64),
-                            "v": [None] * len(labs),
-                        }
-                    )
+        frames = []
+        labs, ns, sums = [], [], []
+        for lab, idx in pdf.groupby("label", sort=True).indices.items():
+            sub = np.vstack(pdf["v"].iloc[idx].to_numpy()).astype(np.float64)
+            labs.append(int(lab))
+            ns.append(len(sub))
+            sums.append(sub.sum(axis=0).tolist())
+        if labs:
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "kind": np.zeros(len(labs), dtype=np.int32),
+                        "part": np.full(len(labs), pid),
+                        "label": labs,
+                        "n": ns,
+                        "s": sums,
+                        "vec_id": np.zeros(len(labs), dtype=np.int64),
+                        "v": [None] * len(labs),
+                    }
                 )
-            pr = pdf[pdf["_is_probe"].fillna(False).astype(bool)]
-            if len(pr):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "kind": np.ones(len(pr), dtype=np.int32),
-                            "part": np.full(len(pr), pid),
-                            "label": np.zeros(len(pr), dtype=np.int64),
-                            "n": np.zeros(len(pr), dtype=np.int64),
-                            "s": [None] * len(pr),
-                            "vec_id": pr["vec_id"].to_numpy(np.int64),
-                            "v": pr["v"].tolist(),
-                        }
-                    )
+            )
+        pr = pdf[pdf["_is_probe"].fillna(False).astype(bool)]
+        if len(pr):
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "kind": np.ones(len(pr), dtype=np.int32),
+                        "part": np.full(len(pr), pid),
+                        "label": np.zeros(len(pr), dtype=np.int64),
+                        "n": np.zeros(len(pr), dtype=np.int64),
+                        "s": [None] * len(pr),
+                        "vec_id": pr["vec_id"].to_numpy(np.int64),
+                        "v": pr["v"].tolist(),
+                    }
                 )
-            if frames:
-                yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+            )
+        return pd.concat(frames, ignore_index=True) if frames else None
 
     src = e.withColumn("_is_probe", F.expr(probe_filter)).select(
         "vec_id", "label", "v", "_is_probe"
     )
-    rows = src.mapInPandas(run, schema=schema).collect()
+    rows = map_apply(src, run, schema, skip_null=("v",)).collect()
     partials = [r for r in rows if r["kind"] == 0]
     probes = [r for r in rows if r["kind"] == 1]
     ppdf = pd.DataFrame(
@@ -429,66 +424,62 @@ def _assign_score_kernel(
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            # NULL embeddings can never be neighbors: skip them like
-            # the probe/centroid pass does (r7 review — every sibling
-            # kernel degrades the same way instead of crashing vstack)
-            pdf = pdf[pdf["v"].notna()]
-            if len(pdf) == 0:
+    def run(pdf):
+        V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x dim
+        cids = pdf["vec_id"].to_numpy(np.int64)
+        dot = np.zeros((len(V), C.shape[0]))
+        for d in range(C.shape[1]):  # ascending-d fold == the expr chain
+            dot = dot + V[:, d, None] * C[None, :, d]
+        assigned = lids[np.argmax(dot, axis=1)]  # first max -> smallest list_id
+        out_p, out_n, out_l, out_c = [], [], [], []
+        for lid in pmap:
+            sel = np.flatnonzero(assigned == lid)
+            if not len(sel):
                 continue
-            V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x dim
-            cids = pdf["vec_id"].to_numpy(np.int64)
-            dot = np.zeros((len(V), C.shape[0]))
-            for d in range(C.shape[1]):  # ascending-d fold == the expr chain
-                dot = dot + V[:, d, None] * C[None, :, d]
-            assigned = lids[np.argmax(dot, axis=1)]  # first max -> smallest list_id
-            out_p, out_n, out_l, out_c = [], [], [], []
-            for lid in pmap:
-                sel = np.flatnonzero(assigned == lid)
-                if not len(sel):
-                    continue
-                pids, P = pmap[lid]
-                B = V[sel]
-                sub_ids = cids[sel]
-                npb, dim = P.shape
-                nb = len(sel)
-                dot2 = np.zeros((npb, nb))
-                pn = np.zeros(npb)
-                bn = np.zeros(nb)
-                for d in range(dim):  # ascending-d fold == aggregate()
-                    dot2 = dot2 + P[:, d, None] * B[None, :, d]
-                    pn = pn + P[:, d] * P[:, d]
-                    bn = bn + B[:, d] * B[:, d]
-                cos = dot2 / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
-                keep = pids[:, None] != sub_ids[None, :]
-                # per-probe quantum-safe top-k cut (see docstring).
-                # NaN cosines (zero-norm vectors: 0/0) are KEPT: Arrow
-                # hands them to the JVM as NULL, which ranks last, and
-                # a probe with fewer than k finite cosines must still
-                # get them (the parity test covers a zero probe).
-                masked = np.where(keep, cos, -np.inf)
-                kk = min(k, nb)
-                kth = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
-                keep &= (cos >= (kth[:, None] - 1e-5)) | np.isnan(cos)
-                pi, bi = np.nonzero(keep)
-                if not len(pi):
-                    continue
-                out_p.append(pids[pi])
-                out_n.append(sub_ids[bi])
-                out_l.append(np.full(len(pi), int(lid), dtype=np.int64))
-                out_c.append(cos[pi, bi])
-            if out_p:
-                yield pd.DataFrame(
-                    {
-                        "probe_id": np.concatenate(out_p),
-                        "neighbor_id": np.concatenate(out_n),
-                        "list_id": np.concatenate(out_l),
-                        "cos_raw": np.concatenate(out_c),
-                    }
-                )
+            pids, P = pmap[lid]
+            B = V[sel]
+            sub_ids = cids[sel]
+            npb, dim = P.shape
+            nb = len(sel)
+            dot2 = np.zeros((npb, nb))
+            pn = np.zeros(npb)
+            bn = np.zeros(nb)
+            for d in range(dim):  # ascending-d fold == aggregate()
+                dot2 = dot2 + P[:, d, None] * B[None, :, d]
+                pn = pn + P[:, d] * P[:, d]
+                bn = bn + B[:, d] * B[:, d]
+            cos = dot2 / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
+            keep = pids[:, None] != sub_ids[None, :]
+            # per-probe quantum-safe top-k cut (see docstring).
+            # NaN cosines (zero-norm vectors: 0/0) are KEPT: Arrow
+            # hands them to the JVM as NULL, which ranks last, and
+            # a probe with fewer than k finite cosines must still
+            # get them (the parity test covers a zero probe).
+            masked = np.where(keep, cos, -np.inf)
+            kk = min(k, nb)
+            kth = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
+            keep &= (cos >= (kth[:, None] - 1e-5)) | np.isnan(cos)
+            pi, bi = np.nonzero(keep)
+            if not len(pi):
+                continue
+            out_p.append(pids[pi])
+            out_n.append(sub_ids[bi])
+            out_l.append(np.full(len(pi), int(lid), dtype=np.int64))
+            out_c.append(cos[pi, bi])
+        if not out_p:
+            return None
+        return pd.DataFrame(
+            {
+                "probe_id": np.concatenate(out_p),
+                "neighbor_id": np.concatenate(out_n),
+                "list_id": np.concatenate(out_l),
+                "cos_raw": np.concatenate(out_c),
+            }
+        )
 
-    return e.select("vec_id", "v").mapInPandas(run, schema=schema)
+    # NULL embeddings can never be neighbors: skipped like the
+    # probe/centroid pass skips them
+    return map_apply(e.select("vec_id", "v"), run, schema, skip_null=("v",))
 
 
 def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
@@ -507,30 +498,27 @@ def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
         + [T.StructField("cos_raw", T.DoubleType())]
     )
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.vstack(pdf["pv"].to_numpy()).astype(np.float64)
-            b = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            n, dim = a.shape
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for d in range(dim):  # ascending-d fold == aggregate()
-                dot = dot + a[:, d] * b[:, d]
-                na = na + a[:, d] * a[:, d]
-                nb = nb + b[:, d] * b[:, d]
-            out = {
-                "probe_id": pdf["probe_id"].to_numpy(np.int64),
-                "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-            }
-            for c in carry:
-                out[c] = pdf[c].to_numpy(np.int64)
-            out["cos_raw"] = dot / (np.sqrt(na) * np.sqrt(nb))
-            yield pd.DataFrame(out)
+    def run(pdf):
+        a = np.vstack(pdf["pv"].to_numpy()).astype(np.float64)
+        b = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        n, dim = a.shape
+        dot = np.zeros(n)
+        na = np.zeros(n)
+        nb = np.zeros(n)
+        for d in range(dim):  # ascending-d fold == aggregate()
+            dot = dot + a[:, d] * b[:, d]
+            na = na + a[:, d] * a[:, d]
+            nb = nb + b[:, d] * b[:, d]
+        out = {
+            "probe_id": pdf["probe_id"].to_numpy(np.int64),
+            "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
+        }
+        for c in carry:
+            out[c] = pdf[c].to_numpy(np.int64)
+        out["cos_raw"] = dot / (np.sqrt(na) * np.sqrt(nb))
+        return pd.DataFrame(out)
 
-    return pairs.mapInPandas(run, schema=schema)
+    return map_apply(pairs, run, schema)
 
 
 def kmeans_centroids(
@@ -596,7 +584,7 @@ def kmeans_centroids(
 # Byte cap on the per-list probe matrices ann_ivf_topk ships in a task
 # closure: every probe sits in min(nprobe, lists) matrices as an int64
 # id plus dim float64s (500 probes x nprobe 3 x 520 B ~ 0.8 MB at 64
-# dims). Same 64 MB convention as pip_join's edges_broadcast_bytes.
+# dims). Same 64 MB convention as joins.EDGES_BROADCAST_BYTES.
 # Over it, ann_ivf_topk refuses, as embed_topk_blocked does.
 _CLOSURE_MAX_PROBE_BYTES = 64 << 20
 
@@ -825,28 +813,23 @@ def embed_topk_blocked(
     block_size: int = 10_000,
     max_probe_bytes: int = 256 << 20,
 ) -> DataFrame:
-    """EXACT cosine top-k for probe sets above the single-broadcast cap
-    of the baseline kernel (queries.q_embed_topk refuses > max_probes):
-    probes are split into blocks of `block_size`, each block ships as
-    its own task broadcast, and the candidate table is scanned once per
-    block (Catalyst unions the per-block kernels into one job). Cost is
-    B = ceil(P / block_size) candidate scans — the textbook batched
-    exact-kNN trade: bounded memory per task, linear extra scans. Above
-    driver memory for the probe MATRIX itself, exactness must be
-    sacrificed (LSH/IVF) or the matmul moved to a blocked shuffle
-    cross-product; this is the documented middle tier. Output
-    (probe_id, neighbor_id, cos_sim), self excluded, global top-k with
-    (cos desc, neighbor_id) tie-break — identical rows to the baseline
-    kernel on the same input.
+    """EXACT cosine top-k: probes are split into blocks of
+    `block_size`, each block ships as its own task broadcast, and the
+    candidate table is scanned once per block (Catalyst unions the
+    per-block kernels into one job). Cost is B = ceil(P / block_size)
+    candidate scans — the textbook batched exact-kNN trade: bounded
+    memory per task, linear extra scans. Each candidate batch runs one
+    matmul against the block and keeps a per-batch local top-k; the
+    global top-k window finishes it. Output (probe_id, neighbor_id,
+    cos_sim), self excluded, (cos desc, neighbor_id) tie-break; NULL
+    embeddings are skipped on both sides.
 
     The probe ingestion is Arrow (toPandas -> numpy columns, never
     per-row Python objects) and BYTE-capped like the kNN candidate
-    ingestion (joins._cand_arrays): this tier exists to lift
-    q_embed_topk's probe-COUNT cap, not to hold an unbounded probe
-    matrix on the driver, so above `max_probe_bytes` (default 256 MB,
-    ~500k probes x 64 dims) it REFUSES and points at LSH/IVF — the
-    cap is enforced with limit(cap_rows+1) inside the ingestion job,
-    bounding the transfer itself, not just the kept matrix."""
+    ingestion (joins._cand_arrays): above `max_probe_bytes` (default
+    256 MB, ~500k probes x 64 dims) it REFUSES and points at LSH/IVF
+    — the cap is enforced with limit(cap_rows+1) inside the ingestion
+    job, bounding the transfer itself, not just the kept matrix."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window
@@ -898,38 +881,31 @@ def embed_topk_blocked(
             (pid_l, pm / np.linalg.norm(pm, axis=1, keepdims=True))
         )
 
-        def score(batches, _bc=bc, _k=k):
+        def score(pdf, _bc=bc):
             pid, pm_n = _bc.value
-            for pdf in batches:
-                # NULL-embedding candidates can never be a neighbor —
-                # drop them instead of crashing np.vstack (ADVICE r6
-                # #4 made the probe side skip them; the candidate side
-                # must degrade the same way)
-                pdf = pdf[pdf["v"].notna()]
-                if len(pdf) == 0:
-                    continue
-                cid = pdf["vec_id"].to_numpy(np.int64)
-                cm = np.vstack(pdf["v"].to_numpy())
-                cm_n = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-                cos = pm_n @ cm_n.T
-                P, B = cos.shape
-                kk = min(_k + 1, B)
-                # same rounding-tie-safe cut as q_embed_topk (r5): the
-                # global rank ties on the ROUNDED value, so keep
-                # everything within one 1e-5 quantum of the kk-th best
-                kth = -np.partition(-cos, kk - 1, axis=1)[:, kk - 1]
-                rows_p, rows_c, rows_s = [], [], []
-                for i in range(P):
-                    for j in np.flatnonzero(cos[i] >= kth[i] - 1e-5):
-                        if cid[j] != pid[i]:
-                            rows_p.append(pid[i])
-                            rows_c.append(cid[j])
-                            rows_s.append(round(float(cos[i, j]), 5))
-                yield pd.DataFrame(
-                    {"probe_id": rows_p, "neighbor_id": rows_c, "cos_sim": rows_s}
-                )
+            cid = pdf["vec_id"].to_numpy(np.int64)
+            cm = np.vstack(pdf["v"].to_numpy())
+            cm_n = cm / np.linalg.norm(cm, axis=1, keepdims=True)
+            cos = pm_n @ cm_n.T
+            P, B = cos.shape
+            kk = min(k + 1, B)
+            # rounding-tie-safe cut: the global rank ties on the ROUNDED
+            # value with neighbor_id ascending, so keep everything within
+            # one 1e-5 quantum of the kk-th best UNROUNDED value — a
+            # plain top-k cut could drop the smaller-id side of a tie
+            kth = -np.partition(-cos, kk - 1, axis=1)[:, kk - 1]
+            rows_p, rows_c, rows_s = [], [], []
+            for i in range(P):
+                for j in np.flatnonzero(cos[i] >= kth[i] - 1e-5):
+                    if cid[j] != pid[i]:
+                        rows_p.append(pid[i])
+                        rows_c.append(cid[j])
+                        rows_s.append(round(float(cos[i, j]), 5))
+            return pd.DataFrame({"probe_id": rows_p, "neighbor_id": rows_c, "cos_sim": rows_s})
 
-        part = e.mapInPandas(score, schema=schema)
+        # NULL-embedding candidates can never be a neighbor: skipped,
+        # as the probe collect skips NULL probes
+        part = map_apply(e, score, schema, skip_null=("v",))
         scored = part if scored is None else scored.unionByName(part)
 
     w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))

@@ -5,8 +5,9 @@
 - SimHash (bit-majority fingerprint) + hamming-radius pairs
 - n-gram Jaccard verification kernel
 
-Everything is JVM-side Spark HOFs (transform/aggregate/filter) — no
-Python UDFs — and every constant lives HERE so the Spark pipeline and
+The MinHash and SimHash signatures are Arrow kernels (grouped.map_apply)
+bit-identical to their HOF forms; banding and verification are JVM-side
+Spark expressions. Every constant lives HERE so the Spark pipeline and
 the DuckDB oracle (built by the *_sql functions) cannot drift.
 
 Scale notes: MinHash-LSH is the linear-scale path (band buckets ->
@@ -23,6 +24,8 @@ import re as _re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .grouped import map_apply
 
 # The ONE kernel tokenizer (r6 review: three kernels carried private
 # copies of the compile + filter). ASCII \s+ == Spark's Java \s+ split
@@ -117,30 +120,25 @@ def _sig_kernel(docs: DataFrame, shingler: str = "word_pair") -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            ids, hs, sigs = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):  # NULL text: no shingles
-                    continue
-                if shingler == "char3":
-                    sh = sorted({text[i : i + 3] for i in range(len(text) - 2)})
-                else:
-                    toks = _tokens(text)  # the one ASCII-\s+ tokenizer
-                    sh = sorted({f"{x} {y}" for x, y in zip(toks, toks[1:])})
-                if not sh:
-                    continue
-                h = np.fromiter(
-                    (_md5_60(s) % MOD30 for s in sh), dtype=np.int64, count=len(sh)
-                )
-                sig = ((a * h[None, :] + b) % _P).min(axis=1)
-                ids.append(doc_id)
-                hs.append(h.tolist())
-                sigs.append(sig.tolist())
-            if ids:  # empty python-list frames break the Arrow cast
-                yield pd.DataFrame({"doc_id": ids, "_hashes": hs, "_sig": sigs})
+    def run(pdf):
+        ids, hs, sigs = [], [], []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            if shingler == "char3":
+                sh = sorted({text[i : i + 3] for i in range(len(text) - 2)})
+            else:
+                toks = _tokens(text)  # the one ASCII-\s+ tokenizer
+                sh = sorted({f"{x} {y}" for x, y in zip(toks, toks[1:])})
+            if not sh:
+                continue
+            h = np.fromiter((_md5_60(s) % MOD30 for s in sh), dtype=np.int64, count=len(sh))
+            sig = ((a * h[None, :] + b) % _P).min(axis=1)
+            ids.append(doc_id)
+            hs.append(h.tolist())
+            sigs.append(sig.tolist())
+        return pd.DataFrame({"doc_id": ids, "_hashes": hs, "_sig": sigs})
 
-    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
+    # NULL text has no shingles
+    return map_apply(docs.select("doc_id", "text"), run, schema, skip_null=("text",))
 
 
 def band_table_expr() -> str:
@@ -507,45 +505,56 @@ def _token_hash32(t: str) -> int:
     return _md5_60(t) % MOD32
 
 
-def simhash_docs(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash) — token-level 32-bit simhash (32 effective
-    bits). Arrow kernel (r4): the HOF formulation ran 32 filter passes
-    over the token-hash array per row (one per fingerprint bit), which
-    was the measured floor of the generated-corpus ladder; the kernel
-    computes the same md5 token hashes (hashlib == SQL md5
-    byte-for-byte, the same equivalence the MinHash kernel relies on)
-    and the 32 majority votes as one numpy bit-matrix reduction —
-    bit-identical to simhash_expr()/the DuckDB twin, asserted by the
-    docs_simhash oracle and a dedicated parity test. Works unchanged
-    under Structured Streaming (stateless mapInPandas)."""
+def _simhash_kernel(docs: DataFrame, hashers: tuple, cols: tuple) -> DataFrame:
+    """(doc_id, *cols): one 32-bit SimHash fingerprint per token hasher
+    — bit i set iff a strict majority of the doc's distinct tokens
+    have bit i set in their hash. Arrow kernel (r4): the HOF
+    formulation ran 32 filter passes over the token-hash array per row
+    (one per fingerprint bit), the measured floor of the
+    generated-corpus ladder; here the md5 token hashes (hashlib == SQL
+    md5 byte-for-byte, the same equivalence the MinHash kernel relies
+    on) and the 32 majority votes are one numpy bit-matrix reduction
+    per hasher. NULL text and token-less docs emit no row, like the
+    HOF path's size(_hashes) > 0 filter. Stateless, so it runs
+    unchanged under Structured Streaming."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("simhash", T.LongType())]
+        [T.StructField(c, T.LongType()) for c in ("doc_id", *cols)]
     )
-    weights = (1 << np.arange(SIMHASH_BITS, dtype=np.int64))
+    weights = 1 << np.arange(SIMHASH_BITS, dtype=np.int64)
 
-    def run(batches):
-        for pdf in batches:
-            ids, sims = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):  # NULL text: drop, like the
-                    continue  # HOF path's size(_hashes) > 0 filter
-                toks = set(_tokens(text))  # the one ASCII-\s+ tokenizer
-                if not toks:
-                    continue
-                h = np.fromiter(
-                    (_token_hash32(t) for t in toks), dtype=np.int64, count=len(toks)
-                )
-                bits = (h[:, None] >> np.arange(SIMHASH_BITS)) & 1
-                sim = int(weights[2 * bits.sum(axis=0) > len(h)].sum())
-                ids.append(doc_id)
-                sims.append(sim)
-            yield pd.DataFrame({"doc_id": ids, "simhash": sims})
+    def vote(h) -> int:
+        bits = (h[:, None] >> np.arange(SIMHASH_BITS)) & 1
+        return int(weights[2 * bits.sum(axis=0) > len(h)].sum())
 
-    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
+    def run(pdf):
+        ids, fps = [], []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            toks = set(_tokens(text))  # the one ASCII-\s+ tokenizer
+            if not toks:
+                continue
+            ids.append(doc_id)
+            fps.append(
+                [
+                    vote(np.fromiter((th(t) for t in toks), dtype=np.int64, count=len(toks)))
+                    for th in hashers
+                ]
+            )
+        out = pd.DataFrame(fps, columns=list(cols))
+        out.insert(0, "doc_id", ids)
+        return out
+
+    return map_apply(docs.select("doc_id", "text"), run, schema, skip_null=("text",))
+
+
+def simhash_docs(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash) — token-level 32-bit simhash (32 effective
+    bits), bit-identical to simhash_expr()/the DuckDB twin (asserted by
+    the docs_simhash oracle and a dedicated parity test)."""
+    return _simhash_kernel(docs, (_token_hash32,), ("simhash",))
 
 
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
@@ -623,47 +632,12 @@ def _token_hash32_hi(t: str) -> int:
 
 
 def simhash_docs_wide(docs: DataFrame) -> DataFrame:
-    """(doc_id, sim_hi, sim_lo) — 64-bit simhash as two 32-bit halves.
-    sim_lo is BIT-IDENTICAL to simhash_docs' fingerprint (same token
-    hash, same majority vote), so the wide path strictly extends the
-    narrow one; sim_hi votes on the salted hash family."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sim_hi", T.LongType()),
-            T.StructField("sim_lo", T.LongType()),
-        ]
-    )
-    weights = 1 << np.arange(SIMHASH_BITS, dtype=np.int64)
-
-    def run(batches):
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue
-                toks = set(_tokens(text))  # the one ASCII-\s+ tokenizer
-                if not toks:
-                    continue
-                lo = np.fromiter(
-                    (_token_hash32(t) for t in toks), dtype=np.int64, count=len(toks)
-                )
-                hi = np.fromiter(
-                    (_token_hash32_hi(t) for t in toks), dtype=np.int64, count=len(toks)
-                )
-                n = len(lo)
-                bits_lo = (lo[:, None] >> np.arange(SIMHASH_BITS)) & 1
-                bits_hi = (hi[:, None] >> np.arange(SIMHASH_BITS)) & 1
-                ids.append(doc_id)
-                los.append(int(weights[2 * bits_lo.sum(axis=0) > n].sum()))
-                his.append(int(weights[2 * bits_hi.sum(axis=0) > n].sum()))
-            yield pd.DataFrame({"doc_id": ids, "sim_hi": his, "sim_lo": los})
-
-    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
+    """(doc_id, sim_hi, sim_lo) — 64-bit simhash as two 32-bit halves
+    from the same kernel as simhash_docs: sim_lo votes on the same
+    token hash, so it IS simhash_docs' fingerprint and the wide path
+    strictly extends the narrow one; sim_hi votes on the salted hash
+    family."""
+    return _simhash_kernel(docs, (_token_hash32_hi, _token_hash32), ("sim_hi", "sim_lo"))
 
 
 def simhash_near_dup_pairs_wide(docs: DataFrame, max_hamming: int = 2) -> DataFrame:

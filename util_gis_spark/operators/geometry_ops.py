@@ -15,12 +15,9 @@ reference's EMPTY_GEOMETRY (G:11769-11773)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import gauss, morphology as M
@@ -33,6 +30,7 @@ from ..geo.geometry import (
     polygon_wkt,
 )
 from ..geo.sphere import calc_mu, np_polygon_area_m2
+from .grouped import grouped_apply, map_apply
 
 
 # the shared flattener lives next to parse_wkt (r6 review: this module
@@ -307,8 +305,6 @@ def resolve_conflicts_agg(
         base["mu"] = [r[2] for r in rows]
         return pd.DataFrame(base)
 
-    from .grouped import grouped_apply
-
     return grouped_apply(df, group_cols, run, out_schema)
 
 
@@ -343,8 +339,6 @@ def mutual_difference_agg(
         base["mu"] = [r[1] for r in rows]
         return pd.DataFrame(base)
 
-    from .grouped import grouped_apply
-
     return grouped_apply(df, group_cols, run, out_schema)
 
 
@@ -359,15 +353,14 @@ def intersect_with_clip(df: DataFrame, clip_wkt: str, wkt_col: str = "wkt") -> D
 
     clip_parsed = parse_wkt(clip_wkt)  # constant side: parse ONCE (r6 review)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [np_intersection_mu(w, clip_parsed) for w in pdf[wkt_col]]
-            out = pdf.copy()
-            out["inter_wkt"] = [r[0] for r in res]
-            out["inter_mu"] = [r[1] for r in res]
-            yield out
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        res = [np_intersection_mu(w, clip_parsed) for w in pdf[wkt_col]]
+        out = pdf.copy()
+        out["inter_wkt"] = [r[0] for r in res]
+        out["inter_mu"] = [r[1] for r in res]
+        return out
 
-    return df.mapInPandas(run, schema=schema)
+    return map_apply(df, run, schema)
 
 
 def merge_wkts_agg(df: DataFrame, group_cols: list[str], wkt_col: str = "wkt") -> DataFrame:
@@ -384,7 +377,5 @@ def merge_wkts_agg(df: DataFrame, group_cols: list[str], wkt_col: str = "wkt") -
         row["merged_wkt"] = [wkt]
         row["mu"] = [mu]
         return pd.DataFrame(row)
-
-    from .grouped import grouped_apply
 
     return grouped_apply(df, group_cols, run, out_schema)

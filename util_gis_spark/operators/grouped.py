@@ -1,9 +1,10 @@
-"""Grouped-map execution helper.
+"""The two Arrow-kernel helpers: every Python kernel in the engine runs
+through `grouped_apply` (grouped map) or `map_apply` (map side).
 
-AQE sizes shuffle partitions by BYTES (advisory 64 MB), so the tiny
-shuffles that feed per-trajectory Python kernels coalesce to one or
-two partitions — and the kernels, whose cost AQE cannot see, run
-serially. Measured on split_road at sf0.1: 320 devices x 31 ms of
+Grouped map. AQE sizes shuffle partitions by BYTES (advisory 64 MB),
+so the tiny shuffles that feed per-trajectory Python kernels coalesce
+to one or two partitions — and the kernels, whose cost AQE cannot see,
+run serially. Measured on split_road at sf0.1: 320 devices x 31 ms of
 numpy per device ran at loadavg < 1 with 3 Python workers, 15.3 s
 wall; with partitioning pinned it spreads across all cores.
 
@@ -13,8 +14,15 @@ which AQE is forbidden to coalesce, and its hash partitioning
 satisfies FlatMapGroupsInPandas' required distribution, so the stage
 still has exactly ONE exchange. `n` tracks max(cores, configured
 shuffle partitions): cores when data is small but kernels are hot
-(this sandbox), the configured width on a real cluster where both are
+(one machine), the configured width on a real cluster where both are
 large.
+
+Map side. `map_apply` owns the batch loop of every `mapInPandas`
+kernel, so the kernel body is a function of ONE pandas batch. It
+drops rows NULL in any `skip_null` column before the kernel sees them,
+never calls the kernel on an empty batch, and never yields an empty
+frame: a frame built from empty Python lists infers float64/object
+columns, which the Arrow cast rejects for array and struct fields.
 """
 
 from __future__ import annotations
@@ -39,6 +47,26 @@ def grouped_apply(df: DataFrame, group_cols, fn, schema) -> DataFrame:
         .groupBy(*cols)
         .applyInPandas(fn, schema=schema)
     )
+
+
+def map_apply(df: DataFrame, fn, schema, skip_null=()) -> DataFrame:
+    """df.mapInPandas over `fn(pdf) -> DataFrame | None`, one call per
+    non-empty Arrow batch: rows NULL in any `skip_null` column are
+    dropped first, and a None or empty result yields nothing (see
+    module doc)."""
+    cols = list(skip_null)
+
+    def run(batches):
+        for pdf in batches:
+            if cols:
+                pdf = pdf.dropna(subset=cols)
+            if len(pdf) == 0:
+                continue
+            out = fn(pdf)
+            if out is not None and len(out):
+                yield out
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def sorted_with_secs(pdf, float_secs: bool = True):

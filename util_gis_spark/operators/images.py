@@ -16,8 +16,6 @@ rule requires when the pipeline re-encodes payloads.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -25,6 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import band_self_join
+from .grouped import map_apply
+
+# the columns every decode needs: a row NULL in any of them has no
+# pixels, so the kernels skip it instead of failing the job
+_DECODE_COLS = ("bytes", "w", "h")
 
 
 def _decode_stub(data: bytes, w: int, h: int) -> np.ndarray:
@@ -34,6 +37,11 @@ def _decode_stub(data: bytes, w: int, h: int) -> np.ndarray:
     seed = int.from_bytes(data[:8].ljust(8, b"\0"), "little") & 0x7FFFFFFF
     rng = np.random.default_rng(seed)
     return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+
+
+def _luminance(px: np.ndarray) -> np.ndarray:
+    """Rec. 601 luma of an (h, w, 3) RGB raster."""
+    return 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
 
 
 def _encode_stub(pixels: np.ndarray, lossy: bool) -> bytes:
@@ -68,26 +76,23 @@ def decode_stats(images_df: DataFrame, max_pixels: int = 64 * 64) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means, stds, npx = [], [], [], []
-            # zip over columns, not iterrows: building a pandas Series
-            # per row cost ~10x on the per-image hot loop (r6 review;
-            # the dedup kernels' established idiom)
-            for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
-                w = min(int(rw), side)
-                h = min(int(rh), side)
-                px = _decode_stub(bytes(buf), w, h)
-                lum = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-                ids.append(iid)
-                means.append(round(float(lum.mean()), 4))
-                stds.append(round(float(lum.std()), 4))
-                npx.append(w * h)
-            yield pd.DataFrame(
-                {"image_id": ids, "mean_lum": means, "std_lum": stds, "n_pixels": npx}
-            )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, means, stds, npx = [], [], [], []
+        # zip over columns, not iterrows: building a pandas Series
+        # per row cost ~10x on the per-image hot loop
+        for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
+            w = min(int(rw), side)
+            h = min(int(rh), side)
+            lum = _luminance(_decode_stub(bytes(buf), w, h))
+            ids.append(iid)
+            means.append(round(float(lum.mean()), 4))
+            stds.append(round(float(lum.std()), 4))
+            npx.append(w * h)
+        return pd.DataFrame({"image_id": ids, "mean_lum": means, "std_lum": stds, "n_pixels": npx})
 
-    return images_df.select("image_id", "bytes", "w", "h").mapInPandas(run, schema=out_schema)
+    return map_apply(
+        images_df.select("image_id", *_DECODE_COLS), run, out_schema, skip_null=_DECODE_COLS
+    )
 
 
 def reencode_roundtrip_check(images_df: DataFrame, lossy: bool = True) -> DataFrame:
@@ -102,22 +107,29 @@ def reencode_roundtrip_check(images_df: DataFrame, lossy: bool = True) -> DataFr
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, psnrs = [], []
-            for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
-                w = min(int(rw), 64)
-                h = min(int(rh), 64)
-                px = _decode_stub(bytes(buf), w, h)
-                enc = _encode_stub(px, lossy=lossy)
-                px2 = np.frombuffer(enc, dtype=np.uint8).reshape(h, w, 3)
-                ids.append(iid)
-                p = psnr(px, px2)
-                psnrs.append(999.0 if np.isinf(p) else round(p, 2))
-            yield pd.DataFrame({"image_id": ids, "psnr_db": psnrs, "caption": pdf["caption"].to_numpy()})
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        psnrs = []
+        for buf, rw, rh in zip(pdf["bytes"], pdf["w"], pdf["h"]):
+            w = min(int(rw), 64)
+            h = min(int(rh), 64)
+            px = _decode_stub(bytes(buf), w, h)
+            enc = _encode_stub(px, lossy=lossy)
+            px2 = np.frombuffer(enc, dtype=np.uint8).reshape(h, w, 3)
+            p = psnr(px, px2)
+            psnrs.append(999.0 if np.isinf(p) else round(p, 2))
+        return pd.DataFrame(
+            {
+                "image_id": pdf["image_id"].to_numpy(),
+                "psnr_db": psnrs,
+                "caption": pdf["caption"].to_numpy(),
+            }
+        )
 
-    return images_df.select("image_id", "bytes", "w", "h", "caption").mapInPandas(
-        run, schema=out_schema
+    return map_apply(
+        images_df.select("image_id", *_DECODE_COLS, "caption"),
+        run,
+        out_schema,
+        skip_null=_DECODE_COLS,
     )
 
 
@@ -137,30 +149,27 @@ def resize_images(images_df: DataFrame, out_w: int = 32, out_h: int = 32) -> Dat
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
-                w = min(int(rw), 64)
-                h = min(int(rh), 64)
-                px = _decode_stub(bytes(buf), w, h)
-                yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-                small = px[yi][:, xi]
-                lum = 0.299 * small[:, :, 0] + 0.587 * small[:, :, 1] + 0.114 * small[:, :, 2]
-                ids.append(iid)
-                means.append(round(float(lum.mean()), 4))
-            if ids:  # empty frames infer float64 cols, breaking the Arrow cast
-                yield pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "out_w": np.int32(out_w),
-                        "out_h": np.int32(out_h),
-                        "mean_lum": means,
-                    }
-                )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        means = []
+        for buf, rw, rh in zip(pdf["bytes"], pdf["w"], pdf["h"]):
+            w = min(int(rw), 64)
+            h = min(int(rh), 64)
+            px = _decode_stub(bytes(buf), w, h)
+            yi = (np.arange(out_h) * h // out_h).astype(np.int64)
+            xi = (np.arange(out_w) * w // out_w).astype(np.int64)
+            means.append(round(float(_luminance(px[yi][:, xi]).mean()), 4))
+        return pd.DataFrame(
+            {
+                "image_id": pdf["image_id"].to_numpy(),
+                "out_w": np.int32(out_w),
+                "out_h": np.int32(out_h),
+                "mean_lum": means,
+            }
+        )
 
-    return images_df.select("image_id", "bytes", "w", "h").mapInPandas(run, schema=out_schema)
+    return map_apply(
+        images_df.select("image_id", *_DECODE_COLS), run, out_schema, skip_null=_DECODE_COLS
+    )
 
 
 def sample_video_frames(videos_df: DataFrame, every_n: int = 4) -> DataFrame:
@@ -181,31 +190,28 @@ def sample_video_frames(videos_df: DataFrame, every_n: int = 4) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids, fidx, nfr, means = [], [], [], []
-            for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
-                n_frames = int(rh) % 28 + 2
-                w = min(int(rw), 32)
-                h = min(int(rh), 32)
-                data = bytes(buf)
-                for i in range(0, n_frames, every_n):
-                    # per-frame decode: frame index salts the seed, the
-                    # same way a real demuxer seeks to frame i
-                    px = _decode_stub(data + i.to_bytes(2, "little"), w, h)
-                    lum = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-                    vids.append(iid)
-                    fidx.append(np.int32(i))
-                    nfr.append(np.int32(n_frames))
-                    means.append(round(float(lum.mean()), 4))
-            if vids:
-                yield pd.DataFrame(
-                    {"video_id": vids, "frame_idx": fidx, "n_frames": nfr, "mean_lum": means}
-                )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        vids, fidx, nfr, means = [], [], [], []
+        for iid, buf, rw, rh in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
+            n_frames = int(rh) % 28 + 2
+            w = min(int(rw), 32)
+            h = min(int(rh), 32)
+            data = bytes(buf)
+            for i in range(0, n_frames, every_n):
+                # per-frame decode: frame index salts the seed, the
+                # same way a real demuxer seeks to frame i
+                px = _decode_stub(data + i.to_bytes(2, "little"), w, h)
+                vids.append(iid)
+                fidx.append(np.int32(i))
+                nfr.append(np.int32(n_frames))
+                means.append(round(float(_luminance(px).mean()), 4))
+        return pd.DataFrame(
+            {"video_id": vids, "frame_idx": fidx, "n_frames": nfr, "mean_lum": means}
+        )
 
-    return videos_df.select(
-        F.col("image_id"), "bytes", "w", "h"
-    ).mapInPandas(run, schema=out_schema)
+    return map_apply(
+        videos_df.select("image_id", *_DECODE_COLS), run, out_schema, skip_null=_DECODE_COLS
+    )
 
 
 def caption_byte_equality(src_df: DataFrame, out_df: DataFrame) -> DataFrame:

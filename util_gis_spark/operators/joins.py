@@ -30,8 +30,6 @@ distributed re-expression:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -41,6 +39,12 @@ from pyspark.sql import types as T
 from ..geo import cells
 from ..geo.geometry import geom_envelope, parse_wkt, points_in_geom
 from ..geo.sphere import np_haversine
+from .grouped import map_apply
+
+# Byte budget for shipping a polygon layer's edge arrays as a broadcast
+# table (pip_join's attach_edges="broadcast"); over it, edges ride the
+# cell shuffle inline.
+EDGES_BROADCAST_BYTES = 64 << 20
 
 
 def _collect_polygons(polygons_wkt_df: DataFrame) -> list[tuple]:
@@ -99,31 +103,28 @@ def pip_join_broadcast(
     polys = _collect_polygons(polygons_wkt_df)
     schema = T.StructType(points_df.schema.fields + [T.StructField("polygon_id", T.LongType())])
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def refine(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        px = pdf[lon_col].to_numpy(np.float64)
+        py = pdf[lat_col].to_numpy(np.float64)
+        row_ix: list[np.ndarray] = []
+        pid_out: list[np.ndarray] = []
+        for pid, parsed, (x0, y0, x1, y1) in polys:
+            # coarse: envelope mask (vectorized STRtree analogue)
+            m = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+            if not m.any():
                 continue
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            row_ix: list[np.ndarray] = []
-            pid_out: list[np.ndarray] = []
-            for pid, parsed, (x0, y0, x1, y1) in polys:
-                # coarse: envelope mask (vectorized STRtree analogue)
-                m = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-                if not m.any():
-                    continue
-                idx = np.flatnonzero(m)
-                hit = points_in_geom(px[idx], py[idx], parsed)
-                if hit.any():
-                    row_ix.append(idx[hit])
-                    pid_out.append(np.full(int(hit.sum()), pid, dtype=np.int64))
-            if row_ix:
-                rows = np.concatenate(row_ix)
-                out = pdf.take(rows)
-                out["polygon_id"] = np.concatenate(pid_out)
-                yield out
+            idx = np.flatnonzero(m)
+            hit = points_in_geom(px[idx], py[idx], parsed)
+            if hit.any():
+                row_ix.append(idx[hit])
+                pid_out.append(np.full(int(hit.sum()), pid, dtype=np.int64))
+        if not row_ix:
+            return None
+        out = pdf.take(np.concatenate(row_ix))
+        out["polygon_id"] = np.concatenate(pid_out)
+        return out
 
-    return points_df.mapInPandas(refine, schema=schema)
+    return map_apply(points_df, refine, schema)
 
 
 # the shared flattener lives next to parse_wkt (r6 review: this module
@@ -427,31 +428,29 @@ def polygon_cells_classified(
         fields.append(T.StructField("_edges", EDGES_TYPE))
     out_schema = T.StructType(fields)
 
-    def classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, cls, ins, eds = [], [], [], []
-            for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
-                parsed = parse_wkt(wkt)
-                inside, boundary = classify_polygon_cells(parsed, res)
-                edges = (
-                    [
-                        [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
-                        for part in _edge_parts_from_parsed(parsed)
-                    ]
-                    if (with_edges and len(boundary))
-                    else None
-                )
-                for c in inside:
-                    pids.append(pid); cls.append(int(c)); ins.append(True); eds.append(None)
-                for c in boundary:
-                    pids.append(pid); cls.append(int(c)); ins.append(False); eds.append(edges)
-            if pids:  # empty frames infer float64 cols, breaking the Arrow struct cast
-                data = {"polygon_id": pids, "cell": cls, "_inside": ins}
-                if with_edges:
-                    data["_edges"] = eds
-                yield pd.DataFrame(data)
+    def classify(pdf: pd.DataFrame) -> pd.DataFrame:
+        pids, cls, ins, eds = [], [], [], []
+        for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
+            parsed = parse_wkt(wkt)
+            inside, boundary = classify_polygon_cells(parsed, res)
+            edges = (
+                [
+                    [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
+                    for part in _edge_parts_from_parsed(parsed)
+                ]
+                if (with_edges and len(boundary))
+                else None
+            )
+            for c in inside:
+                pids.append(pid); cls.append(int(c)); ins.append(True); eds.append(None)
+            for c in boundary:
+                pids.append(pid); cls.append(int(c)); ins.append(False); eds.append(edges)
+        data = {"polygon_id": pids, "cell": cls, "_inside": ins}
+        if with_edges:
+            data["_edges"] = eds
+        return pd.DataFrame(data)
 
-    return polygons_wkt_df.select("polygon_id", "wkt").mapInPandas(classify, schema=out_schema)
+    return map_apply(polygons_wkt_df.select("polygon_id", "wkt"), classify, out_schema)
 
 
 def polygon_edges_table(polygons_wkt_df: DataFrame) -> DataFrame:
@@ -461,21 +460,19 @@ def polygon_edges_table(polygons_wkt_df: DataFrame) -> DataFrame:
         [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
     )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, eds = [], []
-            for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
-                parts = [
-                    [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
-                    for part in _edge_parts_from_parsed(parse_wkt(wkt))
-                ]
-                if parts:
-                    pids.append(pid)
-                    eds.append(parts)
-            if pids:
-                yield pd.DataFrame({"polygon_id": pids, "_edges": eds})
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pids, eds = [], []
+        for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
+            parts = [
+                [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
+                for part in _edge_parts_from_parsed(parse_wkt(wkt))
+            ]
+            if parts:
+                pids.append(pid)
+                eds.append(parts)
+        return pd.DataFrame({"polygon_id": pids, "_edges": eds})
 
-    return polygons_wkt_df.select("polygon_id", "wkt").mapInPandas(build, schema=out_schema)
+    return map_apply(polygons_wkt_df.select("polygon_id", "wkt"), build, out_schema)
 
 
 def pip_join_cells(
@@ -487,7 +484,6 @@ def pip_join_cells(
     salt_buckets: int = 0,
     carry_cols: list[str] | None = None,
     attach_edges: str = "inline",
-    edges_broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Inner PIP join, cell equi-join flavor (large-large path).
 
@@ -513,22 +509,18 @@ def pip_join_cells(
     - "inline": r2 behavior — edges duplicated per boundary cell; no
       broadcast needed, right when the polygon side is too big to fit
       executor memory.
-    - "auto": broadcast when sum(length(wkt)) (a proportional proxy
-      for total edge bytes) fits `edges_broadcast_bytes`. NOTE: auto
-      runs that size aggregation EAGERLY at call time (the mode shapes
-      the plan, so it cannot wait for the first action) — hence the
-      lazy "inline" default here; the pip_join planner measures the
-      layer once anyway and passes the right mode explicitly."""
+    The pip_join planner measures the layer once and passes the mode
+    explicitly (broadcast under EDGES_BROADCAST_BYTES)."""
     if carry_cols is not None:
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
+    if attach_edges not in ("inline", "broadcast"):
+        raise ValueError(
+            f"pip_join_cells: attach_edges must be 'inline' or 'broadcast', not {attach_edges!r}"
+        )
     _check_reserved_cols(
         points_df, ("cell", "salt", "_inside", "_edges", "polygon_id"), "pip_join_cells"
     )
-    if attach_edges == "auto":
-        sz = polygons_wkt_df.agg(F.sum(F.length("wkt"))).first()[0] or 0
-        attach_edges = "broadcast" if int(sz) <= edges_broadcast_bytes else "inline"
-
     pts = points_df.withColumn(
         "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
     )
@@ -569,48 +561,50 @@ def knn_join_broadcast(
     Arrow ingestion path — see _cand_arrays)."""
     cid, clon, clat = _cand_arrays(candidates)
 
-    schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("nearest_id", T.LongType()),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
-    )
+    def find(px, py):
+        d = np_haversine(px[:, None], py[:, None], clon[None, :], clat[None, :])
+        j = np.argmin(d, axis=1)
+        return cid[j], d[np.arange(len(px)), j]
 
-    def nearest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            # non-finite probes get a NULL nearest, matching the cells
-            # flavor's empty-ring rows — an all-NaN distance row made
-            # argmin return 0, claiming cid[0] as nearest (r6 review:
-            # the three strategies must agree on dirty probes)
-            good = np.isfinite(px) & np.isfinite(py)
-            nid = pd.Series(np.zeros(len(pdf), dtype=np.int64), dtype="Int64")
-            dist = np.full(len(pdf), np.nan)
-            if good.any():
-                d = np_haversine(
-                    px[good][:, None], py[good][:, None], clon[None, :], clat[None, :]
-                )
-                j = np.argmin(d, axis=1)
-                nid[good] = cid[j]
-                dist[good] = d[np.arange(int(good.sum())), j]
-            nid[~good] = pd.NA
-            out = pd.DataFrame(
-                {
-                    "probe_id": pdf[probe_id_col].to_numpy(np.int64),
-                    "nearest_id": nid,
-                    "dist_m": dist,
-                }
-            )
-            out.loc[~good, "dist_m"] = None
-            if max_dist_m is not None:
-                out = out[good & (out["dist_m"] <= max_dist_m)]
-            yield out
+    return _knn_map(probes_df, find, probe_id_col, lon_col, lat_col, max_dist_m)
 
-    return probes_df.select(probe_id_col, lon_col, lat_col).mapInPandas(nearest, schema=schema)
+
+_KNN_SCHEMA = T.StructType(
+    [
+        T.StructField("probe_id", T.LongType()),
+        T.StructField("nearest_id", T.LongType()),
+        T.StructField("dist_m", T.DoubleType()),
+    ]
+)
+
+
+def _knn_map(probes_df, find, probe_id_col, lon_col, lat_col, max_dist_m) -> DataFrame:
+    """(probe_id, nearest_id, dist_m) per probe through one Arrow
+    kernel, the frame builder both broadcast kNN flavors share:
+    `find(plon, plat) -> (nearest ids, dist_m)` runs on the finite
+    probes only. Non-finite probes get a NULL nearest, matching the
+    cells flavor's empty-ring rows (an all-NaN distance row made
+    argmin claim cid[0] as nearest); `max_dist_m` keeps finite probes
+    within the cap."""
+
+    def nearest(pdf: pd.DataFrame) -> pd.DataFrame:
+        px = pdf[lon_col].to_numpy(np.float64)
+        py = pdf[lat_col].to_numpy(np.float64)
+        good = np.isfinite(px) & np.isfinite(py)
+        nid = pd.Series(pd.NA, index=pdf.index, dtype="Int64")
+        dist = np.full(len(pdf), np.nan)
+        if good.any():
+            gid, gd = find(px[good], py[good])
+            nid[good] = gid
+            dist[good] = gd
+        out = pd.DataFrame(
+            {"probe_id": pdf[probe_id_col].to_numpy(np.int64), "nearest_id": nid, "dist_m": dist}
+        )
+        if max_dist_m is not None:
+            out = out[good & (dist <= max_dist_m)]
+        return out
+
+    return map_apply(probes_df.select(probe_id_col, lon_col, lat_col), nearest, _KNN_SCHEMA)
 
 
 def pick_res(
@@ -743,10 +737,9 @@ def pip_join(
        built AND joined distributed — the r2 planner shuffled the join
        but still classified in a driver loop, which was its 100x
        bottleneck."""
-    unknown = set(kw) - {"salt_buckets", "edges_broadcast_bytes"}
+    unknown = set(kw) - {"salt_buckets"}
     if unknown:
         raise TypeError(f"pip_join: unknown option(s) {sorted(unknown)}")
-    edges_cap = kw.get("edges_broadcast_bytes", 64 << 20)
 
     def _cells(res_: int, attach: str) -> DataFrame:
         return pip_join_cells(
@@ -758,7 +751,6 @@ def pip_join(
             carry_cols=carry_cols,
             salt_buckets=kw.get("salt_buckets", 0),
             attach_edges=attach,
-            edges_broadcast_bytes=edges_cap,
         )
 
     rows = polygons_wkt_df.select("polygon_id", "wkt").limit(collect_threshold_polys + 1).collect()
@@ -768,7 +760,7 @@ def pip_join(
         med, wkt_bytes = _layer_stats(polygons_wkt_df)
         if res is None:
             res = 14 if med is None else _res_from_median_area(med)
-        return _cells(res, "broadcast" if wkt_bytes <= edges_cap else "inline")
+        return _cells(res, "broadcast" if wkt_bytes <= EDGES_BROADCAST_BYTES else "inline")
     polys = _parse_polygons(rows)
     if res is None:
         res = pick_res([env for _pid, _parsed, env in polys])
@@ -780,7 +772,7 @@ def pip_join(
     if est_cells > broadcast_threshold_cells:
         # the layer is already collected: size the edge payload from it
         n_edges = sum(_edge_count_from_parsed(parsed) for _p, parsed, _e in polys)
-        return _cells(res, "broadcast" if n_edges * 32 <= edges_cap else "inline")
+        return _cells(res, "broadcast" if n_edges * 32 <= EDGES_BROADCAST_BYTES else "inline")
     if kw.get("salt_buckets", 0):
         # salting exists to spread a hot shuffle key; the hybrid flavor
         # has no shuffle (broadcast join), so the option cannot apply —
@@ -881,8 +873,6 @@ def _grid_nearest_batch(plon, plat, idx, level: int):
     when it provably beats anything outside the ring (same
     conservative worst-case-latitude guard as knn_join_cells).
     Returns (nearest_pos or -1, dist, accepted mask)."""
-    from ..geo.sphere import np_haversine
-
     dims0 = idx["dims"]
     scale = 1 << level
     dims = max(dims0 // scale, 1)
@@ -980,8 +970,6 @@ def _grid_nearest_all(plon, plat, idx, max_levels: int):
     identical output contract to knn_join_broadcast's argmin over
     cand_id-sorted candidates. Kept Spark-free so the property tests
     can differential-test it directly against brute force."""
-    from ..geo.sphere import np_haversine
-
     cid, clon, clat = idx["cid"], idx["clon"], idx["clat"]
     n = len(plon)
     out_id = np.empty(n, dtype=np.int64)
@@ -1082,45 +1070,12 @@ def knn_join_grid(
         spark = probes_df.sparkSession
         bidx = spark.sparkContext.broadcast(idx)
 
-    schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("nearest_id", T.LongType()),
-            T.StructField("dist_m", T.DoubleType()),
-        ]
-    )
     max_levels = max(int(np.ceil(np.log2(max(idx["dims"], 2)))), 1)
 
-    def nearest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ix = bidx.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            plon = pdf[lon_col].to_numpy(np.float64)
-            plat = pdf[lat_col].to_numpy(np.float64)
-            # same dirty-probe contract as knn_join_broadcast/cells:
-            # non-finite coords -> NULL nearest (r6 review)
-            good = np.isfinite(plon) & np.isfinite(plat)
-            nid = pd.Series(np.zeros(len(pdf), dtype=np.int64), dtype="Int64")
-            dist = np.full(len(pdf), np.nan)
-            if good.any():
-                gid, gd = _grid_nearest_all(plon[good], plat[good], ix, max_levels)
-                nid[good] = gid
-                dist[good] = gd
-            nid[~good] = pd.NA
-            out = pd.DataFrame(
-                {
-                    "probe_id": pdf[probe_id_col].to_numpy(np.int64),
-                    "nearest_id": nid,
-                    "dist_m": dist,
-                }
-            )
-            out.loc[~good, "dist_m"] = None
-            if max_dist_m is not None:
-                out = out[good & (out["dist_m"] <= max_dist_m)]
-            yield out
+    def find(plon, plat):
+        return _grid_nearest_all(plon, plat, bidx.value, max_levels)
 
-    return probes_df.select(probe_id_col, lon_col, lat_col).mapInPandas(nearest, schema=schema)
+    return _knn_map(probes_df, find, probe_id_col, lon_col, lat_col, max_dist_m)
 
 
 def knn_join(

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import datasets as D
-from .geo import cells
 from .geo.sphere import (
     haversine_m,
     haversine_sql,
@@ -26,6 +25,7 @@ from .operators import dedup, filters, joins, trajectory
 from .operators import ann as ann_mod
 from .operators import images as images_mod
 from .operators import ranges as ranges_mod
+from .operators.grouped import map_apply
 
 # Geofence constants (inside the synthetic world box)
 _CIRCLE = (116.2, 39.7, 5000.0)  # clon, clat, radius_m
@@ -153,24 +153,18 @@ def q_wkt_4d_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
-                a = wkt_to_4d_array(wkt)
-                if not a:
-                    rows.append((pid, 0, 0, 0, None, None))
-                    continue
-                rows.append(
-                    (pid, len(a), len(a[0]), len(a[0][0]), a[0][0][0][0], a[0][0][0][1])
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["polygon_id", "n_geoms", "n_rings", "n_points_ring0", "x0", "y0"]
-                )
+    def kernel(pdf):
+        rows = []
+        for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
+            a = wkt_to_4d_array(wkt)
+            if not a:
+                rows.append((pid, 0, 0, 0, None, None))
+                continue
+            rows.append((pid, len(a), len(a[0]), len(a[0][0]), a[0][0][0][0], a[0][0][0][1]))
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
     p = D.polygons_wkt(spark, sf_dir).select("polygon_id", "wkt")
-    return p.mapInPandas(kernel, schema=schema)
+    return map_apply(p, kernel, schema)
 
 
 def q_merge_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,18 +676,16 @@ def q_wkt_parse_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for cid, w in zip(pdf["case_id"], pdf["wkt"]):
-                parsed = parse_wkt(w if isinstance(w, str) else None)
-                arr = wkt_to_4d_array_from_parsed(parsed)
-                n_pts = sum(len(ring) for geom in arr for ring in geom)
-                rows.append((cid, parsed[0], len(arr), n_pts))
-            if rows:
-                yield pd.DataFrame(rows, columns=["case_id", "wkt_type", "n_geoms", "n_pts"])
+    def kernel(pdf):
+        rows = []
+        for cid, w in zip(pdf["case_id"], pdf["wkt"]):
+            parsed = parse_wkt(w if isinstance(w, str) else None)
+            arr = wkt_to_4d_array_from_parsed(parsed)
+            n_pts = sum(len(ring) for geom in arr for ring in geom)
+            rows.append((cid, parsed[0], len(arr), n_pts))
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    classified = src.mapInPandas(kernel, schema=schema)
+    classified = map_apply(src, kernel, schema)
     return classified.groupBy("case_id", "wkt_type").agg(
         F.count("*").alias("n"),
         F.sum("n_geoms").cast("long").alias("n_geoms"),
@@ -769,16 +761,14 @@ def q_wkt_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for pid, w in zip(pdf["polygon_id"], pdf["wkt"]):
-                env = geom_envelope(parse_wkt(w))
-                rows.append((pid, *env) if env else (pid, None, None, None, None))
-            if rows:
-                yield pd.DataFrame(rows, columns=["polygon_id", "x0", "y0", "x1", "y1"])
+    def kernel(pdf):
+        rows = []
+        for pid, w in zip(pdf["polygon_id"], pdf["wkt"]):
+            env = geom_envelope(parse_wkt(w))
+            rows.append((pid, *env) if env else (pid, None, None, None, None))
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    return back.mapInPandas(kernel, schema=schema).withColumn(
+    return map_apply(back, kernel, schema).withColumn(
         "stage_rows", F.lit(res.rows).cast("long")
     )
 
@@ -1358,84 +1348,11 @@ def q_docs_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------- embeddings
-def q_embed_topk(spark: SparkSession, sf_dir: str, max_probes: int = 10_000) -> DataFrame:
-    """Brute-force cosine top-5 neighbors for probe vectors
-    (vec_id % 100 == 0), excluding self. The probe side is a bounded
-    dimension table: it is counted first and REFUSED above
-    `max_probes` (at 10 k probes x 64 dims the broadcast is ~5 MB;
-    beyond that the right tool is the LSH path, q_embed_ann_lsh, or a
-    block-partitioned matmul). Within the cap, probes ship once per
-    executor via sc.broadcast — NOT captured in the task closure — and
-    candidates stream through one Arrow kernel doing a blocked matmul
-    (probes x batch). Per-batch local top-5 keeps the shuffle tiny;
-    the global top-5 window finishes it."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    e = D.load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    probes_df = e.filter(F.col("vec_id") % 100 == 0)
-    # enforce the cap in the SAME job as the collect (limit(cap+1)
-    # bounds the transfer; a separate count() would scan the probe
-    # side twice)
-    rows = probes_df.limit(max_probes + 1).collect()
-    if len(rows) > max_probes:
-        raise ValueError(
-            f"q_embed_topk: probe set exceeds max_probes={max_probes}; "
-            "use the LSH/ANN path for unbounded probe sets"
-        )
-    probe_rows = sorted(
-        (int(r["vec_id"]), np.asarray(r["v"], dtype=np.float64)) for r in rows
-    )
-    pid_l = np.array([p[0] for p in probe_rows], dtype=np.int64)
-    pm = np.vstack([p[1] for p in probe_rows])
-    bc = spark.sparkContext.broadcast(
-        (pid_l, pm / np.linalg.norm(pm, axis=1, keepdims=True))
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        pid, pm_n = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cid = pdf["vec_id"].to_numpy(np.int64)
-            cm = np.vstack(pdf["v"].to_numpy())
-            cm_n = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            cos = pm_n @ cm_n.T  # (P, B)
-            P, B = cos.shape
-            k = min(5 + 1, B)
-            # batch cut: keep everything within one rounding quantum
-            # (1e-5) of the k-th best UNROUNDED value — the global rank
-            # ties on the ROUNDED value with neighbor_id ascending, so
-            # a candidate rounding-tied with the boundary must reach
-            # the window even if it sits just below the unrounded top-k
-            # (r5 review: a plain top-k cut could drop the smaller-id
-            # side of such a tie while the oracle keeps it)
-            kth = -np.partition(-cos, k - 1, axis=1)[:, k - 1]
-            rows_p, rows_c, rows_s = [], [], []
-            for i in range(P):
-                for j in np.flatnonzero(cos[i] >= kth[i] - 1e-5):
-                    if cid[j] != pid[i]:
-                        rows_p.append(pid[i])
-                        rows_c.append(cid[j])
-                        rows_s.append(round(float(cos[i, j]), 5))
-            yield pd.DataFrame(
-                {"probe_id": rows_p, "neighbor_id": rows_c, "cos_sim": rows_s}
-            )
-
-    scored = e.mapInPandas(score, schema=schema)
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5).drop("rk")
+def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-5 neighbors for probe vectors (vec_id % 100 ==
+    0), excluding self: ann.embed_topk_blocked, whose probe collect
+    refuses above its byte cap (256 MB of probe matrix)."""
+    return ann_mod.embed_topk_blocked(D.load(spark, sf_dir, "embeddings"), k=5)
 
 
 def q_embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
