@@ -512,8 +512,8 @@ class TestResPlanner:
         empty = joins.knn_join(imgs, cdf.filter("cand_id < 0"))
         assert empty.count() == 0 and set(empty.columns) == {"probe_id", "nearest_id", "dist_m"}
 
-    @pytest.mark.parametrize("dense_threshold", [10_000, 0], ids=["dense", "grid"])
-    def test_knn_colocated_tie_returns_smallest_id(self, spark, dense_threshold):
+    @pytest.mark.parametrize("dense_max", [10_000, 0], ids=["dense", "grid"])
+    def test_knn_colocated_tie_returns_smallest_id(self, spark, monkeypatch, dense_max):
         """Candidates sharing one location tie exactly; both broadcast
         kernels must return the smallest id, whatever order the
         bounded ingestion collects them in (here: partitions holding
@@ -531,11 +531,43 @@ class TestResPlanner:
             [(k, x + 0.01, y + 0.01) for k, (x, y) in enumerate(locs)],
             "probe_id long, lon double, lat double",
         )
-        got = {
-            r["probe_id"]: r["nearest_id"]
-            for r in joins.knn_join(probes, cdf, dense_threshold=dense_threshold).collect()
-        }
+        monkeypatch.setattr(joins, "KNN_DENSE_MAX", dense_max)
+        got = {r["probe_id"]: r["nearest_id"] for r in joins.knn_join(probes, cdf).collect()}
         assert got == {k: 10 * k + 3 for k in range(len(locs))}
+
+    @pytest.mark.parametrize("n_cands", [9, 32])
+    def test_knn_over_cap_goes_to_cells_bounded(self, spark, monkeypatch, n_cands):
+        """A candidate set of cap+1 rows (and a larger one) dispatches to
+        knn_join_cells, and no collect returns more than cap+1 rows."""
+        cap = 8
+        cdf = spark.createDataFrame(
+            [(i, i * 1.0, 0.0) for i in range(n_cands)], "cand_id long, lon double, lat double"
+        )
+        probes = spark.createDataFrame(
+            [(i, i * 1.0 + 0.001, 0.001) for i in range(n_cands)],
+            "probe_id long, lon double, lat double",
+        )
+        collected, dispatched = [], []
+        frame_cls = type(cdf)
+        real_to_pandas, real_cells = frame_cls.toPandas, joins.knn_join_cells
+
+        def spy_to_pandas(self):
+            pdf = real_to_pandas(self)
+            collected.append(len(pdf))
+            return pdf
+
+        def spy_cells(*a, **kw):
+            dispatched.append(True)
+            return real_cells(*a, **kw)
+
+        monkeypatch.setattr(joins, "KNN_BROADCAST_BYTES", cap * 24)
+        monkeypatch.setattr(frame_cls, "toPandas", spy_to_pandas)
+        monkeypatch.setattr(joins, "knn_join_cells", spy_cells)
+        out = joins.knn_join(probes, cdf)
+        assert dispatched and max(collected) == cap + 1
+        monkeypatch.undo()
+        got = {(r["probe_id"], r["nearest_id"]) for r in out.collect()}
+        assert got == {(i, i) for i in range(n_cands)}
 
     def test_overlapping_collection_parts_union_semantics(self, spark):
         """VERDICT r2 'Next round' #5: a GEOMETRYCOLLECTION with two
@@ -1201,6 +1233,64 @@ class TestBandSelfJoin:
 
         with pytest.raises(TypeError):
             minhash_near_dup_pairs(D.documents_range(spark, 10, 1), persist=True)
+
+
+class TestBandDefinitions:
+    """Each fingerprint family has ONE LSH band definition, and the
+    streams share ONE bucket matcher: a second copy cannot drift."""
+
+    @staticmethod
+    def _library_texts():
+        import pathlib
+
+        import util_gis_spark
+
+        root = pathlib.Path(util_gis_spark.__file__).parent
+        return {p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")}
+
+    def test_minhash_bands_exploded_only_in_builder(self):
+        import inspect
+
+        from util_gis_spark.operators import dedup
+
+        hits = {
+            k: t.count("band_table_expr()") - t.count("def band_table_expr()")
+            for k, t in self._library_texts().items()
+        }
+        assert {k: v for k, v in hits.items() if v} == {"operators/dedup.py": 1}
+        assert "explode(F.expr(band_table_expr()))" in inspect.getsource(dedup.minhash_bands)
+
+    def test_simhash_half_band_split_only_in_builder(self):
+        """The 16-bit split (65535 / 65536) appears in the SimHash band
+        builder and in its DuckDB oracle twin, nowhere else."""
+        import inspect
+        import re
+
+        from util_gis_spark.operators import dedup
+
+        split = re.compile(r"\b6553[56]\b")
+        hits = {k: len(split.findall(t)) for k, t in self._library_texts().items()}
+        assert {k: v for k, v in hits.items() if v} == {"operators/dedup.py": 2}
+        assert split.search(inspect.getsource(dedup.simhash_bands))
+        assert split.search(inspect.getsource(dedup.simhash_near_dup_pairs_sql))
+
+    def test_streaming_has_one_dedup_bucket_function(self):
+        import ast
+        import inspect
+
+        from util_gis_spark import streaming
+
+        tree = ast.parse(inspect.getsource(streaming))
+        stateful = {
+            fn.name
+            for fn in tree.body
+            if isinstance(fn, ast.FunctionDef)
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Attribute) and node.attr == "applyInPandasWithState"
+        }
+        assert stateful == {"sessionize_stream_stateful", "_bucket_pair_stream"}
+        for stream in (streaming.simhash_dup_stream, streaming.minhash_dup_stream):
+            assert "_bucket_pair_stream(" in inspect.getsource(stream)
 
 
 class TestSimhashKernelParity:

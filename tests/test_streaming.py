@@ -89,15 +89,11 @@ def test_streaming_simhash_dups_match_batch(spark, sf_dir):
     (every band-sharing pair within max_hamming, deduped)."""
     from util_gis_spark.operators.dedup import simhash_near_dup_pairs
 
-    q = (
-        S.simhash_dup_stream(S.document_stream(spark, sf_dir), max_hamming=2)
-        .writeStream.format("memory")
-        .queryName("t_simdup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    S.run_stream_to_memory(
+        S.simhash_dup_stream(S.document_stream(spark, sf_dir), max_hamming=2),
+        "t_simdup",
+        output_mode="append",
     )
-    q.awaitTermination(120)
     got = {(r["doc_a"], r["doc_b"]) for r in spark.table("t_simdup").collect()}
     batch = simhash_near_dup_pairs(D.load(spark, sf_dir, "documents"), max_hamming=2)
     want = {(r["doc_a"], r["doc_b"]) for r in batch.collect()}
@@ -169,14 +165,8 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .parquet(str(src))
     )
     agg = S.tile_count_stream(stream, res=14, watermark="2 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_late")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # the query itself, not only its table: the progress is asserted
+    q = S._memory_query(agg, "t_late", "append", 120)
     rows = spark.table("t_late").collect()
     # the first 5-min window closed with its 3 on-time rows when the
     # tail row advanced the watermark to 8 min; the replayed row was
@@ -221,15 +211,7 @@ def test_simhash_stream_soak_multi_trigger(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        S.simhash_dup_stream(stream, max_hamming=2)
-        .writeStream.format("memory")
-        .queryName("t_simdup_soak")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    q = S._memory_query(S.simhash_dup_stream(stream, max_hamming=2), "t_simdup_soak", "append", 180)
 
     data_triggers = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_triggers) >= 3  # genuinely multi-trigger
@@ -310,16 +292,11 @@ def test_minhash_stream_candidates_match_batch(spark, sf_dir):
         minhash_near_dup_pairs,
     )
 
-    q = (
-        S.minhash_dup_stream(S.document_stream(spark, sf_dir), est_threshold=0.0)
-        .writeStream.format("memory")
-        .queryName("t_mhdup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream_rows = spark.table("t_mhdup").collect()
+    stream_rows = S.run_stream_to_memory(
+        S.minhash_dup_stream(S.document_stream(spark, sf_dir), est_threshold=0.0),
+        "t_mhdup",
+        output_mode="append",
+    ).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in stream_rows}
 
     docs = D.load(spark, sf_dir, "documents")
@@ -339,7 +316,13 @@ def test_minhash_stream_candidates_match_batch(spark, sf_dir):
         assert abs(r["est_jaccard"] - round(agree / N_HASHES, 5)) < 1e-9
 
 
-def test_simhash_stream_reingest_does_not_duplicate(spark, tmp_path):
+DUP_STREAMS = pytest.mark.parametrize(
+    "dup_stream", [S.simhash_dup_stream, S.minhash_dup_stream], ids=["simhash", "minhash"]
+)
+
+
+@DUP_STREAMS
+def test_dup_stream_reingest_does_not_duplicate(spark, tmp_path, dup_stream):
     """A re-ingested doc (same doc_id arriving in a later batch) must
     not re-enter bucket state or re-emit its historical pairs."""
     import os
@@ -360,16 +343,9 @@ def test_simhash_stream_reingest_does_not_duplicate(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        S.simhash_dup_stream(stream, max_hamming=2)
-        .writeStream.format("memory")
-        .queryName("t_reingest")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("t_reingest").collect()
+    rows = S.run_stream_to_memory(
+        dup_stream(stream), f"t_reingest_{dup_stream.__name__}", output_mode="append"
+    ).collect()
     # the (1, 2) pair appears once per band it collides in, from batch
     # 1 only; the replay in batch 2 must add nothing
     per_band = {}
@@ -414,14 +390,15 @@ def test_stateful_sessionizer_multichunk_groups(spark, sf_dir):
     assert len(got) >= len(want) - 5  # at most 1 open session per device
 
 
-def test_simhash_stream_closed_bucket_emits_nothing(spark, sf_dir):
+@DUP_STREAMS
+def test_dup_stream_closed_bucket_emits_nothing(spark, sf_dir, dup_stream):
     """r5 review: once a band bucket reaches max_bucket it is CLOSED —
     further docs emit no pairs and are not recorded (the batch cap's
     drop-wholesale semantics; emitting without recording re-emitted
     the same pairs on every replay)."""
     out = S.run_stream_to_memory(
-        S.simhash_dup_stream(S.document_stream(spark, sf_dir), max_bucket=1),
-        "t_simdup_cap1",
+        dup_stream(S.document_stream(spark, sf_dir), max_bucket=1),
+        f"t_cap1_{dup_stream.__name__}",
         output_mode="append",
     )
     # every bucket holds exactly one doc before closing -> no pairs at all

@@ -13,7 +13,7 @@
   vector to its nearest-centroid inverted list; probes scan only their
   top-`nprobe` lists, exact cosine re-ranks. The ranked probe matrices
   ship in the task closure of one fused Arrow pass over the corpus;
-  probe sets over a byte cap fall back to a lazy join on list id. Two
+  a probe set over a byte cap raises ValueError. Two
   quantizers: per-label means (SQL-expressible -> the driver oracle
   stays a real DuckDB twin) and kmeans_centroids (deterministic
   sampled k-means trained on a bounded driver sample — the real
@@ -107,6 +107,30 @@ def _flip_values(multiprobe: int, n_planes: int = N_PLANES) -> list[int]:
     return out
 
 
+def _fold_dots(a, b):
+    """(n, dim) x (m, dim) -> (n, m) dot products, every element summed
+    in ascending-d order: the sequential `aggregate` fold of the Column
+    forms, so each double is bit-identical to theirs (a BLAS matmul
+    would reorder the sum)."""
+    import numpy as np
+
+    out = np.zeros((a.shape[0], b.shape[0]))
+    for d in range(a.shape[1]):
+        out = out + a[:, d, None] * b[None, :, d]
+    return out
+
+
+def _fold_rowdots(a, b):
+    """(n, dim) . (n, dim) -> (n,) row-wise dot products, in the same
+    ascending-d order as _fold_dots."""
+    import numpy as np
+
+    out = np.zeros(a.shape[0])
+    for d in range(a.shape[1]):
+        out = out + a[:, d] * b[:, d]
+    return out
+
+
 def lsh_signatures_kernel(
     base: DataFrame, n_tables: int = N_TABLES, n_planes: int = N_PLANES
 ) -> DataFrame:
@@ -132,7 +156,7 @@ def lsh_signatures_kernel(
         ]
     )
 
-    planes = {}  # per worker: plane tensor by embedding dim
+    planes = {}  # per worker: (n_tables * n_planes, dim) planes by embedding dim
 
     def run(pdf):
         m = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
@@ -145,15 +169,10 @@ def lsh_signatures_kernel(
             d_i = np.arange(dim, dtype=np.int64)[None, None, :]
             planes[dim] = (
                 (((t_i * 977 + j_i) * 131 + d_i) * 2654435761) % 2000
-            ) / 1000.0 - 1.0
-        pl = planes[dim]
-        buckets = np.zeros((n, n_tables), dtype=np.int64)
-        for t in range(n_tables):
-            for j in range(n_planes):
-                acc = np.zeros(n)
-                for d in range(dim):  # ascending-d fold == aggregate()
-                    acc = acc + m[:, d] * pl[t, j, d]
-                buckets[:, t] += np.where(acc > 0, 1 << j, 0)
+            ).reshape(-1, dim) / 1000.0 - 1.0
+        # bit j of table t is the sign of plane t * n_planes + j
+        signs = (_fold_dots(m, planes[dim]) > 0).reshape(n, n_tables, n_planes)
+        buckets = (signs << np.arange(n_planes)).sum(axis=2)
         return pd.DataFrame(
             {"vec_id": pdf["vec_id"].to_numpy(np.int64), "buckets": list(buckets)}
         )
@@ -364,9 +383,7 @@ def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: i
     C = np.array([c for _, c in cent_rows], dtype=np.float64)  # k x dim
     P = np.vstack(ppdf["v"].to_numpy()).astype(np.float64)
     pids = ppdf["vec_id"].to_numpy(np.int64)
-    dot = np.zeros((len(P), len(lids)))
-    for d in range(C.shape[1]):  # ascending-d fold == aggregate()
-        dot = dot + P[:, d, None] * C[None, :, d]
+    dot = _fold_dots(P, C)
     nan = np.isnan(dot)
     neg = np.where(nan, 0.0, -dot)
     take = max(min(nprobe, len(lids)), 0)
@@ -427,10 +444,7 @@ def _assign_score_kernel(
     def run(pdf):
         V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x dim
         cids = pdf["vec_id"].to_numpy(np.int64)
-        dot = np.zeros((len(V), C.shape[0]))
-        for d in range(C.shape[1]):  # ascending-d fold == the expr chain
-            dot = dot + V[:, d, None] * C[None, :, d]
-        assigned = lids[np.argmax(dot, axis=1)]  # first max -> smallest list_id
+        assigned = lids[np.argmax(_fold_dots(V, C), axis=1)]  # first max -> smallest list_id
         out_p, out_n, out_l, out_c = [], [], [], []
         for lid in pmap:
             sel = np.flatnonzero(assigned == lid)
@@ -439,16 +453,8 @@ def _assign_score_kernel(
             pids, P = pmap[lid]
             B = V[sel]
             sub_ids = cids[sel]
-            npb, dim = P.shape
-            nb = len(sel)
-            dot2 = np.zeros((npb, nb))
-            pn = np.zeros(npb)
-            bn = np.zeros(nb)
-            for d in range(dim):  # ascending-d fold == aggregate()
-                dot2 = dot2 + P[:, d, None] * B[None, :, d]
-                pn = pn + P[:, d] * P[:, d]
-                bn = bn + B[:, d] * B[:, d]
-            cos = dot2 / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
+            pn, bn = _fold_rowdots(P, P), _fold_rowdots(B, B)
+            cos = _fold_dots(P, B) / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
             keep = pids[:, None] != sub_ids[None, :]
             # per-probe quantum-safe top-k cut (see docstring).
             # NaN cosines (zero-norm vectors: 0/0) are KEPT: Arrow
@@ -456,7 +462,7 @@ def _assign_score_kernel(
             # a probe with fewer than k finite cosines must still
             # get them (the parity test covers a zero probe).
             masked = np.where(keep, cos, -np.inf)
-            kk = min(k, nb)
+            kk = min(k, len(sel))
             kth = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
             keep &= (cos >= (kth[:, None] - 1e-5)) | np.isnan(cos)
             pi, bi = np.nonzero(keep)
@@ -501,21 +507,15 @@ def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
     def run(pdf):
         a = np.vstack(pdf["pv"].to_numpy()).astype(np.float64)
         b = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        n, dim = a.shape
-        dot = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for d in range(dim):  # ascending-d fold == aggregate()
-            dot = dot + a[:, d] * b[:, d]
-            na = na + a[:, d] * a[:, d]
-            nb = nb + b[:, d] * b[:, d]
         out = {
             "probe_id": pdf["probe_id"].to_numpy(np.int64),
             "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
         }
         for c in carry:
             out[c] = pdf[c].to_numpy(np.int64)
-        out["cos_raw"] = dot / (np.sqrt(na) * np.sqrt(nb))
+        out["cos_raw"] = _fold_rowdots(a, b) / (
+            np.sqrt(_fold_rowdots(a, a)) * np.sqrt(_fold_rowdots(b, b))
+        )
         return pd.DataFrame(out)
 
     return map_apply(pairs, run, schema)

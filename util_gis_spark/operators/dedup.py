@@ -151,6 +151,25 @@ def band_table_expr() -> str:
     return f"array({entries})"
 
 
+def minhash_bands(sigs: DataFrame, carry=()) -> DataFrame:
+    """(doc_id, *carry, band, bh): the MinHash LSH partition of a
+    (doc_id, _sig, ...) signature table, the one definition the
+    in-query, staged, incremental and streaming paths all use.
+    The band table is exploded once, so the signature subplan runs
+    once per row. `carry` columns ride along (the stream carries
+    `_sig` into its bucket state)."""
+    return sigs.select(
+        "doc_id", *carry, F.explode(F.expr(band_table_expr())).alias("_b")
+    ).select("doc_id", *carry, "_b.band", "_b.bh")
+
+
+def _bkey():
+    """The bucketed stage's composite band key "<band>:<bh>" over a
+    minhash_bands frame. Incremental runs join new bands against stages
+    already on disk on this text, so it must stay byte-identical."""
+    return F.concat_ws(":", F.col("band").cast("string"), F.col("bh")).alias("bkey")
+
+
 def _local_cache(df: DataFrame) -> DataFrame:
     """`df` as a lazily computed, locally checkpointed relation: the
     first action that reads it fills MEMORY_AND_DISK blocks, and every
@@ -205,9 +224,7 @@ def minhash_near_dup_pairs(
     # band join carries ONLY (doc_id, band, hash) — the wide shingle
     # arrays are re-attached by key afterwards, so the x4-band shuffle
     # stays narrow (at 10^12 docs the shingles would be TBs x4)
-    bands = base.select(
-        "doc_id", F.explode(F.expr(band_table_expr())).alias("_b")
-    ).select("doc_id", F.col("_b.band").alias("band"), F.col("_b.bh").alias("bh"))
+    bands = minhash_bands(base)
     if max_band_bucket:
         # boilerplate-band capping, the standard web-dedup mitigation:
         # a band bucket holding B docs yields B^2/2 candidate pairs, so
@@ -323,12 +340,7 @@ def write_minhash_stage(
     from ..io.bucketed import write_bucketed
 
     base = _sig_kernel(docs, shingler=shingler).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = base.select(
-        "doc_id", F.explode(F.expr(band_table_expr())).alias("_b")
-    ).select(
-        "doc_id",
-        F.concat_ws(":", F.col("_b.band").cast("string"), F.col("_b.bh")).alias("bkey"),
-    )
+    bands = minhash_bands(base).select("doc_id", _bkey())
     write_bucketed(bands, f"{prefix}_bands", bucket_col="bkey", n_buckets=n_buckets, mode=mode)
     write_bucketed(
         base.select("doc_id", "_hashes"), f"{prefix}_hashes", bucket_col="doc_id",
@@ -378,12 +390,7 @@ def minhash_dedup_incremental(
     by dropping its result."""
     spark = new_docs.sparkSession
     base = _local_cache(_sig_kernel(new_docs, shingler=shingler))
-    new_bands = base.select(
-        "doc_id", F.explode(F.expr(band_table_expr())).alias("_b")
-    ).select(
-        F.col("doc_id").alias("doc_a"),
-        F.concat_ws(":", F.col("_b.band").cast("string"), F.col("_b.bh")).alias("bkey"),
-    )
+    new_bands = minhash_bands(base).select(F.col("doc_id").alias("doc_a"), _bkey())
     corpus_bands = spark.table(f"{prefix}_bands").select(
         F.col("doc_id").alias("doc_b"), "bkey"
     )
@@ -557,31 +564,44 @@ def simhash_docs(docs: DataFrame) -> DataFrame:
     return _simhash_kernel(docs, (_token_hash32,), ("simhash",))
 
 
+def simhash_bands(fps: DataFrame, cols=("simhash",)) -> DataFrame:
+    """(doc_id, *cols, band, bh): the SimHash LSH partition, one band
+    per 16-bit half of each 32-bit fingerprint column — band 2i is the
+    low half of cols[i], band 2i+1 its high half. ("simhash",) gives
+    the two bands of the 32-bit operator and the stream; ("sim_lo",
+    "sim_hi") the four of the 64-bit one. ONE explode, not a union:
+    the union form re-ran the whole signature subplan once per branch
+    AND per join side (measured 29.7 s -> 4.6 s at 2k generated docs,
+    identical pairs)."""
+    entries = ", ".join(
+        f"named_struct('band', {2 * i + half}, 'bh', shiftright({c}, {16 * half}) & 65535)"
+        for i, c in enumerate(cols)
+        for half in (0, 1)
+    )
+    return fps.select("doc_id", *cols, F.explode(F.expr(f"array({entries})")).alias("_b")).select(
+        "doc_id", *cols, "_b.band", "_b.bh"
+    )
+
+
+def _simhash_pairs(fps: DataFrame, cols, max_hamming: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) of a fingerprint table: simhash_bands
+    collisions, then the exact popcount verify summed over `cols`."""
+    hamming = " + ".join(f"bit_count({c}_a ^ {c}_b)" for c in cols)
+    return (
+        band_self_join(simhash_bands(fps, cols), "doc_id", carry=list(cols))
+        .withColumn("hamming", F.expr(f"cast({hamming} as int)"))
+        .filter(F.col("hamming") <= max_hamming)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
+    )
+
+
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
     """SimHash near-dup pairs: two 16-bit half-bands as the LSH over
     the 32-bit fingerprint (any pair within hamming<=1 is guaranteed
     to share a half — pigeonhole; hamming 2 is caught unless the flips
     straddle both halves; each half carries a full 16 effective bits,
     see simhash_token_hash_expr), then exact popcount verify."""
-    s = simhash_docs(docs)
-    # ONE explode, not a 2-way union: the union form re-ran the whole
-    # signature subplan once per branch AND per join side (the same
-    # plan-recomputation disease the r3 minhash fix cured; measured
-    # here 29.7 s -> 4.6 s at 2k generated docs, identical pairs).
-    bands = s.select(
-        "doc_id", "simhash", F.explode(F.expr("sequence(0, 1)")).alias("band")
-    ).withColumn(
-        "bh",
-        F.when(F.col("band") == 0, F.col("simhash") % 65536).otherwise(
-            (F.col("simhash") / 65536).cast("long") % 65536
-        ),
-    )
-    return (
-        band_self_join(bands, "doc_id", carry=["simhash"])
-        .withColumn("hamming", F.expr("cast(bit_count(simhash_a ^ simhash_b) as int)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
-    )
+    return _simhash_pairs(simhash_docs(docs), ("simhash",), max_hamming)
 
 
 def simhash_near_dup_pairs_sql(max_hamming: int = 2) -> str:
@@ -655,39 +675,7 @@ def simhash_near_dup_pairs_wide(docs: DataFrame, max_hamming: int = 2) -> DataFr
     WASH under the same protocol (1.60 vs 1.60 — its kernel is ~0.5 s
     per pass across 32 workers and the cache round-trip eats the
     saving), so it deliberately stays uncached."""
-    s = _local_cache(simhash_docs_wide(docs))
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                (
-                    (F.col("sim_lo") if b < 2 else F.col("sim_hi"))
-                    / (1 << (16 * (b % 2)))
-                )
-                .cast("long")
-                .alias("bh")
-                # NOTE: integer division then % 65536 below
-            )
-            for b in range(4)
-        ]
-    )
-    bands = (
-        s.select("doc_id", "sim_hi", "sim_lo", F.explode(band_arr).alias("_b"))
-        .select(
-            "doc_id",
-            "sim_hi",
-            "sim_lo",
-            F.col("_b.band").alias("band"),
-            (F.col("_b.bh") % 65536).alias("bh"),
-        )
-    )
-    hamming = "bit_count(sim_hi_a ^ sim_hi_b) + bit_count(sim_lo_a ^ sim_lo_b)"
-    return (
-        band_self_join(bands, "doc_id", carry=["sim_hi", "sim_lo"])
-        .withColumn("hamming", F.expr(f"cast({hamming} as int)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
-    )
+    return _simhash_pairs(_local_cache(simhash_docs_wide(docs)), ("sim_lo", "sim_hi"), max_hamming)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, jaccard_threshold: float = 0.6) -> DataFrame:

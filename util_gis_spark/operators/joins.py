@@ -46,6 +46,12 @@ from .grouped import map_apply
 # cell shuffle inline.
 EDGES_BROADCAST_BYTES = 64 << 20
 
+# knn_join's planner: candidate sets of at most KNN_DENSE_MAX rows take
+# the dense matrix kernel; up to KNN_BROADCAST_BYTES (~24 B/candidate,
+# ~2M rows) the grid-index kernel; larger ones knn_join_cells.
+KNN_DENSE_MAX = 256
+KNN_BROADCAST_BYTES = 48 << 20
+
 
 def _collect_polygons(polygons_wkt_df: DataFrame) -> list[tuple]:
     """Materialize the SMALL polygon side for broadcast: (id, parsed,
@@ -1064,11 +1070,9 @@ def knn_join_grid(
     call."""
     if isinstance(candidates, KnnGridIndex):
         idx, bidx = candidates.idx, candidates.bidx
-        spark = probes_df.sparkSession
     else:
         idx = _cand_grid_index(candidates)
-        spark = probes_df.sparkSession
-        bidx = spark.sparkContext.broadcast(idx)
+        bidx = probes_df.sparkSession.sparkContext.broadcast(idx)
 
     max_levels = max(int(np.ceil(np.log2(max(idx["dims"], 2)))), 1)
 
@@ -1083,10 +1087,6 @@ def knn_join(
     candidates_df: DataFrame,
     probe_id_col: str = "probe_id",
     cand_id_col: str = "cand_id",
-    max_broadcast_bytes: int = 48 << 20,
-    max_broadcast_candidates: int | None = None,
-    dense_threshold: int = 256,
-    res: int = 14,
 ) -> DataFrame:
     """Strategy-selecting kNN join: probe the candidate side with a
     bounded limit-count; tiny sets take the dense matrix kernel
@@ -1098,11 +1098,10 @@ def knn_join(
     rep in 10 min; the grid kernel does it in seconds).
 
     The broadcast cap is BYTE-based: the index costs ~24 B/candidate
-    (int64 id + 2 x f64), so the default 48 MB admits ~2M candidates —
-    sized to the task-broadcast budget, not to driver Python-object
-    overhead, because ingestion is Arrow (toPandas -> numpy columns;
-    never a per-row Python list). `max_broadcast_candidates` remains
-    as an explicit row override.
+    (int64 id + 2 x f64), so KNN_BROADCAST_BYTES (48 MB) admits ~2M
+    candidates — sized to the task-broadcast budget, not to driver
+    Python-object overhead, because ingestion is Arrow (toPandas ->
+    numpy columns; never a per-row Python list).
 
     CONTRACT NOTE at the cap boundary: the broadcast flavors are exact
     and total (every probe gets its true global nearest). Above the
@@ -1112,19 +1111,15 @@ def knn_join(
     >~ one final-level cell, hundreds of km at the default levels,
     from every candidate) gets that ring's minimum, or a NULL
     nearest_id when the final ring is empty. Callers needing the
-    exact-total contract above the cap should raise
-    max_broadcast_bytes (the grid kernel stays exact) or pre-filter
-    probes to the candidate region."""
-    cap_rows = (
-        max_broadcast_candidates
-        if max_broadcast_candidates is not None
-        else max(max_broadcast_bytes // 24, 1)
-    )
+    exact-total contract above the cap should call knn_join_grid
+    directly (it stays exact) or pre-filter probes to the candidate
+    region."""
+    cap_rows = max(KNN_BROADCAST_BYTES // 24, 1)
     # ONE bounded ingestion job doubles as the size probe (r7): the old
     # limit-count probe evaluated the whole candidate subplan (scan +
     # filters + window) once for the count and again for the Arrow
     # collect. Trade-off: an OVER-cap candidate set now transfers its
-    # first cap+1 rows (<= max_broadcast_bytes, ~48 MB) before
+    # first cap+1 rows (<= KNN_BROADCAST_BYTES) before
     # dispatching to the cells ladder — the old count moved no rows on
     # that path — but the common under-cap call pays one subplan
     # evaluation instead of two, and the ladder it dispatches to dwarfs
@@ -1137,16 +1132,12 @@ def knn_join(
             [], "probe_id long, nearest_id long, dist_m double"
         )
     if n_cand <= cap_rows:
-        cands = (
-            cpdf[cand_id_col].to_numpy(np.int64),
-            cpdf["lon"].to_numpy(np.float64),
-            cpdf["lat"].to_numpy(np.float64),
-        )
-        if n_cand <= dense_threshold:
+        cands = (cpdf[cand_id_col], cpdf["lon"], cpdf["lat"])  # _cand_arrays casts
+        if n_cand <= KNN_DENSE_MAX:
             return knn_join_broadcast(probes_df, cands, probe_id_col=probe_id_col)
         return knn_join_grid(probes_df, cands, probe_id_col=probe_id_col)
     return knn_join_cells(
-        probes_df, candidates_df, res=res, probe_id_col=probe_id_col, cand_id_col=cand_id_col
+        probes_df, candidates_df, probe_id_col=probe_id_col, cand_id_col=cand_id_col
     )
 
 

@@ -11,6 +11,9 @@ the engine can ingest live trajectories:
   starts a new session, while the batch rule keeps it (`>` vs `>=`).
   Tests use data away from the exact boundary.
 - late data handled by the watermark; state eviction is automatic.
+- the near-dup streams reuse the batch signature kernels and band
+  builders (dedup.simhash_bands, dedup.minhash_bands) and share one
+  stateful bucket matcher, _bucket_pair_stream.
 """
 
 from __future__ import annotations
@@ -19,8 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _stage_stream_dir(sf_dir: str, table: str, prefix: str) -> str:
-    """File streams need a DIRECTORY source: stage a /tmp symlink dir
+def _file_stream(
+    spark: SparkSession, sf_dir: str, table: str, prefix: str, max_files_per_trigger: int
+) -> DataFrame:
+    """A file stream over one table, with the batch table's schema.
+    File streams need a DIRECTORY source: stage a /tmp symlink dir
     pointing at the table's parquet (one definition — r5 review: the
     10-line staging block was duplicated verbatim in both sources)."""
     import hashlib
@@ -34,7 +40,11 @@ def _stage_stream_dir(sf_dir: str, table: str, prefix: str) -> str:
         os.unlink(link)  # dangling symlink from a moved/recreated source
     if not os.path.lexists(link):
         os.symlink(src, link)
-    return stage
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(stage)
+    )
 
 
 def gps_point_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -45,13 +55,7 @@ def gps_point_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: in
     oracle-pinned batch derivation; r5 review)."""
     from . import datasets as D
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stage = _stage_stream_dir(sf_dir, "events", "stream")
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stage)
-    )
+    stream = _file_stream(spark, sf_dir, "events", "stream", max_files_per_trigger)
     return stream.select(*D.gps_point_cols()).select(
         "device_id", F.col("ts").cast("timestamp").alias("ts"), "lon", "lat"
     )
@@ -114,28 +118,9 @@ def sessionize_stream_stateful(
     the default."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("device_id", LongType()),
-            StructField("start_ts", TimestampType()),
-            StructField("end_ts", TimestampType()),
-            StructField("n_points", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("seg_start_s", LongType()),
-            StructField("last_s", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
+    out_schema = "device_id long, start_ts timestamp, end_ts timestamp, n_points long"
+    state_schema = "seg_start_s long, last_s long, n long"
 
     def fn(key, pdfs, state: GroupState):
         device_id = key[0]
@@ -209,13 +194,68 @@ def sessionize_stream_stateful(
 def document_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """File-based stream over the documents table (the sandbox
     stand-in for a Kafka topic of crawled documents)."""
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stage = _stage_stream_dir(sf_dir, "documents", "docstream")
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stage)
-        .select("doc_id", "text")
+    return _file_stream(spark, sf_dir, "documents", "docstream", max_files_per_trigger).select(
+        "doc_id", "text"
+    )
+
+
+def _bucket_pair_stream(bands, payload, width, score, keep, score_field, max_bucket):
+    """The stateful band-bucket matcher both dedup streams share. Input
+    rows are (doc_id, payload, band, bh); per (band, bh) bucket an
+    applyInPandasWithState keeps every doc seen so far as state (ids
+    array<long>, vals array<long>), each doc's payload flattened at the
+    fixed `width`, and emits (doc_a < doc_b, score, band) the moment a
+    new doc collides with a recorded one: `score(prev_vals, vals)` is
+    kept when `keep(score)`, as the column `score_field` declares
+    (DDL, e.g. "hamming int"). Arrivals are matched in doc_id order.
+
+    State is capped at `max_bucket` docs per bucket — at production
+    scale the eviction policy would be a time-TTL via
+    setTimeoutDuration, trading recall on ancient duplicates for
+    bounded state, exactly like a watermark. The state fields were
+    renamed (ids/hashes and ids/sigs before), so a checkpoint written
+    by an older version does not resume; nothing here persists one."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    out_schema = f"doc_a long, doc_b long, {score_field}, band int"
+    state_schema = "ids array<long>, vals array<long>"
+
+    def fn(key, pdfs, state: GroupState):
+        ids, vals = (list(x) for x in state.get) if state.exists else ([], [])
+        seen = set(ids)
+        rows = []
+        for pdf in pdfs:
+            arriving = sorted(
+                (int(d), np.ravel(v).tolist()) for d, v in zip(pdf["doc_id"], pdf[payload])
+            )
+            for doc_id, v in arriving:
+                # a re-ingested doc is already in state: appending it
+                # again would re-emit all its historical pairs and bloat
+                # the bucket with duplicates. A bucket at max_bucket is
+                # CLOSED: emit nothing and record nothing — the batch
+                # cap drops oversized (boilerplate) buckets wholesale,
+                # and emitting without recording would re-emit the same
+                # pairs on every replay of this doc (the re-ingest guard
+                # only covers recorded ids; r5 review)
+                if doc_id in seen or len(ids) >= max_bucket:
+                    continue
+                for k, prev_id in enumerate(ids):
+                    sc = score(vals[k * width : (k + 1) * width], v)
+                    if keep(sc):
+                        rows.append((min(prev_id, doc_id), max(prev_id, doc_id), sc))
+                ids.append(doc_id)
+                vals.extend(v)
+                seen.add(doc_id)
+        state.update((ids, vals))
+        if rows:
+            yield pd.DataFrame(rows, columns=["doc_a", "doc_b", score_field.split()[0]]).assign(
+                band=int(key[0])
+            )
+
+    return bands.groupBy("band", "bh").applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -223,102 +263,25 @@ def simhash_dup_stream(
     docs_stream: DataFrame, max_hamming: int = 2, max_bucket: int = 10_000
 ) -> DataFrame:
     """Streaming near-duplicate detection: the live-ingestion form of
-    dedup.simhash_near_dup_pairs. The simhash fingerprint + half-band
-    LSH are the same pure Column expressions as the batch operator
-    (streaming-safe); per (band, bh) bucket an applyInPandasWithState
-    keeps the fingerprints seen so far and emits (doc_a, doc_b,
-    hamming, band) the moment a new document collides within
-    `max_hamming`. State per bucket is capped at `max_bucket`
-    fingerprints (16 bytes each) — at production scale the eviction
-    policy would be a time-TTL via setTimeoutDuration, trading recall
-    on ancient duplicates for bounded state, exactly like a watermark.
-    Pairs colliding in BOTH half-bands are emitted once per band —
-    dedup downstream if exact-once pairs matter."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    dedup.simhash_near_dup_pairs. The simhash kernel and the half-band
+    partition (dedup.simhash_bands) are the batch operator's own
+    (streaming-safe); the shared bucket matcher (_bucket_pair_stream)
+    keeps each bucket's fingerprints and emits (doc_a, doc_b, hamming,
+    band) the moment a new document collides within `max_hamming`.
+    At most `max_bucket` fingerprints are kept per bucket (16 bytes
+    each); a full bucket is closed. Pairs colliding in BOTH half-bands
+    are emitted once per band — dedup downstream if exact-once pairs
+    matter."""
+    from .operators.dedup import simhash_bands, simhash_docs
 
-    from .operators.dedup import simhash_docs
-
-    s = simhash_docs(docs_stream)
-    # single explode, not a 2-way union — the union form re-ran the
-    # signature subplan per branch (see the batch operator's r4 note)
-    bands = s.select(
-        "doc_id", "simhash", F.explode(F.expr("sequence(0, 1)")).alias("band")
-    ).withColumn(
-        "bh",
-        F.when(F.col("band") == 0, F.col("simhash") % 65536).otherwise(
-            (F.col("simhash") / 65536).cast("long") % 65536
-        ),
-    )
-
-    out_schema = StructType(
-        [
-            StructField("doc_a", LongType()),
-            StructField("doc_b", LongType()),
-            StructField("hamming", IntegerType()),
-            StructField("band", IntegerType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("ids", ArrayType(LongType())),
-            StructField("hashes", ArrayType(LongType())),
-        ]
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        band = int(key[0])
-        ids: list[int] = []
-        hashes: list[int] = []
-        if state.exists:
-            st_ids, st_hashes = state.get
-            ids = list(st_ids)
-            hashes = list(st_hashes)
-        rows_a, rows_b, rows_h = [], [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            arriving = sorted(zip(pdf["doc_id"], pdf["simhash"]))
-            seen = set(ids)
-            for doc_id, sh in arriving:
-                doc_id, sh = int(doc_id), int(sh)
-                if doc_id in seen:
-                    # re-ingested doc: already in state — appending
-                    # again would re-emit all its historical pairs and
-                    # bloat the bucket with duplicates
-                    continue
-                if len(ids) >= max_bucket:
-                    # bucket CLOSED: emit nothing and record nothing —
-                    # the batch cap drops oversized (boilerplate)
-                    # buckets wholesale, and emitting without recording
-                    # would re-emit the same pairs on every replay of
-                    # this doc (the re-ingest guard only covers
-                    # recorded ids; r5 review)
-                    continue
-                for prev_id, prev_sh in zip(ids, hashes):
-                    h = (prev_sh ^ sh).bit_count()
-                    if h <= max_hamming:
-                        rows_a.append(min(prev_id, doc_id))
-                        rows_b.append(max(prev_id, doc_id))
-                        rows_h.append(h)
-                ids.append(doc_id)
-                hashes.append(sh)
-                seen.add(doc_id)
-        state.update((ids, hashes))
-        if rows_a:
-            yield pd.DataFrame(
-                {"doc_a": rows_a, "doc_b": rows_b, "hamming": rows_h, "band": band}
-            )
-
-    return bands.groupBy("band", "bh").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _bucket_pair_stream(
+        simhash_bands(simhash_docs(docs_stream)),
+        payload="simhash",
+        width=1,
+        score=lambda a, b: (a[0] ^ b[0]).bit_count(),
+        keep=lambda h: h <= max_hamming,
+        score_field="hamming int",
+        max_bucket=max_bucket,
     )
 
 
@@ -327,10 +290,10 @@ def minhash_dup_stream(
 ) -> DataFrame:
     """Streaming MinHash near-dup detection — the live-ingestion form
     of dedup.minhash_near_dup_pairs. Same signature kernel (stateless
-    mapInPandas, streaming-safe) and the same 4-band LSH; per band
-    bucket an applyInPandasWithState keeps the 16-value signatures
-    seen so far and emits (doc_a, doc_b, est_jaccard, band) when a
-    new doc collides.
+    Arrow kernel, streaming-safe) and the same 4-band partition
+    (dedup.minhash_bands); the shared bucket matcher
+    (_bucket_pair_stream) keeps each bucket's 16-value signatures and
+    emits (doc_a, doc_b, est_jaccard, band) when a new doc collides.
 
     The streaming TRADE vs batch: exact Jaccard needs both docs' full
     shingle-hash sets — unbounded state — so the stream verifies on
@@ -340,91 +303,18 @@ def minhash_dup_stream(
     (tested); pairs passing est_threshold are a superset/subset of the
     exact-verify set only as far as the estimator deviates — route
     emitted pairs through a batch exact verify downstream when the
-    decision is destructive. State per bucket capped at `max_bucket`
-    signatures, same eviction story as simhash_dup_stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    decision is destructive. At most `max_bucket` signatures are kept
+    per bucket; a full bucket is closed."""
+    from .operators.dedup import N_HASHES, _sig_kernel, minhash_bands
 
-    from .operators.dedup import N_HASHES, _sig_kernel, band_table_expr
-
-    base = _sig_kernel(docs_stream)
-    bands = base.select(
-        "doc_id", "_sig", F.explode(F.expr(band_table_expr())).alias("_b")
-    ).select(
-        "doc_id",
-        "_sig",
-        F.col("_b.band").alias("band"),
-        F.col("_b.bh").alias("bh"),
-    )
-
-    out_schema = StructType(
-        [
-            StructField("doc_a", LongType()),
-            StructField("doc_b", LongType()),
-            StructField("est_jaccard", DoubleType()),
-            StructField("band", IntegerType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("ids", ArrayType(LongType())),
-            StructField("sigs", ArrayType(LongType())),  # flattened 16/doc
-        ]
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        band = int(key[0])
-        ids: list[int] = []
-        sigs: list[int] = []
-        if state.exists:
-            st_ids, st_sigs = state.get
-            ids = list(st_ids)
-            sigs = list(st_sigs)
-        rows_a, rows_b, rows_j = [], [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            arriving = sorted(
-                (int(d), [int(x) for x in s]) for d, s in zip(pdf["doc_id"], pdf["_sig"])
-            )
-            seen = set(ids)
-            for doc_id, sig in arriving:
-                if doc_id in seen:
-                    # re-ingested doc: skip — see simhash_dup_stream
-                    continue
-                if len(ids) >= max_bucket:
-                    # bucket closed — see simhash_dup_stream (batch-cap
-                    # semantics + the re-ingest guard only covers
-                    # recorded ids)
-                    continue
-                for k in range(len(ids)):
-                    prev_id = ids[k]
-                    prev_sig = sigs[k * N_HASHES : (k + 1) * N_HASHES]
-                    agree = sum(a == b for a, b in zip(prev_sig, sig))
-                    est = agree / N_HASHES
-                    if est >= est_threshold:
-                        rows_a.append(min(prev_id, doc_id))
-                        rows_b.append(max(prev_id, doc_id))
-                        rows_j.append(round(est, 5))
-                ids.append(doc_id)
-                sigs.extend(sig)
-                seen.add(doc_id)
-        state.update((ids, sigs))
-        if rows_a:
-            yield pd.DataFrame(
-                {"doc_a": rows_a, "doc_b": rows_b, "est_jaccard": rows_j, "band": band}
-            )
-
-    return bands.groupBy("band", "bh").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return _bucket_pair_stream(
+        minhash_bands(_sig_kernel(docs_stream), carry=("_sig",)),
+        payload="_sig",
+        width=N_HASHES,
+        score=lambda a, b: round(sum(x == y for x, y in zip(a, b)) / N_HASHES, 5),
+        keep=lambda est: est >= est_threshold,
+        score_field="est_jaccard double",
+        max_bucket=max_bucket,
     )
 
 
@@ -440,6 +330,13 @@ def run_stream_to_memory(
     applyInPandasWithState operators need 'append'. Raises on timeout
     instead of returning a silently PARTIAL table (r5 review:
     awaitTermination's boolean was discarded)."""
+    _memory_query(stream_df, name, output_mode, timeout_s)
+    return stream_df.sparkSession.table(name)
+
+
+def _memory_query(stream_df: DataFrame, name: str, output_mode: str, timeout_s: float):
+    """run_stream_to_memory's run: returns the terminated query, whose
+    `recentProgress` a caller may inspect."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -453,5 +350,4 @@ def run_stream_to_memory(
             f"stream {name!r} still running after {timeout_s}s — "
             "the in-memory table would be partial"
         )
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return q
