@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from util_gis_spark import datasets as D
 from util_gis_spark.geo.cells import cell_expr
-from util_gis_spark.operators.joins import polygon_cover_cells
+from util_gis_spark.operators.joins import polygon_cells_classified
 from util_gis_spark.session import get_spark
 
 WAREHOUSE = "/tmp/util_gis_warehouse"
@@ -42,7 +42,7 @@ def main() -> None:
     images = D.images_range(spark, 1_000_000, 16).withColumn(
         "cell", cell_expr("lon", "lat", 14)
     )
-    cellmap = polygon_cover_cells(D.polygons_wkt(spark, sf_dir), 14).select(
+    cellmap = polygon_cells_classified(D.polygons_wkt(spark, sf_dir), 14, with_edges=False).select(
         "cell", "polygon_id"
     )
 

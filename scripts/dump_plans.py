@@ -129,7 +129,7 @@ def main() -> None:
     sections.append(
         (
             "Planner: 4,200-polygon layer auto-dispatched to the distributed cells path",
-            "Verify: (1) pip_join detected > collect_threshold_polys via a "
+            "Verify: (1) pip_join detected > PIP_COLLECT_MAX_POLYS via a "
             "bounded limit-collect probe and returned pip_join_cells — NO "
             "driver-side classification loop; (2) the polygon layer's only "
             "operators are its scan -> MapInPandas (executor-side cell "

@@ -71,7 +71,7 @@ def main() -> None:
         from util_gis_spark.geo import cells as C
 
         pts = images.withColumn("cell", C.cell_expr("lon", "lat", 14))
-        pol = joins.polygon_cover_cells(polys, 14)
+        pol = joins.polygon_cells_classified(polys, 14, with_edges=False).select("cell", "polygon_id")
         if salt:
             pts = pts.withColumn("salt", F.pmod(F.xxhash64("lon", "lat"), F.lit(salt)))
             pol = pol.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))

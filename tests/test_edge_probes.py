@@ -31,7 +31,8 @@ class TestPipEdges:
             [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], "polygon_id long, wkt string"
         )
         assert joins.pip_join_hybrid(pts, polys).count() == 0
-        assert joins.pip_join_cells(pts, polys).count() == 0
+        for attach in ("inline", "broadcast"):
+            assert joins.pip_join_cells(pts, polys, attach_edges=attach).count() == 0
         assert joins.pip_join(pts, polys).count() == 0
 
     def test_empty_polygon_side(self, spark):
@@ -40,6 +41,8 @@ class TestPipEdges:
         pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
         polys = spark.createDataFrame([], "polygon_id long, wkt string")
         assert joins.pip_join_hybrid(pts, polys).count() == 0
+        for attach in ("inline", "broadcast"):
+            assert joins.pip_join_cells(pts, polys, attach_edges=attach).count() == 0
         assert joins.pip_join(pts, polys).count() == 0
 
     def test_degenerate_wkts_degrade_not_crash(self, spark):
@@ -47,9 +50,11 @@ class TestPipEdges:
 
         pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
         # only the one valid polygon matches; EMPTY/garbage/NULL/point
-        # degrade to no-match instead of raising
+        # degrade to no-match instead of raising, on the driver-built
+        # polygon side and on both executor-built edge attachments
         assert joins.pip_join_hybrid(pts, _bad_polys(spark)).count() == 1
-        assert joins.pip_join_cells(pts, _bad_polys(spark)).count() == 1
+        for attach in ("inline", "broadcast"):
+            assert joins.pip_join_cells(pts, _bad_polys(spark), attach_edges=attach).count() == 1
 
 
 class TestGeometryOpEdges:

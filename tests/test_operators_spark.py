@@ -98,18 +98,17 @@ class TestSpatialJoins:
         }
         assert a == b and len(a) > 0
 
-    def test_pip_join_dispatcher_picks_strategy(self, spark, sf_dir):
+    def test_pip_join_dispatcher_picks_strategy(self, spark, sf_dir, monkeypatch):
         imgs = D.images(spark, sf_dir)
         polys = D.polygons_wkt(spark, sf_dir)
         auto = {
             (r["image_key"], r["polygon_id"])
             for r in joins.pip_join(imgs, polys, res=16, carry_cols=["image_key"]).collect()
         }
+        monkeypatch.setattr(joins, "PIP_BROADCAST_MAX_CELLS", 1)
         forced_shuffle = {
             (r["image_key"], r["polygon_id"])
-            for r in joins.pip_join(
-                imgs, polys, res=16, carry_cols=["image_key"], broadcast_threshold_cells=1
-            ).collect()
+            for r in joins.pip_join(imgs, polys, res=16, carry_cols=["image_key"]).collect()
         }
         ref = {
             (r["image_key"], r["polygon_id"])
@@ -613,8 +612,50 @@ class TestResPlanner:
         with pytest.raises(TypeError, match="refine"):
             joins.pip_join(pts, polys, res=8, refine="arrow")
 
-    def test_pick_res_distributed_matches_driver_side(self, spark):
-        from util_gis_spark.operators.joins import pick_res, pick_res_distributed
+    def test_planner_threshold_options_removed(self, spark):
+        """pip_join's thresholds are module constants and its only
+        extra option is salt_buckets: any other keyword is a TypeError,
+        and the helpers the constants replaced are gone."""
+        from util_gis_spark.operators import joins
+
+        polys = spark.createDataFrame(
+            [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], "polygon_id long, wkt string"
+        )
+        pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
+        for kw in ("broadcast_threshold_cells", "collect_threshold_polys", "attach_edges"):
+            with pytest.raises(TypeError, match=kw):
+                joins.pip_join(pts, polys, res=8, **{kw: 1})
+        for name in ("polygon_cover_cells", "pick_res_distributed", "_edge_count_from_parsed"):
+            assert not hasattr(joins, name), name
+
+    def test_salt_buckets_reaches_cells_path_only(self, spark, monkeypatch):
+        """salt_buckets is passed to pip_join_cells, and the hybrid path,
+        which has no shuffle to salt, warns that it ignores it."""
+        from util_gis_spark.operators import joins
+
+        polys = spark.createDataFrame(
+            [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], "polygon_id long, wkt string"
+        )
+        pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
+        with pytest.warns(UserWarning, match="salt_buckets"):
+            joins.pip_join(pts, polys, res=8, salt_buckets=4)
+        salts = []
+        real_cells = joins.pip_join_cells
+
+        def spy_cells(*a, **kw):
+            salts.append(kw["salt_buckets"])
+            return real_cells(*a, **kw)
+
+        monkeypatch.setattr(joins, "PIP_BROADCAST_MAX_CELLS", 0)
+        monkeypatch.setattr(joins, "pip_join_cells", spy_cells)
+        assert joins.pip_join(pts, polys, res=8, salt_buckets=4).count() == 1
+        assert salts == [4]
+
+    def test_pick_res_distributed_matches_driver_side(self, spark, monkeypatch):
+        """Over PIP_COLLECT_MAX_POLYS, pip_join picks the resolution from
+        a distributed median; it must land on the driver-side pick_res."""
+        from util_gis_spark.operators import joins
+        from util_gis_spark.operators.joins import pick_res
 
         # mixed-size squares; distributed median must land on the same res
         sizes = [0.001, 0.01, 0.01, 0.05, 0.07, 0.07, 0.07, 0.2, 1.0]
@@ -624,10 +665,21 @@ class TestResPlanner:
             for i, (x0, y0, x1, y1) in enumerate(envs)
         ]
         df = spark.createDataFrame(wkts, "polygon_id long, wkt string")
-        assert pick_res_distributed(df) == pick_res(envs)
+        pts = spark.createDataFrame([(1, 0.5, 0.5)], "image_key long, lon double, lat double")
+        picked = []
+        real_cells = joins.pip_join_cells
+
+        def spy_cells(*a, **kw):
+            picked.append(kw["res"])
+            return real_cells(*a, **kw)
+
+        monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", 4)
+        monkeypatch.setattr(joins, "pip_join_cells", spy_cells)
+        joins.pip_join(pts, df)
+        assert picked == [pick_res(envs)]
 
     def test_planner_large_polygon_side_never_collects(self, spark):
-        """VERDICT r2 'Next round' #3: above collect_threshold_polys the
+        """VERDICT r2 'Next round' #3: above PIP_COLLECT_MAX_POLYS the
         planner must go through the fully distributed pip_join_cells path
         (executor-side classification, shuffle join) with an identical
         row set to the broadcast flavor."""
@@ -729,9 +781,8 @@ class TestPipJoinPlanBuild:
 
         monkeypatch.setattr(frame_cls, "collect", spy_collect)
         monkeypatch.setattr(joins, "pip_join_cells", spy_cells)
-        out = joins.pip_join(
-            pts, polys, res=8, carry_cols=["image_key"], collect_threshold_polys=k
-        )
+        monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", k)
+        out = joins.pip_join(pts, polys, res=8, carry_cols=["image_key"])
         assert dispatched and max(collected) == k + 1
         monkeypatch.undo()
         got = {(r["image_key"], r["polygon_id"]) for r in out.collect()}
@@ -766,7 +817,9 @@ class TestSqlTextQuoting:
         polys = D.polygons_wkt(spark, sf_dir)
         kw = dict(res=16, carry_cols=["image_key"] + extra, lon_col=lon, lat_col=lat)
         hybrid = joins.pip_join(renamed, polys, **kw)
-        cells_path = joins.pip_join(renamed, polys, broadcast_threshold_cells=1, **kw)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(joins, "PIP_BROADCAST_MAX_CELLS", 1)
+            cells_path = joins.pip_join(renamed, polys, **kw)
         out = {
             "hybrid": {(r["image_key"], r["polygon_id"]) for r in hybrid.collect()},
             "cells": {(r["image_key"], r["polygon_id"]) for r in cells_path.collect()},
@@ -1291,6 +1344,73 @@ class TestBandDefinitions:
         assert stateful == {"sessionize_stream_stateful", "_bucket_pair_stream"}
         for stream in (streaming.simhash_dup_stream, streaming.minhash_dup_stream):
             assert "_bucket_pair_stream(" in inspect.getsource(stream)
+
+
+class TestPolygonSideKernels:
+    """pip_join's two flavors build their polygon side with ONE cell-map
+    kernel and ONE edges kernel: each geometry step has one caller in
+    the library, so a second copy cannot drift."""
+
+    def test_each_geometry_step_called_in_one_function(self):
+        import ast
+
+        callers = {"classify_polygon_cells": set(), "_edge_parts_from_parsed": set()}
+        for path, text in TestBandDefinitions._library_texts().items():
+            for fn in ast.walk(ast.parse(text)):
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call):
+                        f = node.func
+                        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                        if name in callers:
+                            callers[name].add((path, fn.name))
+        assert callers == {
+            "classify_polygon_cells": {("operators/joins.py", "_cellmap_frame")},
+            "_edge_parts_from_parsed": {("operators/joins.py", "_edges_frame")},
+        }
+
+
+    def test_kernels_match_loop_reference(self):
+        """The numpy-built kernels equal a per-ring, per-cell loop."""
+        from util_gis_spark.geo.geometry import geom_polys
+
+        wkts = [
+            "POLYGON ((0 0, 1.3 0, 1.3 1.1, 0 1.1, 0 0), (0.2 0.2, 0.5 0.2, 0.5 0.5, 0.2 0.2))",
+            "POLYGON ((2 0, 3 0.4, 2.5 1))",  # unclosed ring
+            "MULTIPOLYGON (((4 0, 5 0, 5 1, 4 0)), ((6 0, 7 0, 7 1, 6 0)))",
+            "GEOMETRYCOLLECTION (POLYGON ((0 2, 2 2, 2 4, 0 2)), POINT (9 9))",
+            "POINT (3 4)",
+            "POLYGON EMPTY",
+        ]
+        polys = joins._parse_polygons(list(enumerate(wkts)))
+        assert [p[0] for p in polys] == [0, 1, 2, 3, 4]
+
+        def loop_edges(parsed):
+            parts = []
+            for rings in geom_polys(parsed):
+                edges = []
+                for ring in rings:
+                    seq = [tuple(map(float, v)) for v in ring]
+                    if len(seq) >= 2 and seq[0] != seq[-1]:
+                        seq.append(seq[0])
+                    for (x1, y1), (x2, y2) in zip(seq, seq[1:]):
+                        edges.append({"x1": x1, "y1": y1, "x2": x2, "y2": y2})
+                if edges:
+                    parts.append(edges)
+            return parts
+
+        rows = []
+        for pid, parsed, _env in polys:
+            inside, boundary = joins.classify_polygon_cells(parsed, 8)
+            edges = loop_edges(parsed)
+            rows += [(pid, int(c), True, None) for c in inside]
+            rows += [(pid, int(c), False, edges) for c in boundary]
+        got = joins._cellmap_frame(polys, 8, with_edges=True)
+        assert list(got.itertuples(index=False, name=None)) == rows
+        edges = joins._edges_frame(polys)
+        assert edges["polygon_id"].tolist() == [p[0] for p in polys]
+        assert edges["_edges"].tolist() == [loop_edges(p[1]) for p in polys]
 
 
 class TestSimhashKernelParity:

@@ -38,7 +38,7 @@ class TestProjectionProperties:
         dlat = 100.0 / 111194.93
         x1, y1, _ = gauss.gauss_forward(np.array([lon]), np.array([lat]), zone=zone)
         x2, y2, _ = gauss.gauss_forward(np.array([lon]), np.array([lat + dlat]), zone=zone)
-        d = float(np.hypot(x2 - x1, y2 - y1))
+        d = float(np.hypot(x2 - x1, y2 - y1).item())
         assert abs(d - 100.0) < 1.0
 
     @settings(max_examples=100, deadline=None)

@@ -21,7 +21,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import uuid
 from dataclasses import dataclass
 from typing import Callable
@@ -37,7 +36,9 @@ from pyspark.sql import functions as F
 #   1 (implicit, unversioned manifests): Column-API expression builders
 #   2: cell, tile and ray-cast expressions are parsed from Spark SQL
 #      text; pip_join's ray-cast lambda variables are renamed
-FINGERPRINT_VERSION = 2
+#   3: the hybrid pip_join's edges table is a local relation built from
+#      one Arrow frame, where it was an RDD of Python rows
+FINGERPRINT_VERSION = 3
 
 
 @dataclass
@@ -133,17 +134,13 @@ class CheckpointedPipeline:
         dep_dfs = [self.spark.read.parquet(self._data_path(d)) for d in deps]
         df = build(*dep_dfs)
         qe = df._jdf.queryExecution()
-        try:
-            # canonicalized ANALYZED plan: exprIds are normalized
-            # deterministically by position (stable across sessions)
-            # while data literals survive — the old regex strip of
-            # '#\d+' also rewrote literals like 'poly#12', so two
-            # stages differing only in such a literal shared a
-            # fingerprint and the edited stage silently resumed stale
-            # data (r6 review)
-            plan_str = qe.analyzed().canonicalized().toString()
-        except Exception:  # canonicalization unavailable: legacy strip
-            plan_str = re.sub(r"#\d+", "#", qe.logical().toString())
+        # canonicalized ANALYZED plan: exprIds are normalized
+        # deterministically by position while data literals survive —
+        # the old regex strip of '#\d+' also rewrote literals like
+        # 'poly#12', so two stages differing only in such a literal
+        # shared a fingerprint and the edited stage silently resumed
+        # stale data (r6 review)
+        plan_str = qe.analyzed().canonicalized().toString()
         # output names + types fold into the fingerprint (ADVICE r6
         # #1): canonicalization erases attribute names for sameResult,
         # so a stage edit that only RENAMES output columns produced an

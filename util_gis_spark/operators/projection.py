@@ -41,7 +41,7 @@ def project_trajectories(df: DataFrame, group_cols: Iterable[str] = ("device_id"
         # NaN-safe unified zone (r6 review): one NaN lon must not clip
         # the whole batch's zone to 1 — see gauss.unified_zone_of
         zone = gauss.unified_zone_of(lon)
-        x, y, z = gauss.gauss_forward(lon, lat, zone=zone)
+        x, y, _ = gauss.gauss_forward(lon, lat, zone=zone)
         out = pdf.copy()
         out["x"] = x
         out["y"] = y

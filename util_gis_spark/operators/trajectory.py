@@ -228,7 +228,6 @@ def speed_average(df: DataFrame) -> DataFrame:
     sum(dist)/sum(dt) over segments whose millisecond dt is within
     0.1 s of the device's modal whole-second interval and whose speed
     is <= 200 m/s; 0 when no segment qualifies."""
-    w = _DEV_W()
     stepped = (
         with_prev(df)
         .withColumn(

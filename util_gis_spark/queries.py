@@ -1229,7 +1229,7 @@ _QUALITY_SQL = (
 def q_docs_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + quality scoring (length/punct/stopword ratios)."""
     d = D.load(spark, sf_dir, "documents")
-    toks, stop, n_tokens, punct_n, quality = _doc_quality_cols()
+    _, stop, n_tokens, punct_n, quality = _doc_quality_cols()
     bpe_ish = F.size(F.expr(r"regexp_extract_all(text, '\\w+|[^\\w\\s]', 0)"))
     return d.select(
         "doc_id",
