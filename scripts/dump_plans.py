@@ -43,8 +43,9 @@ def main() -> None:
     sections.append(
         (
             "Flagship: hybrid PIP join + tile assignment + rollup",
-            "Verify: (1) EXACTLY ONE Scan parquet (the round-1 plan had a "
-            "Union diamond scanning the fact table twice); (2) ReadSchema "
+            "Verify: (1) EXACTLY ONE Scan parquet of the fact table (the "
+            "round-1 plan had a Union diamond scanning it twice); the polygon "
+            "layer is scanned once per broadcast side; (2) ReadSchema "
             "pruned to doc_id+text-derived cols; (3) BroadcastHashJoin on "
             "the cell key, second BroadcastHashJoin attaching the edge "
             "arrays; (4) NO Python operators at all — the boundary refine "
@@ -72,8 +73,9 @@ def main() -> None:
             "edge arrays no longer duplicated per boundary cell through the "
             "exchange); (3) edges attach via a BroadcastHashJoin on "
             "polygon_id AFTER the cell join; (4) the polygon side's only "
-            "Python is the per-POLYGON classify + edges kernels (MapInPandas "
-            "on the 25-row side), never on fact rows; (5) the refine is the "
+            "Python is the per-POLYGON WKT parse (MapInPandas on the 25-row "
+            "side, one per table), never on fact rows; the cell map is "
+            "classified by the JVM Generate above it; (5) the refine is the "
             "higher-order-function ray cast inside the JVM Filter.",
             cells_plan,
         )
@@ -132,9 +134,10 @@ def main() -> None:
             "Verify: (1) pip_join detected > PIP_COLLECT_MAX_POLYS via a "
             "bounded limit-collect probe and returned pip_join_cells — NO "
             "driver-side classification loop; (2) the polygon layer's only "
-            "operators are its scan -> MapInPandas (executor-side cell "
-            "classification) -> Exchange on the cell key; (3) the fact side "
-            "shuffle-joins on cell; (4) refine is the JVM HOF ray cast.",
+            "operators are its scan -> MapInPandas (executor-side WKT parse) "
+            "-> Generate (JVM cell classification) -> Exchange on the cell "
+            "key; (3) the fact side shuffle-joins on cell; (4) refine is the "
+            "JVM HOF ray cast.",
             planned_plan,
         )
     )

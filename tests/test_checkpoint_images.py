@@ -136,6 +136,99 @@ class TestCheckpoint:
         pipe3.stage("raw", lambda: spark.read.parquet(src))
         assert pipe3.results["raw"].resumed
 
+    @pytest.mark.parametrize("dispatch", ["hybrid", "cells"])
+    def test_regenerated_polygon_layer_invalidates(self, spark, tmp_path, monkeypatch, dispatch):
+        """A pip_join stage whose polygon parquet is rewritten (same path,
+        same schema, the polygon moved) must rebuild, not resume stale.
+        The hybrid used to ship its polygon side as driver-built local
+        relations, which a plan prints without their data, so inputFiles()
+        named only the points and the stage resumed the old rows. Now
+        both dispatches build it inside the plan from the layer's files.
+        `cells` patches PIP_COLLECT_MAX_POLYS low to take the other
+        branch."""
+        from util_gis_spark.operators import joins
+
+        if dispatch == "cells":
+            monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", 0)
+        pts, layer = str(tmp_path / "pts"), str(tmp_path / "layer")
+        spark.createDataFrame(
+            [(i, 0.1 + 0.2 * i, 0.5) for i in range(15)], "image_key long, lon double, lat double"
+        ).write.parquet(pts)
+
+        def write_layer(x0):
+            wkt = f"POLYGON (({x0} 0, {x0 + 1} 0, {x0 + 1} 1, {x0} 1, {x0} 0))"
+            spark.createDataFrame([(1, wkt)], "polygon_id long, wkt string").write.mode(
+                "overwrite"
+            ).parquet(layer)
+
+        def build():
+            return joins.pip_join(
+                spark.read.parquet(pts), spark.read.parquet(layer), res=10, carry_cols=["image_key"]
+            )
+
+        def run():
+            pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+            df = pipe.stage("joined", build)
+            return pipe.results["joined"].resumed, sorted(r["image_key"] for r in df.collect())
+
+        write_layer(0)
+        assert "LocalRelation" not in build()._jdf.queryExecution().analyzed().toString()
+        assert run() == (False, [0, 1, 2, 3, 4])
+        assert run() == (True, [0, 1, 2, 3, 4])
+        write_layer(1)
+        assert run() == (False, [5, 6, 7, 8, 9])
+        assert run() == (True, [5, 6, 7, 8, 9])
+
+    def test_resumes_in_a_new_process(self, spark, tmp_path):
+        """Stage fingerprints are the same in every JVM: the benchmark's
+        pip_join -> tile count pipeline run in one process resumes in
+        each of the next two. The canonicalized plan the fingerprint
+        used to hash orders commutative operands by hash codes that mix
+        in JVM-local `Class` identity hashes: its pip_join and tile
+        plans each took one of three or four texts, so a new process
+        usually rebuilt both stages."""
+        import subprocess
+        import sys
+
+        pts, layer = str(tmp_path / "pts"), str(tmp_path / "layer")
+        spark.createDataFrame(
+            [(i, 0.1 + 0.2 * i, 0.5, 8, 8) for i in range(15)],
+            "image_key long, lon double, lat double, w int, h int",
+        ).write.parquet(pts)
+        spark.createDataFrame(
+            [(1, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")], "polygon_id long, wkt string"
+        ).write.parquet(layer)
+        script = (
+            "import json, sys\n"
+            "from util_gis_spark.io.checkpoint import CheckpointedPipeline\n"
+            "from util_gis_spark.operators import joins\n"
+            "from util_gis_spark.session import get_spark\n"
+            "pts, layer, root = sys.argv[1:]\n"
+            "spark = get_spark('resume-in-new-process', master='local[1]', shuffle_partitions=1)\n"
+            "pipe = CheckpointedPipeline(spark, root)\n"
+            "pipe.stage('joined', lambda: joins.pip_join(spark.read.parquet(pts),\n"
+            "    spark.read.parquet(layer), res=10, carry_cols=['image_key', 'w', 'h']))\n"
+            "pipe.stage('counts', lambda j: joins.tile_assignment(j, res=16)\n"
+            "    .groupBy('polygon_id', 'tile').count(), deps=['joined'])\n"
+            "print(json.dumps(pipe.manifest()))\n"
+            "spark.stop()\n"
+        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+
+        def run():
+            p = subprocess.run(
+                [sys.executable, "-c", script, pts, layer, str(tmp_path / "ckpt")],
+                cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+            )
+            assert p.returncode == 0, p.stderr[-2000:]
+            return json.loads(p.stdout.strip().splitlines()[-1])
+
+        first = run()
+        assert not first["joined"]["resumed"] and first["joined"]["rows"] == 5
+        for again in (run(), run()):
+            assert again["joined"]["resumed"] and again["counts"]["resumed"]
+
     def test_percent_encoded_source_invalidates(self, spark, tmp_path):
         """r6 review: Hadoop percent-encodes inputFiles() URIs, so a
         source path with a space failed os.stat and silently dropped

@@ -2,6 +2,7 @@
 fixtures + cross-flavor equivalence of the spatial joins."""
 
 import datetime as dt
+import re
 
 import pytest
 from hypothesis import example, given, seed, settings
@@ -706,8 +707,9 @@ class TestResPlanner:
         pts_df = spark.createDataFrame(pts, "image_key long, lon double, lat double")
 
         auto = joins.pip_join(pts_df, pdf, res=13, carry_cols=["image_key"])
-        # mechanism: the distributed path classifies polygons executor-side
-        # (MapInPandas in the plan); the broadcast hybrid has no Python op
+        # mechanism: the distributed path has not seen the layer, so an
+        # Arrow kernel parses it (MapInPandas in the plan); the hybrid,
+        # which has, parses it in Spark SQL
         assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
         got = {(r["image_key"], r["polygon_id"]) for r in auto.collect()}
         want = {
@@ -743,14 +745,56 @@ class TestPipJoinPlanBuild:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
-        # the hybrid flavor: no executor-side classification
-        assert "MapInPandas" not in joined._jdf.queryExecution().executedPlan().toString()
+        # the hybrid flavor: the cell map joins through a broadcast hash
+        # join on `cell`, never a shuffle on it
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"BroadcastHashJoin \[cell#\d+L\]", plan)
+        assert "Exchange hashpartitioning(cell" not in plan
+        # and Spark SQL parses and classifies the layer: no Python at all
+        assert "MapInPandas" not in plan and "Python" not in plan
         want = {
             (r["image_key"], r["polygon_id"])
             for r in joins.pip_join_broadcast(imgs, layer, carry_cols=["image_key"]).collect()
         }
         got = {(r["image_key"], r["polygon_id"]) for r in joined.collect()}
         assert got == want and len(got) > 0
+
+    def test_plan_build_builds_no_polygon_side_on_the_driver(self, spark, sf_dir, monkeypatch):
+        """The hybrid's cell map and edges are built in the plan, in
+        Spark SQL: building it classifies no polygon and creates no
+        DataFrame on the driver."""
+        imgs, layer = D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir)
+        calls = []
+        real_classify = joins.classify_polygon_cells
+        real_create = type(spark).createDataFrame
+        monkeypatch.setattr(
+            joins, "classify_polygon_cells", lambda *a: calls.append("classify") or real_classify(*a)
+        )
+        monkeypatch.setattr(
+            type(spark),
+            "createDataFrame",
+            lambda *a, **kw: calls.append("createDataFrame") or real_create(*a, **kw),
+        )
+        joins.pip_join(imgs, layer, res=16, carry_cols=["image_key"])
+        assert calls == []
+
+    def test_hybrid_without_broadcast_hint_parses_in_sql(self, spark, sf_dir):
+        """pip_join_hybrid(broadcast_cellmap=False) drops only the
+        broadcast hint on the cell map (Catalyst picks the join). It
+        differs from pip_join_cells(attach_edges="broadcast") only in
+        who parses the layer: the hybrid has seen its rows, so Spark SQL
+        does and no Python operator runs; pip_join_cells has not, so an
+        Arrow kernel does. Both give the same rows."""
+        imgs, layer = D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir)
+        hybrid = joins.pip_join_hybrid(
+            imgs, layer, res=16, carry_cols=["image_key"], broadcast_cellmap=False
+        )
+        cells = joins.pip_join_cells(
+            imgs, layer, res=16, carry_cols=["image_key"], attach_edges="broadcast"
+        )
+        plans = [df._jdf.queryExecution().executedPlan().toString() for df in (hybrid, cells)]
+        assert ["MapInPandas" in p for p in plans] == [False, True]
+        assert sorted(hybrid.collect()) == sorted(cells.collect())
 
     @pytest.mark.parametrize("n_polys", [9, 32])
     def test_over_threshold_goes_to_cells_bounded(self, spark, monkeypatch, n_polys):
@@ -1150,6 +1194,17 @@ class TestEdgeAttachment:
                 D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir), attach_edges="auto"
             )
 
+    def test_reserved_columns_named_by_caller(self, spark, sf_dir):
+        """`salt` is reserved only when the polygon side is salted, and
+        an input error names the operator the caller called."""
+        imgs = D.images(spark, sf_dir).select("image_key", "lon", "lat", F.lit(1).alias("salt"))
+        polys = D.polygons_wkt(spark, sf_dir)
+        assert "salt" in joins.pip_join_cells(imgs, polys, res=12).columns
+        with pytest.raises(ValueError, match=r"^pip_join_cells: .*'salt'"):
+            joins.pip_join_cells(imgs, polys, res=12, salt_buckets=2)
+        with pytest.raises(ValueError, match=r"^pip_join_hybrid: .*'cell'"):
+            joins.pip_join_hybrid(imgs.withColumnRenamed("salt", "cell"), polys, res=12)
+
 
 class TestMinhashBandCap:
     def test_cap_drops_only_boilerplate_buckets(self, spark):
@@ -1347,14 +1402,17 @@ class TestBandDefinitions:
 
 
 class TestPolygonSideKernels:
-    """pip_join's two flavors build their polygon side with ONE cell-map
-    kernel and ONE edges kernel: each geometry step has one caller in
-    the library, so a second copy cannot drift."""
+    """pip_join's flavors build their polygon side with ONE cell-map
+    kernel (Spark SQL, `_cellmap_sql`) over ONE pair of edge parsers
+    (Spark SQL for canonical text, `_edges_frame` otherwise): each
+    geometry step has one caller in the library, so a second copy
+    cannot drift. The numpy classify_polygon_cells is the reference the
+    SQL cell map is checked against; the library no longer calls it."""
 
     def test_each_geometry_step_called_in_one_function(self):
         import ast
 
-        callers = {"classify_polygon_cells": set(), "_edge_parts_from_parsed": set()}
+        callers = {"classify_polygon_cells": set(), "_edge_parts_from_parsed": set(), "_cellmap_sql": set()}
         for path, text in TestBandDefinitions._library_texts().items():
             for fn in ast.walk(ast.parse(text)):
                 if not isinstance(fn, ast.FunctionDef):
@@ -1366,25 +1424,30 @@ class TestPolygonSideKernels:
                         if name in callers:
                             callers[name].add((path, fn.name))
         assert callers == {
-            "classify_polygon_cells": {("operators/joins.py", "_cellmap_frame")},
+            "classify_polygon_cells": set(),
             "_edge_parts_from_parsed": {("operators/joins.py", "_edges_frame")},
+            "_cellmap_sql": {("operators/joins.py", "_cell_map")},
         }
 
-
-    def test_kernels_match_loop_reference(self):
-        """The numpy-built kernels equal a per-ring, per-cell loop."""
+    def test_kernels_match_loop_reference(self, spark):
+        """Both edge parsers equal a per-ring loop, and the SQL cell map
+        equals the numpy classifier: the same interior cells, and as
+        boundary every cell an edge passes through (segment_cells) and
+        none that either calls interior."""
+        from util_gis_spark.geo import cells
         from util_gis_spark.geo.geometry import geom_polys
 
         wkts = [
             "POLYGON ((0 0, 1.3 0, 1.3 1.1, 0 1.1, 0 0), (0.2 0.2, 0.5 0.2, 0.5 0.5, 0.2 0.2))",
             "POLYGON ((2 0, 3 0.4, 2.5 1))",  # unclosed ring
             "MULTIPOLYGON (((4 0, 5 0, 5 1, 4 0)), ((6 0, 7 0, 7 1, 6 0)))",
+            "multipolygon(((1e0 3,+2 3,2. 4.5,1 3)),((0 5,.5 5,0 6)))",
             "GEOMETRYCOLLECTION (POLYGON ((0 2, 2 2, 2 4, 0 2)), POINT (9 9))",
             "POINT (3 4)",
             "POLYGON EMPTY",
         ]
         polys = joins._parse_polygons(list(enumerate(wkts)))
-        assert [p[0] for p in polys] == [0, 1, 2, 3, 4]
+        assert [p[0] for p in polys] == [0, 1, 2, 3, 4, 5]
 
         def loop_edges(parsed):
             parts = []
@@ -1400,17 +1463,33 @@ class TestPolygonSideKernels:
                     parts.append(edges)
             return parts
 
-        rows = []
+        want = {pid: loop_edges(parsed) for pid, parsed, _env in polys}
+        edges = joins._edges_frame(polys)
+        assert dict(zip(edges["polygon_id"], edges["_edges"])) == want
+        layer = spark.createDataFrame(list(enumerate(wkts)), "polygon_id long, wkt string")
+        as_dicts = lambda e: [[d.asDict() for d in part] for part in e]  # noqa: E731
+        # Spark SQL is handed only canonical rows (0-3): _sql_parses
+        assert joins._sql_parses([(i, w) for i, w in enumerate(wkts[:4])] + [(None, "x"), (9, None)])
+        assert not any(joins._sql_parses([(i, w)]) for i, w in enumerate(wkts[4:]))
+        for sql, rows in ((True, layer.where("polygon_id < 4")), (False, layer)):
+            got = {r["polygon_id"]: as_dicts(r["_edges"]) for r in joins._polygon_edges(rows, sql).collect()}
+            assert got == ({k: v for k, v in want.items() if k < 4} if sql else want)
+
+        cmap = joins._cell_map(joins._polygon_edges(layer, False), 8, with_edges=True).collect()
         for pid, parsed, _env in polys:
             inside, boundary = joins.classify_polygon_cells(parsed, 8)
-            edges = loop_edges(parsed)
-            rows += [(pid, int(c), True, None) for c in inside]
-            rows += [(pid, int(c), False, edges) for c in boundary]
-        got = joins._cellmap_frame(polys, 8, with_edges=True)
-        assert list(got.itertuples(index=False, name=None)) == rows
-        edges = joins._edges_frame(polys)
-        assert edges["polygon_id"].tolist() == [p[0] for p in polys]
-        assert edges["_edges"].tolist() == [loop_edges(p[1]) for p in polys]
+            rows = [r for r in cmap if r["polygon_id"] == pid]
+            assert {r["cell"] for r in rows if r["_inside"]} == set(inside.tolist())
+            got_bd = {r["cell"] for r in rows if not r["_inside"]}
+            touched = set()
+            for rings in geom_polys(parsed):
+                for ring in rings:
+                    r = [*ring, ring[0]]
+                    for (x1, y1), (x2, y2) in zip(r, r[1:]):
+                        touched |= cells.segment_cells(x1, y1, x2, y2, 8)
+            assert touched <= got_bd and got_bd.isdisjoint(inside.tolist())
+            assert all(as_dicts(r["_edges"]) == want[pid] for r in rows if not r["_inside"])
+            assert all(r["_edges"] is None for r in rows if r["_inside"])
 
 
 class TestSimhashKernelParity:

@@ -11,6 +11,14 @@ parquet is read back — a failed job resumes from the last durable
 stage. Metrics come from df.observe (rows) + the files' on-disk bytes
 per partition, so they're collected without a second pass.
 
+The fingerprint sees what the stage's plan holds: its analyzed plan and
+the files it scans. Data an operator collects to the driver while the
+plan is built and hands to a Python kernel's closure is invisible to it,
+so a stage over such an operator resumes stale rows after that input is
+rewritten in place: `knn_join`'s candidates, `pip_join_broadcast`'s
+polygons and `ann_ivf_topk`'s probes. `pip_join` is not affected: its
+polygon side is built inside the plan from the layer's files.
+
 At 10^12-row scale each stage write is an Iceberg table append and the
 manifest maps 1:1 onto Iceberg snapshot metadata; parquet + JSON is
 the sandbox stand-in.
@@ -21,6 +29,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import uuid
 from dataclasses import dataclass
 from typing import Callable
@@ -38,7 +47,34 @@ from pyspark.sql import functions as F
 #      text; pip_join's ray-cast lambda variables are renamed
 #   3: the hybrid pip_join's edges table is a local relation built from
 #      one Arrow frame, where it was an RDD of Python rows
-FINGERPRINT_VERSION = 3
+#   4: the plan text is the analyzed plan's JSON with ExprIds renumbered
+#      (the canonicalized plan orders commutative operands by JVM-local
+#      hash codes, so it differed from process to process); pip_join
+#      builds its cell map and edges in the plan from the polygon
+#      layer, where the hybrid's were driver-built local relations
+FINGERPRINT_VERSION = 4
+
+# An ExprId as the analyzed plan's JSON renders it. Inside a JSON string
+# value every quote is escaped, so a literal can never match.
+_EXPR_ID = re.compile(
+    r'\{"product-class":"org\.apache\.spark\.sql\.catalyst\.expressions\.ExprId",'
+    r'"id":(\d+),"jvmId":"[^"]*"\}'
+)
+
+
+def _plan_text(df: DataFrame) -> str:
+    """The analyzed plan as JSON, each ExprId renumbered by its first
+    appearance and its per-JVM `jvmId` dropped: the same pipeline gives
+    the same text in every process. Literals stay separate JSON values,
+    so a literal like 'poly#12' is never taken for an ExprId (the old
+    regex strip of '#\\d+' rewrote such literals), and
+    attribute names and types are part of the text, so a rename-only
+    edit changes it."""
+    ids: dict[str, int] = {}
+    return _EXPR_ID.sub(
+        lambda m: "#%d" % ids.setdefault(m.group(1), len(ids)),
+        df._jdf.queryExecution().analyzed().toJSON(),
+    )
 
 
 @dataclass
@@ -83,8 +119,7 @@ class CheckpointedPipeline:
                     m = json.load(f)
                 h.update(m.get("fingerprint", "").encode())
                 h.update(m.get("write_id", "").encode())
-        # the caller passes an already-normalized plan string (see
-        # stage(): canonicalized analyzed plan, exprIds deterministic)
+        # the caller passes an already-normalized plan text (_plan_text)
         h.update(logical_plan.encode())
         return h.hexdigest()[:16]
 
@@ -133,21 +168,7 @@ class CheckpointedPipeline:
         stage DataFrame."""
         dep_dfs = [self.spark.read.parquet(self._data_path(d)) for d in deps]
         df = build(*dep_dfs)
-        qe = df._jdf.queryExecution()
-        # canonicalized ANALYZED plan: exprIds are normalized
-        # deterministically by position while data literals survive —
-        # the old regex strip of '#\d+' also rewrote literals like
-        # 'poly#12', so two stages differing only in such a literal
-        # shared a fingerprint and the edited stage silently resumed
-        # stale data (r6 review)
-        plan_str = qe.analyzed().canonicalized().toString()
-        # output names + types fold into the fingerprint (ADVICE r6
-        # #1): canonicalization erases attribute names for sameResult,
-        # so a stage edit that only RENAMES output columns produced an
-        # identical fingerprint and silently resumed the stale parquet
-        # carrying the old names
-        plan_str += "|" + df.schema.simpleString()
-        fp = self._fingerprint(name, list(deps), plan_str + self._source_identity(df))
+        fp = self._fingerprint(name, list(deps), _plan_text(df) + self._source_identity(df))
 
         meta_path = self._meta_path(name)
         data_path = self._data_path(name)

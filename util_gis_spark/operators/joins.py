@@ -20,9 +20,12 @@ distributed re-expression:
   JVM-side ray cast (higher-order aggregate over the polygon's edge
   array — no Python worker touches the fact rows, ONE scan of the
   fact table). Salting for hot cells is available via `salt_buckets`.
-  Both flavors build their polygon side with the same two kernels
-  over parsed polygons, `_cellmap_frame` and `_edges_frame`: on the
-  driver for the hybrid, executor-side (`_map_polygons`) for cells.
+  Both flavors are one builder over the layer's files: the cell map is
+  classified in the JVM (`_cellmap_sql`) from each polygon's edge
+  arrays, which Spark SQL parses from canonical POLYGON/MULTIPOLYGON
+  text when the planner has seen the layer (`_sql_parses`) and an
+  Arrow kernel parses otherwise. No polygon is classified on the
+  driver, and a hybrid join over canonical text runs no Python.
   The `pip_join` planner picks the flavor; its thresholds are the
   `PIP_*` and `EDGES_BROADCAST_BYTES` module constants.
 - **kNN join**: candidates broadcast, per-batch numpy brute force with
@@ -35,6 +38,8 @@ distributed re-expression:
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -63,13 +68,6 @@ PIP_COLLECT_MAX_POLYS = 4096
 # ~2M rows) the grid-index kernel; larger ones knn_join_cells.
 KNN_DENSE_MAX = 256
 KNN_BROADCAST_BYTES = 48 << 20
-
-
-def _collect_polygons(polygons_wkt_df: DataFrame) -> list[tuple]:
-    """Materialize the SMALL polygon side for broadcast: (id, parsed,
-    envelope). The collect here is the moral equivalent of Spark's own
-    broadcast-exchange build side — only ever the dimension table."""
-    return _parse_polygons(polygons_wkt_df.select("polygon_id", "wkt").collect())
 
 
 def _parse_polygons(rows) -> list[tuple]:
@@ -118,7 +116,9 @@ def pip_join_broadcast(
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
     _check_reserved_cols(points_df, ("polygon_id",), "pip_join_broadcast")
-    polys = _collect_polygons(polygons_wkt_df)
+    # the SMALL polygon side, collected like Spark's own broadcast build
+    # side — only ever the dimension table
+    polys = _parse_polygons(polygons_wkt_df.select("polygon_id", "wkt").collect())
     schema = T.StructType(points_df.schema.fields + [T.StructField("polygon_id", T.LongType())])
 
     def refine(pdf: pd.DataFrame) -> pd.DataFrame | None:
@@ -275,45 +275,132 @@ def classify_polygon_cells(parsed, res: int) -> tuple[np.ndarray, np.ndarray]:
     return inside, boundary
 
 
-def _cellmap_frame(polys: list[tuple], res: int, with_edges: bool = False) -> pd.DataFrame | None:
-    """The cell-map kernel over parsed (polygon_id, parsed, envelope)
-    rows: (polygon_id, cell, _inside[, _edges]), every covering cell of
-    each polygon at `res`, its interior cells first. The classification
-    runs once per POLYGON, so the per-point refine is paid only where a
-    cell truly straddles a boundary. With `with_edges`, boundary rows
-    carry their polygon's `_edges_frame` arrays and interior rows NULL
-    (the ray cast never runs there). The columns are numpy-built: at
-    fine resolutions a layer covers ~10^5 cells, and one Python object
-    per cell costs more than the classification. None when no polygon
-    covers a cell."""
-    counts, cell_parts = [], []
-    for _pid, parsed, _env in polys:
-        inside, boundary = classify_polygon_cells(parsed, res)
-        counts.append((len(inside), len(boundary)))
-        cell_parts += [inside, boundary]
-    n_in, n_bd = np.array(counts, dtype=np.int64).reshape(-1, 2).T
-    if not (n_in + n_bd).any():
-        return None
-    pids = np.array([pid for pid, _parsed, _env in polys], dtype=np.int64)
-    out = pd.DataFrame(
-        {
-            "polygon_id": np.repeat(pids, n_in + n_bd),
-            "cell": np.concatenate(cell_parts),
-            "_inside": np.repeat(np.tile([True, False], len(polys)), np.ravel(counts)),
-        }
+# A canonical POLYGON or MULTIPOLYGON: ASCII whitespace and digits, no
+# parentheses inside a ring. Spark SQL parses a layer of such text itself
+# (_EDGES_SQL); parse_wkt accepts more (collections, unicode digits,
+# parenthesized pairs) and degrades garbage to EMPTY, so a layer holding
+# any other text parses in Python.
+_NUMERAL = r"[-+]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+_PAIR = rf"\s*{_NUMERAL}\s+{_NUMERAL}\s*"
+_POLY = rf"\(\s*\({_PAIR}(?:,{_PAIR})*\)\s*(?:,\s*\({_PAIR}(?:,{_PAIR})*\)\s*)*\)"
+_CANONICAL_WKT = rf"(?i)^\s*(?:POLYGON\s*{_POLY}|MULTIPOLYGON\s*\(\s*{_POLY}\s*(?:,\s*{_POLY}\s*)*\))\s*$"
+
+
+def _let(var: str, value: str, body: str) -> str:
+    """SQL text evaluating `value` once and `body` with it bound to `var`."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+# `_edges` of a canonical `wkt`, as _edge_parts_from_parsed builds them:
+# parts split at '))' + ',((' , a ring is a run of non-parentheses that
+# holds a digit, an unclosed ring gets its closing edge, and rings of
+# fewer than two points and parts without edges are dropped
+_RING_POINTS = (
+    r"transform(split(_r, ','), _q -> named_struct("
+    r"'x', CAST(regexp_extract(_q, '^\\s*(\\S+)\\s+(\\S+)\\s*$', 1) AS DOUBLE),"
+    r" 'y', CAST(regexp_extract(_q, '^\\s*(\\S+)\\s+(\\S+)\\s*$', 2) AS DOUBLE)))"
+)
+_RING_EDGES = _let(
+    "_v",
+    _RING_POINTS,
+    "transform(filter(sequence(0, greatest(size(_v) - CASE WHEN _v[0] = _v[size(_v) - 1]"
+    " THEN 2 ELSE 1 END, 0)), _i -> size(_v) >= 2), _i -> named_struct('x1', _v[_i].x,"
+    " 'y1', _v[_i].y, 'x2', _v[(_i + 1) % size(_v)].x, 'y2', _v[(_i + 1) % size(_v)].y))",
+)
+_EDGES_SQL = (
+    r"filter(transform(split(wkt, '\\)\\s*\\)\\s*,\\s*\\(\\s*\\('), _t -> flatten(transform("
+    rf"regexp_extract_all(_t, '([^()]*[0-9][^()]*)', 1), _r -> {_RING_EDGES}))), _p -> size(_p) > 0)"
+)
+
+
+def _cellmap_sql(res: int) -> str:
+    """SQL text of the cell-map kernel over one polygon's `_edges`: an
+    array of (cell, _inside) structs. In grid units (the points' own
+    cell arithmetic), a BOUNDARY cell is one whose closed square, grown
+    by 1e-6 of a cell on each side, meets an edge: per edge, each column
+    the grown edge spans, the rows of the edge's y-range over that
+    column (the end columns of the grid take the whole edge beyond
+    them, as clamped points land there). An INSIDE cell is one whose
+    centre lies between an even-odd pair of its row-centre line's
+    crossings with some part's edges, and that is no boundary cell:
+    no edge comes near it, so every point in it is inside. These are
+    classify_polygon_cells' sets, except that cells outside the polygon
+    are left out (no point there can match) and cells an edge only
+    grazes within the 1e-6 margin are boundary (rounding cannot move a
+    point across an edge into an interior cell)."""
+    n, top, eps = cells._nx(res), f"{cells._nx(res) - 1}L", "1.0E-6D"
+
+    def clamp(v: str) -> str:
+        return f"greatest(least({v}, {top}), 0L)"
+
+    def grid(v: str, offset: float, span: float) -> str:
+        # cells._index_text's arithmetic before its floor, so a point on
+        # a vertex lands on the vertex's grid position exactly
+        return f"(({v}) + {cells._dbl(offset)}) / {cells._dbl(span)} * {cells._dbl(n)}"
+
+    gx, gy = (lambda v: grid(v, 180.0, 360.0)), (lambda v: grid(v, 90.0, 180.0))
+    g = (
+        "transform(_edges, _p -> transform(_p, _e -> named_struct('x1', "
+        f"{gx('_e.x1')}, 'y1', {gy('_e.y1')}, 'x2', {gx('_e.x2')}, 'y2', {gy('_e.y2')})))"
     )
-    if with_edges:
-        has_bd = n_bd > 0
-        edges = _edges_frame([p for p, b in zip(polys, has_bd) if b])["_edges"]
-        col = np.full(len(out), None, dtype=object)
-        col[~out["_inside"].to_numpy()] = edges.repeat(n_bd[has_bd]).to_numpy()
-        out["_edges"] = col
-    return out
+    xa = f"least(greatest(CASE WHEN _c = 0 THEN _x0 ELSE _c - {eps} END, _x0), _x1)"
+    xb = f"least(greatest(CASE WHEN _c = {top} THEN _x1 ELSE _c + 1 + {eps} END, _x0), _x1)"
+    # the edge's y at the column's two x bounds (a vertical edge: its ends)
+    ya, yb = (
+        f"CASE WHEN _e.x1 = _e.x2 THEN _e.{y}"
+        f" ELSE _e.y1 + ({x} - _e.x1) * (_e.y2 - _e.y1) / (_e.x2 - _e.x1) END"
+        for x, y in ((xa, "y1"), (xb, "y2"))
+    )
+    column = _let("_ya", ya, _let("_yb", yb, (
+        f"sequence({cells._pack_text(res, '_c', clamp(f'floor(least(_ya, _yb) - {eps})'))},"
+        f" {cells._pack_text(res, '_c', clamp(f'floor(greatest(_ya, _yb) + {eps})'))})"
+    )))
+    edge_cells = _let("_x0", "least(_e.x1, _e.x2)", _let("_x1", "greatest(_e.x1, _e.x2)", (
+        f"flatten(transform(sequence({clamp(f'floor(_x0 - {eps})')}, {clamp(f'floor(_x1 + {eps})')}),"
+        f" _c -> {column}))"
+    )))
+    boundary = f"array_distinct(flatten(flatten(transform(_g, _p -> transform(_p, _e -> {edge_cells})))))"
+    yc = "(CAST(_y AS DOUBLE) + 0.5D)"
+    crossings = (
+        f"array_sort(transform(filter(_p, _e -> (_e.y1 > {yc}) != (_e.y2 > {yc})),"
+        f" _e -> _e.x1 + ({yc} - _e.y1) * (_e.x2 - _e.x1) / (_e.y2 - _e.y1)))"
+    )
+    spans = (
+        "filter(transform(filter(sequence(0, greatest(size(_xs) div 2 - 1, 0)),"
+        f" _k -> _k < size(_xs) div 2), _k -> named_struct('lo', {clamp('ceil(_xs[2 * _k] - 0.5D)')},"
+        f" 'hi', {clamp('ceil(_xs[2 * _k + 1] - 0.5D) - 1')})), _s -> _s.lo <= _s.hi)"
+    )
+    row = _let(
+        "_xs",
+        crossings,
+        f"flatten(transform({spans}, _s -> sequence({cells._pack_text(res, '_s.lo', '_y')},"
+        f" {cells._pack_text(res, '_s.hi', '_y')}, {cells.IX_SHIFT}L)))",
+    )
+    ys = "flatten(transform(_g, _p -> transform(_p, _e -> _e.y1)))"
+    inside = (
+        f"flatten(transform(sequence({clamp(f'floor(array_min({ys}))')}, {clamp(f'floor(array_max({ys}))')}),"
+        f" _y -> flatten(transform(_g, _p -> {row}))))"
+    )
+    return _let("_g", g, _let("_b", boundary, (
+        f"concat(transform(array_except({inside}, _b), _z -> named_struct('cell', _z, '_inside', true)),"
+        " transform(_b, _z -> named_struct('cell', _z, '_inside', false)))"
+    )))
+
+
+def _sql_parses(rows) -> bool:
+    """True when the WKT of every (polygon_id, wkt) row that has both is
+    canonical text: Spark SQL then parses the layer as parse_wkt does.
+    The check runs in Python, on rows the caller already collected:
+    Java's regex engine recurses once per repetition of a group, so the
+    same pattern in `rlike` overflows the stack on a ring of a few
+    hundred points."""
+    canon = re.compile(_CANONICAL_WKT, re.ASCII)
+    return all(p is None or w is None or canon.match(w) for p, w in rows)
 
 
 def _edges_frame(polys: list[tuple]) -> pd.DataFrame:
-    """The edges kernel over parsed (polygon_id, parsed, envelope) rows:
-    (polygon_id, _edges), one row per polygon, in order."""
+    """The Python edges kernel over parsed (polygon_id, parsed, envelope)
+    rows: (polygon_id, _edges), one row per polygon, in order."""
     return pd.DataFrame(
         {
             "polygon_id": [pid for pid, _parsed, _env in polys],
@@ -322,15 +409,39 @@ def _edges_frame(polys: list[tuple]) -> pd.DataFrame:
     )
 
 
-def _map_polygons(polygons_wkt_df: DataFrame, kernel, schema: str) -> DataFrame:
-    """Run a polygon-side kernel executor-side: each Arrow batch of
-    (polygon_id, wkt) is parsed (`_parse_polygons`) and handed to
-    `kernel`."""
+def _polygon_edges(polygons_wkt_df: DataFrame, sql: bool) -> DataFrame:
+    """(polygon_id, _edges), one row per polygon of the layer: parsed by
+    Spark SQL (`sql`, for a layer of canonical text only, see
+    _sql_parses) or by parse_wkt in an executor-side Arrow kernel."""
+    if sql:
+        return polygons_wkt_df.where(F.col("polygon_id").isNotNull() & F.col("wkt").isNotNull()).select(
+            F.col("polygon_id").cast("long"), F.expr(_EDGES_SQL).alias("_edges")
+        )
     return map_apply(
         polygons_wkt_df.select("polygon_id", "wkt"),
-        lambda pdf: kernel(_parse_polygons(zip(pdf["polygon_id"], pdf["wkt"]))),
-        schema,
+        lambda pdf: _edges_frame(_parse_polygons(zip(pdf["polygon_id"], pdf["wkt"]))),
+        "polygon_id long, " + _EDGES,
     )
+
+
+def _cell_map(edges: DataFrame, res: int, with_edges: bool) -> DataFrame:
+    """(polygon_id, cell, _inside[, _edges]) from a `_polygon_edges`
+    frame, classified in the JVM (`_cellmap_sql`). With `with_edges`
+    boundary rows keep their polygon's edge arrays and interior rows
+    carry NULL (the ray cast never runs there). A polygon with a
+    non-finite coordinate covers no cell, as in classify_polygon_cells."""
+    # a guard inside the generator, not a Filter: Catalyst would push a
+    # Filter below the parse and run the parse twice
+    finite = (
+        "forall(flatten(_edges), _e ->"
+        " greatest(abs(_e.x1), abs(_e.y1), abs(_e.x2), abs(_e.y2)) < 'Infinity'::DOUBLE)"
+    )
+    out = edges.select(
+        "polygon_id", "_edges", F.inline(F.expr(f"CASE WHEN {finite} THEN {_cellmap_sql(res)} END"))
+    )
+    if with_edges:
+        return out.withColumn("_edges", F.when(~F.col("_inside"), F.col("_edges")))
+    return out.drop("_edges")
 
 
 def pip_join_hybrid(
@@ -352,72 +463,38 @@ def pip_join_hybrid(
     (`when(_inside, true)` — the exact test is skipped entirely);
     boundary candidates are refined by `raycast_inside_expr` over the
     polygon's broadcast edge array — JVM higher-order functions, no
-    Python worker. The whole join is scan -> 2 broadcast hash joins ->
-    filter, with no DAG diamond (round-1 branched accepted/band and
-    scanned the fact table twice; this is the single-scan fix).
+    Python worker on the fact rows. The whole join is scan -> 2
+    broadcast hash joins -> filter, with no DAG diamond.
+
+    The layer is collected once (the small side) only to check that
+    Spark SQL can parse it; the cell map and the edges are then built
+    in the JVM from the layer's files inside their broadcast exchanges,
+    so a layer of canonical POLYGON/MULTIPOLYGON text runs no Python at
+    all. Other WKT parses in an Arrow kernel. `broadcast_cellmap=False`
+    drops the broadcast hint on the cell map (Catalyst picks the join).
 
     This strictly dominates the reference's design (STRtree envelope
     coarse + exact contains on EVERY candidate, G:5736-5936): the
     interior-cell accept eliminates the exact test for interior hits,
     and the boundary refine is the same O(edges) JVM cost as JTS
-    contains. Set `broadcast_cellmap=False` to shuffle-join the cell
-    map instead (large polygon side)."""
-    polys = _collect_polygons(polygons_wkt_df)
-    return _pip_join_hybrid(points_df, polys, res, lon_col, lat_col, carry_cols, broadcast_cellmap)
-
-
-def _pip_join_hybrid(
-    points_df: DataFrame,
-    polys: list[tuple],
-    res: int,
-    lon_col: str,
-    lat_col: str,
-    carry_cols: list[str] | None,
-    broadcast_cellmap: bool,
-) -> DataFrame:
-    """pip_join_hybrid over already collected and parsed polygons
-    (`_parse_polygons` rows), so the pip_join planner reads its layer
-    once. Both polygon-side kernels run here on the driver, and each
-    frame ships driver -> JVM as ONE Arrow table (a local relation)."""
-    if carry_cols is not None:
-        cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
-        points_df = points_df.select(*cols)
-    _check_reserved_cols(
-        points_df, ("cell", "_inside", "_edges", "polygon_id"), "pip_join_hybrid"
+    contains."""
+    rows = polygons_wkt_df.select("polygon_id", "wkt").collect()
+    return _pip_join_cells(
+        points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, "broadcast", 0,
+        broadcast_cellmap, rows, "pip_join_hybrid",
     )
-    spark = points_df.sparkSession
-    cellmap_pdf = _cellmap_frame(polys, res)
-    cellmap = spark.createDataFrame(  # join key first; the kernel emits no NULLs
-        [] if cellmap_pdf is None else cellmap_pdf[["cell", "polygon_id", "_inside"]],
-        "cell long not null, polygon_id long not null, _inside boolean not null",
-    )
-    if broadcast_cellmap:
-        cellmap = F.broadcast(cellmap)
-
-    pts = points_df.withColumn(
-        "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
-    )
-    cand = pts.join(cellmap, on="cell", how="inner")
-    out_cols = [c for c in points_df.columns] + ["polygon_id"]
-    edges = spark.createDataFrame(_edges_frame(polys) if polys else [], "polygon_id long, " + _EDGES)
-    j = cand.join(F.broadcast(edges), on="polygon_id", how="left")
-    return j.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 
 
 def polygon_cells_classified(
     polygons_wkt_df: DataFrame, res: int, with_edges: bool = True
 ) -> DataFrame:
-    """(polygon_id, cell, _inside[, _edges]): the cell-map kernel
-    (`_cellmap_frame`) run executor-side over a polygon layer. With
-    `with_edges` the edge arrays are duplicated per boundary cell
-    through the cell shuffle; `with_edges=False` emits the narrow map
-    for the broadcast-edges join flavor (see pip_join_cells
+    """(polygon_id, cell, _inside[, _edges]): every cell at `res` that
+    meets a polygon of the layer, classified inside/boundary (see
+    `_cell_map`). With `with_edges` the edge arrays are duplicated per
+    boundary cell through the cell shuffle; `with_edges=False` emits the
+    narrow map for the broadcast-edges join flavor (see pip_join_cells
     attach_edges)."""
-    return _map_polygons(
-        polygons_wkt_df,
-        lambda polys: _cellmap_frame(polys, res, with_edges),
-        "polygon_id long, cell long, _inside boolean" + (", " + _EDGES if with_edges else ""),
-    )
+    return _cell_map(_polygon_edges(polygons_wkt_df, False), res, with_edges)
 
 
 def pip_join_cells(
@@ -436,10 +513,11 @@ def pip_join_cells(
     skew; `salt_buckets > 0` additionally salts the point side and
     explodes the polygon side x k for pathological hot cells.
     After the join everything is JVM: interior-cell candidates are
-    accepted with no exact test (`_inside` fast path — the hybrid
-    flavor's cell-map kernel, run executor-side), boundary candidates go
+    accepted with no exact test (`_inside` fast path — the cell map is
+    classified in the JVM, executor-side), boundary candidates go
     through the higher-order-function ray cast. No Python touches the
-    fact rows at any point, and the fact table is scanned ONCE.
+    fact rows at any point, and the fact table is scanned ONCE; the
+    layer's WKT parses in an Arrow kernel.
     `carry_cols`: explicit column pruning (see pip_join_broadcast).
 
     `attach_edges` controls how the refine's edge arrays reach the
@@ -456,22 +534,35 @@ def pip_join_cells(
       executor memory.
     The pip_join planner measures the layer once and passes the mode
     explicitly (broadcast up to EDGES_BROADCAST_BYTES WKT characters)."""
+    return _pip_join_cells(
+        points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, attach_edges,
+        salt_buckets, False, None, "pip_join_cells",
+    )
+
+
+def _pip_join_cells(
+    points_df: DataFrame, polygons_wkt_df: DataFrame, res: int, lon_col: str, lat_col: str,
+    carry_cols: list[str] | None, attach_edges: str, salt_buckets: int, broadcast_cellmap: bool,
+    rows: list | None, op: str,
+) -> DataFrame:
+    """The one cell-join builder behind the public PIP operators (`op`
+    names the caller in input errors): `broadcast_cellmap` puts the
+    cell map under a broadcast hint, and `rows`, the layer's collected
+    (polygon_id, wkt) rows when the caller holds them, let Spark SQL
+    parse a canonical layer (`_sql_parses`)."""
     if carry_cols is not None:
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
     if attach_edges not in ("inline", "broadcast"):
-        raise ValueError(
-            f"pip_join_cells: attach_edges must be 'inline' or 'broadcast', not {attach_edges!r}"
-        )
-    _check_reserved_cols(
-        points_df, ("cell", "salt", "_inside", "_edges", "polygon_id"), "pip_join_cells"
-    )
+        raise ValueError(f"{op}: attach_edges must be 'inline' or 'broadcast', not {attach_edges!r}")
+    # `salt` is an internal column only when the polygon side is salted
+    reserved = ("cell", "_inside", "_edges", "polygon_id") + (("salt",) if salt_buckets > 0 else ())
+    _check_reserved_cols(points_df, reserved, op)
+    sql = rows is not None and _sql_parses(rows)
     pts = points_df.withColumn(
         "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
     )
-    pol = polygon_cells_classified(
-        polygons_wkt_df, res, with_edges=(attach_edges == "inline")
-    )
+    pol = _cell_map(_polygon_edges(polygons_wkt_df, sql), res, attach_edges == "inline")
     if salt_buckets > 0:
         pts = pts.withColumn("salt", F.pmod(F.xxhash64(lon_col, lat_col), F.lit(salt_buckets)))
         pol = pol.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
@@ -479,10 +570,10 @@ def pip_join_cells(
     else:
         keys = ["cell"]
     pol_cols = ["polygon_id", "_inside"] + (["_edges"] if attach_edges == "inline" else [])
-    cand = pts.join(pol.select(*keys, *pol_cols), on=keys, how="inner")
+    pol = pol.select(*keys, *pol_cols)
+    cand = pts.join(F.broadcast(pol) if broadcast_cellmap else pol, on=keys, how="inner")
     if attach_edges != "inline":
-        edges = _map_polygons(polygons_wkt_df, _edges_frame, "polygon_id long, " + _EDGES)
-        cand = cand.join(F.broadcast(edges), on="polygon_id", how="left")
+        cand = cand.join(F.broadcast(_polygon_edges(polygons_wkt_df, sql)), on="polygon_id", how="left")
     out_cols = [f.name for f in points_df.schema.fields] + ["polygon_id"]
     return cand.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 
@@ -584,7 +675,7 @@ def _res_from_median_area(
 def _envelope_area_col() -> "F.Column":
     """Envelope area (deg^2) from a `wkt` column, as an Arrow-batched
     pandas_udf — the distributed twin of the driver-side
-    `geom_envelope` pass in `_collect_polygons`."""
+    `geom_envelope` pass in `_parse_polygons`."""
 
     @F.pandas_udf(T.DoubleType())
     def env_area(wkts: pd.Series) -> pd.Series:
@@ -637,8 +728,8 @@ def pip_join(
 
     1. Collect at most k+1 rows of (polygon_id, wkt), with
        k = `PIP_COLLECT_MAX_POLYS`: ONE bounded read that is both
-       the size probe and, for a small layer, the ingestion (the
-       layer is never read twice, and never counted in full). Spark
+       the size probe and, for a small layer, the planner's only
+       driver-side read (the layer is never counted in full). Spark
        runs a bounded collect as rounds of partition scans, one job
        per round, growing each round until k+1 rows are in: a
        one-partition layer takes one job, a many-partition layer a
@@ -653,15 +744,20 @@ def pip_join(
        envelope area and WKT characters) and the join runs as
        `pip_join_cells` — the cell-map kernel runs executor-side,
        the join shuffles on the cell key.
-    2. Small polygon side: the probe rows ARE the layer (the moral
-       broadcast build side). Parse them, pick the resolution
-       driver-side, and estimate the cell-map size
-       (envelope area / cell area). Up to `PIP_BROADCAST_MAX_CELLS`
-       the hybrid broadcast flavor wins; a small-count-but-huge-area
-       layer (continent polygons at fine res) instead dispatches to
-       `pip_join_cells` so the cell map is both built AND joined
-       distributed — the r2 planner shuffled the join but still
-       classified in a driver loop, which was its 100x bottleneck.
+    2. Small polygon side: the probe rows ARE the layer. Parse them
+       for their envelopes only, pick the resolution driver-side, and
+       estimate the cell-map size (envelope area / cell area). Up to
+       `PIP_BROADCAST_MAX_CELLS` the hybrid broadcast flavor wins; a
+       small-count-but-huge-area layer (continent polygons at fine
+       res) instead dispatches to `pip_join_cells` so the cell map is
+       joined through a shuffle. Either way the cell map and the edge
+       arrays are built in the plan from the layer's files: the driver
+       classifies no polygon and ships no local relation, so the plan
+       build runs one job (the probe), and a checkpointed stage sees a
+       rewritten layer. The hybrid also learns from the probe rows
+       whether Spark SQL can parse the layer (`_sql_parses`), and
+       reads it three times: the probe, then the cell map and the
+       edges inside their broadcast exchanges.
 
     Both branches that reach `pip_join_cells` choose its edge
     attachment by one rule: "broadcast" when the layer holds at most
@@ -697,8 +793,11 @@ def pip_join(
                     "shuffle to salt), so it is ignored here",
                     stacklevel=2,
                 )
-            return _pip_join_hybrid(
-                points_df, polys, res, lon_col, lat_col, carry_cols, broadcast_cellmap=True
+            # pip_join_hybrid, handed the probe rows instead of
+            # collecting the layer again
+            return _pip_join_cells(
+                points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, "broadcast", 0,
+                True, rows, "pip_join",
             )
         wkt_chars = sum(len(wkt) for _pid, wkt in rows if wkt is not None)
     return pip_join_cells(
