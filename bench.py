@@ -103,12 +103,12 @@ def main() -> None:
         _emit(sf, cpus, factor, n_images, timings, counts, loadavg)
         return
 
-    # --- large-large flavor: cell equi-join PIP, shuffled cell map
-    # (the non-broadcast path + AQE skew handling)
+    # --- large-large flavor: cell equi-join PIP, the cell map joined
+    # without a broadcast hint (Catalyst picks the join; AQE skew handling)
     run(
         "pip_join_cells",
-        lambda: joins.pip_join_hybrid(
-            images, polys, res=18, carry_cols=CARRY, broadcast_cellmap=False
+        lambda: joins.pip_join_cells(
+            images, polys, res=18, carry_cols=CARRY, attach_edges="broadcast"
         ).count(),
         reps=2,
     )
@@ -278,8 +278,8 @@ def main() -> None:
         )
         run(
             "pip_join_cells_10x",
-            lambda: joins.pip_join_hybrid(
-                images10, polys, res=18, carry_cols=CARRY, broadcast_cellmap=False
+            lambda: joins.pip_join_cells(
+                images10, polys, res=18, carry_cols=CARRY, attach_edges="broadcast"
             ).count(),
             reps=2,
         )

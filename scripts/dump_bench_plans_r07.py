@@ -51,8 +51,8 @@ def main() -> None:
         .groupBy("polygon_id")
         .agg(F.count("*").alias("n"))
     )
-    builders["pip_join_cells"] = lambda: joins.pip_join_hybrid(
-        images, polys, res=18, carry_cols=CARRY, broadcast_cellmap=False
+    builders["pip_join_cells"] = lambda: joins.pip_join_cells(
+        images, polys, res=18, carry_cols=CARRY, attach_edges="broadcast"
     )
 
     def knn_grid():

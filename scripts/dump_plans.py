@@ -72,11 +72,13 @@ def main() -> None:
             "Exchange) over a NARROW cell map (polygon_id, cell, _inside — "
             "edge arrays no longer duplicated per boundary cell through the "
             "exchange); (3) edges attach via a BroadcastHashJoin on "
-            "polygon_id AFTER the cell join; (4) the polygon side's only "
-            "Python is the per-POLYGON WKT parse (MapInPandas on the 25-row "
-            "side, one per table), never on fact rows; the cell map is "
-            "classified by the JVM Generate above it; (5) the refine is the "
-            "higher-order-function ray cast inside the JVM Filter.",
+            "polygon_id AFTER the cell join; (4) NO Python operators: "
+            "pip_join_cells found no layer row that needs parse_wkt, so the "
+            "layer's only operators are its scan -> Filter (the parser "
+            "gate) -> Project (Spark SQL WKT parse), once per table, and "
+            "the cell map is classified by the JVM Generate above it; (5) "
+            "the refine is the higher-order-function ray cast inside the "
+            "JVM Filter.",
             cells_plan,
         )
     )
@@ -134,10 +136,11 @@ def main() -> None:
             "Verify: (1) pip_join detected > PIP_COLLECT_MAX_POLYS via a "
             "bounded limit-collect probe and returned pip_join_cells — NO "
             "driver-side classification loop; (2) the polygon layer's only "
-            "operators are its scan -> MapInPandas (executor-side WKT parse) "
-            "-> Generate (JVM cell classification) -> Exchange on the cell "
-            "key; (3) the fact side shuffle-joins on cell; (4) refine is the "
-            "JVM HOF ray cast.",
+            "operators are its scan -> Filter (the parser gate) -> Project "
+            "(Spark SQL WKT parse: the stats aggregation found no row that "
+            "needs parse_wkt, so there is no MapInPandas) -> Generate (JVM "
+            "cell classification) -> Exchange on the cell key; (3) the fact "
+            "side shuffle-joins on cell; (4) refine is the JVM HOF ray cast.",
             planned_plan,
         )
     )

@@ -130,8 +130,8 @@ class TestSpatialJoins:
         }
         c = {
             (r["image_key"], r["polygon_id"])
-            for r in joins.pip_join_hybrid(
-                imgs, polys, res=16, carry_cols=["image_key"], broadcast_cellmap=False
+            for r in joins.pip_join_cells(
+                imgs, polys, res=16, carry_cols=["image_key"], attach_edges="broadcast"
             ).collect()
         }
         assert a == b == c and len(a) > 0
@@ -679,7 +679,7 @@ class TestResPlanner:
         joins.pip_join(pts, df)
         assert picked == [pick_res(envs)]
 
-    def test_planner_large_polygon_side_never_collects(self, spark):
+    def test_planner_large_polygon_side_never_collects(self, spark, monkeypatch):
         """VERDICT r2 'Next round' #3: above PIP_COLLECT_MAX_POLYS the
         planner must go through the fully distributed pip_join_cells path
         (executor-side classification, shuffle join) with an identical
@@ -707,11 +707,13 @@ class TestResPlanner:
         pts_df = spark.createDataFrame(pts, "image_key long, lon double, lat double")
 
         auto = joins.pip_join(pts_df, pdf, res=13, carry_cols=["image_key"])
-        # mechanism: the distributed path has not seen the layer, so an
-        # Arrow kernel parses it (MapInPandas in the plan); the hybrid,
-        # which has, parses it in Spark SQL
-        assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
+        # mechanism: the layer's stats aggregation found no row that
+        # needs parse_wkt, so Spark SQL parses it and no Arrow kernel is
+        # in the plan
+        assert "MapInPandas" not in auto._jdf.queryExecution().executedPlan().toString()
         got = {(r["image_key"], r["polygon_id"]) for r in auto.collect()}
+        # the reference collects the whole layer: lift its bound
+        monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", len(polys))
         want = {
             (r["image_key"], r["polygon_id"])
             for r in joins.pip_join_broadcast(pts_df, pdf, carry_cols=["image_key"]).collect()
@@ -778,23 +780,37 @@ class TestPipJoinPlanBuild:
         joins.pip_join(imgs, layer, res=16, carry_cols=["image_key"])
         assert calls == []
 
-    def test_hybrid_without_broadcast_hint_parses_in_sql(self, spark, sf_dir):
-        """pip_join_hybrid(broadcast_cellmap=False) drops only the
-        broadcast hint on the cell map (Catalyst picks the join). It
-        differs from pip_join_cells(attach_edges="broadcast") only in
-        who parses the layer: the hybrid has seen its rows, so Spark SQL
-        does and no Python operator runs; pip_join_cells has not, so an
-        Arrow kernel does. Both give the same rows."""
+    def test_hybrid_and_cells_parse_canonical_layer_in_sql(self, spark, sf_dir):
+        """Called directly, pip_join_hybrid and
+        pip_join_cells(attach_edges="broadcast") each look for a layer
+        row that needs parse_wkt and find none: Spark SQL parses the
+        canonical layer, neither plan holds an Arrow kernel, and both
+        give the same rows."""
         imgs, layer = D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir)
-        hybrid = joins.pip_join_hybrid(
-            imgs, layer, res=16, carry_cols=["image_key"], broadcast_cellmap=False
-        )
+        hybrid = joins.pip_join_hybrid(imgs, layer, res=16, carry_cols=["image_key"])
         cells = joins.pip_join_cells(
             imgs, layer, res=16, carry_cols=["image_key"], attach_edges="broadcast"
         )
         plans = [df._jdf.queryExecution().executedPlan().toString() for df in (hybrid, cells)]
-        assert ["MapInPandas" in p for p in plans] == [False, True]
+        assert ["MapInPandas" in p for p in plans] == [False, False]
         assert sorted(hybrid.collect()) == sorted(cells.collect())
+
+    def test_probe_ships_envelopes_not_wkt(self, spark, sf_dir, monkeypatch):
+        """pip_join's probe over a canonical layer brings back envelopes:
+        no collected row holds WKT text."""
+        imgs, layer = D.images(spark, sf_dir), D.polygons_wkt(spark, sf_dir)
+        frame_cls = type(layer)
+        real_collect, collected = frame_cls.collect, []
+
+        def spy_collect(self):
+            rows = real_collect(self)
+            collected.extend(rows)
+            return rows
+
+        monkeypatch.setattr(frame_cls, "collect", spy_collect)
+        joins.pip_join(imgs, layer, res=16, carry_cols=["image_key"])
+        assert collected and all(r["_env"] is not None for r in collected)
+        assert not any(isinstance(v, str) for r in collected for v in r)
 
     @pytest.mark.parametrize("n_polys", [9, 32])
     def test_over_threshold_goes_to_cells_bounded(self, spark, monkeypatch, n_polys):
@@ -831,6 +847,56 @@ class TestPipJoinPlanBuild:
         monkeypatch.undo()
         got = {(r["image_key"], r["polygon_id"]) for r in out.collect()}
         assert got == {(i, i) for i in range(n_polys)}
+
+    def test_mixed_layer_every_flavor_equals_broadcast(self, spark, monkeypatch):
+        """A layer of canonical rows, a GEOMETRYCOLLECTION, garbage and
+        NULL wkt or polygon_id rows, under ANSI casts (a bad CAST
+        throws): every flavor and both planner branches give
+        pip_join_broadcast's rows, and a plan holds an Arrow kernel
+        exactly when a row fails the parser gate."""
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        canon = [(i, _square_wkt(i * 1.0, 0.0, 0.5)) for i in range(4)]
+        odd = [
+            (10, "GEOMETRYCOLLECTION (POLYGON ((10 0, 10.5 0, 10.5 0.5, 10 0.5, 10 0)), POINT (9 9))"),
+            (11, "GARBAGE((("),
+            (12, None),
+            (None, _square_wkt(20.0, 0.0, 0.5)),
+            (None, "GARBAGE"),
+        ]
+        pts = spark.createDataFrame(
+            [(i, x + 0.25, 0.25) for i, x in enumerate([0, 1, 2, 3, 10, 20, 30])],
+            "image_key long, lon double, lat double",
+        )
+        for rows, python in ((canon, False), (canon + odd, True)):
+            layer = spark.createDataFrame(rows, "polygon_id long, wkt string")
+            want = sorted(joins.pip_join_broadcast(pts, layer).collect())
+            assert len(want) == (5 if python else 4)
+            flavors = [joins.pip_join_hybrid(pts, layer, res=10), joins.pip_join(pts, layer)]
+            flavors += [
+                joins.pip_join_cells(pts, layer, res=10, attach_edges=a, salt_buckets=s)
+                for a in ("inline", "broadcast")
+                for s in (0, 3)
+            ]
+            monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", 2)
+            flavors.append(joins.pip_join(pts, layer))
+            monkeypatch.undo()
+            for df in flavors:
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert ("MapInPandas" in plan) == python
+                assert sorted(df.collect()) == want
+
+    def test_broadcast_flavor_refuses_a_layer_over_the_collect_bound(self, spark, monkeypatch):
+        polys = spark.createDataFrame(
+            [(i, _square_wkt(i * 1.0, 0.0, 0.5)) for i in range(3)], "polygon_id long, wkt string"
+        )
+        pts = spark.createDataFrame(
+            [(i, i * 1.0 + 0.25, 0.25) for i in range(3)], "image_key long, lon double, lat double"
+        )
+        monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", 2)
+        with pytest.raises(ValueError, match="pip_join joins any layer"):
+            joins.pip_join_broadcast(pts, polys)
+        monkeypatch.setattr(joins, "PIP_COLLECT_MAX_POLYS", 3)
+        assert joins.pip_join_broadcast(pts, polys).count() == 3
 
 
 class TestSqlTextQuoting:
@@ -1468,14 +1534,42 @@ class TestPolygonSideKernels:
         assert dict(zip(edges["polygon_id"], edges["_edges"])) == want
         layer = spark.createDataFrame(list(enumerate(wkts)), "polygon_id long, wkt string")
         as_dicts = lambda e: [[d.asDict() for d in part] for part in e]  # noqa: E731
-        # Spark SQL is handed only canonical rows (0-3): _sql_parses
-        assert joins._sql_parses([(i, w) for i, w in enumerate(wkts[:4])] + [(None, "x"), (9, None)])
-        assert not any(joins._sql_parses([(i, w)]) for i, w in enumerate(wkts[4:]))
-        for sql, rows in ((True, layer.where("polygon_id < 4")), (False, layer)):
-            got = {r["polygon_id"]: as_dicts(r["_edges"]) for r in joins._polygon_edges(rows, sql).collect()}
-            assert got == ({k: v for k, v in want.items() if k < 4} if sql else want)
+        # Spark SQL is handed only canonical rows (0-3): the gate
+        gate = {r["polygon_id"]: r["g"] for r in layer.select("polygon_id", F.expr(joins._SQL_GATE).alias("g")).collect()}
+        assert gate == {i: i < 4 for i in range(len(wkts))}
+        for python in (False, True):
+            got = {r["polygon_id"]: as_dicts(r["_edges"]) for r in joins._polygon_edges(layer, python).collect()}
+            assert got == (want if python else {k: v for k, v in want.items() if k < 4})
 
-        cmap = joins._cell_map(joins._polygon_edges(layer, False), 8, with_edges=True).collect()
+        # long canonical text parses in SQL, as _edges_frame parses it;
+        # near-misses fail the gate and reach parse_wkt
+        big = [
+            "POLYGON ((" + ", ".join(f"{i % 100} {i // 100}" for i in range(10_000)) + "))",
+            "MULTIPOLYGON (" + ", ".join(f"(({i} 0, {i + 0.5} 0, {i} 1, {i} 0))" for i in range(2_000)) + ")",
+        ]
+        near = [
+            "POLYGON ((0 0 0, 1 0 0, 1 1 0, 0 0 0))",
+            "POLYGON ((0 0, 1.2.3 0, 1 1, 0 0))",
+            "POLYGON ((٠ 0, 1 0, 1 1, ٠ 0))",
+            "POLYGON (((0 0), (1 0), (1 1), (0 0)))",
+            "POLYGON EMPTY",
+        ]
+        layer2 = spark.createDataFrame(list(enumerate(big + near)), "polygon_id long, wkt string")
+        gate = {r["polygon_id"]: r["g"] for r in layer2.select("polygon_id", F.expr(joins._SQL_GATE).alias("g")).collect()}
+        assert gate == {i: i < len(big) for i in range(len(big) + len(near))}
+        want2 = joins._edges_frame(joins._parse_polygons(list(enumerate(big + near))))
+        want2 = dict(zip(want2["polygon_id"], want2["_edges"]))
+        assert set(want2) == {0, 1, 4, 5} and len(want2[1]) == 2_000
+        for python in (False, True):
+            got = {r["polygon_id"]: as_dicts(r["_edges"]) for r in joins._polygon_edges(layer2, python).collect()}
+            assert got == (want2 if python else {k: want2[k] for k in (0, 1)})
+        # the probe's SQL envelope equals its Python twin over the same edges
+        envs = {r["polygon_id"]: r["_env"] for r in joins._layer_rows(layer2).collect()}
+        assert {k: tuple(v) for k, v in envs.items() if v is not None} == {
+            k: joins._edges_envelope(want2[k]) for k in (0, 1)
+        }
+
+        cmap = joins._cell_map(joins._polygon_edges(layer, True), 8, with_edges=True).collect()
         for pid, parsed, _env in polys:
             inside, boundary = joins.classify_polygon_cells(parsed, 8)
             rows = [r for r in cmap if r["polygon_id"] == pid]
@@ -1490,6 +1584,56 @@ class TestPolygonSideKernels:
             assert touched <= got_bd and got_bd.isdisjoint(inside.tolist())
             assert all(as_dicts(r["_edges"]) == want[pid] for r in rows if not r["_inside"])
             assert all(r["_edges"] is None for r in rows if r["_inside"])
+
+    def test_gate_accepts_what_the_canonical_regex_accepts(self, spark):
+        """The SQL gate against the per-pair Python regex it replaced
+        (kept here as the reference): seeded canonical texts, each also
+        mutated by inserting, deleting or swapping tokens and characters."""
+        import random
+
+        num = r"[-+]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+        pair = rf"\s*{num}\s+{num}\s*"
+        poly = rf"\(\s*\({pair}(?:,{pair})*\)\s*(?:,\s*\({pair}(?:,{pair})*\)\s*)*\)"
+        canon = re.compile(
+            rf"(?i)^\s*(?:POLYGON\s*{poly}|MULTIPOLYGON\s*\(\s*{poly}\s*(?:,\s*{poly}\s*)*\))\s*$", re.ASCII
+        )
+        rng = random.Random(11)
+        ws = ["", "", " ", "\t", "\n ", "\x0b"]
+        nums = ["0", "-1", "+2.5", ".5", "3.", "1e3", "-4.2E-2", "1.2.3", "1e", "٣", "nan"]
+        junk = ["(", ")", ",", " ", "0", "1 2", "x", "ı", "((", "),(", "POINT", "EMPTY", "--1"]
+
+        def ring():
+            pts = (rng.choice(ws) + rng.choice(nums[:7]) + " " + rng.choice(nums[:7]) for _ in range(rng.randint(1, 4)))
+            return "(" + ",".join(pts) + rng.choice(ws) + ")"
+
+        def part():
+            return "(" + ",".join(rng.choice(ws) + ring() for _ in range(rng.randint(1, 3))) + ")"
+
+        def mutate(t):
+            t = list(t)
+            for _ in range(rng.randint(1, 3)):
+                i = rng.randrange(len(t))
+                op = rng.random()
+                if op < 0.3:
+                    del t[i]
+                elif op < 0.6:
+                    t.insert(i, rng.choice(junk + nums))
+                else:
+                    j = rng.randrange(len(t))
+                    t[i], t[j] = t[j], t[i]
+            return "".join(t)
+
+        wkts = []
+        for _ in range(1500):
+            if rng.random() < 0.5:
+                t = rng.choice(["POLYGON", "polygon"]) + rng.choice(ws) + part()
+            else:
+                t = "MultiPolygon" + rng.choice(ws) + "(" + ",".join(part() for _ in range(rng.randint(1, 3))) + ")"
+            wkts += [rng.choice(ws) + t + rng.choice(ws), mutate(t)]
+        df = spark.createDataFrame(list(enumerate(wkts)), "i long, wkt string")
+        got = {r["i"]: r["g"] for r in df.select("i", F.expr(joins._SQL_GATE).alias("g")).collect()}
+        want = {i: bool(canon.match(w)) for i, w in enumerate(wkts)}
+        assert got == want and 1500 <= sum(want.values()) < len(wkts)
 
 
 class TestSimhashKernelParity:
@@ -1612,6 +1756,20 @@ class TestKnnIndexHandle:
         }
         assert via_idx_1 == direct and len(direct) > 0
         assert via_idx_2 <= via_idx_1 and len(via_idx_2) > 0
+        idx.unpersist()
+
+    def test_build_refuses_a_candidate_set_over_the_cap(self, spark, monkeypatch):
+        from util_gis_spark.operators import joins
+
+        cands = spark.createDataFrame(
+            [(i, float(i), 0.0) for i in range(3)], "cand_id long, lon double, lat double"
+        )
+        monkeypatch.setattr(joins, "KNN_BROADCAST_BYTES", 2 * 24)
+        with pytest.raises(ValueError, match="knn_join joins any set"):
+            joins.build_knn_index(spark, cands)
+        monkeypatch.setattr(joins, "KNN_BROADCAST_BYTES", 3 * 24)
+        idx = joins.build_knn_index(spark, cands)
+        assert idx.n_candidates == 3
         idx.unpersist()
 
 

@@ -52,7 +52,9 @@ from pyspark.sql import functions as F
 #      hash codes, so it differed from process to process); pip_join
 #      builds its cell map and edges in the plan from the polygon
 #      layer, where the hybrid's were driver-built local relations
-FINGERPRINT_VERSION = 4
+#   5: pip_join's plans gate each polygon row between Spark SQL's
+#      parser and an Arrow kernel's
+FINGERPRINT_VERSION = 5
 
 # An ExprId as the analyzed plan's JSON renders it. Inside a JSON string
 # value every quote is escaped, so a literal can never match.

@@ -22,10 +22,10 @@ distributed re-expression:
   fact table). Salting for hot cells is available via `salt_buckets`.
   Both flavors are one builder over the layer's files: the cell map is
   classified in the JVM (`_cellmap_sql`) from each polygon's edge
-  arrays, which Spark SQL parses from canonical POLYGON/MULTIPOLYGON
-  text when the planner has seen the layer (`_sql_parses`) and an
-  Arrow kernel parses otherwise. No polygon is classified on the
-  driver, and a hybrid join over canonical text runs no Python.
+  arrays. A Spark SQL gate (`_SQL_GATE`) sends canonical POLYGON/
+  MULTIPOLYGON rows to Spark SQL's parser and the rest, if any, to an
+  Arrow kernel. No polygon is classified on the driver, and a join
+  over canonical text runs no Python.
   The `pip_join` planner picks the flavor; its thresholds are the
   `PIP_*` and `EDGES_BROADCAST_BYTES` module constants.
 - **kNN join**: candidates broadcast, per-batch numpy brute force with
@@ -39,7 +39,7 @@ distributed re-expression:
 
 from __future__ import annotations
 
-import re
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -116,9 +116,11 @@ def pip_join_broadcast(
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
     _check_reserved_cols(points_df, ("polygon_id",), "pip_join_broadcast")
-    # the SMALL polygon side, collected like Spark's own broadcast build
-    # side — only ever the dimension table
-    polys = _parse_polygons(polygons_wkt_df.select("polygon_id", "wkt").collect())
+    # the SMALL polygon side, collected like Spark's own broadcast build side
+    rows = polygons_wkt_df.select("polygon_id", "wkt").limit(PIP_COLLECT_MAX_POLYS + 1).collect()
+    if len(rows) > PIP_COLLECT_MAX_POLYS:
+        raise ValueError(f"pip_join_broadcast: over {PIP_COLLECT_MAX_POLYS} polygons; pip_join joins any layer")
+    polys = _parse_polygons(rows)
     schema = T.StructType(points_df.schema.fields + [T.StructField("polygon_id", T.LongType())])
 
     def refine(pdf: pd.DataFrame) -> pd.DataFrame | None:
@@ -275,15 +277,27 @@ def classify_polygon_cells(parsed, res: int) -> tuple[np.ndarray, np.ndarray]:
     return inside, boundary
 
 
-# A canonical POLYGON or MULTIPOLYGON: ASCII whitespace and digits, no
-# parentheses inside a ring. Spark SQL parses a layer of such text itself
-# (_EDGES_SQL); parse_wkt accepts more (collections, unicode digits,
-# parenthesized pairs) and degrades garbage to EMPTY, so a layer holding
-# any other text parses in Python.
-_NUMERAL = r"[-+]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
-_PAIR = rf"\s*{_NUMERAL}\s+{_NUMERAL}\s*"
-_POLY = rf"\(\s*\({_PAIR}(?:,{_PAIR})*\)\s*(?:,\s*\({_PAIR}(?:,{_PAIR})*\)\s*)*\)"
-_CANONICAL_WKT = rf"(?i)^\s*(?:POLYGON\s*{_POLY}|MULTIPOLYGON\s*\(\s*{_POLY}\s*(?:,\s*{_POLY}\s*)*\))\s*$"
+def _gate_sql() -> str:
+    """SQL text of the gate over `wkt`: true exactly for canonical POLYGON/
+    MULTIPOLYGON text (ASCII keyword, numerals and whitespace, no parens
+    in a ring), which Spark SQL parses (_EDGES_SQL) as parse_wkt does. No
+    regex repeats a group (Java's recurses per repetition and overflowed
+    the stack on a 1,000-point ring): numerals become 0, pairs 1, rings 2
+    and polygons 3, two tokens canonical text never puts side by side
+    become x, and the rest must be POLYGON3 or MULTIPOLYGON(3,...,3)."""
+    numeral = r"[-+]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+    t = rf"trim(regexp_replace(regexp_replace(wkt, '{numeral}', '0'), '\\s+', ' '))"
+    for pad in (" (", "( ", " )", ") ", " ,", ", "):
+        t = f"replace({t}, '{pad}', '{pad.strip()}')"
+    t = rf"regexp_replace(replace({t}, '0 0', '1'), '11|,,|\\(,|,\\)|\\)\\(', 'x')"
+    t = rf"regexp_replace(regexp_replace({t}, '\\(1[,1]*\\)', '2'), '\\(2[,2]*\\)', '3')"
+    return rf"({t} rlike '(?i)^(POLYGON3|MULTIPOLYGON\\(3[,3]*\\))$')"
+
+
+_SQL_GATE = _gate_sql()
+# the layer rows each parser reads: Spark SQL's pass the gate, parse_wkt's fail it
+_SQL_ROW = f"polygon_id IS NOT NULL AND {_SQL_GATE}"
+_PYTHON_ROW = f"polygon_id IS NOT NULL AND NOT {_SQL_GATE}"
 
 
 def _let(var: str, value: str, body: str) -> str:
@@ -387,17 +401,6 @@ def _cellmap_sql(res: int) -> str:
     )))
 
 
-def _sql_parses(rows) -> bool:
-    """True when the WKT of every (polygon_id, wkt) row that has both is
-    canonical text: Spark SQL then parses the layer as parse_wkt does.
-    The check runs in Python, on rows the caller already collected:
-    Java's regex engine recurses once per repetition of a group, so the
-    same pattern in `rlike` overflows the stack on a ring of a few
-    hundred points."""
-    canon = re.compile(_CANONICAL_WKT, re.ASCII)
-    return all(p is None or w is None or canon.match(w) for p, w in rows)
-
-
 def _edges_frame(polys: list[tuple]) -> pd.DataFrame:
     """The Python edges kernel over parsed (polygon_id, parsed, envelope)
     rows: (polygon_id, _edges), one row per polygon, in order."""
@@ -409,18 +412,46 @@ def _edges_frame(polys: list[tuple]) -> pd.DataFrame:
     )
 
 
-def _polygon_edges(polygons_wkt_df: DataFrame, sql: bool) -> DataFrame:
-    """(polygon_id, _edges), one row per polygon of the layer: parsed by
-    Spark SQL (`sql`, for a layer of canonical text only, see
-    _sql_parses) or by parse_wkt in an executor-side Arrow kernel."""
-    if sql:
-        return polygons_wkt_df.where(F.col("polygon_id").isNotNull() & F.col("wkt").isNotNull()).select(
-            F.col("polygon_id").cast("long"), F.expr(_EDGES_SQL).alias("_edges")
+def _polygon_edges(polygons_wkt_df: DataFrame, python: bool) -> DataFrame:
+    """(polygon_id, _edges) per polygon: Spark SQL parses the rows that
+    pass the gate and sees no other (ANSI casts throw on foreign text);
+    an Arrow kernel parses the `_PYTHON_ROW`s, a branch left out unless
+    `python`, as a kernel over an empty input still starts workers."""
+    edges = polygons_wkt_df.where(_SQL_ROW).select(
+        F.col("polygon_id").cast("long"), F.expr(_EDGES_SQL).alias("_edges")
+    )
+    if not python:
+        return edges
+    return edges.unionByName(
+        map_apply(
+            polygons_wkt_df.where(_PYTHON_ROW).select("polygon_id", "wkt"),
+            lambda pdf: _edges_frame(_parse_polygons(zip(pdf["polygon_id"], pdf["wkt"]))),
+            "polygon_id long, " + _EDGES,
         )
-    return map_apply(
-        polygons_wkt_df.select("polygon_id", "wkt"),
-        lambda pdf: _edges_frame(_parse_polygons(zip(pdf["polygon_id"], pdf["wkt"]))),
-        "polygon_id long, " + _EDGES,
+    )
+
+
+# [x0, y0, x1, y1] of `_EDGES_SQL`, NULL without edges: the extremes of the edges'
+# start points, i.e. of every vertex of an edged ring (Python twin: _edges_envelope)
+_ENVELOPE_SQL = _let("_f", f"flatten({_EDGES_SQL})", "CASE WHEN size(_f) > 0 THEN array({}) END".format(
+    ", ".join(f"array_{m}(transform(_f, _e -> _e.{c}))" for m in ("min", "max") for c in ("x1", "y1"))
+))
+
+
+def _edges_envelope(parts: list[list[dict]]) -> tuple | None:
+    xs, ys = [e["x1"] for p in parts for e in p], [e["y1"] for p in parts for e in p]
+    return (min(xs), min(ys), max(xs), max(ys)) if xs else None
+
+
+def _layer_rows(polygons_wkt_df: DataFrame) -> DataFrame:
+    """pip_join's read of a layer row: polygon_id, `_python` (`_PYTHON_ROW`),
+    `_len`, `_env` (for a `_SQL_ROW`) and `_wkt` (when `_python`)."""
+    return polygons_wkt_df.select(
+        "polygon_id",
+        F.expr(_PYTHON_ROW).alias("_python"),
+        F.length("wkt").alias("_len"),
+        F.expr(f"CASE WHEN {_SQL_ROW} THEN {_ENVELOPE_SQL} END").alias("_env"),
+        F.when(F.expr(_PYTHON_ROW), F.col("wkt")).alias("_wkt"),
     )
 
 
@@ -451,7 +482,6 @@ def pip_join_hybrid(
     lon_col: str = "lon",
     lat_col: str = "lat",
     carry_cols: list[str] | None = None,
-    broadcast_cellmap: bool = True,
 ) -> DataFrame:
     """Filter-refine PIP join with interior-cell fast accept (the
     engine's flagship physical strategy) — ONE scan of the fact table.
@@ -466,22 +496,19 @@ def pip_join_hybrid(
     Python worker on the fact rows. The whole join is scan -> 2
     broadcast hash joins -> filter, with no DAG diamond.
 
-    The layer is collected once (the small side) only to check that
-    Spark SQL can parse it; the cell map and the edges are then built
-    in the JVM from the layer's files inside their broadcast exchanges,
-    so a layer of canonical POLYGON/MULTIPOLYGON text runs no Python at
-    all. Other WKT parses in an Arrow kernel. `broadcast_cellmap=False`
-    drops the broadcast hint on the cell map (Catalyst picks the join).
+    The cell map and the edges are built in the JVM from the layer's
+    files inside their broadcast exchanges (see _polygon_edges); a
+    `limit(1)` job looks for a row that fails the parser gate, and a
+    layer of canonical POLYGON/MULTIPOLYGON text runs no Python at all.
 
     This strictly dominates the reference's design (STRtree envelope
     coarse + exact contains on EVERY candidate, G:5736-5936): the
     interior-cell accept eliminates the exact test for interior hits,
     and the boundary refine is the same O(edges) JVM cost as JTS
     contains."""
-    rows = polygons_wkt_df.select("polygon_id", "wkt").collect()
     return _pip_join_cells(
         points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, "broadcast", 0,
-        broadcast_cellmap, rows, "pip_join_hybrid",
+        True, None, "pip_join_hybrid",
     )
 
 
@@ -494,7 +521,7 @@ def polygon_cells_classified(
     boundary cell through the cell shuffle; `with_edges=False` emits the
     narrow map for the broadcast-edges join flavor (see pip_join_cells
     attach_edges)."""
-    return _cell_map(_polygon_edges(polygons_wkt_df, False), res, with_edges)
+    return _cell_map(_polygon_edges(polygons_wkt_df, True), res, with_edges)
 
 
 def pip_join_cells(
@@ -506,6 +533,8 @@ def pip_join_cells(
     salt_buckets: int = 0,
     carry_cols: list[str] | None = None,
     attach_edges: str = "inline",
+    *,
+    _python: bool | None = None,
 ) -> DataFrame:
     """Inner PIP join, cell equi-join flavor (large-large path).
 
@@ -516,8 +545,8 @@ def pip_join_cells(
     accepted with no exact test (`_inside` fast path — the cell map is
     classified in the JVM, executor-side), boundary candidates go
     through the higher-order-function ray cast. No Python touches the
-    fact rows at any point, and the fact table is scanned ONCE; the
-    layer's WKT parses in an Arrow kernel.
+    fact rows at any point, and the fact table is scanned ONCE. The layer
+    parses as in pip_join_hybrid; `_python` is pip_join's own answer.
     `carry_cols`: explicit column pruning (see pip_join_broadcast).
 
     `attach_edges` controls how the refine's edge arrays reach the
@@ -536,20 +565,18 @@ def pip_join_cells(
     explicitly (broadcast up to EDGES_BROADCAST_BYTES WKT characters)."""
     return _pip_join_cells(
         points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, attach_edges,
-        salt_buckets, False, None, "pip_join_cells",
+        salt_buckets, False, _python, "pip_join_cells",
     )
 
 
 def _pip_join_cells(
     points_df: DataFrame, polygons_wkt_df: DataFrame, res: int, lon_col: str, lat_col: str,
-    carry_cols: list[str] | None, attach_edges: str, salt_buckets: int, broadcast_cellmap: bool,
-    rows: list | None, op: str,
+    carry_cols: list[str] | None, attach_edges: str, salt_buckets: int, hybrid: bool,
+    python: bool | None, op: str,
 ) -> DataFrame:
-    """The one cell-join builder behind the public PIP operators (`op`
-    names the caller in input errors): `broadcast_cellmap` puts the
-    cell map under a broadcast hint, and `rows`, the layer's collected
-    (polygon_id, wkt) rows when the caller holds them, let Spark SQL
-    parse a canonical layer (`_sql_parses`)."""
+    """The one cell-join builder behind the public PIP operators (`op` names
+    the caller in input errors): `hybrid` puts the cell map under a broadcast
+    hint; `python` says if the layer holds a `_PYTHON_ROW` (None: a job looks)."""
     if carry_cols is not None:
         cols = list(dict.fromkeys(carry_cols + [lon_col, lat_col]))
         points_df = points_df.select(*cols)
@@ -558,11 +585,12 @@ def _pip_join_cells(
     # `salt` is an internal column only when the polygon side is salted
     reserved = ("cell", "_inside", "_edges", "polygon_id") + (("salt",) if salt_buckets > 0 else ())
     _check_reserved_cols(points_df, reserved, op)
-    sql = rows is not None and _sql_parses(rows)
+    if python is None:
+        python = bool(polygons_wkt_df.where(_PYTHON_ROW).limit(1).collect())
     pts = points_df.withColumn(
         "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
     )
-    pol = _cell_map(_polygon_edges(polygons_wkt_df, sql), res, attach_edges == "inline")
+    pol = _cell_map(_polygon_edges(polygons_wkt_df, python), res, attach_edges == "inline")
     if salt_buckets > 0:
         pts = pts.withColumn("salt", F.pmod(F.xxhash64(lon_col, lat_col), F.lit(salt_buckets)))
         pol = pol.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
@@ -571,9 +599,9 @@ def _pip_join_cells(
         keys = ["cell"]
     pol_cols = ["polygon_id", "_inside"] + (["_edges"] if attach_edges == "inline" else [])
     pol = pol.select(*keys, *pol_cols)
-    cand = pts.join(F.broadcast(pol) if broadcast_cellmap else pol, on=keys, how="inner")
+    cand = pts.join(F.broadcast(pol) if hybrid else pol, on=keys, how="inner")
     if attach_edges != "inline":
-        cand = cand.join(F.broadcast(_polygon_edges(polygons_wkt_df, sql)), on="polygon_id", how="left")
+        cand = cand.join(F.broadcast(_polygon_edges(polygons_wkt_df, python)), on="polygon_id", how="left")
     out_cols = [f.name for f in points_df.schema.fields] + ["polygon_id"]
     return cand.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 
@@ -672,44 +700,23 @@ def _res_from_median_area(
     return int(min(max(round(r), lo), hi))
 
 
-def _envelope_area_col() -> "F.Column":
-    """Envelope area (deg^2) from a `wkt` column, as an Arrow-batched
-    pandas_udf — the distributed twin of the driver-side
-    `geom_envelope` pass in `_parse_polygons`."""
-
-    @F.pandas_udf(T.DoubleType())
-    def env_area(wkts: pd.Series) -> pd.Series:
-        out = np.full(len(wkts), np.nan)
-        for i, w in enumerate(wkts):
-            env = geom_envelope(parse_wkt(w))
-            if env is not None:
-                x0, y0, x1, y1 = env
-                out[i] = max(x1 - x0, 1e-12) * max(y1 - y0, 1e-12)
-        return pd.Series(out)
-
-    return env_area(F.col("wkt"))
-
-
-def _layer_stats(polygons_wkt_df: DataFrame) -> tuple[float | None, int]:
-    """(median envelope area, total WKT characters) of a polygon layer in
-    ONE distributed aggregation — everything the planner needs for a
-    large layer without collecting it."""
+def _layer_stats(layer_rows: DataFrame) -> tuple[float | None, int, bool]:
+    """(median envelope area, total WKT characters, whether a row fails
+    the gate) of a `_layer_rows` frame in ONE distributed aggregation:
+    what the planner needs of a large layer (envelopes of `_SQL_ROW`s)."""
+    area = F.expr("greatest(_env[2] - _env[0], 1.0E-12D) * greatest(_env[3] - _env[1], 1.0E-12D)")
     row = (
-        polygons_wkt_df.select(
-            _envelope_area_col().alias("_area"), F.length("wkt").alias("_len")
-        )
+        layer_rows.select(F.when(F.col("_env").isNotNull(), area).alias("_area"), "_len", "_python")
         .agg(
-            # EMPTY/invalid WKT yields NaN, which Spark sorts as the
-            # LARGEST double — it would poison the median, so gate it
-            F.percentile_approx(
-                F.when(~F.isnan("_area"), F.col("_area")), 0.5
-            ).alias("med"),
+            # a non-finite vertex can make the area NaN, which Spark
+            # sorts as the LARGEST double: it would poison the median
+            F.percentile_approx(F.when(~F.isnan("_area"), F.col("_area")), 0.5).alias("med"),
             F.sum("_len").alias("bytes"),
+            F.bool_or("_python").alias("python"),
         )
         .first()
     )
-    med = row["med"]
-    return (None if med is None else float(med)), int(row["bytes"] or 0)
+    return row["med"], int(row["bytes"] or 0), bool(row["python"])
 
 
 def pip_join(
@@ -726,27 +733,21 @@ def pip_join(
     Dispatch ladder (mirrors the reference's threshold-based dispatch,
     G:12284-12295, at distributed scale):
 
-    1. Collect at most k+1 rows of (polygon_id, wkt), with
-       k = `PIP_COLLECT_MAX_POLYS`: ONE bounded read that is both
-       the size probe and, for a small layer, the planner's only
-       driver-side read (the layer is never counted in full). Spark
-       runs a bounded collect as rounds of partition scans, one job
-       per round, growing each round until k+1 rows are in: a
-       one-partition layer takes one job, a many-partition layer a
-       few. The price on a large layer: k+1 WKTs reach the driver and
-       are dropped, where an id-only count moved none — the same
-       driver memory a k-row layer takes on the hybrid path, in
-       exchange for no separate count and no re-collect on every
-       small layer. If the probe returns more
-       than k rows, the polygon side NEVER reaches the driver beyond
-       those rows: the resolution and the layer's WKT size come
-       from one distributed aggregation (`_layer_stats`: median
-       envelope area and WKT characters) and the join runs as
-       `pip_join_cells` — the cell-map kernel runs executor-side,
-       the join shuffles on the cell key.
-    2. Small polygon side: the probe rows ARE the layer. Parse them
-       for their envelopes only, pick the resolution driver-side, and
-       estimate the cell-map size (envelope area / cell area). Up to
+    1. Collect at most k+1 `_layer_rows` (k = `PIP_COLLECT_MAX_POLYS`):
+       ONE bounded read that is both the size probe and, for a small
+       layer, the planner's only driver-side read. A row brings its
+       envelope from Spark SQL's parse, and its WKT only when it fails
+       the parser gate. Spark runs a bounded collect as rounds of
+       partition scans, one job per round, until k+1 rows are in. If
+       the probe returns more than k rows, the resolution, the WKT
+       size and whether a row fails the gate come from one
+       distributed aggregation (`_layer_stats`) and the join runs as
+       `pip_join_cells` — the cell-map kernel runs executor-side, the
+       join shuffles on the cell key.
+    2. Small polygon side: the probe rows ARE the layer; the driver
+       parses only the rows that fail the gate. The envelopes pick the
+       resolution and estimate the cell-map size (envelope area / cell
+       area). Up to
        `PIP_BROADCAST_MAX_CELLS` the hybrid broadcast flavor wins; a
        small-count-but-huge-area layer (continent polygons at fine
        res) instead dispatches to `pip_join_cells` so the cell map is
@@ -754,60 +755,52 @@ def pip_join(
        arrays are built in the plan from the layer's files: the driver
        classifies no polygon and ships no local relation, so the plan
        build runs one job (the probe), and a checkpointed stage sees a
-       rewritten layer. The hybrid also learns from the probe rows
-       whether Spark SQL can parse the layer (`_sql_parses`), and
-       reads it three times: the probe, then the cell map and the
-       edges inside their broadcast exchanges.
+       rewritten layer.
 
+    Either branch tells the flavor whether a row fails the gate, so its
+    plan holds an Arrow kernel exactly when one does (_polygon_edges).
     Both branches that reach `pip_join_cells` choose its edge
-    attachment by one rule: "broadcast" when the layer holds at most
-    `EDGES_BROADCAST_BYTES` WKT characters, else "inline". The
-    thresholds are module constants read at call time."""
-    rows = polygons_wkt_df.select("polygon_id", "wkt").limit(PIP_COLLECT_MAX_POLYS + 1).collect()
+    attachment by one rule: "broadcast" when the layer
+    holds at most `EDGES_BROADCAST_BYTES` WKT characters, else
+    "inline". The thresholds are module constants read at call time."""
+    layer_rows = _layer_rows(polygons_wkt_df)
+    rows = layer_rows.limit(PIP_COLLECT_MAX_POLYS + 1).collect()
     if len(rows) > PIP_COLLECT_MAX_POLYS:
-        # ONE aggregation gives both the resolution and the edge-
-        # attachment mode — no extra eager probe inside pip_join_cells
-        med, wkt_chars = _layer_stats(polygons_wkt_df)
+        # ONE aggregation gives the resolution, the edge-attachment mode
+        # and the parser route: pip_join_cells probes nothing
+        med, wkt_chars, python = _layer_stats(layer_rows)
         if res is None:
             res = 14 if med is None else _res_from_median_area(med)
     else:
-        polys = _parse_polygons(rows)
+        python = any(r["_python"] for r in rows)
+        envs = [tuple(r["_env"]) for r in rows if r["_env"] is not None]
+        odd = _edges_frame(_parse_polygons((r["polygon_id"], r["_wkt"]) for r in rows if r["_python"]))
+        envs += [env for env in map(_edges_envelope, odd["_edges"]) if env is not None]
         if res is None:
-            res = pick_res([env for _pid, _parsed, env in polys])
-        n = float(1 << res)
-        cell_w, cell_h = 360.0 / n, 180.0 / n
-        est_cells = 0.0
-        for _pid, _parsed, (x0, y0, x1, y1) in polys:
-            est_cells += max((x1 - x0) / cell_w, 1.0) * max((y1 - y0) / cell_h, 1.0)
+            res = pick_res(envs)
+        cell_w, cell_h = 360.0 / (1 << res), 180.0 / (1 << res)
+        est_cells = sum(max((x1 - x0) / cell_w, 1.0) * max((y1 - y0) / cell_h, 1.0) for x0, y0, x1, y1 in envs)
         if est_cells <= PIP_BROADCAST_MAX_CELLS:
             if salt_buckets:
                 # salting exists to spread a hot shuffle key; the hybrid
                 # flavor has no shuffle (broadcast join), so the option
                 # cannot apply — say so instead of silently dropping a
                 # skew-tuning attempt.
-                import warnings
-
                 warnings.warn(
                     "pip_join: salt_buckets only applies to the shuffled cells "
                     "path; the planner chose the broadcast hybrid flavor (no "
                     "shuffle to salt), so it is ignored here",
                     stacklevel=2,
                 )
-            # pip_join_hybrid, handed the probe rows instead of
-            # collecting the layer again
+            # pip_join_hybrid, told what the probe found
             return _pip_join_cells(
                 points_df, polygons_wkt_df, res, lon_col, lat_col, carry_cols, "broadcast", 0,
-                True, rows, "pip_join",
+                True, python, "pip_join",
             )
-        wkt_chars = sum(len(wkt) for _pid, wkt in rows if wkt is not None)
+        wkt_chars = sum(r["_len"] or 0 for r in rows)
     return pip_join_cells(
-        points_df,
-        polygons_wkt_df,
-        res=res,
-        lon_col=lon_col,
-        lat_col=lat_col,
-        carry_cols=carry_cols,
-        salt_buckets=salt_buckets,
+        points_df, polygons_wkt_df, res=res, lon_col=lon_col, lat_col=lat_col, carry_cols=carry_cols,
+        salt_buckets=salt_buckets, _python=python,
         attach_edges="broadcast" if wkt_chars <= EDGES_BROADCAST_BYTES else "inline",
     )
 
@@ -1050,8 +1043,12 @@ def build_knn_index(
         a = knn_join_grid(probes_monday, idx)
         b = knn_join_grid(probes_tuesday, idx)   # no rebuild
         idx.unpersist()
-    """
-    cpdf = candidates_df.select(cand_id_col, lon_col, lat_col).toPandas()
+
+    A candidate set over knn_join's broadcast cap raises ValueError."""
+    cap_rows = max(KNN_BROADCAST_BYTES // 24, 1)
+    cpdf = candidates_df.select(cand_id_col, lon_col, lat_col).limit(cap_rows + 1).toPandas()
+    if len(cpdf) > cap_rows:
+        raise ValueError(f"build_knn_index: over {cap_rows} candidates; knn_join joins any set")
     idx = _cand_grid_index(
         (
             cpdf[cand_id_col].to_numpy(np.int64),
