@@ -23,10 +23,12 @@ SF = "/root/testdata/sf0.001"
 
 
 def plan_of(df) -> str:
+    """`df.explain("formatted")`, with the test-data directory written
+    as `testdata/`, so a regenerated PLANS.md names no machine's layout."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return buf.getvalue().replace(os.path.dirname(SF) + "/", "testdata/")
 
 
 def main() -> None:

@@ -22,18 +22,32 @@ def _mk_points(spark, rows):
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
+def _toks(col: str = "text"):
+    """Spark's split of `col` into non-empty ASCII-\\s+ tokens."""
+    return F.filter(F.split(F.col(col), r"\s+"), lambda x: F.length(x) > 0)
+
+
 def _simhash_docs_hof(docs):
     """The all-JVM HOF formulation of dedup.simhash_docs: the reference
-    the Arrow kernel must reproduce row for row."""
-    from util_gis_spark.operators.dedup import _toks, simhash_expr, simhash_token_hash_expr
+    the Arrow kernel must reproduce row for row. Spark-SQL spellings of
+    the DuckDB twins simhash_token_hash_sql and simhash_sql."""
+    from util_gis_spark.operators.dedup import MOD32, SIMHASH_BITS
 
+    token_hash = (
+        f"transform(_shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MOD32})"
+    )
+    simhash = " + ".join(
+        f"(CASE WHEN 2 * size(filter(_hashes, h -> cast(h / {1 << i} as bigint) % 2 = 1))"
+        f" > size(_hashes) THEN {1 << i} ELSE 0 END)"
+        for i in range(SIMHASH_BITS)
+    )
     return (
         docs.select("doc_id", "text")
         .withColumn("_toks", _toks())
         .withColumn("_shingles", F.array_distinct("_toks"))
-        .withColumn("_hashes", simhash_token_hash_expr())
+        .withColumn("_hashes", F.expr(token_hash))
         .filter(F.size("_hashes") > 0)
-        .select("doc_id", F.expr(simhash_expr()).cast("long").alias("simhash"))
+        .select("doc_id", F.expr(simhash).cast("long").alias("simhash"))
     )
 
 
@@ -2065,7 +2079,7 @@ class TestR6DedupImagesRegressions:
 
         from pyspark.sql import functions as F
 
-        from util_gis_spark.operators.dedup import _tokens, _toks, _toks_sql
+        from util_gis_spark.operators.dedup import _tokens, _toks_sql
 
         text = "a\x0bb  c"
         want = ["a", "b", "c"]

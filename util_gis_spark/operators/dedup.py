@@ -6,7 +6,7 @@
 - n-gram Jaccard verification kernel
 
 The MinHash and SimHash signatures are Arrow kernels (grouped.map_apply)
-bit-identical to their HOF forms; banding and verification are JVM-side
+bit-identical to their DuckDB twins; banding and verification are JVM-side
 Spark expressions. Every constant lives HERE so the Spark pipeline and
 the DuckDB oracle (built by the *_sql functions) cannot drift.
 
@@ -44,10 +44,6 @@ MOD30 = 1 << 30  # shingle hash domain (keeps a*h within int64)
 _A = [(37 + 8 * i) * 2654435761 % 1048573 for i in range(N_HASHES)]  # a_i < 2^20
 _B = [(101 + 31 * i) * 48271 % MOD30 for i in range(N_HASHES)]
 _P = 1073741789  # largest prime < 2^30
-
-
-def _toks(col: str = "text"):
-    return F.filter(F.split(F.col(col), r"\s+"), lambda x: F.length(x) > 0)
 
 
 def _toks_sql(col: str = "text") -> str:
@@ -209,17 +205,13 @@ def minhash_near_dup_pairs(
     steady trickle; widen the reduction (MOD30) if exactness at the
     threshold matters more than the shuffle width.
 
-    Plan shape: the signature table feeds FOUR consumers (both band
-    join sides + both verify re-attach joins). The r2 plan recomputed
-    the kernel 6x via a 4-way band union, which (not the md5 loop) was
-    why minhash_dedup was the one flat bench query; the single explode
-    fixed that (3.6 s -> 0.7 s measured). The signatures (and, with
-    `max_band_bucket`, the capped bands) are cached for exactly the
-    lifetime of the returned DataFrame (`_local_cache`, which also
-    states the executor-loss trade-off). For repeated or large runs
-    the right tool is the bucketed stage (write_minhash_stage /
-    minhash_pairs_from_stage), which also skips the band-join
-    shuffle."""
+    Plan shape: the signature table feeds four consumers (both band
+    join sides, both verify joins), so it (and, with `max_band_bucket`,
+    the capped bands) is cached for the result's lifetime
+    (`_local_cache`). The bands come from one explode: r2's 4-way union
+    ran the kernel 6x (3.6 s -> 0.7 s). For repeated or large runs use
+    the bucketed stage (write_minhash_stage / minhash_pairs_from_stage),
+    which also skips the band-join shuffle."""
     base = _local_cache(_sig_kernel(docs, shingler=shingler))
     # band join carries ONLY (doc_id, band, hash) — the wide shingle
     # arrays are re-attached by key afterwards, so the x4-band shuffle
@@ -444,36 +436,11 @@ SIMHASH_BITS = 32
 MOD32 = 1 << 32  # simhash token-hash domain: FULL fingerprint width
 
 
-def simhash_token_hash_expr():
-    """Per-token 32-bit hash (md5 masked to 32 bits, identical in both
-    engines). SimHash gets its own hash domain: r2 reused the MinHash
-    shingle hash (mod 2^30), leaving fingerprint bits 30-31 stuck at 0
-    and the upper LSH half-band with only 14 effective bits (VERDICT
-    r2 'What's wrong' #3). All 32 bits vary now."""
-    return F.expr(
-        f"transform(_shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MOD32})"
-    )
-
-
 def simhash_token_hash_sql() -> str:
     return (
         "list_transform(_shingles, s -> "
         f"cast(concat('0x', substring(md5(s), 1, 15)) as bigint) % {MOD32})"
     )
-
-
-def simhash_expr() -> str:
-    """32-bit SimHash over token hashes: bit i set iff the majority of
-    tokens have bit i set in their 32-bit hash (strict majority: 2*cnt
-    > n). All 32 bits are effective (simhash_token_hash_expr); each
-    16-bit LSH half-band carries a full 16 bits. Built as one SQL
-    expression usable in both engines modulo array-function
-    spelling."""
-    terms = []
-    for i in range(SIMHASH_BITS):
-        cnt = f"size(filter(_hashes, h -> cast(h / {1 << i} as bigint) % 2 = 1))"
-        terms.append(f"(CASE WHEN 2 * {cnt} > size(_hashes) THEN {1 << i} ELSE 0 END)")
-    return " + ".join(terms)
 
 
 def simhash_sql() -> str:
@@ -513,17 +480,12 @@ def _token_hash32(t: str) -> int:
 
 
 def _simhash_kernel(docs: DataFrame, hashers: tuple, cols: tuple) -> DataFrame:
-    """(doc_id, *cols): one 32-bit SimHash fingerprint per token hasher
-    — bit i set iff a strict majority of the doc's distinct tokens
-    have bit i set in their hash. Arrow kernel (r4): the HOF
-    formulation ran 32 filter passes over the token-hash array per row
-    (one per fingerprint bit), the measured floor of the
-    generated-corpus ladder; here the md5 token hashes (hashlib == SQL
-    md5 byte-for-byte, the same equivalence the MinHash kernel relies
-    on) and the 32 majority votes are one numpy bit-matrix reduction
-    per hasher. NULL text and token-less docs emit no row, like the
-    HOF path's size(_hashes) > 0 filter. Stateless, so it runs
-    unchanged under Structured Streaming."""
+    """(doc_id, *cols): one 32-bit SimHash fingerprint per token hasher —
+    bit i set iff a strict majority of the doc's distinct tokens have bit
+    i set in their hash, one numpy bit-matrix reduction per hasher.
+    hashlib md5 == SQL md5 byte for byte. NULL text and token-less docs
+    emit no row, as in simhash_docs_sql. Stateless, so it runs unchanged
+    under Structured Streaming."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -559,7 +521,7 @@ def _simhash_kernel(docs: DataFrame, hashers: tuple, cols: tuple) -> DataFrame:
 
 def simhash_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — token-level 32-bit simhash (32 effective
-    bits), bit-identical to simhash_expr()/the DuckDB twin (asserted by
+    bits), bit-identical to the DuckDB twin simhash_docs_sql (asserted by
     the docs_simhash oracle and a dedicated parity test)."""
     return _simhash_kernel(docs, (_token_hash32,), ("simhash",))
 
@@ -588,7 +550,7 @@ def _simhash_pairs(fps: DataFrame, cols, max_hamming: int) -> DataFrame:
     collisions, then the exact popcount verify summed over `cols`."""
     hamming = " + ".join(f"bit_count({c}_a ^ {c}_b)" for c in cols)
     return (
-        band_self_join(simhash_bands(fps, cols), "doc_id", carry=list(cols))
+        band_self_join(simhash_bands(_local_cache(fps), cols), "doc_id", carry=list(cols))
         .withColumn("hamming", F.expr(f"cast({hamming} as int)"))
         .filter(F.col("hamming") <= max_hamming)
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "hamming")
@@ -600,7 +562,7 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
     the 32-bit fingerprint (any pair within hamming<=1 is guaranteed
     to share a half — pigeonhole; hamming 2 is caught unless the flips
     straddle both halves; each half carries a full 16 effective bits,
-    see simhash_token_hash_expr), then exact popcount verify."""
+    see simhash_token_hash_sql), then exact popcount verify."""
     return _simhash_pairs(simhash_docs(docs), ("simhash",), max_hamming)
 
 
@@ -639,11 +601,10 @@ SELECT doc_id, CAST({simhash_sql()} AS BIGINT) AS simhash FROM (
 # hamming<=2 collisions among n 32-bit fingerprints (~C(n,2)*529/2^32)
 # start rivaling true near-dups — measured at 500k generated docs:
 # 29,449 pairs of which ~15k are the random-collision floor (see
-# BENCH/BASELINE.md r5). This is the 64-bit scale path: the
-# fingerprint is TWO independent 32-bit halves (the low half is
-# bit-identical to simhash_docs; the high half uses a salted token
-# hash), LSH = four 16-bit bands (pigeonhole: hamming<=3 over 64 bits
-# always leaves a clean band), exact popcount verify over both halves.
+# BENCH/BASELINE.md r5). This is the 64-bit scale path: TWO 32-bit
+# halves (simhash_docs_wide), LSH = four 16-bit bands (pigeonhole:
+# hamming<=3 over 64 bits always leaves a clean band), exact popcount
+# verify over both halves.
 
 
 def _token_hash32_hi(t: str) -> int:
@@ -664,18 +625,8 @@ def simhash_near_dup_pairs_wide(docs: DataFrame, max_hamming: int = 2) -> DataFr
     """64-bit SimHash near-dup pairs: four 16-bit bands over (hi, lo)
     via ONE explode, exact two-half popcount verify. Same plan shape
     as the 32-bit operator; the wider fingerprint pushes the random-
-    collision floor from ~2^-32 to ~2^-64 per pair.
-
-    The fingerprint table is cached for the lifetime of the result
-    (`_local_cache`): the band self-join evaluates the kernel subplan
-    once per side, and the WIDE kernel (two md5 families, two bit
-    matrices per doc) is expensive enough that caching wins —
-    interleaved min-of-3 at 100k docs: 4.33 s plain vs 2.85 s
-    persisted, identical 138 pairs. The 32-bit operator measured a
-    WASH under the same protocol (1.60 vs 1.60 — its kernel is ~0.5 s
-    per pass across 32 workers and the cache round-trip eats the
-    saving), so it deliberately stays uncached."""
-    return _simhash_pairs(_local_cache(simhash_docs_wide(docs)), ("sim_lo", "sim_hi"), max_hamming)
+    collision floor from ~2^-32 to ~2^-64 per pair."""
+    return _simhash_pairs(simhash_docs_wide(docs), ("sim_lo", "sim_hi"), max_hamming)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, jaccard_threshold: float = 0.6) -> DataFrame:

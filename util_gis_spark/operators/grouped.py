@@ -23,11 +23,47 @@ drops rows NULL in any `skip_null` column before the kernel sees them,
 never calls the kernel on an empty batch, and never yields an empty
 frame: a frame built from empty Python lists infers float64/object
 columns, which the Arrow cast rejects for array and struct fields.
+
+Worker preamble. PySpark's worker calls `importlib.invalidate_caches()`
+per task, and CPython 3.10-3.12 then re-read the directory of every zip on
+`sys.path` (pyspark.zip, py4j, spark-core jar: 26,672 entries, 0.12-0.30 s
+per task on 4 vCPUs, Python 3.11, Spark 4.1; 3.13 is lazy).
+`_worker_preamble` runs first in every Python entry point the engine owns,
+so it needs no option or hook and never runs in the driver. Once per
+worker it makes the method skip an archive whose (inode, size, mtime_ns)
+is unchanged since that importer last read it.
 """
 
 from __future__ import annotations
 
+import inspect
+import os
+import sys
+import zipimport
+
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+
+
+def _worker_preamble() -> None:
+    """See module doc; the stdlib method stays as `__wrapped__`."""
+    cls = zipimport.zipimporter
+    applies = (3, 10) <= sys.version_info[:2] < (3, 13) and TaskContext.get() is not None
+    if not applies or hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_stat_stamp", None):
+            invalidate_caches.__wrapped__(self)
+            self._stat_stamp = stamp
+
+    invalidate_caches.__wrapped__ = cls.invalidate_caches
+    cls.invalidate_caches = invalidate_caches
 
 
 def kernel_partitions(df: DataFrame) -> int:
@@ -42,10 +78,18 @@ def grouped_apply(df: DataFrame, group_cols, fn, schema) -> DataFrame:
     """groupBy(*group_cols).applyInPandas(fn, schema) with the shuffle
     width pinned against AQE byte-based coalescing (see module doc)."""
     cols = list(group_cols)
+    if len(inspect.getfullargspec(fn).args) == 2:
+        def run(key, pdf):
+            _worker_preamble()
+            return fn(key, pdf)
+    else:
+        def run(pdf):
+            _worker_preamble()
+            return fn(pdf)
     return (
         df.repartition(kernel_partitions(df), *cols)
         .groupBy(*cols)
-        .applyInPandas(fn, schema=schema)
+        .applyInPandas(run, schema=schema)
     )
 
 
@@ -57,6 +101,7 @@ def map_apply(df: DataFrame, fn, schema, skip_null=()) -> DataFrame:
     cols = list(skip_null)
 
     def run(batches):
+        _worker_preamble()
         for pdf in batches:
             if cols:
                 pdf = pdf.dropna(subset=cols)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.grouped import _worker_preamble
+
 
 def _file_stream(
     spark: SparkSession, sf_dir: str, table: str, prefix: str, max_files_per_trigger: int
@@ -123,6 +125,7 @@ def sessionize_stream_stateful(
     state_schema = "seg_start_s long, last_s long, n long"
 
     def fn(key, pdfs, state: GroupState):
+        _worker_preamble()
         device_id = key[0]
         if state.exists:
             seg_start, last, n = state.get
@@ -223,6 +226,7 @@ def _bucket_pair_stream(bands, payload, width, score, keep, score_field, max_buc
     state_schema = "ids array<long>, vals array<long>"
 
     def fn(key, pdfs, state: GroupState):
+        _worker_preamble()
         ids, vals = (list(x) for x in state.get) if state.exists else ([], [])
         seen = set(ids)
         rows = []
