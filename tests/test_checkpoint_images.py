@@ -301,6 +301,118 @@ class TestCheckpoint:
         assert not pipe2.results["s"].resumed
         assert df2.collect()[0]["tag"] == "poly#13"
 
+    def test_dep_without_current_checkpoint_refused(self, spark, tmp_path):
+        """A dependent stage is never built from a dep that has no current
+        checkpoint. A rebuild of `src` that crashed after invalidating its
+        manifest leaves part of its parquet behind; `agg` used to read
+        those leftover files, count a fraction of the rows and publish a
+        manifest for it."""
+        from util_gis_spark.io import checkpoint
+
+        root = str(tmp_path / "ckpt_dep")
+
+        def run():
+            pipe = CheckpointedPipeline(spark, root)
+            return pipe.stage("agg", lambda s: s.groupBy().count(), deps=["src"]).first()["count"]
+
+        CheckpointedPipeline(spark, root).stage("src", lambda: spark.range(0, 1000, 1, 4))
+        assert run() == 1000
+        agg_meta = os.path.join(root, "agg", "_SUCCESS_META.json")
+        agg_before = json.load(open(agg_meta))
+        src_meta = os.path.join(root, "src", "_SUCCESS_META.json")
+        meta = json.load(open(src_meta))
+
+        # written under another version: not a current checkpoint either
+        with open(src_meta, "w") as f:
+            json.dump(dict(meta, fingerprint_version=checkpoint.FINGERPRINT_VERSION - 1), f)
+        with pytest.raises(ValueError, match=r"stage 'agg': deps \['src'\] .*ckpt_dep"):
+            run()
+
+        data = os.path.join(root, "src", "data")
+        parts = sorted(p for p in os.listdir(data) if p.startswith("part-"))
+        assert len(parts) == 4
+        os.remove(src_meta)
+        for p in parts[1:]:
+            os.remove(os.path.join(data, p))
+        with pytest.raises(ValueError, match=r"stage 'agg': deps \['src'\] .*ckpt_dep"):
+            run()
+        assert json.load(open(agg_meta)) == agg_before
+
+    def test_read_back_schema_and_rows_match_parquet(self, spark, tmp_path):
+        """Every read-back takes the schema the manifest records, and it is
+        the schema Spark infers from the written files: nested and map
+        types, decimal, both timestamps, binary, a NOT NULL column read
+        back nullable, and field metadata. Fresh and resumed reads return
+        the same rows."""
+        import datetime as dt
+        from decimal import Decimal
+
+        from pyspark.sql import types as T
+
+        schema = T.StructType([
+            T.StructField("id", T.LongType(), False),
+            T.StructField("s", T.StructType([
+                T.StructField("a", T.IntegerType()), T.StructField("b", T.ArrayType(T.StringType())),
+            ])),
+            T.StructField("arr", T.ArrayType(T.DoubleType(), False)),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("d", T.DecimalType(38, 10)),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("bin", T.BinaryType()),
+            T.StructField("tag", T.StringType(), True, {"comment": "kept", "n": 3}),
+        ])
+        rows = [
+            (1, (2, ["x", None]), [1.5, -0.0], {"k": 1}, Decimal("12345678901234567890.0123456789"),
+             dt.datetime(2020, 1, 1, 12), dt.datetime(2020, 1, 2), b"\x00\xff", "a"),
+            (2, None, [], {}, None, None, None, None, None),
+        ]
+        root = str(tmp_path / "ckpt_schema")
+
+        def run():
+            pipe = CheckpointedPipeline(spark, root)
+            df = pipe.stage("s", lambda: spark.createDataFrame(rows, schema))
+            dep = pipe.stage("t", lambda s: s.filter("id > 0"), deps=["s"])
+            return pipe, df, dep
+
+        for resumed in (False, True):
+            pipe, df, dep = run()
+            assert pipe.results["s"].resumed is resumed and pipe.results["t"].resumed is resumed
+            for name, got in (("s", df), ("t", dep)):
+                inferred = spark.read.parquet(os.path.join(root, name, "data"))
+                assert got.schema == inferred.schema
+                assert sorted(got.collect()) == sorted(inferred.collect())
+                # the manifest holds the built schema: `s` was built NOT NULL
+                # on `id`, `t` from the nullable read-back of `s`
+                meta = json.load(open(os.path.join(root, name, "_SUCCESS_META.json")))
+                assert T.StructType.fromJson(meta["schema"]) == (schema if name == "s" else inferred.schema)
+            assert not schema["id"].nullable and df.schema["id"].nullable
+            assert df.schema["tag"].metadata == {"comment": "kept", "n": 3}
+            assert sorted(df.collect()) == sorted(spark.createDataFrame(rows, schema).collect())
+
+    def test_resume_runs_no_spark_job(self, spark, tmp_path):
+        """Resuming a stage and its dependent, whose builds run no job,
+        runs no Spark job: no read-back fetches a parquet footer."""
+        root = str(tmp_path / "ckpt_nojob")
+
+        def run():
+            pipe = CheckpointedPipeline(spark, root)
+            pipe.stage("a", lambda: spark.range(0, 100))
+            pipe.stage("b", lambda a: a.filter("id % 3 = 0"), deps=["a"])
+            return pipe
+
+        run()
+        sc = spark.sparkContext
+        group = "checkpoint_resume_no_job"
+        sc.setJobGroup(group, "resume")
+        try:
+            pipe = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert pipe.results["a"].resumed and pipe.results["b"].resumed
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
 
 class TestImages:
     def test_decode_stats_shape(self, spark, sf_dir):

@@ -1266,6 +1266,27 @@ class TestEdgeAttachment:
             assert got == want, kw
         assert len(want) > 0
 
+    @pytest.mark.parametrize(
+        "build",
+        [
+            lambda pts, layer: joins.pip_join_hybrid(pts, layer, res=14),
+            lambda pts, layer: joins.pip_join_cells(pts, layer, res=14, attach_edges="broadcast"),
+            lambda pts, layer: joins.pip_join_cells(pts, layer, res=14, attach_edges="inline"),
+        ],
+        ids=["hybrid", "cells-broadcast", "cells-inline"],
+    )
+    def test_edges_built_once_per_plan(self, spark, sf_dir, monkeypatch, build):
+        """One _pip_join_cells build makes one edges frame, which both the
+        cell map and the broadcast edge join read: the WKT parse is
+        analysed once per plan, not once per use."""
+        calls = []
+        real = joins._polygon_edges
+        monkeypatch.setattr(joins, "_polygon_edges", lambda *a: calls.append(a) or real(*a))
+        imgs = D.images(spark, sf_dir).select("image_key", "lon", "lat")
+        out = build(imgs, D.polygons_wkt(spark, sf_dir))
+        assert len(calls) == 1
+        assert out.columns == ["image_key", "lon", "lat", "polygon_id"]
+
     def test_unknown_attach_edges_refused(self, spark, sf_dir):
         """Only the two flavors exist; any other mode (the removed
         "auto" included) must not fall through to one of them."""

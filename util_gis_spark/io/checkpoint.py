@@ -5,11 +5,16 @@ metrics').
 A pipeline is a named sequence of stages; each stage materializes to
 `<root>/<stage>/data` (parquet) with a `_SUCCESS_META.json` manifest
 recording row count, per-partition rows/bytes, input-stage lineage and
-the stage expression fingerprint. On re-run, a stage whose manifest
-exists and whose upstream fingerprints match is SKIPPED and its
-parquet is read back — a failed job resumes from the last durable
-stage. Metrics come from df.observe (rows) + the files' on-disk bytes
-per partition, so they're collected without a second pass.
+the stage expression fingerprint and the stage's schema. On re-run, a
+stage whose manifest exists and whose upstream fingerprints match is
+SKIPPED and its parquet is read back — a failed job resumes from the
+last durable stage. Metrics come from df.observe (rows) + the files'
+on-disk bytes per partition, so they're collected without a second pass.
+
+Every read-back (a stage's result, fresh or resumed, and each dep) takes
+the manifest's schema, so none runs a job to fetch a parquet footer. A
+dep must have a current checkpoint: a missing manifest, or one of another
+FINGERPRINT_VERSION, raises ValueError, never reads leftover part files.
 
 The fingerprint sees what the stage's plan holds: its analyzed plan and
 the files it scans. Data an operator collects to the driver while the
@@ -36,6 +41,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Version of the stage manifests. Bump it when an engine change alters
 # operator plans or the fingerprint recipe, so every persisted stage
@@ -54,7 +60,9 @@ from pyspark.sql import functions as F
 #      layer, where the hybrid's were driver-built local relations
 #   5: pip_join's plans gate each polygon row between Spark SQL's
 #      parser and an Arrow kernel's
-FINGERPRINT_VERSION = 5
+#   6: manifests record the stage schema and every read-back uses it;
+#      pip_join's cell map and edge join share one edges frame
+FINGERPRINT_VERSION = 6
 
 # An ExprId as the analyzed plan's JSON renders it. Inside a JSON string
 # value every quote is escaped, so a literal can never match.
@@ -102,10 +110,23 @@ class CheckpointedPipeline:
     def _data_path(self, stage: str) -> str:
         return os.path.join(self.root, stage, "data")
 
-    def _fingerprint(self, stage: str, deps: list[str], logical_plan: str) -> str:
+    def _manifest(self, stage: str) -> dict | None:
+        """The stage's manifest if one was written under FINGERPRINT_VERSION."""
+        mp = self._meta_path(stage)
+        if not os.path.exists(mp):
+            return None
+        with open(mp) as f:
+            meta = json.load(f)
+        return meta if meta.get("fingerprint_version") == FINGERPRINT_VERSION else None
+
+    def _read(self, stage: str, meta: dict) -> DataFrame:
+        """The stage's parquet under the schema its manifest records: no footer job."""
+        return self.spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(self._data_path(stage))
+
+    def _fingerprint(self, stage: str, deps: list[tuple[str, dict]], logical_plan: str) -> str:
         h = hashlib.sha256()
         h.update(stage.encode())
-        for d in deps:
+        for d, m in deps:
             # only DURABLE identity goes into the hash: the dep name,
             # its on-disk fingerprint, and its write_id. (The r4 review
             # caught two bugs here: hashing the in-memory result path
@@ -115,12 +136,8 @@ class CheckpointedPipeline:
             # the write_id a force-rebuilt dep with an unchanged plan
             # left dependents resuming stale data.)
             h.update(d.encode())
-            mp = self._meta_path(d)
-            if os.path.exists(mp):
-                with open(mp) as f:
-                    m = json.load(f)
-                h.update(m.get("fingerprint", "").encode())
-                h.update(m.get("write_id", "").encode())
+            h.update(m["fingerprint"].encode())
+            h.update(m["write_id"].encode())
         # the caller passes an already-normalized plan text (_plan_text)
         h.update(logical_plan.encode())
         return h.hexdigest()[:16]
@@ -167,21 +184,20 @@ class CheckpointedPipeline:
     ) -> DataFrame:
         """Run (or resume) one stage. `build` receives the dep
         DataFrames (read back from their checkpoints) and returns the
-        stage DataFrame."""
-        dep_dfs = [self.spark.read.parquet(self._data_path(d)) for d in deps]
-        df = build(*dep_dfs)
-        fp = self._fingerprint(name, list(deps), _plan_text(df) + self._source_identity(df))
+        stage DataFrame. Each dep must have a current checkpoint."""
+        inputs = [(d, self._manifest(d)) for d in deps]
+        missing = [d for d, m in inputs if m is None]
+        if missing:
+            raise ValueError(f"stage {name!r}: deps {missing} have no current checkpoint under {self.root!r}")
+        df = build(*(self._read(d, m) for d, m in inputs))
+        fp = self._fingerprint(name, inputs, _plan_text(df) + self._source_identity(df))
 
         meta_path = self._meta_path(name)
         data_path = self._data_path(name)
-        if not force and os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            if meta.get("fingerprint_version") == FINGERPRINT_VERSION and meta.get("fingerprint") == fp:
-                self.results[name] = StageResult(
-                    name, data_path, meta["rows"], meta["bytes"], meta["partitions"], True
-                )
-                return self.spark.read.parquet(data_path)
+        meta = self._manifest(name)
+        if not force and meta is not None and meta["fingerprint"] == fp:
+            self.results[name] = StageResult(name, data_path, meta["rows"], meta["bytes"], meta["partitions"], True)
+            return self._read(name, meta)
 
         # invalidate BEFORE clobbering the data: a crash mid-overwrite
         # must not leave a matching manifest over partial parquet (the
@@ -211,6 +227,7 @@ class CheckpointedPipeline:
             "rows": rows,
             "bytes": total_bytes,
             "partitions": parts,
+            "schema": df.schema.jsonValue(),
         }
         # atomic publish: a torn _SUCCESS_META.json would crash every
         # later run in json.load
@@ -219,7 +236,7 @@ class CheckpointedPipeline:
             json.dump(meta, f, indent=1)
         os.replace(tmp, meta_path)
         self.results[name] = StageResult(name, data_path, rows, total_bytes, parts, False)
-        return self.spark.read.parquet(data_path)
+        return self._read(name, meta)
 
     def manifest(self) -> dict:
         return {

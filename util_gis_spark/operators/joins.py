@@ -590,7 +590,9 @@ def _pip_join_cells(
     pts = points_df.withColumn(
         "cell", cells.cell_expr(cells.quote_ident(lon_col), cells.quote_ident(lat_col), res)
     )
-    pol = _cell_map(_polygon_edges(polygons_wkt_df, python), res, attach_edges == "inline")
+    # one edges frame for the cell map and the edge join: the parse is analysed once
+    edges = _polygon_edges(polygons_wkt_df, python)
+    pol = _cell_map(edges, res, attach_edges == "inline")
     if salt_buckets > 0:
         pts = pts.withColumn("salt", F.pmod(F.xxhash64(lon_col, lat_col), F.lit(salt_buckets)))
         pol = pol.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
@@ -601,7 +603,7 @@ def _pip_join_cells(
     pol = pol.select(*keys, *pol_cols)
     cand = pts.join(F.broadcast(pol) if hybrid else pol, on=keys, how="inner")
     if attach_edges != "inline":
-        cand = cand.join(F.broadcast(_polygon_edges(polygons_wkt_df, python)), on="polygon_id", how="left")
+        cand = cand.join(F.broadcast(edges), on="polygon_id", how="left")
     out_cols = [f.name for f in points_df.schema.fields] + ["polygon_id"]
     return cand.filter(_refine_keep(lon_col, lat_col)).select(*out_cols)
 

@@ -725,7 +725,7 @@ def q_wkt_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     wkt_4d_array row) + count(*). The stage root is wiped before each
     call and reused per process: a FRESH root keeps the resume
     machinery out of the compare (it has its own tests in
-    tests/test_checkpoint.py — an existing manifest would make
+    tests/test_checkpoint_images.py — an existing manifest would make
     stage() resume instead of write), and the fixed name bounds the
     disk left behind to one layer copy per process instead of one per
     call (r6 review). Rotation-ready for r7."""
