@@ -7,9 +7,9 @@ Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds T
 --trace 0` once in each checkout (its own directory, its own sources),
 alternating which side goes first; T is BENCHMARK.json's `run_seconds`.
 It then prints, for every end-to-end metric that BENCHMARK.json declares,
-each side's median and quartiles; for the claimed metric (`--claim`, default call_p50_s) the number of
-pairs the change won and whether the median gap exceeds the parent's
-interquartile range; and the `failed` count of every run. It only runs
+each side's median and quartiles; for the claimed metric, call_p50_s, the
+number of pairs the change won and whether the median gap exceeds the
+parent's interquartile range; and the `failed` count of every run. It only runs
 perfbench and reads its last output line: it changes no file.
 """
 
@@ -22,6 +22,7 @@ import statistics
 import subprocess
 import sys
 
+CLAIM = "call_p50_s"  # lower is better
 
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
@@ -45,14 +46,11 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--claim", default="call_p50_s", help="the end-to-end metric the change claims")
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
-    if args.claim not in better:
-        ap.error(f"--claim must be one of {sorted(better)}")
     sides = {"parent": args.parent, "change": args.change}
     runs: dict[str, list[dict]] = {"parent": [], "change": []}
     for i in range(args.pairs):
@@ -60,29 +58,26 @@ def main(argv=None) -> int:
         for side in order:
             out = run_once(sides[side], args.workload, args.seed, bench["run_seconds"])
             runs[side].append(out)
-            claim = out["metrics"][args.claim]["value"]
-            print(f"pair {i + 1} {side}: {args.claim}={claim:.4f} failed={out['failed']}"
+            claim = out["metrics"][CLAIM]["value"]
+            print(f"pair {i + 1} {side}: {CLAIM}={claim:.4f} failed={out['failed']}"
                   f" attempted={out['attempted']}", flush=True)
 
     def values(side: str, metric: str) -> list[float]:
-        return [r["metrics"][metric]["value"] for r in runs[side] if metric in r["metrics"]]
+        return [r["metrics"][metric]["value"] for r in runs[side]]
 
     print(f"\n{args.workload} seed {args.seed}, {args.pairs} pairs: median [Q1, Q3]")
     for metric in better:
         cells = []
         for side in sides:
-            vals = values(side, metric)
-            if vals:
-                q1, q2, q3 = quartiles(vals)
-                cells.append(f"{side} {q2:.4g} [{q1:.4g}, {q3:.4g}]")
+            q1, q2, q3 = quartiles(values(side, metric))
+            cells.append(f"{side} {q2:.4g} [{q1:.4g}, {q3:.4g}]")
         print(f"  {metric} ({better[metric]} is better): " + "; ".join(cells))
 
-    sign = 1.0 if better[args.claim] == "lower" else -1.0
-    parent, change = values("parent", args.claim), values("change", args.claim)
-    wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
+    parent, change = values("parent", CLAIM), values("change", CLAIM)
+    wins = sum(p > c for p, c in zip(parent, change))
     p_q1, p_med, p_q3 = quartiles(parent)
-    gap = sign * (p_med - statistics.median(change))
-    print(f"\nclaim {args.claim}: change won {wins}/{len(parent)} pairs;"
+    gap = p_med - statistics.median(change)
+    print(f"\nclaim {CLAIM}: change won {wins}/{len(parent)} pairs;"
           f" median gap {gap:.4g} vs parent IQR {p_q3 - p_q1:.4g}:"
           f" {'exceeds' if gap > p_q3 - p_q1 else 'does not exceed'}")
     print("failed per run: parent", [r["failed"] for r in runs["parent"]],
