@@ -411,6 +411,30 @@ class TestAnnIvf:
         assert got == self._jvm_ivf(dirty, self._label_cents(dirty)) and got
         assert [r[3] for r in got if r[0] == 100] == [None] * 3
 
+    @pytest.mark.parametrize("bad", ["null", "zero"])
+    def test_kmeans_skips_degenerate_sample_rows(self, spark, sf_dir, bad):
+        """kmeans_centroids samples non-NULL rows and drops zero-norm
+        ones: a NULL embedding in the sample crashed np.stack, and a
+        zero vector made the k-means++ probabilities NaN. Both give k
+        finite centroids, and IVF over them matches the JVM reference."""
+        import numpy as np
+
+        from util_gis_spark.operators.ann import ann_ivf_topk, kmeans_centroids
+
+        emb = D.load(spark, sf_dir, "embeddings")
+        dim = len(emb.select("embedding").first()["embedding"])
+        bad_v = F.lit(None) if bad == "null" else F.array(*[F.lit(0.0) for _ in range(dim)])
+        dirty = emb.withColumn(
+            "embedding",
+            F.when(F.col("vec_id") == 11, bad_v).otherwise(
+                F.col("embedding").cast("array<double>")
+            ),
+        )
+        cents = kmeans_centroids(dirty, k=6)
+        assert len(cents) == 6 and all(np.isfinite(c).all() for _, c in cents)
+        got = self._rows(ann_ivf_topk(dirty, centroids=cents))
+        assert got == self._jvm_ivf(dirty, cents) and got
+
     @pytest.mark.parametrize("vec_id", [7, 13])
     def test_nan_component_list_ranking_matches_jvm_reference(self, spark, sf_dir, vec_id):
         """One NaN component in one corpus vector makes its label's
@@ -1095,25 +1119,54 @@ class TestBucketedSink:
 
 
 class TestBlockedTopK:
-    def test_blocked_equals_single_broadcast(self, spark, sf_dir):
-        """embed_topk_blocked (per-block broadcasts, B candidate scans)
-        must emit exactly the baseline kernel's rows even with a block
-        size that forces multiple blocks."""
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import embed_topk_blocked
-        from util_gis_spark.queries import q_embed_topk
+    def test_one_probe_chunks_give_same_rows(self, spark, sf_dir, monkeypatch):
+        """The fused kernel prunes with one matmul per chunk of probes;
+        a one-probe chunk (the element budget patched to 1) must leave
+        the rows of both operators that score through it unchanged."""
+        from util_gis_spark.operators import ann
 
-        base = {
-            (r["probe_id"], r["neighbor_id"], r["cos_sim"])
-            for r in q_embed_topk(spark, sf_dir).collect()
-        }
-        blocked = {
-            (r["probe_id"], r["neighbor_id"], r["cos_sim"])
-            for r in embed_topk_blocked(
-                D.load(spark, sf_dir, "embeddings"), block_size=2
-            ).collect()
-        }
-        assert blocked == base and len(blocked) > 0
+        emb = D.load(spark, sf_dir, "embeddings")
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        want_exact = rows(ann.embed_topk_blocked(emb))
+        want_ivf = rows(ann.ann_ivf_topk(emb))
+        with monkeypatch.context() as m:
+            m.setattr(ann, "_SCORE_BLOCK_ELEMS", 1)
+            assert rows(ann.embed_topk_blocked(emb)) == want_exact and want_exact
+            assert rows(ann.ann_ivf_topk(emb)) == want_ivf and want_ivf
+
+    def test_degenerate_rows_match_duckdb_twin(self, spark, sf_dir, tmp_path):
+        """A NULL row 7 and zero vectors 11 and 100, as in
+        TestAnnIvf::test_transports_agree_on_degenerate_rows: the
+        exact top-k must give the rows of the DuckDB `embed_topk` twin
+        on the same frame. The zero probe 100 gets 5 rows with NULL
+        cos_sim, as the twin and ann_ivf_topk give."""
+        import duckdb
+
+        from util_gis_spark import queries as Q
+        from util_gis_spark.operators.ann import embed_topk_blocked
+
+        emb = D.load(spark, sf_dir, "embeddings")
+        dim = len(emb.select("embedding").first()["embedding"])
+        dirty = emb.withColumn(
+            "embedding",
+            F.when(F.col("vec_id") == 7, F.lit(None))
+            .when(
+                F.col("vec_id").isin(11, 100),
+                F.array(*[F.lit(0.0) for _ in range(dim)]),
+            )
+            .otherwise(F.col("embedding").cast("array<double>")),
+        )
+        path = str(tmp_path / "embeddings.parquet")
+        dirty.write.parquet(path)
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')")
+        want = sorted(con.execute(Q.oracles()["embed_topk"]).fetchall())
+        got = sorted(tuple(r) for r in embed_topk_blocked(dirty).collect())
+        assert got == want and got
+        assert [r[2] for r in got if r[0] == 100] == [None] * 5
 
     def test_empty_probe_set(self, spark, sf_dir):
         from util_gis_spark import datasets as D
@@ -1149,24 +1202,28 @@ class TestBlockedTopK:
         }
         # probe 100 is skipped in both forms; candidate sets differ by
         # one row (100 absent vs NULL) which the kernel also skips via
-        # the NULL row never reaching a block, so rows must agree
+        # the NULL row never reaching it, so rows must agree
         assert dirty == clean and len(dirty) > 0
 
-    def test_probe_byte_cap_refuses(self, spark, sf_dir):
-        """The probe ingestion is byte-capped like the kNN candidate
-        ingestion (VERDICT r5 Wrong #4): an over-cap probe set must
-        refuse with a pointer at LSH/IVF, never silently collect."""
-        import pytest
+    def test_probe_byte_cap_boundary(self, spark, sf_dir, monkeypatch):
+        """The probe ingestion is byte-capped at _CLOSURE_MAX_PROBE_BYTES
+        like ann_ivf_topk's: a probe matrix of exactly the cap runs and
+        gives the uncapped rows; one byte over refuses with a pointer
+        at LSH/IVF, never silently collects."""
+        from util_gis_spark.operators import ann
 
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import embed_topk_blocked
-
-        with pytest.raises(ValueError, match="max_probe_bytes"):
-            embed_topk_blocked(
-                D.load(spark, sf_dir, "embeddings"),
-                probe_filter="vec_id % 2 = 0",
-                max_probe_bytes=1024,
-            )
+        emb = D.load(spark, sf_dir, "embeddings")
+        dim = len(emb.select("embedding").first()["embedding"])
+        n_probes = emb.filter("vec_id % 100 = 0 AND embedding IS NOT NULL").count()
+        size = n_probes * (dim + 1) * 8
+        want = sorted(tuple(r) for r in ann.embed_topk_blocked(emb).collect())
+        with monkeypatch.context() as m:
+            m.setattr(ann, "_CLOSURE_MAX_PROBE_BYTES", size)
+            assert sorted(tuple(r) for r in ann.embed_topk_blocked(emb).collect()) == want
+            assert want
+            m.setattr(ann, "_CLOSURE_MAX_PROBE_BYTES", size - 1)
+            with pytest.raises(ValueError, match="LSH/IVF"):
+                ann.embed_topk_blocked(emb)
 
 
 class TestMapApply:

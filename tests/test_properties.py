@@ -173,6 +173,74 @@ class TestGridNearestProperties:
         assert np.allclose(got_d, want_d, rtol=0, atol=1e-9)
 
 
+class TestPruneRescoreProperties:
+    """ann._prune_rescore, the Spark-free core of the one cosine top-k
+    kernel: its survivors, rounded to 5 decimals and ranked by
+    (cos desc, neighbor_id), must give exactly the top-k of a
+    brute-force fold over every pair, and each survivor's cosine must
+    be that fold's double."""
+
+    @staticmethod
+    def _topk(probe_ids, neighbor_ids, cos, k):
+        rows = {}
+        for p, n, c in zip(probe_ids, neighbor_ids, cos):
+            r = None if np.isnan(c) else round(float(c), 5)
+            rows.setdefault(int(p), []).append((r, int(n)))
+        # NaN arrives in the JVM as NULL, which ranks last
+        key = lambda t: (t[0] is None, -(t[0] or 0.0), t[1])  # noqa: E731
+        return {p: sorted(v, key=key)[:k] for p, v in rows.items()}
+
+    @settings(max_examples=150, deadline=None)
+    @given(
+        seed=st.integers(min_value=0, max_value=10_000),
+        n_cand=st.integers(min_value=1, max_value=40),
+        n_probe=st.integers(min_value=1, max_value=12),
+        dim=st.integers(min_value=1, max_value=8),
+        k=st.integers(min_value=1, max_value=6),
+        grid=st.booleans(),
+        n_dup=st.integers(min_value=0, max_value=10),
+        n_near=st.integers(min_value=0, max_value=10),
+        n_zero=st.integers(min_value=0, max_value=3),
+        chunk=st.sampled_from(["one", "over", "random"]),
+    )
+    def test_survivors_give_brute_force_topk(
+        self, seed, n_cand, n_probe, dim, k, grid, n_dup, n_near, n_zero, chunk
+    ):
+        from util_gis_spark.operators.ann import _fold_dots, _fold_rowdots, _prune_rescore
+
+        rng = np.random.default_rng(seed)
+        # small integer grids make exact cosine ties common
+        B = rng.integers(-2, 3, (n_cand, dim)).astype(float) if grid else rng.standard_normal(
+            (n_cand, dim)
+        )
+        for _ in range(n_dup):  # exact duplicates, and exact 2x copies
+            i, j = rng.integers(n_cand, size=2)
+            B[i] = B[j] * (2.0 if rng.random() < 0.5 else 1.0)
+        for _ in range(n_near):  # cosines a fraction of a quantum apart
+            i, j = rng.integers(n_cand, size=2)
+            B[i] = B[j] + 1e-4 * rng.standard_normal(dim)
+        B[rng.integers(n_cand, size=n_zero)] = 0.0
+        cids = rng.permutation(n_cand).astype(np.int64) * 3 + 1
+        # probes are corpus rows (so self pairs are excluded) or fresh ones
+        take = rng.integers(n_cand, size=n_probe)
+        fresh = rng.random(n_probe) < 0.25
+        P = np.where(fresh[:, None], rng.standard_normal((n_probe, dim)), B[take])
+        pids = np.where(fresh, 10_000 + np.arange(n_probe), cids[take]).astype(np.int64)
+        pnorm = np.sqrt(_fold_rowdots(P, P))
+        bnorm = np.sqrt(_fold_rowdots(B, B))
+        rows = {"one": 1, "over": n_probe + 3, "random": int(rng.integers(1, n_probe + 1))}[chunk]
+
+        pi, bi, cos = _prune_rescore(pids, P, pnorm, cids, B, bnorm, k, rows)
+
+        with np.errstate(invalid="ignore", divide="ignore"):
+            full = _fold_dots(P, B) / (pnorm[:, None] * bnorm[None, :])
+        assert (pids[pi] != cids[bi]).all()
+        assert np.array_equal(cos, full[pi, bi], equal_nan=True)
+        fp, fb = np.nonzero(pids[:, None] != cids[None, :])
+        want = self._topk(pids[fp], cids[fb], full[fp, fb], k)
+        assert self._topk(pids[pi], cids[bi], cos, k) == want
+
+
 class TestGridNearestAntimeridianAndNaN:
     """r5 review findings: the grid kernel had no east-west wraparound
     (a cross-antimeridian candidate could be closer than the accepted

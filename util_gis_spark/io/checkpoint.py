@@ -21,8 +21,9 @@ the files it scans. Data an operator collects to the driver while the
 plan is built and hands to a Python kernel's closure is invisible to it,
 so a stage over such an operator resumes stale rows after that input is
 rewritten in place: `knn_join`'s candidates, `pip_join_broadcast`'s
-polygons and `ann_ivf_topk`'s probes. `pip_join` is not affected: its
-polygon side is built inside the plan from the layer's files.
+polygons, and the probes of `ann_ivf_topk` and `embed_topk_blocked`.
+`pip_join` is not affected: its polygon side is built inside the plan
+from the layer's files.
 
 At 10^12-row scale each stage write is an Iceberg table append and the
 manifest maps 1:1 onto Iceberg snapshot metadata; parquet + JSON is

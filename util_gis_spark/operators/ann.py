@@ -1,8 +1,8 @@
 """Approximate nearest neighbor over embeddings (array<float>).
 
 - Exact cosine top-k (embed_topk_blocked; queries.q_embed_topk is
-  its k=5 call): blocks of probes broadcast, one Arrow matmul kernel
-  over the candidates, O(P x N).
+  its k=5 call): every probe in one list that ann_ivf_topk's fused
+  kernel scores against the whole corpus in one pass, O(P x N).
 - LSH variant: deterministic random-hyperplane signatures — bit
   j of the bucket is sign(dot(v, h_j)) with h_j[d] derived from an
   integer hash, so the SAME plane values are expressible in Spark
@@ -260,11 +260,23 @@ def ann_lsh_topk(
     # byte-for-byte unchanged. The HOF form scored ~64 interpreted
     # lambda calls per pair — the dominant cost at 10^6 candidate
     # pairs on the generated ladder.
-    scored = _cos_kernel(
-        joined.select("probe_id", F.col("vec_id").alias("neighbor_id"), "pv", "v")
-    ).select("probe_id", "neighbor_id", F.round("cos_raw", 5).alias("cos_sim"))
+    return _round_topk(
+        _cos_kernel(joined.select("probe_id", F.col("vec_id").alias("neighbor_id"), "pv", "v")),
+        k,
+    )
+
+
+def _round_topk(scored: DataFrame, k: int, *carry: str) -> DataFrame:
+    """The tail of all three top-k operators: round cos_raw to 5
+    decimals in the JVM (F.round, the oracles' HALF_UP semantics), then
+    keep each probe's top `k` by (cos_sim desc, neighbor_id). A NaN
+    cosine arrives as NULL through Arrow and ranks last. Output
+    (probe_id, neighbor_id, cos_sim, *carry)."""
+    out = scored.select(
+        "probe_id", "neighbor_id", F.round("cos_raw", 5).alias("cos_sim"), *carry
+    )
     w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+    return out.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
 
 
 def _combine_label_partials(rows, dim: int) -> list[tuple[int, list[float]]]:
@@ -401,36 +413,85 @@ def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: i
     }
 
 
+# Elements per pruning matmul, as joins._grid_nearest_all sizes its
+# distance matrix (32 MB float64): bounds memory per Arrow batch.
+_SCORE_BLOCK_ELEMS = 1 << 22
+
+# Bound on |matmul cosine - fold cosine| for finite vectors whose squared
+# norms do not overflow: each dot errs by at most ~dim * 2^-53 * |p||b|
+# in any summation order, and both divide by the same fold norms, so the
+# gap is ~dim * 2^-52 (1.4e-14 at 64 dims, < 2.3e-10 below 10^6 dims).
+_FOLD_GAP = 1e-9
+
+
+def _prune_rescore(pids, P, pnorm, cids, B, bnorm, k: int, chunk: int):
+    """(pi, bi, cos): the pairs of probes (pids, P) x candidates (cids,
+    B) that survive the quantum-safe top-k cut, self pairs excluded, as
+    row indices plus their fold cosines (pnorm, bnorm: fold norms).
+    Spark-free, so the property tests check it against brute force.
+
+    A BLAS matmul over `chunk` probe rows at a time gives cosines `a`;
+    per probe, kth is the k-th largest finite `a`, and a pair is dropped
+    only when a < kth - 1e-5 - 2 * _FOLD_GAP. Then k pairs have fold
+    cosines >= kth - _FOLD_GAP and the dropped one's is below kth - 1e-5
+    - _FOLD_GAP: each beats it by more than one rounding quantum, hence
+    by a strictly larger ROUNDED value (|round5(x) - x| <= 0.5e-5), so
+    it cannot enter the rounded top-k whatever the neighbor_id
+    tie-break. NaN cosines (0/0 from a zero-norm vector) are never the
+    kth and never dropped: they reach the JVM as NULL, which ranks last,
+    and a probe with fewer than k finite cosines must still get them.
+    Survivors are rescored with _fold_rowdots, so each double is
+    bit-identical to the ascending-d fold of the JVM form and the
+    DuckDB twins."""
+    import numpy as np
+
+    kk = min(k, len(cids))
+    found_p, found_b = [], []
+    for s in range(0, len(P), chunk):
+        with np.errstate(invalid="ignore", divide="ignore"):
+            a = (P[s : s + chunk] @ B.T) / (pnorm[s : s + chunk, None] * bnorm[None, :])
+        keep = pids[s : s + chunk, None] != cids[None, :]
+        ranked = np.where(keep & ~np.isnan(a), a, -np.inf)
+        kth = -np.partition(-ranked, kk - 1, axis=1)[:, kk - 1]
+        keep &= ~(a < kth[:, None] - 1e-5 - 2 * _FOLD_GAP)
+        pi, bi = np.nonzero(keep)
+        found_p.append(pi + s)
+        found_b.append(bi)
+    pi, bi = np.concatenate(found_p), np.concatenate(found_b)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        cos = _fold_rowdots(P[pi], B[bi]) / (pnorm[pi] * bnorm[bi])
+    return pi, bi, cos
+
+
 def _assign_score_kernel(
     e: DataFrame, cent_rows: list[tuple[int, list[float]]], pmap: dict, k: int
 ) -> DataFrame:
-    """(probe_id, neighbor_id, list_id, cos_raw): the FUSED corpus pass
-    of ann_ivf_topk — ONE Arrow trip assigns each corpus vector to its
-    list and scores it against that list's probes. The centroid matrix
-    and the per-list probe matrices ride the task closure (serialized
-    once per stage into the torrent-broadcast task binary, so they cost
-    per executor, not per task or per candidate row).
+    """(probe_id, neighbor_id, list_id, cos_raw): the one cosine top-k
+    scoring kernel, a FUSED corpus pass — ONE Arrow trip assigns each
+    corpus vector to its list and scores it against that list's probes
+    (_prune_rescore). The centroid matrix and the per-list probe
+    matrices ride the task closure (serialized once per stage into the
+    torrent-broadcast task binary, so they cost per executor, not per
+    task or per candidate row). ann_ivf_topk passes one list per
+    centroid; embed_topk_blocked passes one list that holds every
+    probe, whose lone centroid takes every vector.
 
     Bit-identical doubles to the pair-at-a-time JVM form (_cos_expr
     after a dot-desc, list_id-asc window assignment; parity-tested):
-    the assignment argmax and both scoring folds accumulate in
+    the assignment argmax and the rescoring folds accumulate in
     ascending-d order, first-max tie-break == smaller list_id.
 
     Emits a PRUNED superset of the final rows: per (probe, list,
-    batch), only candidates whose raw cosine is within 1e-5 (one
-    rounding quantum) of the k-th best kept survive. Any dropped row
-    is beaten by k rows whose raw cosine exceeds it by > 1e-5, hence
-    by k STRICTLY larger ROUNDED values (|round5(x)-x| <= 0.5e-5), so
-    it can never enter the global rounded top-k regardless of the
-    neighbor_id tie-break — same cut as embed_topk_blocked. The JVM
-    F.round + window downstream then keep exactly the rows an unpruned
-    pass would."""
+    batch), _prune_rescore keeps every candidate that could still
+    enter the rounded top-k, so the JVM round + window downstream
+    (_round_topk) keep exactly the rows an unpruned pass would."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     lids = np.array([lid for lid, _ in cent_rows], dtype=np.int64)
     C = np.array([c for _, c in cent_rows], dtype=np.float64)  # k x dim
+    block_elems = _SCORE_BLOCK_ELEMS  # the driver's value, not the worker's
 
     schema = T.StructType(
         [
@@ -445,33 +506,19 @@ def _assign_score_kernel(
         V = np.vstack(pdf["v"].to_numpy()).astype(np.float64)  # n x dim
         cids = pdf["vec_id"].to_numpy(np.int64)
         assigned = lids[np.argmax(_fold_dots(V, C), axis=1)]  # first max -> smallest list_id
+        vnorm = np.sqrt(_fold_rowdots(V, V))
         out_p, out_n, out_l, out_c = [], [], [], []
-        for lid in pmap:
+        for lid, (pids, P) in pmap.items():
             sel = np.flatnonzero(assigned == lid)
             if not len(sel):
                 continue
-            pids, P = pmap[lid]
-            B = V[sel]
-            sub_ids = cids[sel]
-            pn, bn = _fold_rowdots(P, P), _fold_rowdots(B, B)
-            cos = _fold_dots(P, B) / (np.sqrt(pn)[:, None] * np.sqrt(bn)[None, :])
-            keep = pids[:, None] != sub_ids[None, :]
-            # per-probe quantum-safe top-k cut (see docstring).
-            # NaN cosines (zero-norm vectors: 0/0) are KEPT: Arrow
-            # hands them to the JVM as NULL, which ranks last, and
-            # a probe with fewer than k finite cosines must still
-            # get them (the parity test covers a zero probe).
-            masked = np.where(keep, cos, -np.inf)
-            kk = min(k, len(sel))
-            kth = -np.partition(-masked, kk - 1, axis=1)[:, kk - 1]
-            keep &= (cos >= (kth[:, None] - 1e-5)) | np.isnan(cos)
-            pi, bi = np.nonzero(keep)
-            if not len(pi):
-                continue
+            chunk = max(min(len(P), block_elems // len(sel)), 1)
+            pnorm = np.sqrt(_fold_rowdots(P, P))
+            pi, bi, cos = _prune_rescore(pids, P, pnorm, cids[sel], V[sel], vnorm[sel], k, chunk)
             out_p.append(pids[pi])
-            out_n.append(sub_ids[bi])
+            out_n.append(cids[sel][bi])
             out_l.append(np.full(len(pi), int(lid), dtype=np.int64))
-            out_c.append(cos[pi, bi])
+            out_c.append(cos)
         if not out_p:
             return None
         return pd.DataFrame(
@@ -488,37 +535,27 @@ def _assign_score_kernel(
     return map_apply(e.select("vec_id", "v"), run, schema, skip_null=("v",))
 
 
-def _cos_kernel(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
-    """(probe_id, neighbor_id, *carry, cos_raw) from (probe_id,
-    neighbor_id, pv, v, *carry) — vectorized across pairs,
-    accumulating in ascending-d order so each double is bit-identical
-    to the sequential aggregate/zip_with fold of _cos_expr. `carry`
-    columns (long-typed) pass through untouched."""
+def _cos_kernel(pairs: DataFrame) -> DataFrame:
+    """(probe_id, neighbor_id, cos_raw) from (probe_id, neighbor_id,
+    pv, v) — vectorized across pairs, accumulating in ascending-d
+    order so each double is bit-identical to the sequential
+    aggregate/zip_with fold of _cos_expr."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("probe_id", T.LongType()), T.StructField("neighbor_id", T.LongType())]
-        + [T.StructField(c, T.LongType()) for c in carry]
-        + [T.StructField("cos_raw", T.DoubleType())]
-    )
 
     def run(pdf):
         a = np.vstack(pdf["pv"].to_numpy()).astype(np.float64)
         b = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        out = {
-            "probe_id": pdf["probe_id"].to_numpy(np.int64),
-            "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
-        }
-        for c in carry:
-            out[c] = pdf[c].to_numpy(np.int64)
-        out["cos_raw"] = _fold_rowdots(a, b) / (
-            np.sqrt(_fold_rowdots(a, a)) * np.sqrt(_fold_rowdots(b, b))
+        return pd.DataFrame(
+            {
+                "probe_id": pdf["probe_id"].to_numpy(np.int64),
+                "neighbor_id": pdf["neighbor_id"].to_numpy(np.int64),
+                "cos_raw": _fold_rowdots(a, b)
+                / (np.sqrt(_fold_rowdots(a, a)) * np.sqrt(_fold_rowdots(b, b))),
+            }
         )
-        return pd.DataFrame(out)
 
-    return map_apply(pairs, run, schema)
+    return map_apply(pairs, run, "probe_id long, neighbor_id long, cos_raw double")
 
 
 def kmeans_centroids(
@@ -538,11 +575,14 @@ def kmeans_centroids(
 
     Everything is deterministic (fixed seed, fixed sample order), so
     two runs — or the engine and a numpy replica in the tests — build
-    the identical quantizer."""
+    the identical quantizer. The sample takes non-NULL embeddings only,
+    and drops rows whose norm is zero or not finite before
+    normalizing: they have no direction to train on."""
     import numpy as np
 
     pdf = (
         embeddings_df.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .filter(F.col("v").isNotNull())
         .orderBy("vec_id")
         .limit(sample)
         .toPandas()
@@ -550,8 +590,12 @@ def kmeans_centroids(
     if len(pdf) == 0:
         return []
     m = np.stack(pdf["v"].to_numpy())
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    norm = np.linalg.norm(m, axis=1, keepdims=True)
+    ok = np.isfinite(norm[:, 0]) & (norm[:, 0] > 0)
+    m = m[ok] / norm[ok]
     n = len(m)
+    if n == 0:
+        return []
     k = min(k, n)
     rng = np.random.default_rng(seed)
     # k-means++ seeding on cosine distance (1 - dot)
@@ -581,11 +625,12 @@ def kmeans_centroids(
     return [(j, C[j].tolist()) for j in range(k)]
 
 
-# Byte cap on the per-list probe matrices ann_ivf_topk ships in a task
-# closure: every probe sits in min(nprobe, lists) matrices as an int64
-# id plus dim float64s (500 probes x nprobe 3 x 520 B ~ 0.8 MB at 64
-# dims). Same 64 MB convention as joins.EDGES_BROADCAST_BYTES.
-# Over it, ann_ivf_topk refuses, as embed_topk_blocked does.
+# Byte cap on the per-list probe matrices _assign_score_kernel ships in
+# a task closure: every probe sits in min(nprobe, lists) matrices as an
+# int64 id plus dim float64s (500 probes x nprobe 3 x 520 B ~ 0.8 MB at
+# 64 dims; embed_topk_blocked's one list is nprobe = lists = 1). Same
+# 64 MB convention as joins.EDGES_BROADCAST_BYTES. Over it, ann_ivf_topk
+# and embed_topk_blocked refuse.
 _CLOSURE_MAX_PROBE_BYTES = 64 << 20
 
 
@@ -655,14 +700,7 @@ def ann_ivf_topk(
         return embeddings_df.sparkSession.createDataFrame(
             [], "probe_id long, neighbor_id long, cos_sim double, list_id long"
         )
-    scored = _assign_score_kernel(e, cent_rows, pmap, k).select(
-        "probe_id",
-        "neighbor_id",
-        F.round("cos_raw", 5).alias("cos_sim"),  # oracle HALF_UP semantics
-        "list_id",
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+    return _round_topk(_assign_score_kernel(e, cent_rows, pmap, k), k, "list_id")
 
 
 def ann_ivf_topk_sql(probe_filter: str = "vec_id % 100 = 0", k: int = 3, nprobe: int = 3) -> str:
@@ -810,103 +848,54 @@ def embed_topk_blocked(
     embeddings_df: DataFrame,
     probe_filter: str = "vec_id % 100 = 0",
     k: int = 5,
-    block_size: int = 10_000,
-    max_probe_bytes: int = 256 << 20,
 ) -> DataFrame:
-    """EXACT cosine top-k: probes are split into blocks of
-    `block_size`, each block ships as its own task broadcast, and the
-    candidate table is scanned once per block (Catalyst unions the
-    per-block kernels into one job). Cost is B = ceil(P / block_size)
-    candidate scans — the textbook batched exact-kNN trade: bounded
-    memory per task, linear extra scans. Each candidate batch runs one
-    matmul against the block and keeps a per-batch local top-k; the
-    global top-k window finishes it. Output (probe_id, neighbor_id,
-    cos_sim), self excluded, (cos desc, neighbor_id) tie-break; NULL
-    embeddings are skipped on both sides.
+    """EXACT cosine top-k: every probe goes into ONE list that
+    _assign_score_kernel scores against the whole corpus in one pass,
+    the probe matrix riding the task closure; _round_topk finishes it.
+    Output (probe_id, neighbor_id, cos_sim), self excluded, (cos desc,
+    neighbor_id) tie-break; NULL embeddings are skipped on both sides,
+    and a zero-norm vector's cosines are NULL and rank last.
 
     The probe ingestion is Arrow (toPandas -> numpy columns, never
-    per-row Python objects) and BYTE-capped like the kNN candidate
-    ingestion (joins._cand_arrays): above `max_probe_bytes` (default
-    256 MB, ~500k probes x 64 dims) it REFUSES and points at LSH/IVF
-    — the cap is enforced with limit(cap_rows+1) inside the ingestion
-    job, bounding the transfer itself, not just the kept matrix."""
+    per-row Python objects) and BYTE-capped like ann_ivf_topk's: above
+    _CLOSURE_MAX_PROBE_BYTES (64 MB, ~129k probes x 64 dims) it
+    REFUSES and points at LSH/IVF — the cap is enforced with
+    limit(cap_rows+1) inside the ingestion job, bounding the transfer
+    itself, not just the kept matrix."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
-    spark = embeddings_df.sparkSession
     e = embeddings_df.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    empty = embeddings_df.sparkSession.createDataFrame(
+        [], "probe_id long, neighbor_id long, cos_sim double"
     )
     # dim probe skips NULL embeddings: size(NULL) is NULL, and the row
     # the scan happens to return first need not be a probe row, so an
     # unrelated NULL would TypeError the byte-cap arithmetic (review r6)
     first = e.filter(F.col("v").isNotNull()).select(F.size("v").alias("d")).first()
     if first is None:
-        return spark.createDataFrame([], schema)
-    cap_rows = max(max_probe_bytes // (8 * int(first["d"]) + 8), 1)
-    # NULL embeddings are skipped like the dim probe above (ADVICE r6
-    # #4): a NULL v row matching probe_filter crashed np.vstack below
-    cpdf = (
+        return empty
+    dim = int(first["d"])
+    cap_rows = _CLOSURE_MAX_PROBE_BYTES // _probe_matrix_bytes(1, dim, 1, 1)
+    # NULL probes are skipped like the dim probe above: a NULL v row
+    # matching probe_filter would crash np.vstack below
+    ppdf = (
         e.filter(probe_filter)
         .filter(F.col("v").isNotNull())
         .limit(cap_rows + 1)
         .toPandas()
-        .sort_values("vec_id")
     )
-    if len(cpdf) > cap_rows:
+    size = _probe_matrix_bytes(len(ppdf), dim, 1, 1)
+    if size > _CLOSURE_MAX_PROBE_BYTES:
         raise ValueError(
-            f"embed_topk_blocked: probe matrix exceeds max_probe_bytes="
-            f"{max_probe_bytes} ({cap_rows} x {int(first['d'])}-dim rows); "
-            "use the LSH/IVF path for unbounded probe sets or raise the cap"
+            f"embed_topk_blocked: probe matrix exceeds {_CLOSURE_MAX_PROBE_BYTES} bytes "
+            f"(at least {size}); narrow probe_filter or use the LSH/IVF path "
+            "(ann_lsh_topk, ann_ivf_topk) for unbounded probe sets"
         )
-    if len(cpdf) == 0:
-        return spark.createDataFrame([], schema)
-    pid_all = cpdf["vec_id"].to_numpy(np.int64)
-    pm_all = np.vstack(cpdf["v"].to_numpy()).astype(np.float64)
-
-    scored = None
-    for s in range(0, len(pid_all), block_size):
-        pid_l = pid_all[s : s + block_size]
-        pm = pm_all[s : s + block_size]
-        bc = spark.sparkContext.broadcast(
-            (pid_l, pm / np.linalg.norm(pm, axis=1, keepdims=True))
-        )
-
-        def score(pdf, _bc=bc):
-            pid, pm_n = _bc.value
-            cid = pdf["vec_id"].to_numpy(np.int64)
-            cm = np.vstack(pdf["v"].to_numpy())
-            cm_n = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            cos = pm_n @ cm_n.T
-            P, B = cos.shape
-            kk = min(k + 1, B)
-            # rounding-tie-safe cut: the global rank ties on the ROUNDED
-            # value with neighbor_id ascending, so keep everything within
-            # one 1e-5 quantum of the kk-th best UNROUNDED value — a
-            # plain top-k cut could drop the smaller-id side of a tie
-            kth = -np.partition(-cos, kk - 1, axis=1)[:, kk - 1]
-            rows_p, rows_c, rows_s = [], [], []
-            for i in range(P):
-                for j in np.flatnonzero(cos[i] >= kth[i] - 1e-5):
-                    if cid[j] != pid[i]:
-                        rows_p.append(pid[i])
-                        rows_c.append(cid[j])
-                        rows_s.append(round(float(cos[i, j]), 5))
-            return pd.DataFrame({"probe_id": rows_p, "neighbor_id": rows_c, "cos_sim": rows_s})
-
-        # NULL-embedding candidates can never be a neighbor: skipped,
-        # as the probe collect skips NULL probes
-        part = map_apply(e, score, schema, skip_null=("v",))
-        scored = part if scored is None else scored.unionByName(part)
-
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    if len(ppdf) == 0:
+        return empty
+    pmap = {
+        0: (ppdf["vec_id"].to_numpy(np.int64), np.vstack(ppdf["v"].to_numpy()).astype(np.float64))
+    }
+    return _round_topk(_assign_score_kernel(e, [(0, [0.0] * dim)], pmap, k), k)

@@ -1351,7 +1351,8 @@ def q_docs_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for probe vectors (vec_id % 100 ==
     0), excluding self: ann.embed_topk_blocked, whose probe collect
-    refuses above its byte cap (256 MB of probe matrix)."""
+    refuses above ann._CLOSURE_MAX_PROBE_BYTES (64 MB of probe
+    matrix)."""
     return ann_mod.embed_topk_blocked(D.load(spark, sf_dir, "embeddings"), k=5)
 
 
