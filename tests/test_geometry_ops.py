@@ -151,3 +151,73 @@ class TestWktParseRepairTemplates:
             arr = wkt_to_4d_array_from_parsed(parsed)
             n_pts = sum(len(ring) for geom in arr for ring in geom)
             assert (parsed[0], len(arr), n_pts) == (want_type, want_geoms, want_pts), cid
+
+
+def _exact_corpus(seed: int = 18, n_sets: int = 6):
+    """Seeded WKT sets for the raster operators: rectangles, non-convex
+    stars, holed polygons and two-part MULTIPOLYGONs, overlapping and
+    disjoint, plus garbage and EMPTY members. Coordinates are rounded
+    to 7 decimals so the WKT text is platform-stable."""
+    rng = np.random.default_rng(seed)
+
+    def ring(pts):
+        pts = [(round(float(x), 7), round(float(y), 7)) for x, y in pts]
+        return "(" + ", ".join(f"{x} {y}" for x, y in pts + pts[:1]) + ")"
+
+    def rect(x, y, w, h):
+        return [(x, y), (x + w, y), (x + w, y + h), (x, y + h)]
+
+    def star(x, y, r):
+        ang = np.arange(10) * np.pi / 5
+        rad = np.where(np.arange(10) % 2 == 0, r, 0.45 * r)
+        return list(zip(x + rad * np.cos(ang), y + rad * np.sin(ang)))
+
+    def member(x, y):
+        kind = int(rng.integers(4))
+        w, h = rng.uniform(2e-4, 6e-4, 2)
+        if kind == 0:
+            return f"POLYGON ({ring(rect(x, y, w, h))})"
+        if kind == 1:
+            return f"POLYGON ({ring(star(x + w / 2, y + h / 2, max(w, h) / 2))})"
+        if kind == 2:
+            hole = rect(x + w / 4, y + h / 4, w / 2, h / 2)
+            return f"POLYGON ({ring(rect(x, y, w, h))}, {ring(hole[::-1])})"
+        dx = float(rng.uniform(0.5, 1.5)) * w
+        return f"MULTIPOLYGON (({ring(rect(x, y, w / 2, h))}), ({ring(rect(x + dx, y, w / 2, h / 2))}))"
+
+    sets = []
+    for _ in range(n_sets):
+        x0, y0 = 116.0 + rng.uniform(0, 0.01), 39.5 + rng.uniform(0, 0.01)
+        wkts = [member(x0 + rng.uniform(0, 4e-4), y0 + rng.uniform(0, 4e-4)) for _ in range(3)]
+        wkts.append(member(x0 + 3e-3, y0))  # disjoint from the others
+        sets.append(wkts)
+    sets.append([sets[0][0], "garbage", "POLYGON EMPTY", sets[1][2]])
+    sets.append(["MULTIPOLYGON EMPTY", "not wkt"])
+    return sets
+
+
+class TestRasterOperatorsExact:
+    """Pins the exact WKT text and mu of the four raster-backed
+    operators (both conflict-resolution orders): the goldens round mu
+    to 0.1, so only this test would notice a pipeline change that
+    moves a vertex or a float by one ulp."""
+
+    DIGEST = "f4b1500e09d5cf60914cab41c883c375c41be5e3778e938f483f2219b1c1e42e"
+
+    def test_outputs_digest(self):
+        import hashlib
+        import itertools
+
+        lines = []
+        for wkts in _exact_corpus():
+            for a, b in itertools.combinations(wkts, 2):
+                w, mu = np_intersection_mu(a, b)
+                lines.append(f"I {w} {mu!r}")
+            w, mu = np_merge_wkts(wkts)
+            lines.append(f"U {w} {mu!r}")
+            lines += [f"D {w} {mu!r}" for w, mu in np_mutual_difference(wkts)]
+            for order in ("area_desc", "insertion"):
+                res = np_resolve_conflicts(wkts, order=order)
+                lines += [f"C {order} {i} {w} {mu!r}" for i, w, mu in res]
+        digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()
+        assert digest == self.DIGEST

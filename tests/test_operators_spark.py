@@ -550,12 +550,13 @@ class TestResPlanner:
         empty = joins.knn_join(imgs, cdf.filter("cand_id < 0"))
         assert empty.count() == 0 and set(empty.columns) == {"probe_id", "nearest_id", "dist_m"}
 
-    @pytest.mark.parametrize("dense_max", [10_000, 0], ids=["dense", "grid"])
-    def test_knn_colocated_tie_returns_smallest_id(self, spark, monkeypatch, dense_max):
+    @pytest.mark.parametrize("kernel", ["dense", "grid"])
+    def test_knn_colocated_tie_returns_smallest_id(self, spark, kernel):
         """Candidates sharing one location tie exactly; both broadcast
         kernels must return the smallest id, whatever order the
-        bounded ingestion collects them in (here: partitions holding
-        descending ids)."""
+        candidates are collected in (here: partitions holding
+        descending ids). knn_join dispatches these 1,200 candidates to
+        the grid kernel; the dense kernel is fed the same collect."""
         import pandas as pd
 
         locs = [(lon * 0.5, lat * 0.5) for lon in range(20) for lat in range(20)]
@@ -569,8 +570,14 @@ class TestResPlanner:
             [(k, x + 0.01, y + 0.01) for k, (x, y) in enumerate(locs)],
             "probe_id long, lon double, lat double",
         )
-        monkeypatch.setattr(joins, "KNN_DENSE_MAX", dense_max)
-        got = {r["probe_id"]: r["nearest_id"] for r in joins.knn_join(probes, cdf).collect()}
+        if kernel == "dense":
+            cpdf = cdf.toPandas()
+            out = joins.knn_join_broadcast(
+                probes, (cpdf["cand_id"], cpdf["lon"], cpdf["lat"]), probe_id_col="probe_id"
+            )
+        else:
+            out = joins.knn_join(probes, cdf)
+        got = {r["probe_id"]: r["nearest_id"] for r in out.collect()}
         assert got == {k: 10 * k + 3 for k in range(len(locs))}
 
     @pytest.mark.parametrize("n_cands", [9, 32])

@@ -440,3 +440,66 @@ class TestDensitySamplingDifferential:
         got = np_density_based_sampling(xy, epsilon=5.0, min_pts=4, max_neighbors=12)
         want = self._reference(xy, 5.0, 4, 12)
         assert (got == want).all()
+
+
+class TestRankProbesLocal:
+    """ann._rank_probes_local ranks every probe's lists with one
+    row-wise sort; it must return exactly what the per-probe loop it
+    replaced returned: the same lists, in the same key order, each with
+    the same probe ids and rows in probe order."""
+
+    @staticmethod
+    def _reference(cent_rows, ppdf, nprobe):
+        from util_gis_spark.operators.ann import _fold_dots
+
+        lids = np.array([lid for lid, _ in cent_rows], dtype=np.int64)
+        C = np.array([c for _, c in cent_rows], dtype=np.float64)
+        P = np.vstack(ppdf["v"].to_numpy()).astype(np.float64)
+        pids = ppdf["vec_id"].to_numpy(np.int64)
+        dot = _fold_dots(P, C)
+        nan = np.isnan(dot)
+        neg = np.where(nan, 0.0, -dot)
+        take = max(min(nprobe, len(lids)), 0)
+        by_list = {}
+        for i in range(len(P)):
+            for j in np.lexsort((lids, neg[i], ~nan[i]))[:take]:
+                slot = by_list.setdefault(int(lids[j]), ([], []))
+                slot[0].append(pids[i])
+                slot[1].append(P[i])
+        return {
+            lid: (np.asarray(ids, dtype=np.int64), np.vstack(vecs))
+            for lid, (ids, vecs) in by_list.items()
+        }
+
+    @pytest.mark.parametrize("seed", range(12))
+    @pytest.mark.parametrize("nprobe", [1, 3, 7, 20])
+    def test_matches_per_probe_loop(self, seed, nprobe):
+        import pandas as pd
+
+        from util_gis_spark.operators.ann import _rank_probes_local
+
+        rng = np.random.default_rng(seed)
+        n_lists, n_probe, dim = 7, int(rng.integers(1, 60)), int(rng.integers(1, 6))
+        # small integer grids make exact dot ties common
+        C = rng.integers(-2, 3, (n_lists, dim)).astype(float)
+        C[rng.integers(n_lists)] = 0.0  # a zero centroid ties every probe
+        P = rng.standard_normal((n_probe, dim))
+        grid = rng.random(n_probe) < 0.5
+        P[grid] = rng.integers(-2, 3, (int(grid.sum()), dim))
+        P[rng.random(n_probe) < 0.15] = 0.0
+        P[rng.random((n_probe, dim)) < 0.08] = np.nan
+        if seed % 3 == 0:
+            C[rng.integers(n_lists), rng.integers(dim)] = np.nan
+        lids = np.sort(rng.choice(100, n_lists, replace=False))
+        cent_rows = [(int(lid), list(c)) for lid, c in zip(lids, C)]
+        ppdf = pd.DataFrame(
+            {"vec_id": rng.permutation(n_probe).astype(np.int64) * 5, "v": list(P)}
+        )
+
+        got = _rank_probes_local(cent_rows, ppdf, nprobe)
+        want = self._reference(cent_rows, ppdf, nprobe)
+        assert list(got) == list(want)
+        for lid, (ids, vecs) in want.items():
+            assert got[lid][0].dtype == ids.dtype and np.array_equal(got[lid][0], ids)
+            assert got[lid][1].shape == vecs.shape
+            assert np.array_equal(got[lid][1], vecs, equal_nan=True)

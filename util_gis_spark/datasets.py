@@ -21,7 +21,7 @@ no polygon. 30% of images are concentrated in a 0.01-degree hot spot
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -375,16 +375,15 @@ FROM nation
 def polygons_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon layer with a WKT column — the shape the generic engine
     operators consume (they never see xmin/xmax, only geometry)."""
-    p = polygons(spark, sf_dir)
-    return p.withColumn(
-        "wkt",
-        F.concat(
-            F.lit("POLYGON (("),
-            F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit(", "),
-            F.col("xmax"), F.lit(" "), F.col("ymin"), F.lit(", "),
-            F.col("xmax"), F.lit(" "), F.col("ymax"), F.lit(", "),
-            F.col("xmin"), F.lit(" "), F.col("ymax"), F.lit(", "),
-            F.col("xmin"), F.lit(" "), F.col("ymin"),
-            F.lit("))"),
-        ),
-    )
+    return polygons(spark, sf_dir).withColumn("wkt", rect_wkt("xmin", "ymin", "xmax", "ymax"))
+
+
+def rect_wkt(xmin, ymin, xmax, ymax) -> Column:
+    """Closed counter-clockwise rectangle WKT from four coordinate
+    columns (names or Columns), each printed with Spark's double-to-
+    string cast."""
+    corners = [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin)]
+    parts = [F.lit("POLYGON ((")]
+    for x, y in corners:
+        parts += [x, F.lit(" "), y, F.lit(", ")]
+    return F.concat(*parts[:-1], F.lit("))"))

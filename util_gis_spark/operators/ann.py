@@ -384,7 +384,8 @@ def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: i
     accumulates in ascending-d order (== a sequential `aggregate`
     fold), and lists order by (dot desc, list_id asc) like orderBy with
     row_number (cent_rows arrive sorted by list_id). A NaN dot ranks
-    FIRST, as Spark's descending order puts NaN above every number. Returns the per-list probe matrices
+    FIRST, as Spark's descending order puts NaN above every number.
+    Returns the per-list probe matrices
     {list_id: (pids int64[], P float64[n, dim])} that
     _assign_score_kernel consumes."""
     import numpy as np
@@ -399,18 +400,15 @@ def _rank_probes_local(cent_rows: list[tuple[int, list[float]]], ppdf, nprobe: i
     nan = np.isnan(dot)
     neg = np.where(nan, 0.0, -dot)
     take = max(min(nprobe, len(lids)), 0)
-    by_list: dict[int, tuple[list, list]] = {}
-    for i in range(len(P)):
-        # last key is primary: NaN first, then dot desc, then list_id
-        order = np.lexsort((lids, neg[i], ~nan[i]))[:take]
-        for j in order:
-            slot = by_list.setdefault(int(lids[j]), ([], []))
-            slot[0].append(pids[i])
-            slot[1].append(P[i])
-    return {
-        lid: (np.asarray(ids, dtype=np.int64), np.vstack(vecs))
-        for lid, (ids, vecs) in by_list.items()
-    }
+    # one row-wise sort, last key primary: NaN first, then dot desc,
+    # then list_id
+    picks = np.lexsort((np.broadcast_to(lids, dot.shape), neg, ~nan), axis=1)[:, :take]
+    member = np.zeros(dot.shape, dtype=bool)
+    np.put_along_axis(member, picks, True, axis=1)
+    # lists in the order the probes first pick them; probes in row order
+    flat = picks.ravel()
+    first = np.sort(np.unique(flat, return_index=True)[1])
+    return {int(lids[j]): (pids[member[:, j]], P[member[:, j]]) for j in flat[first]}
 
 
 # Elements per pruning matmul, as joins._grid_nearest_all sizes its
@@ -639,6 +637,35 @@ def _probe_matrix_bytes(n_probes: int, dim: int, nprobe: int, n_lists: int) -> i
     return n_probes * max(min(nprobe, n_lists), 0) * (dim + 1) * 8
 
 
+def _check_probe_bytes(caller: str, n_probes: int, dim: int, nprobe: int, n_lists: int) -> None:
+    size = _probe_matrix_bytes(n_probes, dim, nprobe, n_lists)
+    if size > _CLOSURE_MAX_PROBE_BYTES:
+        raise ValueError(
+            f"{caller}: probe matrices exceed {_CLOSURE_MAX_PROBE_BYTES} bytes "
+            f"(at least {size}); narrow probe_filter or use the LSH/IVF path "
+            "(ann_lsh_topk, or ann_ivf_topk with a smaller nprobe)"
+        )
+
+
+def _collect_probes(
+    e: DataFrame, probe_filter: str, caller: str, dim: int, nprobe: int, n_lists: int
+):
+    """Bounded probe ingestion: the (vec_id, v) rows matching
+    probe_filter, NULL embeddings skipped (np.vstack would crash on
+    them), collected over Arrow with limit(cap_rows + 1) so an over-cap
+    probe set never reaches the driver; over the cap, ValueError."""
+    cap_rows = _CLOSURE_MAX_PROBE_BYTES // max(_probe_matrix_bytes(1, dim, nprobe, n_lists), 1)
+    ppdf = (
+        e.filter(probe_filter)
+        .filter(F.col("v").isNotNull())
+        .select("vec_id", "v")
+        .limit(cap_rows + 1)
+        .toPandas()
+    )
+    _check_probe_bytes(caller, len(ppdf), dim, nprobe, n_lists)
+    return ppdf
+
+
 def ann_ivf_topk(
     embeddings_df: DataFrame,
     probe_filter: str = "vec_id % 100 = 0",
@@ -666,10 +693,11 @@ def ann_ivf_topk(
 
     When those matrices, probes x min(nprobe, lists) x (dim + 1) x 8 B,
     would exceed _CLOSURE_MAX_PROBE_BYTES, the call raises ValueError;
-    narrow probe_filter or use ann_lsh_topk. With explicit centroids
-    the probe collect is bounded by limit(cap_rows + 1), so an over-cap
-    probe set never reaches the driver; on the label path it shares a
-    job with the centroid partials and is not bounded."""
+    narrow probe_filter, lower nprobe or use ann_lsh_topk. With
+    explicit centroids the probe collect is _collect_probes, bounded by
+    limit(cap_rows + 1), so an over-cap probe set never reaches the
+    driver; on the label path it shares a job with the centroid
+    partials and is not bounded."""
     e = embeddings_df.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -677,24 +705,11 @@ def ann_ivf_topk(
         ppdf, partials = _probes_and_label_partials(e, probe_filter)
         dim = len(ppdf["v"].iloc[0]) if len(ppdf) else 0
         cent_rows = _combine_label_partials(partials, dim) if dim else []
+        _check_probe_bytes("ann_ivf_topk", len(ppdf), dim, nprobe, len(cent_rows))
     else:
         cent_rows = sorted((int(i), [float(x) for x in c]) for i, c in centroids)
         dim = len(cent_rows[0][1]) if cent_rows else 0
-        per_probe = _probe_matrix_bytes(1, dim, nprobe, len(cent_rows))
-        cap_rows = _CLOSURE_MAX_PROBE_BYTES // max(per_probe, 1)
-        ppdf = (
-            e.filter(probe_filter)
-            .filter(F.col("v").isNotNull())
-            .select("vec_id", "v")
-            .limit(cap_rows + 1)
-            .toPandas()
-        )
-    size = _probe_matrix_bytes(len(ppdf), dim, nprobe, len(cent_rows))
-    if size > _CLOSURE_MAX_PROBE_BYTES:
-        raise ValueError(
-            f"ann_ivf_topk: per-list probe matrices exceed {_CLOSURE_MAX_PROBE_BYTES} "
-            f"bytes (at least {size}); narrow probe_filter or use ann_lsh_topk"
-        )
+        ppdf = _collect_probes(e, probe_filter, "ann_ivf_topk", dim, nprobe, len(cent_rows))
     pmap = _rank_probes_local(cent_rows, ppdf, nprobe)
     if not pmap:  # empty corpus, nothing matched the filter, or no lists
         return embeddings_df.sparkSession.createDataFrame(
@@ -856,12 +871,12 @@ def embed_topk_blocked(
     neighbor_id) tie-break; NULL embeddings are skipped on both sides,
     and a zero-norm vector's cosines are NULL and rank last.
 
-    The probe ingestion is Arrow (toPandas -> numpy columns, never
-    per-row Python objects) and BYTE-capped like ann_ivf_topk's: above
-    _CLOSURE_MAX_PROBE_BYTES (64 MB, ~129k probes x 64 dims) it
-    REFUSES and points at LSH/IVF — the cap is enforced with
-    limit(cap_rows+1) inside the ingestion job, bounding the transfer
-    itself, not just the kept matrix."""
+    The probe ingestion is ann_ivf_topk's explicit-centroid one,
+    _collect_probes: Arrow (toPandas -> numpy columns, never per-row
+    Python objects) and BYTE-capped: above _CLOSURE_MAX_PROBE_BYTES
+    (64 MB, ~129k probes x 64 dims) it REFUSES and points at LSH/IVF —
+    the cap is enforced with limit(cap_rows+1) inside the ingestion
+    job, bounding the transfer itself, not just the kept matrix."""
     import numpy as np
 
     e = embeddings_df.select(
@@ -877,22 +892,7 @@ def embed_topk_blocked(
     if first is None:
         return empty
     dim = int(first["d"])
-    cap_rows = _CLOSURE_MAX_PROBE_BYTES // _probe_matrix_bytes(1, dim, 1, 1)
-    # NULL probes are skipped like the dim probe above: a NULL v row
-    # matching probe_filter would crash np.vstack below
-    ppdf = (
-        e.filter(probe_filter)
-        .filter(F.col("v").isNotNull())
-        .limit(cap_rows + 1)
-        .toPandas()
-    )
-    size = _probe_matrix_bytes(len(ppdf), dim, 1, 1)
-    if size > _CLOSURE_MAX_PROBE_BYTES:
-        raise ValueError(
-            f"embed_topk_blocked: probe matrix exceeds {_CLOSURE_MAX_PROBE_BYTES} bytes "
-            f"(at least {size}); narrow probe_filter or use the LSH/IVF path "
-            "(ann_lsh_topk, ann_ivf_topk) for unbounded probe sets"
-        )
+    ppdf = _collect_probes(e, probe_filter, "embed_topk_blocked", dim, 1, 1)
     if len(ppdf) == 0:
         return empty
     pmap = {

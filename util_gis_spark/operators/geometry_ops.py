@@ -7,8 +7,10 @@ Intersection strategy: if the clip side is convex, exact
 Sutherland-Hodgman in lon/lat space (the reference clips in the Gauss
 plane — for the sub-km geometries involved the vertex difference is
 mm-scale; we document the divergence and gain an exactly-checkable
-kernel); general pairs fall back to the raster engine in the Gauss
-plane. Union: raster OR + boundary trace (the reference's
+kernel); general pairs fall back to the raster pipeline every
+operator here shares: _raster_masks (project into one Gauss zone,
+grid, rasterize), one mask operation, _mask_to_wkt_mu (trace,
+unproject, mu). Union is the masks' OR (the reference's
 buffer(0.01)-sealed STRtree union, G:1375-1544). Never-null contract:
 empty/invalid input degrades to (MULTIPOLYGON EMPTY, 0.0) like the
 reference's EMPTY_GEOMETRY (G:11769-11773)."""
@@ -24,6 +26,7 @@ from ..geo import gauss, morphology as M
 from ..geo.geometry import (
     convex_clip,
     geom_envelope,
+    geom_polys,
     is_convex_ring,
     multipolygon_wkt,
     parse_wkt,
@@ -31,11 +34,6 @@ from ..geo.geometry import (
 )
 from ..geo.sphere import calc_mu, np_polygon_area_m2
 from .grouped import grouped_apply, map_apply
-
-
-# the shared flattener lives next to parse_wkt (r6 review: this module
-# and joins.py carried identical copies)
-from ..geo.geometry import geom_polys as _geom_polys  # noqa: E402
 
 
 _MAX_CELLS = 4_000_000  # raster budget: bounds memory + trace cost
@@ -65,7 +63,7 @@ def np_intersection_mu(wkt_a, wkt_b, grid_m: float = 0.25) -> tuple[str, float]:
     vertices) of regex work)."""
     pa = wkt_a if isinstance(wkt_a, tuple) else parse_wkt(wkt_a)
     pb = wkt_b if isinstance(wkt_b, tuple) else parse_wkt(wkt_b)
-    polys_a, polys_b = _geom_polys(pa), _geom_polys(pb)
+    polys_a, polys_b = geom_polys(pa), geom_polys(pb)
     if not polys_a or not polys_b:
         return "MULTIPOLYGON EMPTY", 0.0
     env_a, env_b = geom_envelope(pa), geom_envelope(pb)
@@ -92,127 +90,24 @@ def np_intersection_mu(wkt_a, wkt_b, grid_m: float = 0.25) -> tuple[str, float]:
         return polygon_wkt([ring]), mu
 
     # raster fallback in the Gauss plane (like the reference's
-    # project -> JTS intersection -> unproject)
+    # project -> JTS intersection -> unproject), zoned at the centre of
+    # the two envelopes
     lon_c = (min(env_a[0], env_b[0]) + max(env_a[2], env_b[2])) / 2.0
     zone = int(gauss.zone_from_lon(lon_c))
-
-    def to_plane(polys):
-        out = []
-        for rings in polys:
-            pr = []
-            for ring in rings:
-                x, y, _ = gauss.gauss_forward(ring[:, 0], ring[:, 1], zone=zone)
-                pr.append(np.column_stack([x, y]))
-            out.append(pr)
-        return out
-
-    ga, gb = to_plane(polys_a), to_plane(polys_b)
-    allc = np.vstack([r for p in ga + gb for r in p])
-    x0, y0, nx, ny, g = _adaptive_grid(allc, grid_m)
-
-    def fill(polys):
-        mask = np.zeros((ny, nx), dtype=bool)
-        for rings in polys:
-            m = M.rasterize_rings(rings, x0, y0, nx, ny, g)
-            mask |= m
-        return mask
-
-    inter = fill(ga) & fill(gb)
-    if not inter.any():
-        return "MULTIPOLYGON EMPTY", 0.0
-    rast = M.Raster(inter, x0, y0, g)
-    rings = M.trace_rings(rast, simplify_tol=g)
-    out_polys = []
-    for rings_g in M.rings_to_polygons(rings):
-        wgs = []
-        for ring in rings_g:
-            lon, lat, _ = gauss.gauss_inverse(ring[:, 0], ring[:, 1], zone=zone)
-            wgs.append(np.column_stack([lon, lat]))
-        out_polys.append(wgs)
-    mu = calc_mu(sum(np_polygon_area_m2(p) for p in out_polys))
-    return multipolygon_wkt(out_polys), mu
+    (mask_a, mask_b), grid = _raster_masks([polys_a, polys_b], zone, grid_m)
+    return _mask_to_wkt_mu(mask_a & mask_b, *grid, zone)
 
 
-def np_merge_wkts(wkts: list[str], grid_m: float = 0.25) -> tuple[str, float]:
-    """n-ary union of WKT polygons (mergeWgs84WKTStr): raster OR in a
-    unified Gauss zone, trace, unproject, mu."""
-    polys = []
-    for w in wkts:
-        polys.extend(_geom_polys(parse_wkt(w)))
-    if not polys:
-        return "MULTIPOLYGON EMPTY", 0.0
-    allw = np.vstack([r for p in polys for r in p])
-    zone = gauss.unified_zone(float(allw[:, 0].min()), float(allw[:, 0].max()))
-    plane = []
-    for rings in polys:
-        pr = []
-        for ring in rings:
-            x, y, _ = gauss.gauss_forward(ring[:, 0], ring[:, 1], zone=zone)
-            pr.append(np.column_stack([x, y]))
-        plane.append(pr)
-    allc = np.vstack([r for p in plane for r in p])
-    x0, y0, nx, ny, g = _adaptive_grid(allc, grid_m)
-    mask = np.zeros((ny, nx), dtype=bool)
-    for rings in plane:
-        mask |= M.rasterize_rings(rings, x0, y0, nx, ny, g)
-    rast = M.Raster(mask, x0, y0, g)
-    rings = M.trace_rings(rast, simplify_tol=g)
-    out_polys = []
-    for rings_g in M.rings_to_polygons(rings):
-        wgs = []
-        for ring in rings_g:
-            lon, lat, _ = gauss.gauss_inverse(ring[:, 0], ring[:, 1], zone=zone)
-            wgs.append(np.column_stack([lon, lat]))
-        out_polys.append(wgs)
-    mu = calc_mu(sum(np_polygon_area_m2(p) for p in out_polys))
-    return multipolygon_wkt(out_polys), mu
+def _raster_masks(geoms, zone: int, grid_m: float):
+    """The shared front half of every raster operator: project each
+    geometry (a list of polygons, each a list of lon/lat rings) into
+    Gauss `zone`, size one `_adaptive_grid` over all of them, and
+    OR-fill one mask per geometry. Returns (masks, (x0, y0, g))."""
+    def forward(ring):
+        x, y, _ = gauss.gauss_forward(ring[:, 0], ring[:, 1], zone=zone)
+        return np.column_stack([x, y])
 
-
-def _polys_to_plane(wkts: list[str]):
-    """Parse + project a set of WKTs into one unified Gauss zone.
-    Returns (plane_polys per wkt, zone) — plane_polys[i] is a list of
-    polygons (each a list of rings)."""
-    parsed = [_geom_polys(parse_wkt(w)) for w in wkts]
-    coords = [r for polys in parsed for p in polys for r in p]
-    if not coords:
-        return None, 0
-    allw = np.vstack(coords)
-    zone = gauss.unified_zone(float(allw[:, 0].min()), float(allw[:, 0].max()))
-    out = []
-    for polys in parsed:
-        pp = []
-        for rings in polys:
-            pr = []
-            for ring in rings:
-                xx, yy, _ = gauss.gauss_forward(ring[:, 0], ring[:, 1], zone=zone)
-                pr.append(np.column_stack([xx, yy]))
-            pp.append(pr)
-        out.append(pp)
-    return out, zone
-
-
-def _mask_to_wkt_mu(mask: np.ndarray, x0, y0, g, zone: int) -> tuple[str, float]:
-    if not mask.any():
-        return "MULTIPOLYGON EMPTY", 0.0
-    rings = M.trace_rings(M.Raster(mask, x0, y0, g), simplify_tol=g)
-    out_polys = []
-    for rings_g in M.rings_to_polygons(rings):
-        wgs = []
-        for ring in rings_g:
-            lon, lat, _ = gauss.gauss_inverse(ring[:, 0], ring[:, 1], zone=zone)
-            wgs.append(np.column_stack([lon, lat]))
-        out_polys.append(wgs)
-    mu = calc_mu(sum(np_polygon_area_m2(p) for p in out_polys))
-    return multipolygon_wkt(out_polys), mu
-
-
-def np_mutual_difference(wkts: list[str], grid_m: float = 0.25) -> list[tuple[str, float]]:
-    """differenceGeometry (G:9258-9345): pairwise A = A - B, B = B - A
-    — every output geometry loses all regions it shares with any other.
-    Raster form: each mask minus the union of all OTHER masks."""
-    plane, zone = _polys_to_plane(wkts)
-    if plane is None:
-        return [("MULTIPOLYGON EMPTY", 0.0)] * len(wkts)
+    plane = [[[forward(r) for r in rings] for rings in polys] for polys in geoms]
     allc = np.vstack([r for pp in plane for p in pp for r in p])
     x0, y0, nx, ny, g = _adaptive_grid(allc, grid_m)
     masks = []
@@ -221,15 +116,62 @@ def np_mutual_difference(wkts: list[str], grid_m: float = 0.25) -> list[tuple[st
         for rings in pp:
             m |= M.rasterize_rings(rings, x0, y0, nx, ny, g)
         masks.append(m)
+    return masks, (x0, y0, g)
+
+
+def _parse_unified(wkts: list[str]):
+    """Parse each WKT into its polygons, plus the unified Gauss zone of
+    all their coordinates (None when no WKT has a polygon)."""
+    parsed = [geom_polys(parse_wkt(w)) for w in wkts]
+    coords = [r for polys in parsed for p in polys for r in p]
+    if not coords:
+        return parsed, None
+    allw = np.vstack(coords)
+    return parsed, gauss.unified_zone(float(allw[:, 0].min()), float(allw[:, 0].max()))
+
+
+def _mask_to_wkt_mu(mask: np.ndarray, x0, y0, g, zone: int) -> tuple[str, float]:
+    """The shared back half: trace the mask, unproject, mu."""
+    if not mask.any():
+        return "MULTIPOLYGON EMPTY", 0.0
+    rings = M.trace_rings(M.Raster(mask, x0, y0, g), simplify_tol=g)
+
+    def inverse(ring):
+        lon, lat, _ = gauss.gauss_inverse(ring[:, 0], ring[:, 1], zone=zone)
+        return np.column_stack([lon, lat])
+
+    out_polys = [[inverse(r) for r in rings_g] for rings_g in M.rings_to_polygons(rings)]
+    mu = calc_mu(sum(np_polygon_area_m2(p) for p in out_polys))
+    return multipolygon_wkt(out_polys), mu
+
+
+def np_merge_wkts(wkts: list[str], grid_m: float = 0.25) -> tuple[str, float]:
+    """n-ary union of WKT polygons (mergeWgs84WKTStr): raster OR in a
+    unified Gauss zone, trace, unproject, mu."""
+    parsed, zone = _parse_unified(wkts)
+    if zone is None:
+        return "MULTIPOLYGON EMPTY", 0.0
+    (mask,), grid = _raster_masks([[p for polys in parsed for p in polys]], zone, grid_m)
+    return _mask_to_wkt_mu(mask, *grid, zone)
+
+
+def np_mutual_difference(wkts: list[str], grid_m: float = 0.25) -> list[tuple[str, float]]:
+    """differenceGeometry (G:9258-9345): pairwise A = A - B, B = B - A
+    — every output geometry loses all regions it shares with any other.
+    Raster form: each mask minus the union of all OTHER masks."""
+    parsed, zone = _parse_unified(wkts)
+    if zone is None:
+        return [("MULTIPOLYGON EMPTY", 0.0)] * len(wkts)
+    masks, grid = _raster_masks(parsed, zone, grid_m)
     # coverage count replaces the per-geometry union-of-others rebuild
     # (r6 review: O(n^2 x pixels) -> O(n x pixels)): within mask i,
     # cover >= 1 always, and cover == 1 iff no OTHER mask covers the
     # cell — identical to m & ~union(others), bit for bit
-    cover = np.zeros((ny, nx), dtype=np.int32)
+    cover = np.zeros(masks[0].shape, dtype=np.int32)
     for m in masks:
         cover += m
     only_one = cover == 1
-    return [_mask_to_wkt_mu(m & only_one, x0, y0, g, zone) for m in masks]
+    return [_mask_to_wkt_mu(m & only_one, *grid, zone) for m in masks]
 
 
 MIN_FRAGMENT_MU = 0.1  # G:1649/1843: fragments below this are dropped
@@ -244,30 +186,50 @@ def np_resolve_conflicts(
     union); each is clipped by the union of everything already kept;
     fragments below 0.1 mu are dropped. Returns
     [(original_index, wkt, mu)] for survivors."""
-    plane, zone = _polys_to_plane(wkts)
-    if plane is None:
+    parsed, zone = _parse_unified(wkts)
+    if zone is None:
         return []
-    allc = np.vstack([r for pp in plane for p in pp for r in p])
-    x0, y0, nx, ny, g = _adaptive_grid(allc, grid_m)
-    masks = []
-    for pp in plane:
-        m = np.zeros((ny, nx), dtype=bool)
-        for rings in pp:
-            m |= M.rasterize_rings(rings, x0, y0, nx, ny, g)
-        masks.append(m)
+    masks, grid = _raster_masks(parsed, zone, grid_m)
     idx = list(range(len(masks)))
     if order == "area_desc":
         idx.sort(key=lambda i: -int(masks[i].sum()))
-    acc = np.zeros((ny, nx), dtype=bool)
+    acc = np.zeros_like(masks[0])
     out = []
     for i in idx:
         clipped = masks[i] & ~acc
-        wkt, mu = _mask_to_wkt_mu(clipped, x0, y0, g, zone)
+        wkt, mu = _mask_to_wkt_mu(clipped, *grid, zone)
         if mu > MIN_FRAGMENT_MU:
             out.append((i, wkt, mu))
             acc |= clipped
     out.sort(key=lambda t: t[0])
     return out
+
+
+def _members_agg(df: DataFrame, group_cols, wkt_col: str, sort_cols, member_rows) -> DataFrame:
+    """Grouped per-member operator: per group (members in `sort_cols`
+    order when given, since Spark does not guarantee intra-group row
+    order), `member_rows(wkts)` returns [(member_idx, wkt, mu)], one
+    output row each."""
+    out_schema = T.StructType(
+        [T.StructField(c, df.schema[c].dataType) for c in group_cols]
+        + [
+            T.StructField("member_idx", T.IntegerType()),
+            T.StructField("wkt", T.StringType()),
+            T.StructField("mu", T.DoubleType()),
+        ]
+    )
+
+    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        if sort_cols:
+            pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
+        rows = member_rows(list(pdf[wkt_col]))
+        base = {c: [k] * len(rows) for c, k in zip(group_cols, key)}
+        base["member_idx"] = np.array([r[0] for r in rows], dtype=np.int32)
+        base["wkt"] = [r[1] for r in rows]
+        base["mu"] = [r[2] for r in rows]
+        return pd.DataFrame(base)
+
+    return grouped_apply(df, group_cols, run, out_schema)
 
 
 def resolve_conflicts_agg(
@@ -286,26 +248,9 @@ def resolve_conflicts_agg(
     accumulated-union list order) it is REQUIRED for a deterministic
     result — pass the time/id column the reference's list was built
     in."""
-    out_schema = T.StructType(
-        [T.StructField(c, df.schema[c].dataType) for c in group_cols]
-        + [
-            T.StructField("member_idx", T.IntegerType()),
-            T.StructField("wkt", T.StringType()),
-            T.StructField("mu", T.DoubleType()),
-        ]
+    return _members_agg(
+        df, group_cols, wkt_col, sort_cols, lambda wkts: np_resolve_conflicts(wkts, order=order)
     )
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
-        rows = np_resolve_conflicts(list(pdf[wkt_col]), order=order)
-        base = {c: [k] * len(rows) for c, k in zip(group_cols, key)}
-        base["member_idx"] = [np.int32(r[0]) for r in rows]
-        base["wkt"] = [r[1] for r in rows]
-        base["mu"] = [r[2] for r in rows]
-        return pd.DataFrame(base)
-
-    return grouped_apply(df, group_cols, run, out_schema)
 
 
 def mutual_difference_agg(
@@ -320,26 +265,10 @@ def mutual_difference_agg(
 
     `sort_cols` pins the member order inside each group (Spark does not
     guarantee intra-group row order) so member_idx is deterministic."""
-    out_schema = T.StructType(
-        [T.StructField(c, df.schema[c].dataType) for c in group_cols]
-        + [
-            T.StructField("member_idx", T.IntegerType()),
-            T.StructField("wkt", T.StringType()),
-            T.StructField("mu", T.DoubleType()),
-        ]
+    return _members_agg(
+        df, group_cols, wkt_col, sort_cols,
+        lambda wkts: [(i, w, mu) for i, (w, mu) in enumerate(np_mutual_difference(wkts))],
     )
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
-        rows = np_mutual_difference(list(pdf[wkt_col]))
-        base = {c: [k] * len(rows) for c, k in zip(group_cols, key)}
-        base["member_idx"] = np.arange(len(rows), dtype=np.int32)
-        base["wkt"] = [r[0] for r in rows]
-        base["mu"] = [r[1] for r in rows]
-        return pd.DataFrame(base)
-
-    return grouped_apply(df, group_cols, run, out_schema)
 
 
 # ---------------------------------------------------------- Spark layer

@@ -63,10 +63,9 @@ EDGES_BROADCAST_BYTES = 64 << 20
 PIP_BROADCAST_MAX_CELLS = 2_000_000
 PIP_COLLECT_MAX_POLYS = 4096
 
-# knn_join's planner: candidate sets of at most KNN_DENSE_MAX rows take
-# the dense matrix kernel; up to KNN_BROADCAST_BYTES (~24 B/candidate,
-# ~2M rows) the grid-index kernel; larger ones knn_join_cells.
-KNN_DENSE_MAX = 256
+# knn_join's planner: candidate sets up to KNN_BROADCAST_BYTES
+# (~24 B/candidate, ~2M rows) take the grid-index kernel; larger ones
+# knn_join_cells.
 KNN_BROADCAST_BYTES = 48 << 20
 
 
@@ -1104,13 +1103,14 @@ def knn_join(
     cand_id_col: str = "cand_id",
 ) -> DataFrame:
     """Strategy-selecting kNN join: probe the candidate side with a
-    bounded limit-count; tiny sets take the dense matrix kernel
-    (knn_join_broadcast), anything that still fits a task broadcast
-    takes the grid-index kernel (knn_join_grid), larger sets go to the
-    shuffled cell ladder (knn_join_cells). The broadcast flavors beat
-    the ladder by orders of magnitude at skewed probe:candidate ratios
-    (measured: 2M probes x 12.7k candidates did not finish one ladder
-    rep in 10 min; the grid kernel does it in seconds).
+    bounded limit-count; a set that fits a task broadcast takes the
+    grid-index kernel (knn_join_grid, exact at any size: the same rows
+    as the dense matrix kernel knn_join_broadcast, tie-breaks
+    included), larger sets go to the shuffled cell ladder
+    (knn_join_cells). The grid kernel beats the ladder by orders of
+    magnitude at skewed probe:candidate ratios (measured: 2M probes x
+    12.7k candidates did not finish one ladder rep in 10 min; the grid
+    kernel does it in seconds).
 
     The broadcast cap is BYTE-based: the index costs ~24 B/candidate
     (int64 id + 2 x f64), so KNN_BROADCAST_BYTES (48 MB) admits ~2M
@@ -1148,8 +1148,6 @@ def knn_join(
         )
     if n_cand <= cap_rows:
         cands = (cpdf[cand_id_col], cpdf["lon"], cpdf["lat"])  # _cand_arrays casts
-        if n_cand <= KNN_DENSE_MAX:
-            return knn_join_broadcast(probes_df, cands, probe_id_col=probe_id_col)
         return knn_join_grid(probes_df, cands, probe_id_col=probe_id_col)
     return knn_join_cells(
         probes_df, candidates_df, probe_id_col=probe_id_col, cand_id_col=cand_id_col

@@ -177,6 +177,21 @@ def q_merge_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("grp", F.round("mu", 1).alias("mu_approx"))
 
 
+def _stacked_rects(spark: SparkSession, sf_dir: str, dy: float, height: float, xmax_of) -> DataFrame:
+    """Stacked-rectangle fixture of the overlay rows: polygon p joins
+    group grp = p % 5 at rank r = p // 5, as the rectangle
+    [116.0 + 0.15*grp, xmax_of(xmin, r)] x [39.5 + dy*r, + height].
+    Returns (polygon_id, grp, wkt)."""
+    rank = F.floor(F.col("polygon_id") / 5).cast("long")
+    xmin = 116.0 + (F.col("polygon_id") % 5) * 0.15
+    ymin = 39.5 + rank * dy
+    return D.polygons(spark, sf_dir).select(
+        "polygon_id",
+        (F.col("polygon_id") % 5).alias("grp"),
+        D.rect_wkt(xmin, ymin, xmax_of(xmin, rank), ymin + height).alias("wkt"),
+    )
+
+
 def q_conflict_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Larger-wins overlap resolution; oracle = golden rows (raster
     clip areas are grid-approximate but deterministic; member order
@@ -193,27 +208,8 @@ def q_conflict_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the driver row never exercised the clip loop."""
     from .operators.geometry_ops import resolve_conflicts_agg
 
-    p = D.polygons(spark, sf_dir)
-    rank = F.floor(F.col("polygon_id") / 5).cast("long")
-    xmin = 116.0 + (F.col("polygon_id") % 5) * 0.15
-    ymin = 39.5 + rank * 0.04
-    shifted = p.select(
-        F.col("polygon_id"),
-        (F.col("polygon_id") % 5).alias("grp"),
-        xmin.alias("xmin"),
-        ymin.alias("ymin"),
-        (xmin + 0.07 - rank * 0.004).alias("xmax"),
-        (ymin + 0.07).alias("ymax"),
-    )
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit("))"),
-    )
-    out = resolve_conflicts_agg(shifted.withColumn("wkt", wkt), ["grp"], sort_cols=["polygon_id"])
+    layer = _stacked_rects(spark, sf_dir, 0.04, 0.07, lambda xmin, rank: xmin + 0.07 - rank * 0.004)
+    out = resolve_conflicts_agg(layer, ["grp"], sort_cols=["polygon_id"])
     return out.select("grp", "member_idx", F.round("mu", 1).alias("mu_approx"))
 
 
@@ -236,29 +232,8 @@ def q_accumulated_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     areas."""
     from .operators.geometry_ops import resolve_conflicts_agg
 
-    p = D.polygons(spark, sf_dir)
-    rank = F.floor(F.col("polygon_id") / 5).cast("long")
-    xmin = 116.0 + (F.col("polygon_id") % 5) * 0.15
-    ymin = 39.5 + rank * 0.04
-    shifted = p.select(
-        F.col("polygon_id"),
-        (F.col("polygon_id") % 5).alias("grp"),
-        xmin.alias("xmin"),
-        ymin.alias("ymin"),
-        (xmin + 0.05 + rank * 0.004).alias("xmax"),
-        (ymin + 0.07).alias("ymax"),
-    )
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit("))"),
-    )
-    out = resolve_conflicts_agg(
-        shifted.withColumn("wkt", wkt), ["grp"], order="insertion", sort_cols=["polygon_id"]
-    )
+    layer = _stacked_rects(spark, sf_dir, 0.04, 0.07, lambda xmin, rank: xmin + 0.05 + rank * 0.004)
+    out = resolve_conflicts_agg(layer, ["grp"], order="insertion", sort_cols=["polygon_id"])
     return out.select("grp", "member_idx", F.round("mu", 1).alias("mu_approx"))
 
 
@@ -277,27 +252,8 @@ def q_mutual_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     [y0+0.03, y0+0.08] for r=4 — closed-form spherical areas."""
     from .operators.geometry_ops import mutual_difference_agg
 
-    p = D.polygons(spark, sf_dir)
-    rank = F.floor(F.col("polygon_id") / 5).cast("long")
-    xmin = 116.0 + (F.col("polygon_id") % 5) * 0.15
-    ymin = 39.5 + rank * 0.05
-    shifted = p.select(
-        F.col("polygon_id"),
-        (F.col("polygon_id") % 5).alias("grp"),
-        xmin.alias("xmin"),
-        ymin.alias("ymin"),
-        (xmin + 0.06).alias("xmax"),
-        (ymin + 0.08).alias("ymax"),
-    )
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymin"), F.lit(", "),
-        F.col("xmax"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymax"), F.lit(", "),
-        F.col("xmin"), F.lit(" "), F.col("ymin"), F.lit("))"),
-    )
-    out = mutual_difference_agg(shifted.withColumn("wkt", wkt), ["grp"], sort_cols=["polygon_id"])
+    layer = _stacked_rects(spark, sf_dir, 0.05, 0.08, lambda xmin, rank: xmin + 0.06)
+    out = mutual_difference_agg(layer, ["grp"], sort_cols=["polygon_id"])
     return out.select("grp", "member_idx", F.round("mu", 1).alias("mu_approx"))
 
 
